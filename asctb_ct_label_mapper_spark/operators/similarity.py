@@ -31,10 +31,14 @@ hyperplane signatures bucket vectors so candidate generation is an equi-join
 
 from __future__ import annotations
 
+import weakref
+from contextlib import contextmanager
+from dataclasses import dataclass
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -87,18 +91,59 @@ def top_k_similarity_join(
     )
 
 
-def _guard_ref_collect(
-    reference: DataFrame, vec_col: str, rung: str
-) -> None:
+@dataclass(frozen=True)
+class ResidentReference:
+    """What the driver-resident rungs need of a reference, computed once:
+    its row count and dim and, inside the broadcast budget, broadcasts of
+    its ids and of its L2-normalised float64 matrix (None past it).
+    ``pin_reference`` keeps one alive for the life of a handle, so repeated
+    top-k calls run no reference job; without a pin the blocked rung builds
+    one per call through the same helper."""
+
+    ref_id_col: str
+    ref_vec_col: str
+    n_refs: int
+    dim: int
+    ids: Broadcast | None = None
+    unit: Broadcast | None = None
+
+    def broadcasts(self, rung: str) -> tuple[Broadcast, Broadcast]:
+        """(ids, unit matrix); past the budget there are none and ``rung``
+        fails with the documented remediation."""
+        if self.ids is None:
+            _guard_ref_collect(self.n_refs, self.dim, rung)
+        return self.ids, self.unit
+
+    def release(self) -> None:
+        for b in (self.ids, self.unit):
+            if b is not None:
+                b.destroy()
+
+
+# reference DataFrame -> its ResidentReference while ``pin_reference`` holds it
+_PINNED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def reference_stats(reference: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
+    """(row count, dim) of a reference, read off its pin when it has one,
+    else one aggregate job (count fused with ``size(first(vec))``)."""
+    pinned = _PINNED.get(reference)
+    if pinned is not None and pinned.ref_vec_col == vec_col:
+        return pinned.n_refs, pinned.dim
+    row = reference.agg(
+        F.count(F.lit(1)).alias("c"),
+        F.first(F.size(vec_col)).alias("d"),
+    ).collect()[0]
+    return row["c"], row["d"] or 0
+
+
+def _guard_ref_collect(n_refs: int, dim: int, rung: str) -> None:
     """Enforce the broadcast-budget contract BEFORE a driver collect of
     the reference: rungs whose shape is driver-resident (blocked, HNSW)
     must fail with the documented remediation instead of OOMing the
     driver when handed a beyond-broadcast reference (r13 ADVICE —
     ``choose_similarity_impl`` never routes such a reference here, but
     explicit callers hit the collect directly)."""
-    n_refs = reference.count()
-    probe = reference.select(F.size(vec_col).alias("d")).first()
-    dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
     ref_bytes = n_refs * dim * 8
     if ref_bytes > REF_BROADCAST_BUDGET_BYTES:
         raise ValueError(
@@ -109,6 +154,56 @@ def _guard_ref_collect(
             "equi-join is the rung whose contract survives a "
             "reference that outgrows executor memory."
         )
+
+
+def _collect_unit_matrix(
+    reference: DataFrame, ref_id_col: str, ref_vec_col: str, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, L2-normalised float64 (rows, dim) matrix) collected to the
+    driver in one job; zero-norm rows stay zero."""
+    rows = reference.select(ref_id_col, ref_vec_col).collect()
+    ids = np.array([r[0] for r in rows])
+    mat = np.array([r[1] for r in rows], dtype=np.float64).reshape(len(rows), dim)
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return ids, mat / norms[:, None]
+
+
+def resident_reference(
+    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
+) -> ResidentReference:
+    """The reference's pinned state for these columns, or a fresh one: one
+    stats job, then (inside the broadcast budget) one collect and two
+    broadcasts."""
+    pinned = _PINNED.get(reference)
+    if pinned is not None and (pinned.ref_id_col, pinned.ref_vec_col) == (
+        ref_id_col, ref_vec_col
+    ):
+        return pinned
+    n_refs, dim = reference_stats(reference, ref_vec_col)
+    if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
+        return ResidentReference(ref_id_col, ref_vec_col, n_refs, dim)
+    ids, unit = _collect_unit_matrix(reference, ref_id_col, ref_vec_col, dim)
+    sc = reference.sparkSession.sparkContext
+    return ResidentReference(
+        ref_id_col, ref_vec_col, n_refs, dim, sc.broadcast(ids), sc.broadcast(unit)
+    )
+
+
+@contextmanager
+def pin_reference(
+    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
+) -> Iterator[ResidentReference]:
+    """Keep ``reference``'s resident state for the block: routing stats
+    and the blocked rung read it instead of running reference jobs. Exit
+    destroys the broadcasts; results must be materialised inside."""
+    state = resident_reference(reference, ref_id_col, ref_vec_col)
+    _PINNED[reference] = state
+    try:
+        yield state
+    finally:
+        _PINNED.pop(reference, None)
+        state.release()
 
 
 def top_k_similarity_blocked(
@@ -128,18 +223,12 @@ def top_k_similarity_blocked(
     O(c*d) flops with zero shuffle — the Window shuffle of strategy 1 is
     gone, so the plan is scan -> mapInPandas -> done, and it scales linearly
     in the query count with the reference resident in executor memory.
+    A reference held by ``pin_reference`` is scored against its resident
+    broadcasts; any other reference is collected and broadcast per call.
     """
-    _guard_ref_collect(reference, ref_vec_col, "top_k_similarity_blocked")
-    ref_rows = reference.select(ref_id_col, ref_vec_col).collect()
-    ref_ids = np.array([r[0] for r in ref_rows])
-    ref_mat = np.array([r[1] for r in ref_rows], dtype=np.float64)
-    ref_norms = np.linalg.norm(ref_mat, axis=1)
-    ref_norms[ref_norms == 0.0] = 1.0
-    ref_unit = ref_mat / ref_norms[:, None]
-
-    sc = queries.sparkSession.sparkContext
-    b_ids = sc.broadcast(ref_ids)
-    b_mat = sc.broadcast(ref_unit)
+    b_ids, b_mat = resident_reference(reference, ref_id_col, ref_vec_col).broadcasts(
+        "top_k_similarity_blocked"
+    )
 
     id_fields = [queries.schema[c] for c in query_id_cols]
     out_schema = T.StructType(
@@ -1382,14 +1471,26 @@ def sql_silhouette_seeded(
 # notes above).  REF_BROADCAST_BUDGET: past ~256 MiB of raw float64 the
 # reference no longer ships as a per-executor resident matrix — the
 # exact rungs are off the table and candidate generation must be a
-# bucketed equi-join (IVF).  EXACT_FLOP_BUDGET: q*c*d multiply-adds
-# where the per-pair codegen of the window strategy stops being "free"
-# relative to one BLAS matmul per Arrow batch — the ladder table shows
-# blocked >= join from ~1e8 flops up (2k x 18k x 64 ≈ 2.3e9 already
-# favors blocked), so the window rung is reserved for the small-q,
-# small-c regime where its single-stage plan wins the scheduling floor.
+# bucketed equi-join (IVF).  EXACT_FLOP_BUDGET: q*c*d multiply-adds past
+# which one BLAS matmul per Arrow batch beats the window rung's per-pair
+# cosine, whose zip_with/aggregate runs as interpreted higher-order
+# functions.  Measured at dim 768 on 4 cores with the reference held by
+# reference_projection (tools/sweep_topk_crossover.py; median of 3 calls,
+# join s / blocked s):
+#
+#     C \ q      4          16         32         64         128
+#     100    1.15/0.98  0.76/0.82  0.72/0.72  0.73/0.69  0.96/0.75
+#     300    0.66/0.72  0.77/0.74  0.89/0.73  1.05/0.82  1.71/0.76
+#     1000   0.81/0.74  1.04/0.67  1.42/0.72  1.88/0.83  3.02/0.83
+#
+# Under ~1e7 the rungs are within the ~0.1 s call-to-call noise; from
+# 1.2e7 blocked wins every point, by 2.0-3.6x from 2.5e7.  The window rung
+# keeps the small regime: it needs no driver collect when the reference
+# is not pinned.  The old 1e8 came from a dim-64 ladder; at dim 64 the
+# sf0.1 cos_topk pair (2.3e7) already timed blocked 0.56 s < join 0.68 s
+# in the committed bench_out.json (8 cores).
 REF_BROADCAST_BUDGET_BYTES: int = 256 << 20
-EXACT_FLOP_BUDGET: float = 1e8
+EXACT_FLOP_BUDGET: float = 1e7
 
 
 def choose_similarity_impl(
@@ -1469,11 +1570,7 @@ def similarity_topk(
     broadcast scale, where exact is off the table anyway.
     """
     if impl == "auto":
-        ref_stats = reference.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first(F.size(ref_vec_col)).alias("d"),
-        ).collect()[0]
-        n_refs, dim = ref_stats["c"], ref_stats["d"] or 0
+        n_refs, dim = reference_stats(reference, ref_vec_col)
         impl = choose_similarity_impl(
             queries.count(), n_refs, dim, bool(ref_payload_cols)
         )
@@ -1706,17 +1803,11 @@ def hnsw_topk(
     so the registry gates it with the recall-envelope pattern
     (`cos_topk_hnsw`): exact spine hash-matched, recall bound asserted
     as a boolean — the `distinct_users_sketch` precedent."""
-    _guard_ref_collect(reference, ref_vec_col, "hnsw_topk")
-    ref_rows = reference.select(ref_id_col, ref_vec_col).collect()
-    ref_ids = np.array([r[0] for r in ref_rows])
+    n_refs, dim = reference_stats(reference, ref_vec_col)
+    _guard_ref_collect(n_refs, dim, "hnsw_topk")
+    ref_ids, ref_unit = _collect_unit_matrix(reference, ref_id_col, ref_vec_col, dim)
     order = np.argsort(ref_ids)  # deterministic insertion order
-    ref_ids = ref_ids[order]
-    ref_mat = np.array(
-        [ref_rows[i][1] for i in order], dtype=np.float64
-    )
-    norms = np.linalg.norm(ref_mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    ref_unit = ref_mat / norms[:, None]
+    ref_ids, ref_unit = ref_ids[order], ref_unit[order]
     index = hnsw_build_index(
         ref_unit, m=m, ef_construction=ef_construction, seed=seed
     )

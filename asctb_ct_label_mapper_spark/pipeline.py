@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,13 +84,23 @@ def map_raw_labels(
     """Entry point 3.2 (reference main.py:171-221): translate raw labels to
     the controlled vocabulary. Accepts a plain iterable (reference parity)
     or a prebuilt (source, raw_input_label) DataFrame; the per-label Python
-    loop of the reference is one cross-join plan (SURVEY §3.2)."""
+    loop of the reference is one cross-join plan (SURVEY §3.2).
+
+    An iterable is taken as ``str(x)`` per element (so ``None`` maps as
+    the label 'None') and handed to Spark as an Arrow table: it plans as a
+    ``LocalTableScan`` that the JVM reads, where a list of tuples would be
+    a pickled Python RDD re-read by Python tasks in every job of the call."""
     if isinstance(raw_labels, DataFrame):
         labels = raw_labels
     else:
+        texts = [str(x) for x in raw_labels]
         labels = spark.createDataFrame(
-            [(source_name, str(x)) for x in raw_labels],
-            "source string, raw_input_label string",
+            pa.table(
+                {
+                    "source": pa.array([source_name] * len(texts), pa.string()),
+                    "raw_input_label": pa.array(texts, pa.string()),
+                }
+            )
         )
     report = map_labels_to_reference(labels, reference, k=k, encoder=encoder)
     if csv_export_path:

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -1857,14 +1858,25 @@ def _latest_committed_bench() -> dict | None:
     'measured on a loaded box' become distinguishable.  The driver's
     BENCH_r*.json files hold only the compact totals line (no per-query
     spreads); the committed ``bench_out.json`` is the full-fidelity
-    twin the repo ships alongside them."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_out.json"
-    )
+    twin the repo ships alongside them.  It is read from ``HEAD``: the
+    working-tree file is what ``main()`` overwrites, so a second run on
+    an unrestored tree would otherwise rank by the first run's timings.
+    Outside a git checkout the file itself is read."""
+    here = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(path) as f:
-            committed = json.load(f)
-    except (OSError, json.JSONDecodeError):
+        text = subprocess.run(
+            ["git", "show", "HEAD:bench_out.json"],
+            cwd=here, capture_output=True, text=True, check=True, timeout=30,
+        ).stdout
+    except (OSError, subprocess.SubprocessError):
+        try:
+            with open(os.path.join(here, "bench_out.json")) as f:
+                text = f.read()
+        except OSError:
+            return None
+    try:
+        committed = json.loads(text)
+    except json.JSONDecodeError:
         return None
     return committed if "queries" in committed else None
 

@@ -132,14 +132,31 @@ def test_plural_label_exact_matches_singular_reference(spark):
     assert other["match_score_1"] != 1.0
 
 
+def _stage_rdd_ids(sc, group):
+    """RDD ids in the lineage of every stage of the jobs run under
+    ``group`` (a stage that reads a cached RDD lists its id)."""
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    ids = set()
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            rdds = store.lastStageAttempt(stage).rddIds().mkString(",")
+            ids |= {int(x) for x in rdds.split(",") if x}
+    return ids
+
+
 def test_reference_projection_releases_persist(spark):
     """Multi-organ loop contract: the context-managed projection is the
     ONLY cache entry (map_labels_to_reference must not double-persist an
-    already-persisted exact projection), and exit releases it."""
+    already-persisted exact projection), routing and the blocked rung read
+    the handle's resident state instead of running jobs on the projection,
+    and exit destroys the broadcasts and releases the persist."""
     from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+    from asctb_ct_label_mapper_spark.operators.similarity import resident_reference
 
-    def n_cached():
-        return len(spark.sparkContext._jsc.getPersistentRDDs())
+    sc = spark.sparkContext
+
+    def cached():
+        return set(sc._jsc.getPersistentRDDs().keys())
 
     # fresh plan (distinct from any fixture's) so cache dedup can't alias
     # this test's persist with an earlier test's leftover entry
@@ -153,13 +170,54 @@ def test_reference_projection_releases_persist(spark):
         .withColumn("embedding", stub_encode_udf(F.col("all_text")))
     )
     labels = spark.createDataFrame(
-        [("t", "beta cell")], "source string, raw_input_label string"
+        [("t", "beta cell"), ("t", "gamma thing")],
+        "source string, raw_input_label string",
     )
-    base = n_cached()
+    base = cached()
     with reference_projection(reference) as ref:
         assert ref.storageLevel.useMemory
-        for _ in range(2):  # two "organs" share one cache entry
-            map_labels_to_reference(labels, ref, k=2).collect()
-        assert n_cached() == base + 1
+        (proj_rdd,) = cached() - base
+        state = resident_reference(ref, "CT_ID")
+        assert (state.n_refs, state.dim) == (2, 16)
+        assert resident_reference(ref, "CT_ID") is state  # pinned, no rebuild
+        reports = []
+        for i, strategy in enumerate(("auto", "blocked")):  # two "organs"
+            group = f"reference-projection-{i}"
+            sc.setJobGroup(group, "map one organ")
+            try:
+                report = map_labels_to_reference(labels, ref, k=2, strategy=strategy)
+                built = _stage_rdd_ids(sc, group)
+                reports.append(sorted(
+                    (r["raw_input_label"], r["matched_asctb_id_1"],
+                     r["matched_asctb_id_2"], round(r["match_score_1"], 6))
+                    for r in report.collect()
+                ))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            # building the report ran no job on the projection
+            assert proj_rdd not in built, strategy
+        assert reports[0] == reports[1]  # join (auto) and blocked agree
+        assert reports[0][0][:3] == ("beta cell", "CL:9002", None)
+        assert cached() == base | {proj_rdd}
     assert not ref.storageLevel.useMemory
-    assert n_cached() == base
+    assert cached() == base
+    assert not state.ids._jbroadcast.isValid()
+    assert not state.unit._jbroadcast.isValid()
+
+
+def test_reference_projection_of_empty_reference(spark):
+    """An empty reference pins (count 0, no rows to collect) and maps as
+    it does without the handle."""
+    from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+
+    reference = spark.createDataFrame(
+        [],
+        "CT_ID string, CT_NAME string, definition string, all_text string, "
+        "ct_name_cleaned string, embedding array<float>",
+    )
+    labels = spark.createDataFrame(
+        [("t", "beta cell")], "source string, raw_input_label string"
+    )
+    bare = map_labels_to_reference(labels, reference, k=2).collect()
+    with reference_projection(reference) as ref:
+        assert map_labels_to_reference(labels, ref, k=2).collect() == bare

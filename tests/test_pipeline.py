@@ -76,3 +76,55 @@ def test_csv_export_edge(spark, raw_sheet, ontology_fixture, tmp_path):
 
     parts = glob.glob(f"{out}/part-*.csv")
     assert parts and open(parts[0], "rb").read().startswith(b"\xef\xbb\xbf")
+
+
+def _report_cols(k):
+    cols = ["source", "raw_input_label", "cleaned_input_label"]
+    for i in range(1, k + 1):
+        cols += [
+            f"match_score_{i}", f"matched_asctb_id_{i}",
+            f"matched_asctb_label_{i}", f"matched_asctb_text_{i}",
+        ]
+    return cols
+
+
+@pytest.fixture(scope="module")
+def parquet_reference(spark, raw_sheet, ontology_fixture, tmp_path_factory):
+    """A file-backed reference, so the only in-memory relation in a
+    report's plan is the label list."""
+    cache = str(tmp_path_factory.mktemp("ref") / "ref_cache.parquet")
+    return build_reference_embeddings(
+        spark, raw_sheet, cache_path=cache, ontology_fixture=ontology_fixture
+    )
+
+
+def test_map_raw_labels_list_scans_as_local_table(spark, parquet_reference):
+    """A Python list reaches Spark as an Arrow table: the JVM scans it
+    (LocalTableScan), no Python task re-reads a pickled RDD."""
+    from asctb_ct_label_mapper_spark.plans.audit import formatted_plan
+
+    report = map_raw_labels(spark, ["Basal Cell", "weird thing"], parquet_reference, k=2)
+    plan = formatted_plan(report)
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
+
+
+def test_map_raw_labels_empty_list_keeps_k_column_schema(spark, parquet_reference):
+    report = map_raw_labels(spark, [], parquet_reference, k=3)
+    assert report.columns == _report_cols(3)
+    assert dict(report.dtypes)["match_score_3"] == "double"
+    assert report.count() == 0
+
+
+def test_map_raw_labels_none_and_repeated_labels(spark, parquet_reference):
+    """``None`` maps as the label 'None' (str(x) per element); repeated
+    labels collapse to one report row."""
+    rows = map_raw_labels(
+        spark, [None, "Basal Cell", "Basal Cell", None], parquet_reference,
+        source_name="t", k=2,
+    ).collect()
+    assert sorted(r["raw_input_label"] for r in rows) == ["Basal Cell", "None"]
+    assert {r["source"] for r in rows} == {"t"}
+    by_label = {r["raw_input_label"]: r for r in rows}
+    assert by_label["Basal Cell"]["match_score_1"] == 1.0
+    assert by_label["None"]["match_score_1"] < 1.0

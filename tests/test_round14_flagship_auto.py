@@ -38,10 +38,12 @@ def test_choose_impl_routes_flagship_scales():
     assert choose_similarity_impl(600, 1_000_000, 384) == "ivf"
 
 
-def test_flagship_strategies_hash_identical(spark, sf_dir):
-    """auto (join rung) and explicit blocked produce identical reports
-    — the exact-rung equivalence the similarity oracle already proves,
-    re-pinned through the full flagship plan."""
+@pytest.mark.parametrize("dim", [16, 768])
+def test_flagship_strategies_hash_identical(spark, sf_dir, dim):
+    """join and blocked produce identical reports — the exact-rung
+    equivalence the similarity oracle already proves, re-pinned through
+    the full flagship plan at the stub width and at the paper's 768-d,
+    the width EXACT_FLOP_BUDGET was measured at. auto agrees with both."""
     import __spark_entry__ as entry
 
     from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
@@ -49,6 +51,9 @@ def test_flagship_strategies_hash_identical(spark, sf_dir):
     from asctb_ct_label_mapper_spark.operators.mapping import (
         map_labels_to_reference,
     )
+
+    def encoder(col):
+        return stub_encode_udf(col, dim=dim)
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     labels = supp.select(
@@ -68,7 +73,7 @@ def test_flagship_strategies_hash_identical(spark, sf_dir):
         .withColumn(
             "ct_name_cleaned", clean_text_full_udf(F.col("CT_NAME"))
         )
-        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+        .withColumn("embedding", encoder(F.col("all_text")))
     )
     # scores rounded to 6dp — the repo's cross-rung convention (the
     # Catalyst dot product and numpy BLAS differ by ~1 ulp raw)
@@ -76,16 +81,18 @@ def test_flagship_strategies_hash_identical(spark, sf_dir):
         F.col("source"), F.col("raw_input_label"),
         F.col("matched_asctb_id_1"), F.col("matched_asctb_id_2"),
         F.round("match_score_1", 6).alias("s1"),
+        F.round("match_score_2", 6).alias("s2"),
     ]
-    a = sorted(
-        map_labels_to_reference(labels, reference, k=2, strategy="auto")
-        .select(*cols).collect()
-    )
-    b = sorted(
-        map_labels_to_reference(labels, reference, k=2, strategy="blocked")
-        .select(*cols).collect()
-    )
-    assert a == b
+    got = {
+        strategy: sorted(
+            map_labels_to_reference(
+                labels, reference, k=2, encoder=encoder, strategy=strategy
+            ).select(*cols).collect()
+        )
+        for strategy in ("join", "blocked", "auto")
+    }
+    assert got["join"] == got["blocked"] == got["auto"]
+    assert len(got["join"]) == labels.count()
 
 
 def test_overwrite_exact_plain_join_matches_broadcast(spark):

@@ -127,3 +127,30 @@ def test_compact_line_n_queries_ignores_additive_split_entries():
     assert parsed["n_queries"] == 20
     # the additive entries still ride in the queries map
     assert "cos_topk_hnsw_build" in parsed["queries"]
+
+
+def test_latest_committed_bench_reads_head_not_worktree(monkeypatch):
+    # main() overwrites the working-tree bench_out.json at the end of a
+    # run; the ranking must come from the committed artifact
+    calls = []
+
+    def fake_run(cmd, **kwargs):
+        calls.append(cmd)
+        return bench.subprocess.CompletedProcess(
+            cmd, 0, stdout=json.dumps({"queries": {"committed_q": 1.0}})
+        )
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    assert bench._latest_committed_bench() == {"queries": {"committed_q": 1.0}}
+    assert calls == [["git", "show", "HEAD:bench_out.json"]]
+
+
+def test_latest_committed_bench_falls_back_to_file(monkeypatch):
+    def no_git(cmd, **kwargs):
+        raise bench.subprocess.CalledProcessError(128, cmd)
+
+    monkeypatch.setattr(bench.subprocess, "run", no_git)
+    path = os.path.join(os.path.dirname(bench.__file__), "bench_out.json")
+    with open(path) as f:
+        on_disk = json.load(f)
+    assert bench._latest_committed_bench() == on_disk
