@@ -339,18 +339,3 @@ def normalize_text(
     stripped = F.regexp_replace(nfc, CONTROL_CHAR_RE, "")
     collapsed = F.trim(F.regexp_replace(stripped, "\\s+", " "))
     return df.withColumn(out_col, collapsed)
-
-
-def sql_normalize_text(
-    table: str = "documents", text_col: str = "text", out_col: str = "normalized"
-) -> str:
-    """DuckDB replay of ``normalize_text`` (nfc_normalize + the same
-    regex chain — the shared \\x{{..}} pattern is valid RE2 and Java)."""
-    return f"""
-    SELECT *,
-        trim(regexp_replace(
-            regexp_replace(nfc_normalize({text_col}),
-                           '{CONTROL_CHAR_RE}', '', 'g'),
-            '\\s+', ' ', 'g')) AS {out_col}
-    FROM {table}
-    """

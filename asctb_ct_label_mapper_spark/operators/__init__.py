@@ -5,7 +5,6 @@ from asctb_ct_label_mapper_spark.operators.dedup import (
     jaccard_expr,
     minhash_dedup_pairs,
     minhash_lsh_candidates,
-    minhash_signature_expr,
     ngram_jaccard_pairs,
     simhash_expr,
     simhash_near_dup_pairs,
@@ -73,7 +72,6 @@ __all__ = [
     "map_labels_to_reference",
     "minhash_dedup_pairs",
     "minhash_lsh_candidates",
-    "minhash_signature_expr",
     "ngram_jaccard_pairs",
     "overwrite_exact_matches",
     "simhash_expr",

@@ -23,13 +23,10 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from asctb_ct_label_mapper_spark.operators.dedup import (
-    grams_frame,
-    word_shingles_expr,
-)
+from asctb_ct_label_mapper_spark.operators.dedup import grams_frame
 
 
 def ngram_contamination(
@@ -40,7 +37,6 @@ def ngram_contamination(
     n: int = 3,
     threshold: float = 0.5,
     hash_join_key: bool = False,
-    fused: bool = True,
 ) -> DataFrame:
     """Per eval document: distinct word ``n``-grams, how many of them occur
     in the train corpus, the contamination rate, and a threshold flag.
@@ -50,25 +46,19 @@ def ngram_contamination(
     Returns (id_col, n_shingles, n_hit, contamination_rate,
     is_contaminated).
 
-    ``fused`` (default) shingles via the Arrow-vectorized UDF — the native
-    HOF expression re-evaluates the token split per shingle (interpreted,
-    O(tokens^2) per doc; the dedup module's documented pitfall) — with
-    identical shingle SETS, so oracle hashes are unchanged.
+    Shingles come from the Arrow ``grams_frame`` producer, whose shingle
+    SETS equal ``word_shingles_expr``'s (the native HOF re-evaluates the
+    token split per shingle, interpreted, O(tokens^2) per doc).
     """
-    if fused:
-        # explode_outer: zero-shingle docs survive as one null-gram row
-        ev = grams_frame(
-            eval_df.select(F.col(id_col), F.col(text_col)), text_col, n, "_sh"
-        ).select(F.col(id_col), F.explode_outer("_sh").alias("gram"))
-        vocab = (
-            grams_frame(train_df.select(F.col(text_col)), text_col, n, "_sh")
-            .select(F.explode("_sh").alias("gram"))
-            .distinct()
-        )
-    else:
-        sh = word_shingles_expr(F.col(text_col), n)
-        ev = eval_df.select(F.col(id_col), F.explode_outer(sh).alias("gram"))
-        vocab = train_df.select(F.explode(sh).alias("gram")).distinct()
+    # explode_outer: zero-shingle docs survive as one null-gram row
+    ev = grams_frame(
+        eval_df.select(F.col(id_col), F.col(text_col)), text_col, n, "_sh"
+    ).select(F.col(id_col), F.explode_outer("_sh").alias("gram"))
+    vocab = (
+        grams_frame(train_df.select(F.col(text_col)), text_col, n, "_sh")
+        .select(F.explode("_sh").alias("gram"))
+        .distinct()
+    )
     if hash_join_key:
         ev = ev.withColumn("gk", F.xxhash64("gram"))
         vocab = vocab.select(F.xxhash64("gram").alias("gk")).distinct()
@@ -231,7 +221,6 @@ def bigram_logppl(
     train_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fused: bool = True,
 ) -> DataFrame:
     """Bigram language-model quality score — the conditional-probability
     upgrade of ``unigram_logppl``: p(w2|w1) = (cnt(w1 w2) + 1) /
@@ -247,38 +236,22 @@ def bigram_logppl(
     equi-joins of the exploded eval bigrams against vocabulary-sized
     models, then a per-doc average.
 
-    ``fused`` (default) emits bigrams via the Arrow-vectorized
-    ``ngrams_all_udf`` over a width-ensured scan: the native
-    transform+slice HOF is interpreted per element and measured at 157 s
-    for the 500k-doc tier vs 15 s fused — value-identical bigram streams
-    (same single-space split, same multiplicity/order), so the oracle
-    hash is unchanged. ``fused=False`` keeps the all-native expression
-    as the engine-only fallback.
+    Bigrams come from the Arrow ``grams_frame`` producer over a
+    width-ensured scan (same single-space split, same multiplicity and
+    order as the SQL replay). The native transform+slice HOF it replaced
+    is interpreted per element: 157 s for the 500k-doc tier vs 15 s.
     """
-    def bigrams_native(text: Column) -> Column:
-        toks = F.split(text, " ")
-        idx = F.sequence(F.lit(1), F.size(toks) - 1)
-        return F.when(
-            F.size(toks) >= 2,
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i, 2), " ")),
-        ).otherwise(F.array().cast("array<string>"))
-
     from pyspark import StorageLevel
 
     from asctb_ct_label_mapper_spark.plans.partitioning import (
         ensure_min_partitions,
     )
 
-    if fused:
-        train_df = ensure_min_partitions(train_df)
-        eval_df = ensure_min_partitions(eval_df)
-        train_bg = grams_frame(
-            train_df.select(F.col(text_col)), text_col, 2, "_bg", dedup=False
-        ).select(F.explode("_bg").alias("bigram"))
-    else:
-        train_bg = train_df.select(
-            F.explode(bigrams_native(F.col(text_col))).alias("bigram")
-        )
+    train_df = ensure_min_partitions(train_df)
+    eval_df = ensure_min_partitions(eval_df)
+    train_bg = grams_frame(
+        train_df.select(F.col(text_col)), text_col, 2, "_bg", dedup=False
+    ).select(F.explode("_bg").alias("bigram"))
     bg_counts = (
         train_bg.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("c12"))
@@ -317,18 +290,13 @@ def bigram_logppl(
     )
     if vocab == 0:
         raise ValueError("bigram_logppl: train corpus is empty (no tokens)")
-    if fused:
-        ev = grams_frame(
-            eval_df.select(F.col(id_col), F.col(text_col)),
-            text_col,
-            2,
-            "_bg",
-            dedup=False,
-        ).select(F.col(id_col), F.explode("_bg").alias("bigram"))
-    else:
-        ev = eval_df.select(
-            F.col(id_col), F.explode(bigrams_native(F.col(text_col))).alias("bigram")
-        )
+    ev = grams_frame(
+        eval_df.select(F.col(id_col), F.col(text_col)),
+        text_col,
+        2,
+        "_bg",
+        dedup=False,
+    ).select(F.col(id_col), F.explode("_bg").alias("bigram"))
     ev = ev.withColumn("prefix", F.substring_index(F.col("bigram"), " ", 1))
     scored = (
         ev.join(bg_counts, "bigram", "left")

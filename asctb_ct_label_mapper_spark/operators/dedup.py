@@ -12,17 +12,18 @@ brief as first-class components. Four families:
 - n-gram Jaccard: exact pairwise Jaccard within a blocking key (the oracle
               path; quadratic within block, use blocks that fit)
 
-Shingling and MinHash signatures have TWO implementations each: a native
-higher-order-function expression and an Arrow-vectorized pandas UDF. The
-UDF is the default hot path: Spark does not run lambda-bearing HOFs
-(``transform``/``aggregate``) inside whole-stage codegen — every element
-evaluates interpreted — and profiling at 50k docs showed the native
-shingle+signature pipeline at ~24 s per plan branch vs ~1 s fused in numpy
-(one base hash per shingle, the n_hashes family derived as an affine
-transform over uint64, per-doc minima via ``np.minimum.reduceat``). Same
+Shingling and MinHash signatures have ONE implementation each, both
+Arrow (``mapInArrow``): ``grams_frame`` produces every n-gram list and
+``minhash_signatures_frame`` every signature. Spark does not run
+lambda-bearing HOFs (``transform``/``aggregate``) inside whole-stage
+codegen — every element evaluates interpreted — and profiling at 50k docs
+showed the native shingle+signature pipeline at ~24 s per plan branch vs
+~1 s in numpy (one base hash per shingle, the n_hashes family derived as
+an affine transform, per-doc minima via ``np.minimum.reduceat``). Same
 trade, measured and documented, as the LSH bucketing UDF in similarity.py.
-The native flavors remain for the oracle-checkable md5 variant and as the
-zero-Python fallback.
+``word_shingles_expr`` stays as the native shingle definition the tests
+compare against; the md5-affine signature family is what the DuckDB
+oracles replay.
 
 At 100 TB: the only shuffles are hash-partitioned group-bys / equi-joins on
 uniformly-distributed hash keys (no skew by construction); signatures are
@@ -92,41 +93,16 @@ def _shingle_list(text: str | None, n: int) -> list[str]:
     return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
 
 
-def shingles_udf(n: int = 3):
-    """Arrow-vectorized shingle producer, value-identical (as a set) to
-    ``word_shingles_expr``. Preferred in hot paths: the HOF expression is
-    interpreted per element (measured ~14 s for 50k docs vs ~1.5 s here)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _shingle_list(t, n))
-
-    return _sh
-
-
 def _gram_list(text: str | None, n: int) -> list[str]:
-    """Python mirror of the native transform+slice gram HOF — every
-    n-gram, keeping MULTIPLICITY and order (``_shingle_list`` dedups)."""
+    """Every word n-gram of a single-space-split text, keeping
+    MULTIPLICITY and order (``_shingle_list`` dedups) — the grams the SQL
+    mirrors build with ``t[i:i+n-1]`` slices."""
     if text is None:
         return []
     toks = text.split(" ")
     if len(toks) < n:
         return []
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-
-
-def ngrams_all_udf(n: int = 2):
-    """Arrow-vectorized n-gram producer keeping MULTIPLICITY and order
-    (``shingles_udf`` dedups — right for set similarity, wrong for
-    language-model counts). Same single-space tokenization. Measured at
-    500k docs / 26.5M bigrams: the native transform+slice HOF takes 157 s
-    (per-element interpretation), this path 15 s."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _ng(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _gram_list(t, n))
-
-    return _ng
 
 
 def grams_frame(
@@ -137,16 +113,19 @@ def grams_frame(
     dedup: bool = True,
     drop_text: bool = True,
 ) -> DataFrame:
-    """Frame-level n-gram producer via ``mapInArrow`` (guide §4.2) —
-    per-doc values identical to ``shingles_udf`` (``dedup=True``) /
-    ``ngrams_all_udf`` (``dedup=False``; shared Python bodies), but the
-    output list column is built zero-copy with
-    ``pa.ListArray.from_arrays`` over one flat string buffer per batch
-    instead of a pandas object-Series of Python lists (the same boundary
-    move as ``minhash_signatures_frame``; measured 3.1 s → 1.6 s for the
-    50k-doc tier's shingle+explode stage). Every input column except
-    (optionally) ``text_col`` passes through untouched; ``out_col`` is
-    appended. Null texts yield empty gram lists on both bodies."""
+    """Frame-level n-gram producer via ``mapInArrow`` (guide §4.2) — the
+    one n-gram kernel of the package. Per doc, ``_shingle_list``
+    (``dedup=True``: distinct shingles, the set ``word_shingles_expr``
+    defines) or ``_gram_list`` (``dedup=False``: every n-gram with
+    multiplicity and order, for language-model counts). The output list
+    column is built zero-copy with ``pa.ListArray.from_arrays`` over one
+    flat string buffer per batch instead of a pandas object-Series of
+    Python lists (the same boundary move as ``minhash_signatures_frame``;
+    measured 3.1 s → 1.6 s for the 50k-doc tier's shingle+explode stage
+    against the pandas-UDF form; the native transform+slice HOF took
+    157 s vs 15 s for 26.5M bigrams at 500k docs). Every input column
+    except (optionally) ``text_col`` passes through untouched;
+    ``out_col`` is appended. Null texts yield empty gram lists."""
     import pyarrow as pa
 
     make = _shingle_list if dedup else _gram_list
@@ -211,120 +190,28 @@ def minhash_affine_params(n_hashes: int) -> tuple[list[int], list[int], int]:
     )
 
 
-def minhash_signature_md5affine_udf(n_hashes: int = 16, shingle_n: int = 3):
-    """Fused text -> md5-affine MinHash signature (Arrow-vectorized).
-
-    Same chunked-reduceat structure as ``minhash_signature_udf`` but the
-    base hash is md5-derived (cross-engine reproducible): md5 runs ONCE per
-    UNIQUE shingle in the batch (``pd.factorize`` dedups first — near-dup
-    corpora repeat shingles heavily), the affine family is exact int64
-    arithmetic mod P. Docs with no shingles get P sentinels (collide only
-    with other empties), mirroring the oracle's ``coalesce(..., P)``."""
-    import hashlib
-
-    a, b, p = minhash_affine_params(n_hashes)
-    a = np.asarray(a, dtype=np.int64)[:, None]
-    b = np.asarray(b, dtype=np.int64)[:, None]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        shingle_lists = [_shingle_list(t, shingle_n) for t in texts]
-        lengths = np.array([len(s) for s in shingle_lists], dtype=np.int64)
-        out = np.full((len(shingle_lists), n_hashes), p, dtype=np.int64)
-        nonempty = np.flatnonzero(lengths)
-        if len(nonempty):
-            flat = np.concatenate(
-                [np.asarray(shingle_lists[i], dtype=object) for i in nonempty]
-            )
-            codes, uniques = pd.factorize(flat)
-            ubase = np.fromiter(
-                (
-                    int(hashlib.md5(u.encode("utf-8")).hexdigest()[:8], 16) % p
-                    for u in uniques
-                ),
-                dtype=np.int64,
-                count=len(uniques),
-            )
-            base = ubase[codes]
-            cum = np.cumsum(lengths[nonempty])
-            offsets = np.concatenate(([0], cum[:-1]))
-            mins = np.empty((len(nonempty), n_hashes), dtype=np.int64)
-            chunk = 4096
-            for lo in range(0, len(nonempty), chunk):
-                hi = min(lo + chunk, len(nonempty))
-                seg = base[offsets[lo] : cum[hi - 1]]
-                fam = (a * seg[None, :] + b) % p
-                mins[lo:hi] = np.minimum.reduceat(
-                    fam, offsets[lo:hi] - offsets[lo], axis=1
-                ).T
-            out[nonempty] = mins
-        return pd.Series(list(out))
-
-    return _sig
-
-
-def minhash_signature_udf(n_hashes: int = 32, shingle_n: int = 3):
-    """Fused text -> MinHash signature as ONE Arrow-vectorized UDF.
-
-    Per batch: shingle in Python (duplicates need no removal — the min is
-    multiset-invariant), ONE base hash per shingle (``pd.util.hash_array``,
-    SipHash with a fixed key -> deterministic), then the whole hash family
-    as an (n_hashes, total_shingles) uint64 affine transform and per-doc
-    minima via ``np.minimum.reduceat``. Replaces n_hashes interpreted
-    ``array_min(transform(...))`` passes (~24 s -> ~1 s at 50k docs).
-    Docs with no shingles get int64-max sentinels (collide only with other
-    empties), matching the native flavor's convention."""
-    assert n_hashes <= _MINHASH_MAX_FAMILY
-    a = _MINHASH_A[:n_hashes]
-    b = _MINHASH_B[:n_hashes]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        shingle_lists = [_shingle_list(t, shingle_n) for t in texts]
-        lengths = np.array([len(s) for s in shingle_lists], dtype=np.int64)
-        out = np.full((len(shingle_lists), n_hashes), _EMPTY_SENTINEL, dtype=np.int64)
-        nonempty = np.flatnonzero(lengths)
-        if len(nonempty):
-            flat = np.concatenate([np.asarray(shingle_lists[i], dtype=object) for i in nonempty])
-            base = pd.util.hash_array(flat)  # uint64
-            cum = np.cumsum(lengths[nonempty])
-            offsets = np.concatenate(([0], cum[:-1]))
-            # The affine expansion runs in doc-aligned CHUNKS so each
-            # (n_hashes, chunk) block stays cache-resident instead of
-            # materializing n_hashes full-corpus rows plus a same-sized +b
-            # temporary (uint64 mul is scalar on x86 — bandwidth dominates;
-            # measured 22 s -> 2 s single-core at 2.6M shingles). The +b
-            # stays INSIDE the elementwise transform: hoisting it past the
-            # min is unsound under uint64 wraparound (adding b can wrap
-            # some elements and not others, changing which shingle wins),
-            # so chunk outputs are bit-identical to the unchunked family.
-            mins = np.empty((len(nonempty), n_hashes), dtype=np.uint64)
-            chunk = 4096
-            for lo in range(0, len(nonempty), chunk):
-                hi = min(lo + chunk, len(nonempty))
-                seg = base[offsets[lo] : cum[hi - 1]]
-                fam = a[:, None] * seg[None, :]
-                fam += b[:, None]  # uint64 wraps per element, as documented
-                mins[lo:hi] = np.minimum.reduceat(
-                    fam, offsets[lo:hi] - offsets[lo], axis=1
-                ).T
-            out[nonempty] = mins.view(np.int64)
-        return pd.Series(list(out))
-
-    return _sig
-
-
 def _minhash_sig_matrix(
     texts: list, n_hashes: int, shingle_n: int, family: str
 ) -> np.ndarray:
-    """Shared numpy body of both signature families: list of texts ->
-    (len(texts), n_hashes) int64 matrix. Values are bit-identical to the
-    pandas-UDF flavors (pinned by tests): md5affine = one md5 per UNIQUE
-    shingle (pd.factorize dedups; int.from_bytes(digest[:4]) ==
-    int(hexdigest[:8], 16)) then the exact mod-P affine family; siphash =
-    pd.util.hash_array base with the uint64-wraparound chunked affine.
-    Per-doc shingle dedup is skipped on purpose — minima are
-    multiset-invariant, and factorize collapses repeats for the md5 cost."""
+    """Numpy body of both signature families: list of texts ->
+    (len(texts), n_hashes) int64 matrix. md5affine = one md5 per UNIQUE
+    shingle (pd.factorize dedups — near-dup corpora repeat shingles
+    heavily; int.from_bytes(digest[:4]) == int(hexdigest[:8], 16), the
+    oracle's base) then the exact mod-P affine family; siphash =
+    ``pd.util.hash_array`` base (SipHash with a fixed key) with the
+    uint64-wraparound affine family. Docs with no shingles get sentinels
+    (P resp. int64-max) that collide only with other empties. Per-doc
+    shingle dedup is skipped on purpose — minima are multiset-invariant,
+    and factorize collapses repeats for the md5 cost.
+
+    The affine expansion runs in doc-aligned CHUNKS so each (n_hashes,
+    chunk) block stays cache-resident instead of materializing n_hashes
+    full-corpus rows plus a same-sized +b temporary (uint64 mul is scalar
+    on x86 — bandwidth dominates; measured 22 s -> 2 s single-core at
+    2.6M shingles). The siphash +b stays INSIDE the elementwise transform:
+    hoisting it past the min is unsound under uint64 wraparound (adding b
+    can wrap some elements and not others, changing which shingle wins),
+    so chunk outputs are bit-identical to the unchunked family."""
     import hashlib
 
     if family == "md5affine":
@@ -336,18 +223,7 @@ def _minhash_sig_matrix(
         a_u = _MINHASH_A[:n_hashes]
         b_u = _MINHASH_B[:n_hashes]
         sentinel = _EMPTY_SENTINEL
-    shingle_lists = []
-    for t in texts:
-        toks = t.split(" ") if t is not None else []
-        if len(toks) < shingle_n:
-            shingle_lists.append([])
-        else:
-            shingle_lists.append(
-                [
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                ]
-            )
+    shingle_lists = [_gram_list(t, shingle_n) for t in texts]
     lengths = np.array([len(s) for s in shingle_lists], dtype=np.int64)
     out = np.full((len(texts), n_hashes), sentinel, dtype=np.int64)
     nonempty = np.flatnonzero(lengths)
@@ -387,7 +263,7 @@ def _minhash_sig_matrix(
             hi = min(lo + chunk, len(nonempty))
             seg = base[offsets[lo] : cum[hi - 1]]
             fam = a_u[:, None] * seg[None, :]
-            fam += b_u[:, None]  # uint64 wraps per element (see UDF note)
+            fam += b_u[:, None]  # uint64 wraps per element (see above)
             mins[lo:hi] = np.minimum.reduceat(
                 fam, offsets[lo:hi] - offsets[lo], axis=1
             ).T
@@ -405,14 +281,14 @@ def minhash_signatures_frame(
     id_out: str = "_id",
     sig_out: str = "_sig",
 ) -> DataFrame:
-    """(id, sig) signature frame via ``mapInArrow`` — the hot-path
-    signature producer. Signature VALUES are identical to the pandas-UDF
-    flavors; the difference is the Python boundary (guide §4): the output
+    """(id, sig) signature frame via ``mapInArrow`` — the one MinHash
+    signature producer (values from ``_minhash_sig_matrix``). The output
     ListArray is built zero-copy from the flat (n_docs × n_hashes) matrix
     (``pa.ListArray.from_arrays``) instead of pandas' row-at-a-time
-    object-Series → Arrow conversion. Measured at docs100x (500k docs,
-    26M shingles): signature stage 8.0 s → 6.1 s; the conversion, not the
-    hashing, was the difference."""
+    object-Series → Arrow conversion (guide §4). Measured at docs100x
+    (500k docs, 26M shingles) against the pandas-UDF form: signature
+    stage 8.0 s → 6.1 s; the conversion, not the hashing, was the
+    difference."""
     assert family in ("siphash", "md5affine")
     assert n_hashes <= _MINHASH_MAX_FAMILY
     import pyarrow as pa
@@ -449,25 +325,6 @@ def minhash_signatures_frame(
 # --- MinHash + banded LSH ----------------------------------------------------
 
 
-def minhash_signature_expr(shingles: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature: per hash function j, min over shingles of
-    murmur3(shingle, salt_j). Seeds are baked literals so the signature is
-    deterministic across runs and executors. Empty shingle sets get
-    int-max sentinels (they collide only with other empties)."""
-    def hash_with_salt(salt: int):
-        # single-arg lambda: a 2-arg lambda would be (element, index) to Spark
-        return lambda s: F.hash(s, F.lit(salt))
-
-    sigs = [
-        F.coalesce(
-            F.array_min(F.transform(shingles, hash_with_salt(j))),
-            F.lit(2147483647),
-        )
-        for j in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -475,7 +332,6 @@ def minhash_lsh_candidates(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    fused: bool = True,
     family: str = "siphash",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
@@ -486,12 +342,9 @@ def minhash_lsh_candidates(
     shuffle, never a cross join. Returns (id_a, id_b) with id_a < id_b,
     distinct across bands.
 
-    ``fused=True`` (default) computes signatures with the Arrow-vectorized
-    UDF; ``fused=False`` keeps the all-native murmur3 expression (different
-    hash family -> different, equally valid candidate sets).
     ``family="md5affine"`` swaps in the DuckDB-replayable md5-affine
-    signature family and an md5 band hash (oracle-checkable end-to-end;
-    requires ``fused=True``).
+    signature family and the md5 band hash of ``_band_signatures``
+    (oracle-checkable end-to-end).
     """
     assert n_hashes % bands == 0, "bands must divide n_hashes"
     assert family in ("siphash", "md5affine")
@@ -499,54 +352,24 @@ def minhash_lsh_candidates(
     # Shingle+signature cost scales with rows, not file bytes: widen narrow
     # scans so the dense stage uses the whole box (no-op on real-scale scans).
     df = ensure_min_partitions(df)
-    if fused:
-        sig = minhash_signatures_frame(
-            df, text_col, id_col, n_hashes, shingle_n, family
-        )
-    else:
-        assert family == "siphash", "native flavor has no md5-affine variant"
-        # Materialize the shingle array in its OWN projection first: the
-        # signature references it n_hashes times, and inlining the
-        # split/slice/join pipeline into each of the 32 array_min terms
-        # multiplies the per-row cost ~32x (measured 96s -> ~3s at sf0.1).
-        shingled = df.select(
-            F.col(id_col).alias("_id"),
-            word_shingles_expr(F.col(text_col), shingle_n).alias("_shingles"),
-        )
-        sig = shingled.select(
-            "_id", minhash_signature_expr(F.col("_shingles"), n_hashes).alias("_sig")
-        )
+    sig = minhash_signatures_frame(
+        df, text_col, id_col, n_hashes, shingle_n, family, sig_out="sig"
+    )
     if family == "md5affine":
-        # md5 of the '|'-joined decimal band slice — the oracle replays
-        # md5(array_to_string([CAST(x AS VARCHAR) ...], '|')). unhex packs
-        # the digest to binary(16): equality (the only use) is unchanged,
-        # and the self-join shuffles/compares 16-byte keys instead of
-        # 32-char strings.
-        def band_hash(band):
-            return F.unhex(
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.slice("_sig", band * r + 1, r),
-                            lambda x: x.cast("string"),
-                        ),
-                        "|",
-                    )
-                )
-            )
+        banded = _band_signatures(sig, "_id", "_id", bands, r)
     else:
-        def band_hash(band):
-            return F.hash(F.slice("_sig", band * r + 1, r))
-
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(b.alias("band"), band_hash(b).alias("bhash")),
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bhash")
+        banded = sig.select(
+            "_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(bands - 1)),
+                    lambda b: F.struct(
+                        b.alias("band"),
+                        F.hash(F.slice("sig", b * r + 1, r)).alias("bhash"),
+                    ),
+                )
+            ).alias("bb"),
+        ).select("_id", "bb.band", "bb.bhash")
     # The self-join consumes this frame twice; persist so signatures are
     # computed once (narrow rows: id + band + bhash). Materialize EAGERLY:
     # a lazy persist does not help a self-join, because the two join sides
@@ -570,87 +393,6 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_md5_signature_expr(shingles: Column, n_hashes: int = 16) -> Column:
-    """Oracle-reproducible MinHash signature: component j is the
-    LEXICOGRAPHIC minimum over shingles of ``md5(j || ':' || shingle)``
-    (lowercase hex). MinHash needs only a uniform hash with a total order —
-    the 128-bit digest ordered as a hex string is exactly that, and DuckDB's
-    ``md5()`` emits byte-identical digests, so the ENTIRE banded-LSH
-    pipeline (signature -> band hash -> candidate join -> Jaccard verify)
-    can be replayed as a SQL oracle. ~2x the hashing cost of the
-    fused/murmur3 flavors, so this one is for the correctness gate, not the
-    bench. Empty shingle sets get a '~' sentinel (sorts after all hex
-    digits), colliding only with other empties."""
-    def md5_with_salt(j: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{j}:"), s))
-
-    sigs = [
-        F.coalesce(
-            F.array_min(F.transform(shingles, md5_with_salt(j))),
-            F.lit("~empty"),
-        )
-        for j in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def minhash_md5_dedup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.2,
-    n_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Banded MinHash LSH + exact-Jaccard verification, md5 flavor — the
-    same physical shape as ``minhash_dedup_pairs`` (signature projection,
-    band explode, self-equi-join on (band, band_hash), shingle-set verify)
-    with every hash DuckDB-reproducible. Band hash is
-    ``md5(array_join(slice(sig, b*r+1, r), '|'))``."""
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
-    r = n_hashes // bands
-    sh = ensure_min_partitions(df).select(
-        F.col(id_col).alias("_id"),
-        word_shingles_expr(F.col(text_col), shingle_n).alias("_shingles"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()  # eager: both the signature branch and the verify joins read it
-    sig = sh.select(
-        "_id", minhash_md5_signature_expr(F.col("_shingles"), n_hashes).alias("_sig")
-    )
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(F.array_join(F.slice("_sig", b * r + 1, r), "|")).alias("bhash"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bhash")
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()  # eager: self-join sides race to compute otherwise
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b.hint("shuffle_hash"), ["band", "bhash"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    return (
-        cands.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_shingles").alias("_sh_a")), "id_a"
-        )
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_shingles").alias("_sh_b")), "id_b")
-        .withColumn("jaccard", F.round(jaccard_expr(F.col("_sh_a"), F.col("_sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def jaccard_expr(a: Column, b: Column) -> Column:
     """Exact Jaccard over two distinct-element arrays.
 
@@ -670,7 +412,6 @@ def minhash_dedup_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    fused: bool = True,
     family: str = "siphash",
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard >= threshold.
@@ -680,7 +421,7 @@ def minhash_dedup_pairs(
     whenever the threshold is meaningful).
     """
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, n_hashes, bands, shingle_n, fused, family
+        df, text_col, id_col, n_hashes, bands, shingle_n, family
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_cand = cands.count()  # eager: feeds the id-restriction AND both verify joins
 
@@ -697,18 +438,11 @@ def minhash_dedup_pairs(
     if n_cand <= 2_000_000:
         ids = F.broadcast(ids)
     needed = df.join(ids, df[id_col] == ids["_sid"], "inner")
-    sh = (
-        grams_frame(
-            needed.select(F.col("_sid"), F.col(text_col)),
-            text_col,
-            shingle_n,
-            "_shingles",
-        )
-        if fused
-        else needed.select(
-            F.col("_sid"),
-            word_shingles_expr(F.col(text_col), shingle_n).alias("_shingles"),
-        )
+    sh = grams_frame(
+        needed.select(F.col("_sid"), F.col(text_col)),
+        text_col,
+        shingle_n,
+        "_shingles",
     ).persist(StorageLevel.MEMORY_AND_DISK)
     sh.count()  # eager: consumed by both verify joins
     return (
@@ -727,7 +461,6 @@ def ngram_jaccard_pairs(
     block_col: str,
     threshold: float = 0.0,
     shingle_n: int = 3,
-    fused: bool = True,
 ) -> DataFrame:
     """Exact Jaccard pairs WITHIN a blocking key (oracle-checkable).
 
@@ -742,12 +475,11 @@ def ngram_jaccard_pairs(
     - threshold <= 0: genuine all-pairs within the block (must include
       zero-overlap pairs), per-pair array intersection.
 
-    ``fused`` selects the vectorized shingle UDF (identical shingle SETS to
-    the native expression — same split/join/dedup semantics — so the
-    Jaccard output, and therefore the oracle match, is unchanged). The
-    shingle projection feeds 2-3 plan branches (sizes + both join sides),
-    so it is persisted: shingling runs once, not per branch (measured 3x
-    ~14 s at 50k docs before the hoist).
+    Shingles come from ``grams_frame`` (the same sets as
+    ``word_shingles_expr``: single-space split, join, dedup). The shingle
+    projection feeds 2-3 plan branches (sizes + both join sides), so it is
+    persisted: shingling runs once, not per branch (measured 3x ~14 s at
+    50k docs before the hoist).
     """
     narrow = ensure_min_partitions(
         df.select(
@@ -756,15 +488,9 @@ def ngram_jaccard_pairs(
             F.col(text_col),
         )
     )
-    sh = (
-        grams_frame(narrow, text_col, shingle_n, "_sh")
-        if fused
-        else narrow.select(
-            "_blk",
-            "_id",
-            word_shingles_expr(F.col(text_col), shingle_n).alias("_sh"),
-        )
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = grams_frame(narrow, text_col, shingle_n, "_sh").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # Eager: the 2-3 consumer branches are concurrent shuffle-map stages —
     # a lazy persist lets each recompute the shingling before any caches.
     sh.count()
@@ -1299,7 +1025,6 @@ def dup_ngram_spans(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fused: bool = True,
 ) -> DataFrame:
     """Substring-level duplication profile (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better": exact-substring dedup,
@@ -1321,30 +1046,18 @@ def dup_ngram_spans(
     Output: (id, n_grams, n_dup_grams, dup_fraction) for docs with at
     least one n-gram.
 
-    ``fused`` (default) emits grams via the Arrow ``ngrams_all_udf`` —
-    value-identical to the native transform+slice HOF (kept as
-    ``fused=False``), which is interpreted per element and ~10x slower on
-    the dense tiers. Both paths (and the SQL mirror) tokenize by single
-    space, empties kept — the module-wide convention."""
-    if fused:
-        df = ensure_min_partitions(df)
-        grams = grams_frame(
-            df.select(F.col(id_col), F.col(text_col)),
-            text_col,
-            n,
-            "_g",
-            dedup=False,
-        ).select(F.col(id_col), F.explode("_g").alias("gram"))
-    else:
-        toks = F.split(F.col(text_col), " ")
-        grams_col = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - n + 1),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        grams = df.select(F.col(id_col), F.explode(grams_col).alias("gram"))
+    Grams come from ``grams_frame(dedup=False)`` — the native
+    transform+slice HOF is interpreted per element and ~10x slower on the
+    dense tiers. It and the SQL mirror tokenize by single space, empties
+    kept — the module-wide convention."""
+    df = ensure_min_partitions(df)
+    grams = grams_frame(
+        df.select(F.col(id_col), F.col(text_col)),
+        text_col,
+        n,
+        "_g",
+        dedup=False,
+    ).select(F.col(id_col), F.explode("_g").alias("gram"))
     per_gram = grams.groupBy("gram").agg(
         F.count_distinct(F.col(id_col)).alias("n_docs")
     )
@@ -1412,8 +1125,6 @@ def remove_dup_ngrams(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fused: bool = True,
-    eager: bool = True,
 ) -> DataFrame:
     """Exact-substring scrub (the REMOVAL half of Lee et al. 2022 — the
     profiler ``dup_ngram_spans`` only measures): delete every token that
@@ -1437,27 +1148,14 @@ def remove_dup_ngrams(
     no duplicated grams pass through unchanged. Returns
     (id_col, n_tokens, n_removed, clean_text).
     """
-    if fused:
-        df = ensure_min_partitions(df)
-        pos_src = grams_frame(
-            df.select(F.col(id_col), F.col(text_col)),
-            text_col,
-            n,
-            "_g",
-            dedup=False,
-        ).select(F.col(id_col), F.posexplode("_g").alias("pos0", "gram"))
-    else:
-        toks0 = F.split(F.col(text_col), " ")
-        grams_col = F.when(
-            F.size(toks0) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks0) - n + 1),
-                lambda i: F.concat_ws(" ", F.slice(toks0, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        pos_src = df.select(
-            F.col(id_col), F.posexplode(grams_col).alias("pos0", "gram")
-        )
+    df = ensure_min_partitions(df)
+    pos_src = grams_frame(
+        df.select(F.col(id_col), F.col(text_col)),
+        text_col,
+        n,
+        "_g",
+        dedup=False,
+    ).select(F.col(id_col), F.posexplode("_g").alias("pos0", "gram"))
     pos_grams = (
         pos_src
         .select(F.col(id_col), (F.col("pos0") + 1).alias("start"), "gram")
@@ -1466,15 +1164,11 @@ def remove_dup_ngrams(
     # Eager persist: two consumers (the dup-gram aggregate and the join
     # back) would otherwise each re-run the Arrow gram emission — the
     # lazy-persist double-evaluation trap SCALING.md documents; the gram
-    # pass is the expensive stage here (~15 s per pass at docs100x).
-    # ``eager=False`` skips the construction-time job for plan-only
-    # callers (they also inherit the double-evaluation cost if they DO
-    # execute). Either way the cache has no unpersist path before the
-    # returned plan runs — session owners reclaim it via
-    # spark.catalog.clearCache() between operators, as the bench and
-    # correctness harnesses do.
-    if eager:
-        pos_grams.count()
+    # pass is the expensive stage here (~15 s per pass at docs100x). The
+    # cache has no unpersist path before the returned plan runs — session
+    # owners reclaim it via spark.catalog.clearCache() between operators,
+    # as the bench and correctness harnesses do.
+    pos_grams.count()
     dup_grams = (
         pos_grams.groupBy("gram")
         .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))

@@ -672,8 +672,8 @@ def train_subcodebooks(
     deterministic given the same training rows.
 
     Spherical (unit-norm centroids, assignment by max dot) rather than
-    plain k-means on purpose: both encode paths (``pq_encode_expr`` and
-    the fused Arrow encoder) pick codes by max dot product, which equals
+    plain k-means on purpose: the Arrow encoder (and the oracle's replay)
+    pick codes by max dot product, which equals
     the L2-nearest centroid exactly when ``||c||`` is constant — so
     trained codebooks drop into the existing pipeline (and its oracle
     formulation) with zero encode-path changes. Empty clusters reseed to
@@ -712,47 +712,6 @@ def train_subcodebooks(
     return out
 
 
-def _subvec(vec: Column, sub: int, sub_dim: int) -> Column:
-    return F.slice(vec, sub * sub_dim + 1, sub_dim)
-
-
-def _fold_dot(a: Column, lit_vals: list) -> Column:
-    """Left-assoc dot product of an array column against literals, written
-    as an explicit fixed-order sum so the oracle can reproduce the exact
-    float result term by term (F.aggregate's left fold, spelled out)."""
-    expr = F.lit(0.0)
-    for i, v in enumerate(lit_vals):
-        expr = expr + F.element_at(a, i + 1).cast("double") * float(v)
-    return expr
-
-
-def pq_encode_expr(vec: Column, codebooks: np.ndarray) -> Column:
-    """PQ code of ``vec`` as an array<int> of per-subspace nearest-centroid
-    ids — one native expression, no UDF. Nearest = min squared L2 against
-    the sub-codebook, ties to the lowest code id (array_sort on
-    (dist, code) structs — same tie-break the oracle's list_position-of-
-    min replay has, since both take the FIRST minimal entry)."""
-    n_sub, n_codes, sub_dim = codebooks.shape
-    codes = []
-    for s in range(n_sub):
-        sv = _subvec(vec, s, sub_dim)
-        dists = F.array(
-            *[
-                F.struct(
-                    # ||x||^2 - 2<x,c> + ||c||^2; drop ||x||^2 (constant per
-                    # subvector) => argmin over -2<x,c> + ||c||^2. Centroids
-                    # are unit-norm so ||c||^2 == 1 exactly; the comparison
-                    # reduces to max dot, evaluated in fixed literal order.
-                    (-_fold_dot(sv, codebooks[s, c].tolist())).alias("dist"),
-                    F.lit(c).alias("code"),
-                )
-                for c in range(n_codes)
-            ]
-        )
-        codes.append(F.array_sort(dists)[0].getField("code"))
-    return F.array(*codes)
-
-
 def pq_topk(
     queries: DataFrame,
     reference: DataFrame,
@@ -766,7 +725,6 @@ def pq_topk(
     refine: int = 4,
     seed: int = 23,
     codebooks: np.ndarray | None = None,
-    fused: bool = True,
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k via product quantization with exact re-ranking.
@@ -784,98 +742,28 @@ def pq_topk(
     With seeded codebooks the full pipeline (encode, ADC ranking, refine
     cut, exact rescore) is replayable by a generated DuckDB oracle.
 
-    ``fused`` (default) runs encode+ADC+refine as ONE Arrow pass over the
-    query stream with the (tiny) codes matrix broadcast — the actual
-    100 TB shape, sibling of ``top_k_similarity_blocked`` (broadcast
-    contract: n_refs x n_sub bytes, 32x smaller than the raw vectors
-    the blocked strategy ships). ``fused=False`` keeps the all-native
-    expression formulation — value-identical and the oracle anchor, but
-    its ~1k-term generated expressions exceed Janino's 64KB method limit,
-    so whole-stage codegen FALLS BACK TO INTERPRETED on that path (Spark
-    logs the InternalCompilerException and continues) — correct, slower,
-    and the measured reason the Arrow pass is the default."""
+    Encode, ADC and the refine cut run as ONE Arrow pass over the query
+    stream with the (tiny) codes matrix broadcast — the actual 100 TB
+    shape, sibling of ``top_k_similarity_blocked`` (broadcast contract:
+    n_refs x n_sub bytes, 32x smaller than the raw vectors the blocked
+    strategy ships). The reference is encoded once, distributed, and its
+    codes collected (n_refs x n_sub uint8 — the thing PQ exists to make
+    broadcastable); one mapInPandas over the query stream computes LUT +
+    ADC + the k*refine cut per batch with numpy. Survivors join back to
+    the raw vectors for the exact rescore — the only stage that touches
+    uncompressed reference data. (The all-native expression formulation
+    this replaced generated ~1k-term expressions past Janino's 64KB
+    method limit, so whole-stage codegen fell back to interpreted.)
+
+    Value parity with the oracle formulation: argmax/ADC compare dot
+    products whose cross-engine float-fold differences are ~1e-16 — the
+    same tolerance class the IVF/LSH oracles already rely on; the final
+    scores are exact cosines rounded 6dp either way."""
     cb = (
         seeded_subcentroids(dim, n_sub, n_codes, seed)
         if codebooks is None
         else codebooks
     )
-    n_sub_, n_codes_, sub_dim = cb.shape
-    if fused:
-        return _pq_topk_fused(
-            queries, reference, k, query_id_cols, ref_id_col,
-            query_vec_col, ref_vec_col, cb, refine,
-        )
-    ref = reference.select(
-        F.col(ref_id_col).alias("ref_id"), F.col(ref_vec_col).alias("_ref_vec")
-    ).withColumn("_code", pq_encode_expr(F.col("_ref_vec"), cb))
-
-    # per-query LUT: lut[s][c] = dot(q_sub_s, centroid[s][c])
-    lut = F.array(
-        *[
-            F.array(
-                *[
-                    _fold_dot(_subvec(F.col(query_vec_col), s, sub_dim), cb[s, c].tolist())
-                    for c in range(n_codes_)
-                ]
-            )
-            for s in range(n_sub_)
-        ]
-    )
-    q = queries.withColumn("_lut", lut)
-    pairs = q.join(F.broadcast(ref.select("ref_id", "_code")))
-    adc = F.lit(0.0)
-    for s in range(n_sub_):
-        adc = adc + F.element_at(
-            F.element_at("_lut", s + 1), F.element_at("_code", s + 1) + 1
-        )
-    cand = pairs.withColumn("_adc", adc)
-    w_adc = Window.partitionBy(*query_id_cols).orderBy(
-        F.desc("_adc"), F.asc("ref_id")
-    )
-    survivors = (
-        cand.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * refine)
-        .select(*query_id_cols, query_vec_col, "ref_id")
-    )
-    rescored = survivors.join(
-        F.broadcast(ref.select("ref_id", "_ref_vec")), "ref_id"
-    )
-    denom = norm_expr(F.col(query_vec_col)) * norm_expr(F.col("_ref_vec"))
-    scored = rescored.withColumn(
-        "score",
-        F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
-    )
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("_ref_vec", query_vec_col)
-    )
-
-
-def _pq_topk_fused(
-    queries: DataFrame,
-    reference: DataFrame,
-    k: int,
-    query_id_cols: Sequence[str],
-    ref_id_col: str,
-    query_vec_col: str,
-    ref_vec_col: str,
-    cb: np.ndarray,
-    refine: int,
-) -> DataFrame:
-    """Arrow implementation of the PQ pipeline: encode the reference once
-    driver-side (codes matrix = n_refs x n_sub uint8 — the thing PQ
-    exists to make broadcastable), then one mapInPandas over the query
-    stream computes LUT + ADC + the k*refine cut per batch with numpy.
-    Survivors join back to the raw vectors for the exact rescore — the
-    only stage that touches uncompressed reference data.
-
-    Value parity with the native/oracle formulation: argmax/ADC compare
-    dot products whose cross-engine float-fold differences are ~1e-16 —
-    the same tolerance class the IVF/LSH oracles already rely on; the
-    final scores are exact cosines rounded 6dp either way."""
-    n_sub, n_codes, sub_dim = cb.shape
     b_cb = reference.sparkSession.sparkContext.broadcast(cb)
 
     # Encode DISTRIBUTED: only (id, 8-byte code) ever leaves the executors
@@ -914,67 +802,65 @@ def _pq_topk_fused(
         .mapInPandas(encode_batches, schema=enc_schema)
         .collect()
     )
-    if not enc_rows:
-        # numpy paths below can't shape a 0-row corpus; the native
-        # formulation handles it and returns the correctly-empty frame
-        return pq_topk(
-            queries, reference, k, query_id_cols, ref_id_col,
-            query_vec_col, ref_vec_col, cb.shape[0], cb.shape[1], refine,
-            codebooks=cb, fused=False,
-        )
-    ref_ids = np.array([r["ref_id"] for r in enc_rows])
-    # uint8 delivers the advertised n_refs x n_sub single-byte broadcast
-    # (n_codes <= 256 by construction of the PQ code space)
-    codes = np.array([r["code"] for r in enc_rows], dtype=np.uint8)
-
-    sc = queries.sparkSession.sparkContext
-    b_ids = sc.broadcast(ref_ids)
-    b_codes = sc.broadcast(codes)  # b_cb already shipped for the encode
-
     id_fields = [queries.schema[c] for c in query_id_cols]
     out_schema = T.StructType(
         [*id_fields, T.StructField("ref_id", reference.schema[ref_id_col].dataType)]
     )
-    cut = k * refine
-    narrowed = ensure_min_partitions(queries.select(*query_id_cols, query_vec_col))
+    if not enc_rows:
+        # the numpy ADC pass can't shape a 0-row corpus: no survivors, and
+        # the rescore tail below yields the correctly-typed empty frame
+        surv = queries.sparkSession.createDataFrame([], out_schema)
+    else:
+        ref_ids = np.array([r["ref_id"] for r in enc_rows])
+        # uint8 delivers the advertised n_refs x n_sub single-byte broadcast
+        # (n_codes <= 256 by construction of the PQ code space)
+        codes = np.array([r["code"] for r in enc_rows], dtype=np.uint8)
 
-    def survivors(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, cds, cbk = b_ids.value, b_codes.value, b_cb.value
-        ns, nc, sd = cbk.shape
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.array(pdf[query_vec_col].to_list(), dtype=np.float64)
-            nq = len(q)
-            if q.shape[1] != ns * sd:
-                raise ValueError(
-                    f"pq_topk: query vectors are {q.shape[1]}-dim but the "
-                    f"codebooks cover {ns * sd} dims (pass dim=/codebooks=)"
-                )
-            adc = np.zeros((nq, len(ids)))
-            for s in range(ns):
-                lut = q[:, s * sd : (s + 1) * sd] @ cbk[s].T  # (nq, n_codes)
-                adc += lut[:, cds[:, s]]
-            top = min(cut, len(ids))
-            part = np.argpartition(-adc, top - 1, axis=1)[:, :top]
-            # ADC cut ties broken by ascending ref id (match the window's
-            # (adc DESC, ref_id) order): resolve only rows with boundary
-            # ties, same pattern as the blocked strategy
-            row_idx = np.arange(nq)[:, None]
-            kth = adc[row_idx, part].min(axis=1)
-            chosen = part
-            tied = np.flatnonzero((adc >= kth[:, None]).sum(axis=1) > top)
-            if len(tied):
-                chosen = part.copy()  # one copy, then in-place row fixes
-            for row_i in tied:
-                cand = np.flatnonzero(adc[row_i] >= kth[row_i])
-                order = np.lexsort((ids[cand], -adc[row_i, cand]))
-                chosen[row_i] = cand[order][:top]
-            out = {c: np.repeat(pdf[c].to_numpy(), top) for c in query_id_cols}
-            out["ref_id"] = ids[chosen].ravel()
-            yield pd.DataFrame(out)
+        sc = queries.sparkSession.sparkContext
+        b_ids = sc.broadcast(ref_ids)
+        b_codes = sc.broadcast(codes)  # b_cb already shipped for the encode
+        cut = k * refine
+        narrowed = ensure_min_partitions(
+            queries.select(*query_id_cols, query_vec_col)
+        )
 
-    surv = narrowed.mapInPandas(survivors, schema=out_schema)
+        def survivors(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids, cds, cbk = b_ids.value, b_codes.value, b_cb.value
+            ns, nc, sd = cbk.shape
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                q = np.array(pdf[query_vec_col].to_list(), dtype=np.float64)
+                nq = len(q)
+                if q.shape[1] != ns * sd:
+                    raise ValueError(
+                        f"pq_topk: query vectors are {q.shape[1]}-dim but the "
+                        f"codebooks cover {ns * sd} dims (pass dim=/codebooks=)"
+                    )
+                adc = np.zeros((nq, len(ids)))
+                for s in range(ns):
+                    lut = q[:, s * sd : (s + 1) * sd] @ cbk[s].T  # (nq, n_codes)
+                    adc += lut[:, cds[:, s]]
+                top = min(cut, len(ids))
+                part = np.argpartition(-adc, top - 1, axis=1)[:, :top]
+                # ADC cut ties broken by ascending ref id (match the window's
+                # (adc DESC, ref_id) order): resolve only rows with boundary
+                # ties, same pattern as the blocked strategy
+                row_idx = np.arange(nq)[:, None]
+                kth = adc[row_idx, part].min(axis=1)
+                chosen = part
+                tied = np.flatnonzero((adc >= kth[:, None]).sum(axis=1) > top)
+                if len(tied):
+                    chosen = part.copy()  # one copy, then in-place row fixes
+                for row_i in tied:
+                    cand = np.flatnonzero(adc[row_i] >= kth[row_i])
+                    order = np.lexsort((ids[cand], -adc[row_i, cand]))
+                    chosen[row_i] = cand[order][:top]
+                out = {c: np.repeat(pdf[c].to_numpy(), top) for c in query_id_cols}
+                out["ref_id"] = ids[chosen].ravel()
+                yield pd.DataFrame(out)
+
+        surv = narrowed.mapInPandas(survivors, schema=out_schema)
     ref = reference.select(
         F.col(ref_id_col).alias("ref_id"), F.col(ref_vec_col).alias("_ref_vec")
     )

@@ -1077,14 +1077,6 @@ def exact_nearest_rank(q) -> tuple[int, int]:
     return frac.numerator, frac.denominator
 
 
-def exact_rank_sql(q, n_expr: str = "_n") -> str:
-    """The (engine-shared) rank expression for :func:`exact_nearest_rank`
-    — Spark reads it via F.expr (DIV), DuckDB via the // spelling the
-    caller substitutes; both are BIGINT-exact."""
-    num, den = exact_nearest_rank(q)
-    return f"({num} * {n_expr} + {den} - 1) DIV {den}"
-
-
 def binned_quantiles(
     df: DataFrame,
     value_col: str,

@@ -327,7 +327,6 @@ def repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 2,
-    fused: bool = True,
 ) -> DataFrame:
     """Per-document repetition signals (Gopher-style quality filters):
     duplicate-token fraction, duplicate-``n``-gram fraction, and the
@@ -335,48 +334,18 @@ def repetition_stats(
     n-gram. High values mean boilerplate / TEMPLATED text — the curation
     filter drops or downweights them before training.
 
-    Scale shape: a per-row statistic, so the right plan is NARROW — the
-    default fused path is one Arrow-vectorized Counter pass per document,
-    zero shuffle (measured 1.9 s -> 0.38 s at sf0.1 and 13.9 s -> 0.33 s
-    at the 10x tier; the HOF shingle expression evaluates interpreted per
-    element, the same pitfall the dedup module documents). ``fused=False`` keeps
-    the pure-relational formulation (explode -> map-side-combinable
-    groupBy(doc, gram) -> rollup), which doubles as documentation of the
-    semantics and as the shape the DuckDB oracle replays.
+    Scale shape: a per-row statistic, so the right plan is NARROW — one
+    Arrow-vectorized Counter pass per document, zero shuffle (measured
+    1.9 s -> 0.38 s at sf0.1 and 13.9 s -> 0.33 s at the 10x tier against
+    the relational explode -> groupBy(doc, gram) -> rollup formulation,
+    which survives as the DuckDB oracle ``sql_repetition_stats``).
     """
     safe = lambda num, den: F.round(  # noqa: E731
         F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0)), 6
     )
-    if fused:
-        stats = df.select(
-            F.col(id_col), _repetition_counts_udf(n)(F.col(text_col)).alias("s")
-        ).select(F.col(id_col), F.col("s.*"))
-        per_doc = stats
-    else:
-        toks = F.split(F.col(text_col), " ")
-        idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " ")),
-        ).otherwise(F.array().cast("array<string>"))
-        base = df.select(
-            F.col(id_col),
-            F.size(toks).alias("n_tokens"),
-            F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-            F.explode_outer(grams).alias("gram"),
-        )
-        per_gram = base.groupBy(id_col, "gram").agg(
-            F.count("gram").alias("cnt"),
-            F.first("n_tokens").alias("n_tokens"),
-            F.first("n_distinct_tokens").alias("n_distinct_tokens"),
-        )
-        per_doc = per_gram.groupBy(id_col).agg(
-            F.first("n_tokens").alias("n_tokens"),
-            F.first("n_distinct_tokens").alias("n_distinct_tokens"),
-            F.sum("cnt").alias("n_grams"),
-            F.count("gram").alias("n_distinct_grams"),
-            F.max("cnt").alias("top_gram_cnt"),
-        )
+    per_doc = df.select(
+        F.col(id_col), _repetition_counts_udf(n)(F.col(text_col)).alias("s")
+    ).select(F.col(id_col), F.col("s.*"))
     n_grams = F.col("n_grams")
     return per_doc.select(
         F.col(id_col),

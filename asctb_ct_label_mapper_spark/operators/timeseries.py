@@ -437,29 +437,6 @@ def ewma_by_key(
     )
 
 
-def sql_ewma_by_key_fold(
-    table: str = "events",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    alpha: float = 0.5,
-    where: str = "1=1",
-) -> str:
-    """DuckDB replay of the single-fold anchor (``ewma_by_key_fold``):
-    ``list_reduce`` over the identically-ordered value list —
-    list_reduce seeds with the first element, matching the Spark fold's
-    explicit seed."""
-    return f"""
-    SELECT {key_col} AS key, count(*) AS n_obs,
-        list_reduce(list(CAST({value_col} AS DOUBLE)
-                         ORDER BY {ts_col}, {id_col}),
-                    (acc, x) -> {alpha} * x + {1.0 - alpha} * acc) AS ewma
-    FROM {table} WHERE {where}
-    GROUP BY {key_col}
-    """
-
-
 def sql_ewma_by_key(
     table: str = "events",
     ts_col: str = "ts",

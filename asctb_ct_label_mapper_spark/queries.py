@@ -2276,12 +2276,11 @@ def _minhash_affine_oracle(
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+banded-LSH near-dup, ORACLE-CHECKED end-to-end: the
     production signature family is md5-affine (ONE md5 per unique shingle,
-    the n_hashes family as exact mod-P affine arithmetic — fused in Arrow),
-    whose literals the generated DuckDB SQL replays: signature, band hash,
-    candidate equi-join AND Jaccard verify. The SipHash flavor
-    (minhash_dedup_pairs family="siphash") and the lexicographic-md5 flavor
-    (minhash_md5_dedup_pairs) remain as operators with recall/equivalence
-    pinned in tests."""
+    the n_hashes family as exact mod-P affine arithmetic, in one Arrow
+    pass), whose literals the generated DuckDB SQL replays: signature,
+    band hash, candidate equi-join AND Jaccard verify. The SipHash family
+    (minhash_dedup_pairs family="siphash", the operator default) shares
+    the same signature kernel and has its recall pinned in tests."""
     docs = _t(spark, sf_dir, "documents")
     return minhash_dedup_pairs(
         docs, "text", "doc_id", threshold=0.2, n_hashes=16, bands=8,

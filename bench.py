@@ -33,6 +33,9 @@ from asctb_ct_label_mapper_spark.session import get_spark  # noqa: E402
 # `<name>` entry and the headline total are unchanged (same timed action,
 # same min-of-2; the split is two extra perf_counter reads).
 PHASE_SPLIT_QUERIES = {"cos_topk_hnsw"}
+PHASE_SPLIT_ENTRIES = {
+    f"{n}_{ph}" for n in PHASE_SPLIT_QUERIES for ph in ("build", "probe")
+}
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -2047,10 +2050,13 @@ def _compact_line(result: dict, committed: dict | None) -> str:
     # Deterministic subset: order by committed time (falling back to this
     # run's time for queries the committed artifact has not seen), name as
     # tie-break, then greedily add entries while the serialized line stays
-    # under budget.  Values at 3dp (r14 verdict #1 spec).
+    # under budget.  Values at 3dp (r14 verdict #1 spec).  The additive
+    # build/probe split entries stay out of the pool: they re-count a real
+    # query's time and would take subset slots from real queries.
     committed_q = (committed or {}).get("queries") or {}
     order = sorted(
-        timings, key=lambda n: (-committed_q.get(n, timings[n]), n)
+        (n for n in timings if n not in PHASE_SPLIT_ENTRIES),
+        key=lambda n: (-committed_q.get(n, timings[n]), n),
     )
     line = json.dumps(base, separators=(",", ":"))
     for name in order:

@@ -103,17 +103,6 @@ def test_repetition_stats_values(spark):
     assert r3["top_gram_frac"] == 0.0 and r3["dup_gram_frac"] == 0.0
 
 
-def test_repetition_fused_matches_relational(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    fused = sorted(
-        repetition_stats(docs, fused=True).collect(), key=lambda r: r["doc_id"]
-    )
-    rel = sorted(
-        repetition_stats(docs, fused=False).collect(), key=lambda r: r["doc_id"]
-    )
-    assert [r.asDict() for r in fused] == [r.asDict() for r in rel]
-
-
 def test_bpe_tokenize_stats(spark):
     df = spark.createDataFrame(
         [(1, "Hello, world 42!"), (2, "")], ["doc_id", "text"]
@@ -224,7 +213,7 @@ def test_pack_sequences_layout(spark):
 
 
 def test_new_operator_plan_shapes(spark, sf_dir):
-    """Plan contracts: repetition's fused path is narrow (no Exchange);
+    """Plan contracts: repetition is narrow (no Exchange);
     sequence packing shuffles ONLY on the group key (exactly one
     Exchange, hashpartitioning on source — never a global single-partition
     window)."""
@@ -236,7 +225,7 @@ def test_new_operator_plan_shapes(spark, sf_dir):
     from asctb_ct_label_mapper_spark.operators.curation import pack_sequences
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert_not_in_plan(repetition_stats(docs, fused=True), "Exchange")
+    assert_not_in_plan(repetition_stats(docs), "Exchange")
     packed = pack_sequences(docs)
     plan = formatted_plan(packed)
     assert plan.count("Exchange") <= 2  # hash exchange (+ AQE shuffle read)

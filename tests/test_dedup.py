@@ -11,10 +11,8 @@ from asctb_ct_label_mapper_spark.operators.dedup import (
     md5_token_hash,
     minhash_dedup_pairs,
     minhash_lsh_candidates,
-    minhash_md5_dedup_pairs,
-    minhash_signature_udf,
+    minhash_signatures_frame,
     ngram_jaccard_pairs,
-    shingles_udf,
     simhash_expr,
     simhash_near_dup_pairs,
     word_shingles_expr,
@@ -66,7 +64,9 @@ def test_minhash_finds_planted_near_dup(docs):
              minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5).collect()}
     assert (1, 2) in pairs  # exact dup always collides
     assert (1, 3) in pairs or (2, 3) in pairs  # near dup found
-    assert not any(4 in p for p in pairs)  # unrelated doc never paired
+    # unrelated doc never paired; the shingle-less doc only collides with
+    # other empties (there are none)
+    assert not any(4 in p or 5 in p for p in pairs)
 
 
 def test_minhash_candidates_never_cross_all_pairs(docs):
@@ -98,14 +98,22 @@ def test_simhash_near_dup_pairs(docs):
 
 
 def test_fused_shingles_match_native_expr(docs):
-    """The Arrow-vectorized shingle UDF must produce the same shingle SET
-    per doc as the native HOF expression (oracle-checked queries depend on
-    this equivalence)."""
-    both = docs.select(
-        "doc_id",
-        word_shingles_expr(F.col("text"), 3).alias("native"),
-        shingles_udf(3)(F.col("text")).alias("fused"),
+    """The Arrow shingle producer (``grams_frame(dedup=True)``) must yield
+    the same shingle SET per doc as the native HOF expression
+    ``word_shingles_expr`` (oracle-checked queries depend on this)."""
+    from asctb_ct_label_mapper_spark.operators.dedup import grams_frame
+
+    both = grams_frame(
+        docs.select(
+            "doc_id",
+            "text",
+            word_shingles_expr(F.col("text"), 3).alias("native"),
+        ),
+        "text",
+        3,
+        "fused",
     ).collect()
+    assert len(both) == docs.count()
     for r in both:
         assert sorted(r["native"]) == sorted(r["fused"]), r["doc_id"]
 
@@ -118,8 +126,8 @@ def test_minhash_signature_udf_shape_and_sentinel(spark):
         [(1, BASE), (2, BASE + " " + BASE), (3, "ab"), (4, None)],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r["sig"] for r in
-            df.select("doc_id", minhash_signature_udf(16)(F.col("text")).alias("sig")).collect()}
+    rows = {r["_id"]: r["_sig"] for r in minhash_signatures_frame(
+        df, "text", "doc_id", 16, family="siphash").collect()}
     assert all(len(s) == 16 for s in rows.values())
     sentinel = (1 << 63) - 1
     assert rows[3] == [sentinel] * 16 and rows[4] == [sentinel] * 16
@@ -132,22 +140,12 @@ def test_minhash_fused_and_native_find_same_planted_dups(docs):
     """Different hash families, same verdicts on the planted corpus: exact
     dup pair always survives, unrelated docs never pair (threshold 0.5
     verification makes candidate-set differences irrelevant here)."""
-    for fused in (True, False):
+    for family in ("siphash", "md5affine"):
         pairs = {(r["id_a"], r["id_b"]) for r in
                  minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5,
-                                     fused=fused).collect()}
-        assert (1, 2) in pairs
-        assert not any(4 in p or 5 in p for p in pairs)
-
-
-def test_minhash_md5_flavor_matches_exact_verification(docs):
-    """Oracle-flavor pipeline: md5-banded candidates verified by exact
-    Jaccard — the planted exact dup must band-collide in every band and
-    the verified jaccard must be exactly 1."""
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-             minhash_md5_dedup_pairs(docs, "text", "doc_id", threshold=0.5).collect()}
-    assert pairs[(1, 2)] == 1.0
-    assert not any(4 in (a, b) for (a, b) in pairs)
+                                     family=family).collect()}
+        assert (1, 2) in pairs, family
+        assert not any(4 in p or 5 in p for p in pairs), family
 
 
 def test_simhash_md5_hash_is_32bit_and_deterministic(spark):
@@ -446,16 +444,6 @@ def test_remove_dup_ngrams_full_removal_yields_empty_string(spark):
     assert out[2]["clean_text"] == "" and out[2]["n_removed"] == 3
 
 
-def test_remove_dup_ngrams_fused_matches_native(spark):
-    from asctb_ct_label_mapper_spark.operators.dedup import remove_dup_ngrams
-
-    rows = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(15))) for i in range(40)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = sorted(map(tuple, remove_dup_ngrams(df, 3, fused=True).collect()))
-    b = sorted(map(tuple, remove_dup_ngrams(df, 3, fused=False).collect()))
-    assert a == b
-
-
 class TestPairMetrics:
     def test_confusion_counts(self, spark):
         from asctb_ct_label_mapper_spark.operators.dedup import pair_metrics
@@ -578,58 +566,78 @@ def test_fuzzy_name_matches_blocked_and_thresholded(spark):
 
 
 def test_signatures_frame_matches_pandas_udf_flavors(docs, spark):
-    """r14: the mapInArrow signature frame (zero-copy ListArray output)
-    must be bit-identical to both pandas-UDF families — it replaced them
-    in every hot path, and the md5affine oracle replays these exact
-    values. Covers empty/None docs (sentinel rows survive the Arrow
-    boundary) via an extra frame."""
-    from asctb_ct_label_mapper_spark.operators.dedup import (
-        minhash_signature_md5affine_udf,
-        minhash_signatures_frame,
-    )
+    """The mapInArrow signature frame (zero-copy ListArray output) must
+    carry exactly the ``_minhash_sig_matrix`` values of both families for
+    the collected texts — the md5affine oracle replays these values.
+    Covers empty/None docs (sentinel rows survive the Arrow boundary) via
+    an extra frame. The siphash values are also recomputed independently
+    with pure-Python integers, min_j((a_j*h + b_j) mod 2^64) per shingle,
+    which pins the chunked uint64 wraparound."""
+    import numpy as np
+    import pandas as pd
+
+    from asctb_ct_label_mapper_spark.operators import dedup
 
     edge = spark.createDataFrame(
         [(100, "ab"), (101, None), (102, "x y z w")],
         "doc_id long, text string",
     )
     for frame in (docs, edge):
-        for family, udf in (
-            ("md5affine", minhash_signature_md5affine_udf(16)),
-            ("siphash", minhash_signature_udf(16)),
-        ):
+        texts = {r["doc_id"]: r["text"] for r in frame.collect()}
+        ids = sorted(texts)
+        for family in ("md5affine", "siphash"):
             got = {
                 r["_id"]: r["_sig"]
                 for r in minhash_signatures_frame(
                     frame, "text", "doc_id", 16, 3, family
                 ).collect()
             }
-            want = {
-                r["doc_id"]: r["sig"]
-                for r in frame.select(
-                    "doc_id", udf(F.col("text")).alias("sig")
-                ).collect()
-            }
-            assert got == want, family
+            mat = dedup._minhash_sig_matrix(
+                [texts[i] for i in ids], 16, 3, family
+            )
+            assert got == {i: row.tolist() for i, row in zip(ids, mat)}, family
+
+    sig = {
+        r["_id"]: r["_sig"]
+        for r in minhash_signatures_frame(
+            docs, "text", "doc_id", 16, 3, "siphash"
+        ).collect()
+    }
+    a_fam = [int(x) for x in dedup._MINHASH_A[:16]]
+    b_fam = [int(x) for x in dedup._MINHASH_B[:16]]
+    for doc_id, text in ((1, BASE), (3, NEAR)):
+        toks = text.split(" ")
+        grams = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+        hs = pd.util.hash_array(np.array(grams, dtype=object)).tolist()
+        want = []
+        for a, b in zip(a_fam, b_fam):
+            m = min((a * h + b) % 2**64 for h in hs)
+            want.append(m - 2**64 if m >= 2**63 else m)  # read back as int64
+        assert sig[doc_id] == want, doc_id
 
 
 def test_grams_frame_matches_udf_flavors(docs, spark):
-    """r14: the mapInArrow gram frame (zero-copy ListArray output) must be
-    value-identical to both pandas-UDF flavors it replaced in the hot
-    paths (shingles_udf for dedup=True, ngrams_all_udf for dedup=False),
-    including None/empty/short-doc edges and pass-through columns."""
+    """The mapInArrow gram frame (zero-copy ListArray output) must carry
+    exactly ``_shingle_list`` (dedup=True) / ``_gram_list`` (dedup=False)
+    of the collected texts, including None/empty/short/double-space
+    edges and a doc with a repeated gram, with the pass-through columns
+    intact."""
     from asctb_ct_label_mapper_spark.operators.dedup import (
+        _gram_list,
+        _shingle_list,
         grams_frame,
-        ngrams_all_udf,
-        shingles_udf,
     )
 
     edge = spark.createDataFrame(
         [(100, "ab", "s9"), (101, None, "s9"), (102, "x y z w x y", "s8"),
-         (103, "", "s8"), (104, "a  b", "s8")],
+         (103, "", "s8"), (104, "a  b", "s8"), (105, "a b c a b c", "s8")],
         "doc_id long, text string, source string",
     )
     for frame in (docs, edge):
-        for dedup, udf in ((True, shingles_udf(3)), (False, ngrams_all_udf(3))):
+        texts = {
+            (r["source"], r["doc_id"]): r["text"] for r in frame.collect()
+        }
+        for dedup, make in ((True, _shingle_list), (False, _gram_list)):
             out = grams_frame(
                 frame.select("source", "doc_id", "text"), "text", 3, "_g",
                 dedup=dedup,
@@ -638,12 +646,7 @@ def test_grams_frame_matches_udf_flavors(docs, spark):
             got = {
                 (r["source"], r["doc_id"]): r["_g"] for r in out.collect()
             }
-            want = {
-                (r["source"], r["doc_id"]): r["_g"]
-                for r in frame.select(
-                    "source", "doc_id", udf(F.col("text")).alias("_g")
-                ).collect()
-            }
+            want = {key: make(t, 3) for key, t in texts.items()}
             assert got == want, dedup
     # drop_text=False keeps the text column ahead of the gram list
     kept = grams_frame(

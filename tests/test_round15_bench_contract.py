@@ -125,8 +125,24 @@ def test_compact_line_n_queries_ignores_additive_split_entries():
     result["n_queries"] = 20  # what main() publishes: real queries only
     parsed = json.loads(bench._compact_line(result, None))
     assert parsed["n_queries"] == 20
-    # the additive entries still ride in the queries map
-    assert "cos_topk_hnsw_build" in parsed["queries"]
+    # the additive entries re-count a real query: they stay out of the
+    # line (the full map in bench_out.json keeps them)
+    assert not bench.PHASE_SPLIT_ENTRIES & set(parsed["queries"])
+    assert len(parsed["queries"]) == 20
+
+
+def test_compact_line_split_entries_take_no_subset_slots():
+    # the split entries are the slowest by committed time here; the
+    # budget-limited subset must still be the slowest REAL queries
+    result = _fake_result(283)
+    committed = {"queries": dict(result["queries"])}
+    for name in bench.PHASE_SPLIT_ENTRIES:
+        result["queries"][name] = committed["queries"][name] = 1e6
+    with_split = json.loads(bench._compact_line(result, committed))["queries"]
+    for name in bench.PHASE_SPLIT_ENTRIES:
+        del result["queries"][name], committed["queries"][name]
+    without = json.loads(bench._compact_line(result, committed))["queries"]
+    assert with_split == without
 
 
 def test_latest_committed_bench_reads_head_not_worktree(monkeypatch):

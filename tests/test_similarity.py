@@ -233,24 +233,6 @@ def test_pq_topk_recall_vs_exact(spark, sf_dir):
             assert abs(round(row["score"], 6) - exact_scores[key]) < 1e-9
 
 
-def test_pq_fused_matches_native_formulation(spark, sf_dir):
-    from asctb_ct_label_mapper_spark.operators.similarity import pq_topk
-    from asctb_ct_label_mapper_spark.schemas import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")
-    r = emb.filter(F.col("vec_id") % 10 != 0).select("vec_id", "embedding")
-    a = sorted(
-        (row["vec_id"], row["ref_id"], round(row["score"], 6), row["rank"])
-        for row in pq_topk(q, r, 3, ["vec_id"], "vec_id", fused=True).collect()
-    )
-    b = sorted(
-        (row["vec_id"], row["ref_id"], round(row["score"], 6), row["rank"])
-        for row in pq_topk(q, r, 3, ["vec_id"], "vec_id", fused=False).collect()
-    )
-    assert a == b and len(a) > 0
-
-
 def test_pq_empty_reference_returns_empty(spark):
     from pyspark.sql import types as T
 
@@ -264,7 +246,11 @@ def test_pq_empty_reference_returns_empty(spark):
     )
     q = spark.createDataFrame([(1, [0.1] * 64)], schema)
     r = spark.createDataFrame([], schema)
-    assert pq_topk(q, r, 3, ["vec_id"], "vec_id").count() == 0
+    out = pq_topk(q, r, 3, ["vec_id"], "vec_id")
+    assert out.count() == 0
+    # same output schema as a non-empty reference (shared rescore tail)
+    assert out.columns == ["vec_id", "ref_id", "score", "rank"]
+    assert out.schema == pq_topk(q, q, 1, ["vec_id"], "vec_id").schema
 
 
 def test_pq_wrong_dim_raises_clearly(spark):

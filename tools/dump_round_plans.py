@@ -1,8 +1,10 @@
-"""Dump .explain('formatted') for the r15 optimization targets into
-plans/r15/<query>_<tag>.txt (judge deliverable: before/after plan files).
+"""Dump .explain('formatted') for a round's optimization targets into
+plans/<round>/<query>_<tag>.txt (before/after plan files).
 
-Usage: python tools/dump_r15_plans.py <tag> [sf_dir] [query ...]
-With no query list, dumps the default target set.
+Usage: python tools/dump_round_plans.py <round> <tag> <sf_dir> [query ...]
+e.g. ``python tools/dump_round_plans.py r16 before data/sf0.1``. The
+round names the output directory and the Spark app
+(``<round>-plan-dump``). With no query list, dumps the default target set.
 """
 
 from __future__ import annotations
@@ -59,16 +61,15 @@ DEFAULT_TARGETS = [
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or DEFAULT_TARGETS
+    rnd, tag, sf_dir = sys.argv[1:4]
+    names = sys.argv[4:] or DEFAULT_TARGETS
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r15",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r14-plan-dump")
+    spark = get_spark(f"{rnd}-plan-dump")
     registry = all_queries()
     for name in names:
         spark.catalog.clearCache()
