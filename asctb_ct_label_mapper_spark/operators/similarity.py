@@ -64,6 +64,10 @@ def top_k_similarity_join(
     otherwise recompute norm(query) c times and norm(ref) q times — at
     q=1e4, c=1e3 that is 1e7 redundant O(d) reductions. After the hoist the
     per-pair work is one dot product and one division.
+
+    A query whose vector is NULL or zero-norm has no direction, so no
+    neighbours: it gets ONE rank-1 row with NULL ``ref_id``, payload and
+    ``score`` (the blocked rung emits the same row).
     """
     ref = reference.select(
         F.col(ref_id_col).alias("ref_id"),
@@ -75,19 +79,25 @@ def top_k_similarity_join(
     # as many cores.
     q = ensure_min_partitions(queries).withColumn("_qnorm", norm_expr(F.col(query_vec_col)))
     denom = F.col("_qnorm") * F.col("_rnorm")
+    # a query without a direction keeps every ref pairing with ref, payload
+    # and score nulled; the rank filter below keeps one of them
+    has_dir = F.coalesce(F.col("_qnorm") > 0, F.lit(False))
     scored = (
         q.crossJoin(F.broadcast(ref))
         .withColumn(
             "score",
             F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
         )
+        .withColumn("_has_dir", has_dir)
         .drop("_ref_vec", "_qnorm", "_rnorm")
     )
+    for c in ("ref_id", *ref_payload_cols):
+        scored = scored.withColumn(c, F.when(F.col("_has_dir"), F.col(c)))
     w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop(query_vec_col)
+        .filter((F.col("rank") <= k) & (F.col("_has_dir") | (F.col("rank") == 1)))
+        .drop(query_vec_col, "_has_dir")
     )
 
 
@@ -225,6 +235,8 @@ def top_k_similarity_blocked(
     in the query count with the reference resident in executor memory.
     A reference held by ``pin_reference`` is scored against its resident
     broadcasts; any other reference is collected and broadcast per call.
+    A NULL or zero-norm query vector gets one rank-1 row with NULL
+    ``ref_id`` and ``score``, as on the join rung.
     """
     b_ids, b_mat = resident_reference(reference, ref_id_col, ref_vec_col).broadcasts(
         "top_k_similarity_blocked"
@@ -250,9 +262,27 @@ def top_k_similarity_blocked(
         for pdf in batches:
             if pdf.empty:
                 continue
-            q = np.array(pdf[query_vec_col].to_list(), dtype=np.float64)
+            vecs = pdf[query_vec_col]
+            has_vec = vecs.notna().to_numpy()
+            q = np.zeros((len(pdf), mat.shape[1]))
+            if has_vec.any():
+                q[has_vec] = np.array(vecs[has_vec].to_list(), dtype=np.float64)
             qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = 1.0
+            has_dir = qn > 0.0
+            if not has_dir.all():
+                # NULL or zero-norm query: one rank-1 row, NULL ref and score
+                n_dead = int((~has_dir).sum())
+                yield pd.DataFrame(
+                    {
+                        **{c: pdf[c].to_numpy()[~has_dir] for c in query_id_cols},
+                        "ref_id": pd.Series([None] * n_dead, dtype=object),
+                        "score": np.full(n_dead, np.nan),
+                        "rank": np.ones(n_dead, dtype=np.int32),
+                    }
+                )
+                pdf, q, qn = pdf[has_dir], q[has_dir], qn[has_dir]
+                if pdf.empty:
+                    continue
             sims = (q / qn[:, None]) @ mat.T  # (batch, c)
             n_rows, n_ref = sims.shape
             top = min(kk, n_ref)

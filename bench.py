@@ -12,16 +12,40 @@ is what scales. Results are consumed against BASELINE.md (acceptance: within
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
+from typing import Callable, NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from asctb_ct_label_mapper_spark.operators.dedup import minhash_signatures  # noqa: E402
 from asctb_ct_label_mapper_spark.queries import all_queries  # noqa: E402
 from asctb_ct_label_mapper_spark.session import get_spark  # noqa: E402
+from asctb_ct_label_mapper_spark.sources.jsonl import (  # noqa: E402
+    jsonl_schema_with_corrupt,
+    read_jsonl_stream,
+    write_jsonl,
+)
+from asctb_ct_label_mapper_spark.streaming.dedup import (  # noqa: E402
+    start_incremental_dedup_stream,
+    start_watermarked_exact_dedup_stream,
+)
+from asctb_ct_label_mapper_spark.streaming.events import (  # noqa: E402
+    enriched_tumbling_counts,
+    sessionize,
+    view_click_outer,
+    view_click_pairs,
+)
 
 # Headline set: the flagship pipeline, both exact similarity strategies, the
 # shuffle-heavy relational queries, and the LLM-pipeline operators.
@@ -760,92 +784,50 @@ def ensure_docs_scale(src_dir: str, factor: int) -> str:
     return scale_dir
 
 
-def bench_streaming(spark, sf_dir: str, n_batches: int = 10) -> dict:
-    """Streaming-latency tier (VERDICT r7 #5): drive the foreachBatch
-    incremental-dedup ingest loop (`streaming/dedup.py`) over docs10x
-    split into ``n_batches`` micro-batches and report the latency
-    posture the correctness tests never measure — per-micro-batch wall
-    (from StreamingQueryProgress.triggerExecution), cadence, and state
-    growth (the signature table each epoch both reads and appends to).
-
-    The per-batch series is the signal: if batch N's wall grows with N,
-    the loop's state read is not scaling (each epoch re-reads the whole
-    signature table — at 100 TB that read is the corpus-signature scan,
-    amortized by the parquet layout, never the corpus text)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from asctb_ct_label_mapper_spark.operators.dedup import minhash_signatures
-    from asctb_ct_label_mapper_spark.sources.jsonl import (
-        jsonl_schema_with_corrupt,
-        read_jsonl_stream,
-        write_jsonl,
-    )
-    from asctb_ct_label_mapper_spark.streaming.dedup import (
-        start_incremental_dedup_stream,
+def _prepare_rel_layouts(spark, rel_dir: str) -> None:
+    """Ingest-time cost, not query-time: materialize the bucketed fact
+    layout and the clustered copy before any timing (write-once per
+    tier), then read each once.  The plain paths get warm file listings
+    and footers for free from the 20 queries that precede the bucketed
+    entries; without this the first bucketed read pays cold I/O that is
+    not part of the layout comparison."""
+    from asctb_ct_label_mapper_spark.sources.bucketing import (
+        ensure_bucketed_tables,
+        ensure_clustered_copy,
     )
 
-    scale_dir = ensure_docs_scale(sf_dir, 10)
-    docs = spark.read.parquet(
-        os.path.join(scale_dir, "documents.parquet")
-    ).select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    incoming = docs.filter(F.col("doc_id") % 2 == 1)
-    work = tempfile.mkdtemp(prefix="graft_stream_bench_")
-    try:
-        sig_path = os.path.join(work, "sigs")
-        minhash_signatures(corpus).write.parquet(sig_path)
-        sig_seed = spark.read.parquet(sig_path).count()
-        landing = os.path.join(work, "landing")
-        # one JSONL shard per micro-batch (maxFilesPerTrigger=1)
-        write_jsonl(incoming.repartition(n_batches), landing)
-        schema = jsonl_schema_with_corrupt(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-        t0 = time.perf_counter()
-        q = start_incremental_dedup_stream(
-            read_jsonl_stream(spark, landing, schema, max_files_per_trigger=1),
-            sig_path,
-            os.path.join(work, "matches"),
-            os.path.join(work, "ckpt"),
-            available_now=True,
-        )
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()  # do not read outputs / rmtree under a live query
-            raise TimeoutError("streaming tier did not drain in 600s")
-        wall = time.perf_counter() - t0
-        prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        per_batch = [
-            round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
-            for p in prog
-        ]
-        rows_in = int(sum(p["numInputRows"] for p in prog))
-        sig_final = spark.read.parquet(sig_path).count()
-        n_matches = spark.read.parquet(os.path.join(work, "matches")).count()
-        return {
-            "loop": "incremental_dedup_foreachBatch",
-            "n_batches": len(per_batch),
-            "rows": rows_in,
-            "total_wall": round(wall, 4),
-            "per_batch_sec": per_batch,
-            "mean_batch_sec": round(sum(per_batch) / max(len(per_batch), 1), 4),
-            "last_over_first": round(per_batch[-1] / per_batch[0], 3)
-            if len(per_batch) > 1 and per_batch[0] > 0
-            else None,
-            "rows_per_sec": round(rows_in / wall, 1) if wall > 0 else None,
-            "sig_rows_seed": sig_seed,
-            "sig_rows_final": sig_final,
-            "n_matches": int(n_matches),
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    for df in ensure_bucketed_tables(spark, rel_dir).values():
+        df.count()
+    spark.read.parquet(ensure_clustered_copy(spark, rel_dir)).count()
+
+
+# The query scale tiers, in run order: (bench_out.json scales key, log
+# label and session suffix, queries, data builder, factor, warm-up
+# (table, group-by column), extra set-up run in the tier's session).
+SCALE_TIERS = (
+    ("docs10x", "10x", SCALE_QUERIES, ensure_docs_scale, 10,
+     ("documents", "lang"), None),
+    ("events10x", "ev10x", EVENTS_SCALE_QUERIES, ensure_events_scale, 10,
+     ("events", "event_type"), None),
+    ("docs100x", "100x", SCALE100_QUERIES, ensure_docs_scale, 100,
+     ("documents", "lang"), None),
+    ("events100x", "ev100x", EVENTS_SCALE_QUERIES, ensure_events_scale, 100,
+     ("events", "event_type"), None),
+    ("rel10x", "rel10x", REL_SCALE_QUERIES, ensure_relational_scale, 10,
+     ("lineitem", "l_returnflag"), _prepare_rel_layouts),
+)
+
+
+# ---------------------------------------------------------------------------
+# Streaming tiers: one runner (`run_stream_tier`) and one `StreamTier` spec
+# per tier.  The runner lands the tier's input as one file per micro-batch
+# under a temp work dir, drains it as an availableNow stream, parses the
+# query's progress into the per-batch cadence and state-store series, and,
+# for a gated tier, compares the streamed rows with the batch compile of the
+# same plan row for row.  A spec holds only what differs per tier.
+# ---------------------------------------------------------------------------
+
+_DAY_US = 86400 * 1_000_000
 
 
 def _state_op_metrics(prog: list) -> dict:
@@ -874,414 +856,6 @@ def _state_op_metrics(prog: list) -> dict:
             tot(prog[-1], "memoryUsedBytes") if prog else None
         ),
     }
-
-
-def bench_streaming_watermark(spark, sf_dir: str, n_batches: int = 10) -> dict:
-    """Second streaming-tier row (VERDICT r8 #4): the NATIVE stateful
-    exact dedup (`dropDuplicatesWithinWatermark`,
-    streaming/dedup.py:start_watermarked_exact_dedup_stream) — measured,
-    not just correctness-tested. Input: the sf events stream split into
-    ``n_batches`` time-ordered micro-batches; every 10th event from the
-    last 3 days of each slice is re-delivered in a FOLLOW-UP batch
-    (cross-batch, inside the 7-day watermark — so suppression exercises
-    the state store, not in-batch dedup). The
-    signal: per-batch cadence stays flat AND the state-store row count
-    tracks (arrival rate x watermark delay), not stream history — the
-    bounded-state contract, visible in numRowsTotal as old ids evict."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from asctb_ct_label_mapper_spark.streaming.dedup import (
-        start_watermarked_exact_dedup_stream,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span = (hi - lo) + 1
-    work = tempfile.mkdtemp(prefix="graft_wm_bench_")
-    try:
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
-        # one file per time slice, copied in slice order so the file
-        # source replays event time monotonically (watermark advances,
-        # state evicts). Redeliveries must land in the NEXT batch, not
-        # the same file (same-batch duplicates would measure in-batch
-        # dedup, not state-store suppression — r9 review finding), and
-        # must stay INSIDE the watermark on replay: take every 10th
-        # event from the last 3 days of its slice (< the 7-day delay),
-        # written as slice_<i>b.parquet after slice_<i>a.parquet.
-        us = F.unix_micros("ts")
-        sliced = ev.withColumn(
-            "_slice",
-            ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long"),
-        )
-        slice_end = F.lit(lo) + (F.col("_slice") + 1) * F.lit(span) / F.lit(
-            n_batches
-        )
-        redeliver = (F.col("event_id") % 10 == 0) & (
-            us >= slice_end - F.lit(3 * 86400 * 1_000_000)
-        )
-        import glob
-
-        def land(df, name):
-            stage = os.path.join(work, f"stage_{name}")
-            df.coalesce(1).write.parquet(stage)
-            fs = glob.glob(os.path.join(stage, "*.parquet"))
-            if fs:  # empty time slice (skewed ts): nothing to land
-                [f] = fs
-                shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
-
-        for i in range(n_batches):
-            sl = sliced.filter(F.col("_slice") == i)
-            land(sl.drop("_slice"), f"slice_{i:03d}a")
-            land(
-                sl.filter(redeliver).drop("_slice"), f"slice_{i:03d}b"
-            )
-        schema = spark.read.parquet(landing).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        # State-partition sizing (r14 sweep, same evidence as the
-        # stream-stream tiers — see _state_partitions_default): at 32
-        # partitions the dedup state store pays ~13 s commit ms per
-        # batch vs ~0.25 s at 4 (mean_batch_sec 1.17 -> 0.47, identical
-        # state rows). The stream pins its own partitioning at start,
-        # so restore the session value right after .start().
-        state_partitions = _state_partitions_default()
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        t0 = time.perf_counter()
-        q = start_watermarked_exact_dedup_stream(
-            stream,
-            os.path.join(work, "out"),
-            os.path.join(work, "ckpt"),
-            delay="7 days",
-            available_now=True,
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise TimeoutError("watermark tier did not drain in 600s")
-        wall = time.perf_counter() - t0
-        prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        per_batch = [
-            round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
-            for p in prog
-        ]
-        state_rows = [
-            int(p["stateOperators"][0]["numRowsTotal"]) if p["stateOperators"]
-            else None
-            for p in prog
-        ]
-        rows_in = int(sum(p["numInputRows"] for p in prog))
-        rows_out = spark.read.parquet(os.path.join(work, "out")).count()
-        return {
-            "loop": "dropDuplicatesWithinWatermark_exact",
-            "n_batches": len(per_batch),
-            "rows_in": rows_in,
-            "rows_out": int(rows_out),
-            "suppressed": rows_in - int(rows_out),
-            "total_wall": round(wall, 4),
-            "per_batch_sec": per_batch,
-            "mean_batch_sec": round(
-                sum(per_batch) / max(len(per_batch), 1), 4
-            ),
-            "last_over_first": round(per_batch[-1] / per_batch[0], 3)
-            if len(per_batch) > 1 and per_batch[0] > 0
-            else None,
-            "state_rows_per_batch": state_rows,
-            **_state_op_metrics(prog),
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def bench_streaming_session(spark, sf_dir: str, n_batches: int = 10) -> dict:
-    """Third streaming-tier row (VERDICT r9 #5): the NATIVE
-    ``session_window`` aggregate + watermark (streaming/events.py
-    sessionize(streaming=True)) over the sliced events stream — the
-    third stateful shape next to the ledger loop and the watermarked
-    exact dedup. Input: the sf events stream split into ``n_batches``
-    time-ordered micro-batches (same slicing as the watermark tier),
-    plus one SENTINEL event 30 days past max ts landed last: it pushes
-    the final watermark past every real session's end, so the
-    append-mode sink flushes ALL session state and the streamed rows
-    can be compared row-for-row against the batch gap-and-islands
-    answer — a correctness gate on the tier, not just cadence. Signals:
-    per-batch cadence, the open-session state-row series (bounded by
-    arrival rate x gap + watermark, not stream history), and
-    matches_batch."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from asctb_ct_label_mapper_spark.streaming.events import sessionize
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span = (hi - lo) + 1
-    work = tempfile.mkdtemp(prefix="graft_sess_bench_")
-    try:
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
-        us = F.unix_micros("ts")
-        sliced = ev.withColumn(
-            "_slice",
-            ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long"),
-        )
-        import glob
-
-        def land(df, name):
-            stage = os.path.join(work, f"stage_{name}")
-            df.coalesce(1).write.parquet(stage)
-            fs = glob.glob(os.path.join(stage, "*.parquet"))
-            if fs:  # empty time slice (skewed ts): nothing to land
-                [f] = fs
-                shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
-
-        for i in range(n_batches):
-            land(
-                sliced.filter(F.col("_slice") == i).drop("_slice"),
-                f"slice_{i:03d}",
-            )
-        sentinel = spark.createDataFrame(
-            [(int(-1), int(-1), float(0.0))],
-            "event_id long, user_id long, value double",
-        ).select(
-            "event_id",
-            F.timestamp_micros(
-                F.lit(hi + 30 * 86400 * 1_000_000)
-            ).alias("ts"),
-            "user_id",
-            "value",
-        )
-        land(sentinel, f"slice_{n_batches:03d}_sentinel")
-        schema = spark.read.parquet(landing).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        out = os.path.join(work, "out")
-        # State-partition sizing (r14 sweep — see
-        # _state_partitions_default): session-window state at 32
-        # partitions pays ~15-39 s commit ms per batch vs ~0.2 s at 4
-        # (mean_batch_sec 1.58 -> 0.60, matches_batch true both ways).
-        state_partitions = _state_partitions_default()
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        t0 = time.perf_counter()
-        q = (
-            sessionize(stream, gap="30 minutes", watermark="2 hours",
-                       streaming=True)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise TimeoutError("session tier did not drain in 600s")
-        wall = time.perf_counter() - t0
-        prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        per_batch = [
-            round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
-            for p in prog
-        ]
-        state_rows = [
-            int(p["stateOperators"][0]["numRowsTotal"]) if p["stateOperators"]
-            else None
-            for p in prog
-        ]
-        streamed = spark.read.parquet(out).filter(F.col("user_id") >= 0)
-        got = sorted(map(tuple, streamed.collect()))
-        want = sorted(
-            map(
-                tuple,
-                sessionize(
-                    ev, gap="30 minutes", watermark="2 hours",
-                    streaming=False,
-                ).collect(),
-            )
-        )
-        return {
-            "loop": "session_window_watermark",
-            "n_batches": len(per_batch),
-            "rows_in": int(sum(p["numInputRows"] for p in prog)),
-            "sessions_out": len(got),
-            "matches_batch": got == want,
-            "total_wall": round(wall, 4),
-            "per_batch_sec": per_batch,
-            "mean_batch_sec": round(
-                sum(per_batch) / max(len(per_batch), 1), 4
-            ),
-            "state_rows_per_batch": state_rows,
-            **_state_op_metrics(prog),
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def bench_streaming_enrich(spark, sf_dir: str, n_batches: int = 10) -> dict:
-    """Fourth streaming-tier row (r11): stream-STATIC broadcast
-    enrichment + watermarked tumbling aggregate
-    (streaming/events.enriched_tumbling_counts) — the "join the stream
-    to the warehouse dim, then window" pipeline shape. The join is
-    stateless; only the windowed aggregate holds state (segments ×
-    open windows). Same harness as the session tier: time-ordered
-    micro-batches, a sentinel event 30 days past max ts to flush the
-    final windows, and a row-for-row gate against the batch plan."""
-    import glob
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from asctb_ct_label_mapper_spark.streaming.events import (
-        enriched_tumbling_counts,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    user_dim = (
-        ev.select("user_id")
-        .distinct()
-        .select("user_id", (F.col("user_id") % 10).alias("segment"))
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span = (hi - lo) + 1
-    work = tempfile.mkdtemp(prefix="graft_enrich_bench_")
-    try:
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
-        dim_path = os.path.join(work, "user_dim")
-        user_dim.write.parquet(dim_path)
-        static_dim = spark.read.parquet(dim_path)
-        us = F.unix_micros("ts")
-        sliced = ev.withColumn(
-            "_slice",
-            ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long"),
-        )
-
-        def land(df, name):
-            stage = os.path.join(work, f"stage_{name}")
-            df.coalesce(1).write.parquet(stage)
-            fs = glob.glob(os.path.join(stage, "*.parquet"))
-            if fs:
-                [f] = fs
-                shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
-
-        for i in range(n_batches):
-            land(
-                sliced.filter(F.col("_slice") == i).drop("_slice"),
-                f"slice_{i:03d}",
-            )
-        # sentinel user -999 is NOT in the dim: the inner join drops
-        # it (no phantom output row to filter) but its event time still
-        # advances the watermark past every real window
-        sentinel = spark.createDataFrame(
-            [(int(-1), int(-999), float(0.0))],
-            "event_id long, user_id long, value double",
-        ).select(
-            "event_id",
-            F.timestamp_micros(
-                F.lit(hi + 30 * 86400 * 1_000_000)
-            ).alias("ts"),
-            "user_id",
-            "value",
-        )
-        land(sentinel, f"slice_{n_batches:03d}_sentinel")
-        schema = spark.read.parquet(landing).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        out = os.path.join(work, "out")
-        # State-partition sizing (r14 sweep — see
-        # _state_partitions_default): the windowed-aggregate state at 32
-        # partitions pays ~13 s commit ms per batch vs ~0.17 s at 4
-        # (mean_batch_sec 1.24 -> 0.47, matches_batch true both ways).
-        state_partitions = _state_partitions_default()
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        t0 = time.perf_counter()
-        q = (
-            enriched_tumbling_counts(
-                stream, static_dim, window_len="1 hour",
-                watermark="2 hours", streaming=True,
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise TimeoutError("enrich tier did not drain in 600s")
-        wall = time.perf_counter() - t0
-        prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        per_batch = [
-            round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
-            for p in prog
-        ]
-        state_rows = [
-            int(p["stateOperators"][0]["numRowsTotal"]) if p["stateOperators"]
-            else None
-            for p in prog
-        ]
-        streamed = spark.read.parquet(out)
-        got = sorted(map(tuple, streamed.collect()))
-        want = sorted(
-            map(
-                tuple,
-                enriched_tumbling_counts(
-                    ev, static_dim, window_len="1 hour",
-                    watermark="2 hours", streaming=False,
-                ).collect(),
-            )
-        )
-        return {
-            "loop": "stream_static_enrich_tumbling",
-            "n_batches": len(per_batch),
-            "rows_in": int(sum(p["numInputRows"] for p in prog)),
-            "windows_out": len(got),
-            "matches_batch": got == want,
-            "total_wall": round(wall, 4),
-            "per_batch_sec": per_batch,
-            "mean_batch_sec": round(
-                sum(per_batch) / max(len(per_batch), 1), 4
-            ),
-            "state_rows_per_batch": state_rows,
-            **_state_op_metrics(prog),
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _state_partitions_default() -> int:
@@ -1313,290 +887,422 @@ def _state_partitions_default() -> int:
     return int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
 
 
-def bench_streaming_join(
-    spark, sf_dir: str, n_batches: int = 10, state_partitions: int = None
-) -> dict:
-    """Fifth streaming-tier row (r12 verdict #4): stream-STREAM
-    watermarked interval join (streaming/events.view_click_pairs) —
-    impression↔click attribution, the one stateful shape the
-    stream-static enrich tier cannot express.  Both sides of the
-    self-join are watermarked (1 h); the event-time range predicate
-    bounds view-state retention to watermark + attribution window, so
-    state is arrival-rate × delay, never stream history.  Same harness
-    as the other tiers: time-ordered micro-batches, two partner-less
-    sentinel events 30 days out (one view, one click, different users —
-    they advance BOTH sides' watermarks to flush state without emitting
-    a phantom pair), and a row-for-row gate against the batch compile
-    of the identical plan."""
-    import glob
-    import shutil
-    import tempfile
+class TierRun(NamedTuple):
+    """What a spec's callables see of one run: the session, the tier's
+    batch source, the work dir (sink at ``out``, checkpoint at ``ckpt``)
+    and whatever the spec's ``setup`` returned."""
 
-    from pyspark.sql import functions as F
+    spark: SparkSession
+    source: DataFrame
+    work: str
+    aux: dict
 
-    from asctb_ct_label_mapper_spark.streaming.events import view_click_pairs
+    @property
+    def out(self) -> str:
+        return os.path.join(self.work, "out")
 
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
+    @property
+    def ckpt(self) -> str:
+        return os.path.join(self.work, "ckpt")
+
+
+def _land_file(df: DataFrame, work: str, landing: str, name: str) -> None:
+    """Write ``df`` as ONE parquet file ``<landing>/<name>.parquet``;
+    files are copied in batch order, so the file source replays them in
+    that order.  An empty frame (an empty time slice) lands nothing."""
+    stage = os.path.join(work, f"stage_{name}")
+    df.coalesce(1).write.parquet(stage)
+    fs = glob.glob(os.path.join(stage, "*.parquet"))
+    if fs:
+        [f] = fs
+        shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
+
+
+def _land_event_slices(run: TierRun, spec: StreamTier, n_batches: int):
+    """Split the events into ``n_batches`` time-ordered slices, one file
+    each, so event time replays monotonically (the watermark advances and
+    state evicts).
+
+    Redeliveries (``spec.redeliver``): every 10th event from the last 3
+    days of its slice is landed again as the slice's follow-up file.  It
+    must arrive in the NEXT batch, not the same file (same-batch
+    duplicates would measure in-batch dedup, not state-store suppression
+    — r9 review finding), and inside a 7-day watermark on replay.
+
+    Sentinels (``spec.sentinels``) land last, 30 days past the max ts:
+    they push the final watermark past every real window or session, so
+    an append-mode sink flushes all state and the gate can compare row
+    for row."""
+    src = run.source
+    landing = os.path.join(run.work, "landing")
+    os.makedirs(landing)
+    us = F.unix_micros("ts")
+    lo, hi = src.agg(F.min(us), F.max(us)).first()
     span = (hi - lo) + 1
-    work = tempfile.mkdtemp(prefix="graft_ssjoin_bench_")
-    try:
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
-        us = F.unix_micros("ts")
-        sliced = ev.withColumn(
-            "_slice",
-            ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long"),
-        )
-
-        def land(df, name):
-            stage = os.path.join(work, f"stage_{name}")
-            df.coalesce(1).write.parquet(stage)
-            fs = glob.glob(os.path.join(stage, "*.parquet"))
-            if fs:
-                [f] = fs
-                shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
-
-        for i in range(n_batches):
-            land(
-                sliced.filter(F.col("_slice") == i).drop("_slice"),
-                f"slice_{i:03d}",
+    sliced = src.withColumn(
+        "_slice", ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long")
+    )
+    slice_end = F.lit(lo) + (F.col("_slice") + 1) * F.lit(span) / F.lit(
+        n_batches
+    )
+    redeliver = (F.col("event_id") % 10 == 0) & (
+        us >= slice_end - F.lit(3 * _DAY_US)
+    )
+    for i in range(n_batches):
+        sl = sliced.filter(F.col("_slice") == i)
+        _land_file(sl.drop("_slice"), run.work, landing, f"slice_{i:03d}a")
+        if spec.redeliver:
+            _land_file(
+                sl.filter(redeliver).drop("_slice"),
+                run.work, landing, f"slice_{i:03d}b",
             )
-        far = hi + 30 * 86400 * 1_000_000
-        sentinels = spark.createDataFrame(
-            [
-                (int(-1), int(-999), "view"),
-                (int(-2), int(-998), "click"),
-            ],
-            "event_id long, user_id long, event_type string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.lit(far)).alias("ts"),
-            "user_id",
-            "event_type",
+    if spec.sentinels:
+        rest = T.StructType([f for f in src.schema if f.name != "ts"])
+        far = F.timestamp_micros(F.lit(hi + 30 * _DAY_US)).alias("ts")
+        sentinels = run.spark.createDataFrame(list(spec.sentinels), rest)
+        _land_file(
+            sentinels.select(*[far if c == "ts" else c for c in src.columns]),
+            run.work, landing, f"slice_{n_batches:03d}_sentinel",
         )
-        land(sentinels, f"slice_{n_batches:03d}_sentinel")
-        schema = spark.read.parquet(landing).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        out = os.path.join(work, "out")
-        # State-partition sizing: the interval join keeps FOUR state
-        # stores per side-pair (keyToNumValues + keyWithIndexToValue,
-        # each side), so every shuffle partition costs 4 store commits
-        # per micro-batch regardless of data volume.  The r14 sweep
-        # (see _state_partitions_default) pins the local default at 4;
-        # the stream pins its own partitioning at start, so restore the
-        # session value right after .start().
-        if state_partitions is None:
-            state_partitions = _state_partitions_default()
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        t0 = time.perf_counter()
-        q = (
-            view_click_pairs(
-                stream, attribution_window="10 minutes",
-                watermark="1 hour", streaming=True,
-            )
+    schema = run.spark.read.parquet(landing).schema
+    return (
+        run.spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+
+
+class StreamTier(NamedTuple):
+    """One streaming tier.  ``land(run, spec, n_batches)`` lands the input
+    under the work dir and returns the stream over it (default: the
+    time-ordered event slices); ``start(stream, run)`` starts the query that
+    writes ``run.out``; ``oracle(run)``, when set, is the batch answer the
+    rows of ``streamed(<run.out as read>)`` must equal row for row, and the
+    gated row count is recorded under ``out_key``.  ``extras(run,
+    streamed, record)`` adds the tier's own fields.  A stateful tier runs
+    at the runner's state partition count; ``bench_dir`` maps the bench's
+    sf dir to the dir the tier reads ``table`` from."""
+
+    key: str  # bench_out.json scales.<key>
+    name: str  # tools/bench_streaming_matrix.py --loops name
+    loop: str
+    table: str
+    columns: tuple
+    start: Callable
+    land: Callable = _land_event_slices
+    redeliver: bool = False
+    sentinels: tuple = ()  # rows of the non-ts columns, landed past max ts
+    setup: Callable | None = None
+    oracle: Callable | None = None
+    streamed: Callable = lambda df: df
+    out_key: str | None = None
+    extras: Callable | None = None
+    stateful: bool = True
+    bench_dir: Callable = lambda sf_dir: sf_dir
+
+
+def _land_jsonl_docs(run: TierRun, spec: StreamTier, n_batches: int):
+    """The odd-id half of the corpus as ``n_batches`` JSONL shards, one
+    per micro-batch (maxFilesPerTrigger=1)."""
+    landing = os.path.join(run.work, "landing")
+    write_jsonl(
+        run.source.filter(F.col("doc_id") % 2 == 1).repartition(n_batches),
+        landing,
+    )
+    schema = jsonl_schema_with_corrupt(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    return read_jsonl_stream(run.spark, landing, schema, max_files_per_trigger=1)
+
+
+def _ledger_setup(run: TierRun) -> dict:
+    # the even-id half is the existing corpus: its signatures seed the
+    # table each epoch both reads and appends to
+    sig_path = os.path.join(run.work, "sigs")
+    minhash_signatures(
+        run.source.filter(F.col("doc_id") % 2 == 0)
+    ).write.parquet(sig_path)
+    return {
+        "sig_path": sig_path,
+        "sig_rows_seed": run.spark.read.parquet(sig_path).count(),
+    }
+
+
+def _ledger_extras(run: TierRun, streamed: DataFrame, rec: dict) -> dict:
+    wall = rec["total_wall"]
+    return {
+        "rows": rec["rows_in"],
+        "rows_per_sec": round(rec["rows_in"] / wall, 1) if wall > 0 else None,
+        "sig_rows_seed": run.aux["sig_rows_seed"],
+        "sig_rows_final": run.spark.read.parquet(run.aux["sig_path"]).count(),
+        "n_matches": int(streamed.count()),
+    }
+
+
+def _enrich_setup(run: TierRun) -> dict:
+    dim_path = os.path.join(run.work, "user_dim")
+    run.source.select("user_id").distinct().select(
+        "user_id", (F.col("user_id") % 10).alias("segment")
+    ).write.parquet(dim_path)
+    return {"user_dim": run.spark.read.parquet(dim_path)}
+
+
+def _session_plan(df: DataFrame, run: TierRun, streaming: bool) -> DataFrame:
+    return sessionize(
+        df, gap="30 minutes", watermark="2 hours", streaming=streaming
+    )
+
+
+def _enrich_plan(df: DataFrame, run: TierRun, streaming: bool) -> DataFrame:
+    return enriched_tumbling_counts(
+        df, run.aux["user_dim"], window_len="1 hour", watermark="2 hours",
+        streaming=streaming,
+    )
+
+
+def _inner_plan(df: DataFrame, run: TierRun, streaming: bool) -> DataFrame:
+    return view_click_pairs(
+        df, attribution_window="10 minutes", watermark="1 hour",
+        streaming=streaming,
+    )
+
+
+def _outer_plan(df: DataFrame, run: TierRun, streaming: bool) -> DataFrame:
+    return view_click_outer(
+        df, attribution_window="10 minutes", watermark="1 hour",
+        streaming=streaming,
+    )
+
+
+def _append_sink(plan: Callable) -> Callable:
+    """``start`` for a tier whose plan compiles both ways: the streaming
+    compile appended to parquet at ``run.out``."""
+
+    def start(stream: DataFrame, run: TierRun):
+        return (
+            plan(stream, run, streaming=True)
             .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("path", run.out)
+            .option("checkpointLocation", run.ckpt)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise TimeoutError("stream-stream tier did not drain in 600s")
+
+    return start
+
+
+def _batch_compile(plan: Callable) -> Callable:
+    """``oracle`` for the same tier: the batch compile over the source."""
+    return lambda run: plan(run.source, run, streaming=False)
+
+
+_EVENT_VALUES = ("event_id", "ts", "user_id", "value")
+_EVENT_TYPES = ("event_id", "ts", "user_id", "event_type")
+# two partner-less sentinels (a view and a click, different users): they
+# advance BOTH join sides' watermarks without emitting a pair
+_VIEW_CLICK_SENTINELS = ((-1, -999, "view"), (-2, -998, "click"))
+
+# State partitions: every stateful tier runs at `_state_partitions_default`
+# (r14 sweep; at 32 partitions the dedup, session and windowed-aggregate
+# stores paid ~13-39 s of commit ms per batch against ~0.2 s at 4, and the
+# interval join keeps four stores per side pair, so each partition costs
+# four commits per micro-batch).
+STREAM_TIERS = (
+    # Ledger loop (VERDICT r7 #5): the foreachBatch incremental-dedup
+    # ingest (`streaming/dedup.py`) over docs10x.  If batch N's wall grows
+    # with N, the loop's state read is not scaling: each epoch re-reads
+    # the whole signature table, amortized by the parquet layout, never
+    # the corpus text.
+    StreamTier(
+        key="streaming",
+        name="ledger",
+        loop="incremental_dedup_foreachBatch",
+        table="documents",
+        columns=("doc_id", "text"),
+        land=_land_jsonl_docs,
+        setup=_ledger_setup,
+        start=lambda stream, run: start_incremental_dedup_stream(
+            stream, run.aux["sig_path"], run.out, run.ckpt,
+            available_now=True,
+        ),
+        extras=_ledger_extras,
+        stateful=False,
+        bench_dir=lambda sf_dir: ensure_docs_scale(sf_dir, 10),
+    ),
+    # Native stateful exact dedup (VERDICT r8 #4,
+    # `dropDuplicatesWithinWatermark`): every redelivery lands inside the
+    # 7-day delay, so the streamed ids must equal the source's distinct
+    # ids, each exactly once.  State rows track arrival rate x delay, not
+    # stream history.
+    StreamTier(
+        key="streaming_watermark",
+        name="watermark",
+        loop="dropDuplicatesWithinWatermark_exact",
+        table="events",
+        columns=_EVENT_VALUES,
+        redeliver=True,
+        start=lambda stream, run: start_watermarked_exact_dedup_stream(
+            stream, run.out, run.ckpt, delay="7 days", available_now=True
+        ),
+        streamed=lambda df: df.select("event_id"),
+        oracle=lambda run: run.source.select("event_id").distinct(),
+        out_key="rows_out",
+        extras=lambda run, streamed, rec: {
+            "suppressed": rec["rows_in"] - rec["rows_out"]
+        },
+    ),
+    # Native `session_window` + watermark (VERDICT r9 #5); the sentinel's
+    # user -1 is filtered from the gate.
+    StreamTier(
+        key="streaming_session",
+        name="session",
+        loop="session_window_watermark",
+        table="events",
+        columns=_EVENT_VALUES,
+        sentinels=((-1, -1, 0.0),),
+        start=_append_sink(_session_plan),
+        oracle=_batch_compile(_session_plan),
+        streamed=lambda df: df.filter(F.col("user_id") >= 0),
+        out_key="sessions_out",
+    ),
+    # Stream-STATIC broadcast enrichment + watermarked tumbling aggregate
+    # (r11): the join is stateless, only the windows hold state.  Sentinel
+    # user -999 is not in the dim, so the inner join drops it while its
+    # event time still flushes every real window.
+    StreamTier(
+        key="streaming_enrich",
+        name="enrich",
+        loop="stream_static_enrich_tumbling",
+        table="events",
+        columns=_EVENT_VALUES,
+        sentinels=((-1, -999, 0.0),),
+        setup=_enrich_setup,
+        start=_append_sink(_enrich_plan),
+        oracle=_batch_compile(_enrich_plan),
+        out_key="windows_out",
+    ),
+    # Stream-STREAM watermarked interval join (r12 verdict #4):
+    # view->click attribution; view state is bounded by watermark +
+    # attribution window.
+    StreamTier(
+        key="streaming_join",
+        name="inner",
+        loop="stream_stream_interval_join",
+        table="events",
+        columns=_EVENT_TYPES,
+        sentinels=_VIEW_CLICK_SENTINELS,
+        start=_append_sink(_inner_plan),
+        oracle=_batch_compile(_inner_plan),
+        out_key="pairs_out",
+    ),
+    # LEFT-OUTER stream-stream join (r13 verdict #5): unmatched views
+    # flush NULL-extended only on state expiry, so the state sawtooth and
+    # the late burst of unmatched rows are the signals.  The sentinel view
+    # itself stays in state (its expiry lies past the final watermark);
+    # the gate filters user_id < 0 all the same.
+    StreamTier(
+        key="streaming_outer_join",
+        name="outer",
+        loop="stream_stream_outer_join",
+        table="events",
+        columns=_EVENT_TYPES,
+        sentinels=_VIEW_CLICK_SENTINELS,
+        start=_append_sink(_outer_plan),
+        oracle=_batch_compile(_outer_plan),
+        streamed=lambda df: df.filter(F.col("user_id") >= 0),
+        out_key="rows_out",
+        extras=lambda run, streamed, rec: {
+            "unmatched_out": int(streamed.filter(~F.col("matched")).count())
+        },
+    ),
+)
+
+
+def run_stream_tier(
+    spark,
+    spec: StreamTier,
+    src_dir: str,
+    n_batches: int = 10,
+    state_partitions: int | None = None,
+) -> dict:
+    """Run one streaming tier over ``<src_dir>/<spec.table>.parquet`` in
+    ``n_batches`` micro-batches and return its record: per-batch wall
+    (StreamingQueryProgress.triggerExecution), cadence, input rows and,
+    for a stateful tier, the state partition count the query ran with,
+    the state-row series and the state-store latency split.
+
+    A stateful tier's query starts with ``spark.sql.shuffle.partitions``
+    at ``state_partitions`` (default ``_state_partitions_default()``);
+    the stream pins its partitioning at start, and the session's value is
+    restored even when the start fails."""
+    source = spark.read.parquet(
+        os.path.join(src_dir, f"{spec.table}.parquet")
+    ).select(*spec.columns)
+    work = tempfile.mkdtemp(prefix=f"graft_{spec.name}_bench_")
+    q = None
+    try:
+        run = TierRun(spark, source, work, {})
+        if spec.setup is not None:
+            run.aux.update(spec.setup(run))
+        stream = spec.land(run, spec, n_batches)
+        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        if spec.stateful:
+            if state_partitions is None:
+                state_partitions = _state_partitions_default()
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            t0 = time.perf_counter()
+            q = spec.start(stream, run)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if not q.awaitTermination(600):
+            raise TimeoutError(f"{spec.key} tier did not drain in 600s")
         wall = time.perf_counter() - t0
         prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
         per_batch = [
             round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
             for p in prog
         ]
-        state_rows = [
-            int(p["stateOperators"][0]["numRowsTotal"])
-            if p["stateOperators"]
-            else None
-            for p in prog
-        ]
-        streamed = spark.read.parquet(out)
-        got = sorted(map(tuple, streamed.collect()))
-        want = sorted(
-            map(
-                tuple,
-                view_click_pairs(
-                    ev, attribution_window="10 minutes", streaming=False
-                ).collect(),
-            )
-        )
-        return {
-            "loop": "stream_stream_interval_join",
+        rec = {
+            "loop": spec.loop,
             "n_batches": len(per_batch),
             "rows_in": int(sum(p["numInputRows"] for p in prog)),
-            "pairs_out": len(got),
-            "matches_batch": got == want,
             "total_wall": round(wall, 4),
             "per_batch_sec": per_batch,
             "mean_batch_sec": round(
                 sum(per_batch) / max(len(per_batch), 1), 4
             ),
-            "state_rows_per_batch": state_rows,
-            **_state_op_metrics(prog),
+            "last_over_first": round(per_batch[-1] / per_batch[0], 3)
+            if len(per_batch) > 1 and per_batch[0] > 0
+            else None,
         }
+        if spec.stateful:
+            ops = [op for p in prog for op in p["stateOperators"] or []]
+            ran = sorted({int(op["numShufflePartitions"]) for op in ops})
+            rec["state_partitions"] = ran[0] if len(ran) == 1 else ran
+            rec["state_rows_per_batch"] = [
+                int(p["stateOperators"][0]["numRowsTotal"])
+                if p["stateOperators"]
+                else None
+                for p in prog
+            ]
+            rec.update(_state_op_metrics(prog))
+        streamed = spec.streamed(spark.read.parquet(run.out))
+        if spec.oracle is not None:
+            got = sorted(map(tuple, streamed.collect()))
+            want = sorted(map(tuple, spec.oracle(run).collect()))
+            rec[spec.out_key] = len(got)
+            rec["matches_batch"] = got == want
+        if spec.extras is not None:
+            rec.update(spec.extras(run, streamed, rec))
+        return rec
     finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def bench_streaming_outer_join(
-    spark, sf_dir: str, n_batches: int = 10, state_partitions: int = None
-) -> dict:
-    """Sixth streaming-tier row (r13 verdict #5): the LEFT-OUTER
-    watermarked stream-stream join (streaming/events.view_click_outer)
-    — views that never clicked, emitted NULL-extended when the
-    watermark passes view_ts + window.  The inner tier measures match
-    emission; this one measures the DEFERRED half: unmatched rows only
-    flush on state expiry, so the state sawtooth (view rows held until
-    expiry) and the late burst of unmatched output are the signals.
-    Same harness: time-ordered micro-batches, two partner-less
-    sentinels 30 days out advancing both watermarks (flushing every
-    real view's state), and a row-for-row gate against the batch
-    compile.  The sentinel VIEW itself stays in state (its own expiry
-    lies past the final watermark) — the batch side never sees
-    sentinels, so the gate filters user_id < 0."""
-    import glob
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from asctb_ct_label_mapper_spark.streaming.events import (
-        view_click_outer,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span = (hi - lo) + 1
-    work = tempfile.mkdtemp(prefix="graft_ssouter_bench_")
-    try:
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
-        us = F.unix_micros("ts")
-        sliced = ev.withColumn(
-            "_slice",
-            ((us - F.lit(lo)) * n_batches / F.lit(span)).cast("long"),
-        )
-
-        def land(df, name):
-            stage = os.path.join(work, f"stage_{name}")
-            df.coalesce(1).write.parquet(stage)
-            fs = glob.glob(os.path.join(stage, "*.parquet"))
-            if fs:
-                [f] = fs
-                shutil.copy(f, os.path.join(landing, f"{name}.parquet"))
-
-        for i in range(n_batches):
-            land(
-                sliced.filter(F.col("_slice") == i).drop("_slice"),
-                f"slice_{i:03d}",
-            )
-        far = hi + 30 * 86400 * 1_000_000
-        sentinels = spark.createDataFrame(
-            [
-                (int(-1), int(-999), "view"),
-                (int(-2), int(-998), "click"),
-            ],
-            "event_id long, user_id long, event_type string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.lit(far)).alias("ts"),
-            "user_id",
-            "event_type",
-        )
-        land(sentinels, f"slice_{n_batches:03d}_sentinel")
-        schema = spark.read.parquet(landing).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        out = os.path.join(work, "out")
-        # same state-store-partition sizing as the inner tier (four
-        # stores per side-pair; r14 matrix pins the local default at 4
-        # — see _state_partitions_default)
-        if state_partitions is None:
-            state_partitions = _state_partitions_default()
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        t0 = time.perf_counter()
-        q = (
-            view_click_outer(
-                stream, attribution_window="10 minutes",
-                watermark="1 hour", streaming=True,
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise TimeoutError("outer-join tier did not drain in 600s")
-        wall = time.perf_counter() - t0
-        prog = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        per_batch = [
-            round(p["durationMs"]["triggerExecution"] / 1000.0, 4)
-            for p in prog
-        ]
-        state_rows = [
-            int(p["stateOperators"][0]["numRowsTotal"])
-            if p["stateOperators"]
-            else None
-            for p in prog
-        ]
-        streamed = spark.read.parquet(out).filter(F.col("user_id") >= 0)
-        got = sorted(map(tuple, streamed.collect()))
-        want = sorted(
-            map(
-                tuple,
-                view_click_outer(
-                    ev, attribution_window="10 minutes", streaming=False
-                ).collect(),
-            )
-        )
-        n_unmatched = streamed.filter(~F.col("matched")).count()
-        return {
-            "loop": "stream_stream_outer_join",
-            "n_batches": len(per_batch),
-            "rows_in": int(sum(p["numInputRows"] for p in prog)),
-            "rows_out": len(got),
-            "unmatched_out": int(n_unmatched),
-            "matches_batch": got == want,
-            "total_wall": round(wall, 4),
-            "per_batch_sec": per_batch,
-            "mean_batch_sec": round(
-                sum(per_batch) / max(len(per_batch), 1), 4
-            ),
-            "state_rows_per_batch": state_rows,
-            **_state_op_metrics(prog),
-        }
-    finally:
+        if q is not None and q.isActive:
+            q.stop()  # never read outputs or rmtree under a live query
         shutil.rmtree(work, ignore_errors=True)
 
 
@@ -2213,19 +1919,20 @@ def main() -> None:
             sessions[0] = s
             return s
 
-        def _query_tier(
-            label, names, tier_dir, factor, warm_table, warm_col,
-            extra_setup=None,
-        ):
+        def _quiesce():
+            sessions[0].stop()
+
+        def _query_tier(label, names, tier_dir, factor, warm, extra_setup):
             def run_once():
                 s = _fresh_session(f"asctb-bench-{label}")
                 reg = all_queries()
                 # fresh-JVM warm-up, same reason as the headline's
+                warm_table, warm_col = warm
                 s.read.parquet(
                     os.path.join(tier_dir, f"{warm_table}.parquet")
                 ).groupBy(warm_col).count().count()
                 if extra_setup is not None:
-                    extra_setup(s)
+                    extra_setup(s, tier_dir)
                 med, spread, jvm = _tier_median3(
                     s, reg, names, tier_dir, label
                 )
@@ -2240,123 +1947,32 @@ def main() -> None:
 
             return run_once
 
-        def _rel_setup(s):
-            # ingest-time cost, not query-time: materialize the bucketed
-            # fact layout before any timing (write-once per tier)
-            from asctb_ct_label_mapper_spark.sources.bucketing import (
-                ensure_bucketed_tables,
-                ensure_clustered_copy,
-            )
-
-            bkt = ensure_bucketed_tables(s, rel_dir)
-            for _df in bkt.values():
-                _df.count()  # warm file listing/footers — the plain paths
-                # get this for free from the 20 queries that precede the
-                # bucketed entries; without it the first bucketed read
-                # pays cold I/O that is not part of the layout comparison
-            cl_path = ensure_clustered_copy(s, rel_dir)
-            s.read.parquet(cl_path).count()  # warm, same reason
-
-        tier_specs = []
-        try:
-            tier_specs.append(
-                (
-                    "docs10x",
-                    _query_tier(
-                        "10x", SCALE_QUERIES, ensure_docs_scale(sf_dir, 10),
-                        10, "documents", "lang",
-                    ),
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-            result["scales"]["docs10x"] = {"error": str(e)[:200]}
-        try:
-            tier_specs.append(
-                (
-                    "events10x",
-                    _query_tier(
-                        "ev10x", EVENTS_SCALE_QUERIES,
-                        ensure_events_scale(sf_dir, 10), 10, "events",
-                        "event_type",
-                    ),
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-            result["scales"]["events10x"] = {"error": str(e)[:200]}
-        try:
-            tier_specs.append(
-                (
-                    "docs100x",
-                    _query_tier(
-                        "100x", SCALE100_QUERIES,
-                        ensure_docs_scale(sf_dir, 100), 100, "documents",
-                        "lang",
-                    ),
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-            result["scales"]["docs100x"] = {"error": str(e)[:200]}
-        try:
-            tier_specs.append(
-                (
-                    "events100x",
-                    _query_tier(
-                        "ev100x", EVENTS_SCALE_QUERIES,
-                        ensure_events_scale(sf_dir, 100), 100, "events",
-                        "event_type",
-                    ),
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-            result["scales"]["events100x"] = {"error": str(e)[:200]}
-        try:
-            rel_dir = ensure_relational_scale(sf_dir, 10)
-            tier_specs.append(
-                (
-                    "rel10x",
-                    _query_tier(
-                        "rel10x", REL_SCALE_QUERIES, rel_dir, 10,
-                        "lineitem", "l_returnflag", extra_setup=_rel_setup,
-                    ),
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-            result["scales"]["rel10x"] = {"error": str(e)[:200]}
-
-        def _quiesce():
-            sessions[0].stop()
-
-        for key, run_once in tier_specs:
-            try:
-                result["scales"][key] = _run_tier_load_aware(
-                    key, run_once, committed, quiesce=_quiesce
-                )
-            except Exception as e:  # noqa: BLE001 - scale tiers best-effort
-                result["scales"][key] = {"error": str(e)[:200]}
-
-        def _stream_tier(key, fn):
+        def _stream_tier(spec):
             def run_once():
-                s = _fresh_session(f"asctb-bench-{key}")
+                s = _fresh_session(f"asctb-bench-{spec.key}")
                 s.catalog.clearCache()
-                return fn(s, sf_dir)
+                return run_stream_tier(s, spec, spec.bench_dir(sf_dir))
 
             return run_once
 
-        for key, fn in (
-            ("streaming", bench_streaming),
-            ("streaming_watermark", bench_streaming_watermark),
-            ("streaming_session", bench_streaming_session),
-            ("streaming_enrich", bench_streaming_enrich),
-            ("streaming_join", bench_streaming_join),
-            ("streaming_outer_join", bench_streaming_outer_join),
-        ):
+        for key, label, names, ensure, factor, warm, extra in SCALE_TIERS:
             try:
+                tier_dir = ensure(sf_dir, factor)
                 result["scales"][key] = _run_tier_load_aware(
-                    key, _stream_tier(key, fn), committed,
+                    key,
+                    _query_tier(label, names, tier_dir, factor, warm, extra),
+                    committed,
                     quiesce=_quiesce,
                 )
             except Exception as e:  # noqa: BLE001 - scale tiers best-effort
                 result["scales"][key] = {"error": str(e)[:200]}
+        for spec in STREAM_TIERS:
+            try:
+                result["scales"][spec.key] = _run_tier_load_aware(
+                    spec.key, _stream_tier(spec), committed, quiesce=_quiesce
+                )
+            except Exception as e:  # noqa: BLE001 - scale tiers best-effort
+                result["scales"][spec.key] = {"error": str(e)[:200]}
         spark = sessions[0]
 
     print(json.dumps(result))

@@ -235,3 +235,35 @@ def test_reference_projection_of_empty_reference(spark):
     bare = map_labels_to_reference(labels, reference, k=2).collect()
     with reference_projection(reference) as ref:
         assert map_labels_to_reference(labels, ref, k=2).collect() == bare
+
+
+@pytest.mark.parametrize("strategy", ["join", "blocked"])
+def test_direction_less_label_gets_null_matches(spark, reference, strategy):
+    """A label whose embedding is NULL or zero-norm keeps its one report
+    row with every match column NULL, on both exact rungs; the exact
+    overwrite still applies to it. Labels with a direction, '' among
+    them, keep their cosine ranks."""
+
+    def encoder(col):
+        zero = F.array_repeat(F.lit(0.0).cast("float"), 16)
+        return F.when(col.isin("zero vec", "club cell"), zero).otherwise(
+            stub_encode_udf(col)
+        )
+
+    labels = spark.createDataFrame(
+        [("t", "cell 1"), ("t", None), ("t", ""), ("t", "zero vec"), ("t", "club cell")],
+        "source string, raw_input_label string",
+    )
+    out = map_labels_to_reference(
+        labels, reference, k=2, encoder=encoder, strategy=strategy
+    ).collect()
+    rows = {r["raw_input_label"]: r for r in out}
+    assert len(out) == len(rows) == 5
+    match_cols = [c for c in REPORT_COLS if c.startswith(("match_", "matched_"))]
+    for label in (None, "zero vec"):
+        assert [rows[label][c] for c in match_cols] == [None] * len(match_cols)
+    club = rows["club cell"]
+    assert (club["match_score_1"], club["matched_asctb_id_1"]) == (1.0, "CL:0000158")
+    assert club["match_score_2"] is None and club["matched_asctb_id_2"] is None
+    for label in ("cell 1", ""):
+        assert None not in [rows[label][c] for c in match_cols], label

@@ -3,6 +3,9 @@ streams over the events fixture and agree with their batch flavor."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -803,3 +806,112 @@ def test_view_click_outer_batch_unmatched_rows(spark):
     assert got[1]["matched"] and got[1]["click_id"] == 2
     assert not got[3]["matched"]
     assert got[3]["click_id"] is None and got[3]["lag_seconds"] is None
+
+
+# --- bench streaming tiers: one runner over the per-tier specs ------------
+
+def _load_bench():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _tree(root):
+    return sorted(
+        os.path.join(d, n) for d, _, files in os.walk(root) for n in files
+    )
+
+
+@pytest.fixture(scope="module")
+def bench_mod():
+    return _load_bench()
+
+
+@pytest.fixture(scope="module")
+def tier_sf(sf_dir):
+    # the tiers run at sf0.01, next to the suite's sf0.001 fixture data
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+@pytest.fixture(scope="module")
+def tier_records(spark, bench_mod, tier_sf):
+    """Every spec run once at sf0.01 in 3 micro-batches, the ledger tier
+    pointed at the sf dir itself; also reports whether the runs left
+    anything under the scale-tier cache."""
+    scale_root = os.path.dirname(bench_mod._SCALE_ROOT)
+    before = _tree(scale_root)
+    records = {
+        spec.key: bench_mod.run_stream_tier(spark, spec, tier_sf, n_batches=3)
+        for spec in bench_mod.STREAM_TIERS
+    }
+    return records, _tree(scale_root) == before
+
+
+def test_stream_tiers_gate_and_keep_committed_keys(bench_mod, tier_records):
+    """Each gated tier's streamed rows equal its batch plan, and every
+    record still carries each key of the committed bench_out.json record
+    (except the load markers the load-aware wrapper adds)."""
+    records, _ = tier_records
+    with open(os.path.join(os.path.dirname(__file__), "..", "bench_out.json")) as f:
+        committed = json.load(f)["scales"]
+    for spec in bench_mod.STREAM_TIERS:
+        rec = records[spec.key]
+        assert rec["n_batches"] >= 3, spec.key
+        if spec.oracle is not None:
+            assert rec["matches_batch"] is True, spec.key
+        missing = set(committed[spec.key]) - {"load"} - set(rec)
+        assert not missing, (spec.key, missing)
+    # the watermark gate: every redelivery lands inside the 7-day delay
+    wm = records["streaming_watermark"]
+    assert wm["rows_out"] < wm["rows_in"]
+    assert wm["suppressed"] == wm["rows_in"] - wm["rows_out"]
+
+
+def test_stream_tiers_write_nothing_under_scale_root(tier_records):
+    assert tier_records[1]
+
+
+def test_stream_tier_runs_at_given_state_partitions(
+    spark, bench_mod, tier_sf, tier_records
+):
+    """The partition count the runner is given is the one the query ran
+    with (read from its progress); the default is
+    ``_state_partitions_default()``."""
+    records, _ = tier_records
+    default = bench_mod._state_partitions_default()
+    for spec in bench_mod.STREAM_TIERS:
+        if spec.stateful:
+            assert records[spec.key]["state_partitions"] == default, spec.key
+    wm = next(s for s in bench_mod.STREAM_TIERS if s.name == "watermark")
+    rec = bench_mod.run_stream_tier(
+        spark, wm, tier_sf, n_batches=3, state_partitions=2
+    )
+    assert rec["state_partitions"] == 2
+    assert rec["matches_batch"] is True
+
+
+def test_stream_tier_failed_start_restores_session(spark, bench_mod, tier_sf):
+    """A query builder that raises leaves the session's shuffle-partition
+    setting as it was and removes the tier's work dir."""
+    import glob
+    import tempfile
+
+    def boom(stream, run):
+        raise RuntimeError("start failed")
+
+    wm = next(s for s in bench_mod.STREAM_TIERS if s.name == "watermark")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != str(bench_mod._state_partitions_default())
+    pattern = os.path.join(tempfile.gettempdir(), "graft_watermark_bench_*")
+    dirs = set(glob.glob(pattern))
+    with pytest.raises(RuntimeError, match="start failed"):
+        bench_mod.run_stream_tier(
+            spark, wm._replace(start=boom), tier_sf, n_batches=2
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert set(glob.glob(pattern)) == dirs
