@@ -15,6 +15,10 @@ Design rules (see SURVEY.md §4):
 - Explicit schemas everywhere; Parquet as the native format.
 """
 
+import sys
+
+from pyspark import SparkFiles
+
 from asctb_ct_label_mapper_spark.pipeline import (
     build_reference_embeddings,
     map_raw_labels,
@@ -22,6 +26,54 @@ from asctb_ct_label_mapper_spark.pipeline import (
 from asctb_ct_label_mapper_spark.session import get_spark
 
 __version__ = "0.2.0"
+
+
+def _lazy_zip_invalidation() -> None:
+    """Backport Python 3.13's lazy ``zipimporter.invalidate_caches``
+    (CPython gh-103200) to the running interpreter.
+
+    Before 3.13, ``invalidate_caches`` re-reads the archive's whole
+    directory at once, in every zipimporter over it. PySpark's Python
+    worker calls ``importlib.invalidate_caches()`` for every task, and its
+    path holds three archives, ``pyspark.zip`` (1328 entries), the py4j
+    zip and Spark's core jar (5359 entries), behind 16 zipimporters: 16
+    directory reads per task, 0.22-0.24 s of CPU on a 4-vCPU host
+    (SCALING.md). Made
+    lazy, invalidating drops the cached directory and the next lookup in
+    the archive reads it once, so a zip rewritten in place is still seen.
+    """
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if isinstance(cls.__dict__.get("_files"), property):
+        return
+
+    def files(self):
+        cache = zipimport._zip_directory_cache
+        try:
+            return cache[self.archive]
+        except KeyError:
+            try:
+                found = cache[self.archive] = zipimport._read_directory(self.archive)
+            except zipimport.ZipImportError:
+                found = {}
+            return found
+
+    def set_files(self, value):
+        # __init__ assigns the directory it has just cached
+        pass
+
+    def invalidate_caches(self):
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    cls._files = property(files, set_files)
+    cls.invalidate_caches = invalidate_caches
+
+
+# Package code unpickled in a Python worker imports this module: install
+# the backport there, once per worker process.
+if sys.version_info < (3, 13) and SparkFiles._is_running_on_worker:
+    _lazy_zip_invalidation()
 
 __all__ = [
     "build_reference_embeddings",

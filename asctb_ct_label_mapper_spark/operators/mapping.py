@@ -5,11 +5,20 @@ loop calling ``get_top_k_asctb_label_matches`` (main.py:67-100), scattering
 results with masked writes (main.py:206-211), then
 ``overwrite_exact_asctb_matches`` (main.py:126-166).
 
-Engine: ONE lazy DataFrame plan (SURVEY §3.2):
+Engine: ONE lazy DataFrame plan (SURVEY §3.2). On the join rung:
 
     seed -> clean (F8) -> encode (F12) -> broadcast cross join + cosine (J3/F13)
          -> window top-k (A1) -> pivot rank->columns (A2)
          -> exact-overwrite left join (J1) + rank>1 null-out (J2)
+
+On the blocked rung, A1, A2, J1 and J2 are one ``mapInPandas`` that scores
+each Arrow batch against the reference's resident unit matrix and writes
+the finished report rows from its resident table:
+
+    LocalTableScan -> clean (F8) -> encode (F12) -> MapInPandas
+
+so a call on a ``reference_projection`` handle with a list of labels is
+one Spark job of one stage.
 
 Divergences from the reference, both deliberate (SURVEY §4 item 3):
 - tie-breaking is deterministic (ORDER BY score DESC, CT_ID ASC) where the
@@ -29,21 +38,32 @@ corpus has no contractions/numerics/plural variance.
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Callable
+from dataclasses import replace
+from typing import Callable, Iterator
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.similarity import (
     REF_BROADCAST_BUDGET_BYTES,
+    ResidentReference,
     choose_similarity_impl,
+    collect_reference,
     pin_reference,
+    pinned_reference,
     reference_stats,
     similarity_topk,
+    top_k_rows,
     top_k_similarity_join,
 )
+from asctb_ct_label_mapper_spark.plans.partitioning import ensure_min_partitions
 
 Encoder = Callable[[Column], Column]
 
@@ -51,6 +71,9 @@ Encoder = Callable[[Column], Column]
 _REF_PROJ_COLS = (
     "CT_ID", "CT_NAME", "definition", "all_text", "ct_name_cleaned", "embedding"
 )
+_QUERY_COLS = ("source", "raw_input_label", "cleaned_input_label")
+# reference columns the blocked report writer keeps resident
+_PAYLOAD_COLS = ("CT_NAME", "all_text", "definition", "ct_name_cleaned")
 
 
 def _is_persisted(df: DataFrame) -> bool:
@@ -69,23 +92,78 @@ def reference_projection(reference: DataFrame):
             for organ_labels in organs:
                 map_labels_to_reference(organ_labels, ref, ...).write...
 
-    Entry runs two actions, once: the row count and dim, then a collect
-    of the ids and the L2-normalised matrix, which are broadcast. Each
-    call then routes from those stats and the blocked rung scores against
-    those broadcasts, so building a report runs no job on the reference.
-    On 4 cores a 64-label plus a 1024-label call against C=1026 at dim
-    768 fell from a median 16.3 s to 5.6 s of CPU (perfbench
-    map_many_small, 10 seeds). Exit destroys the broadcasts and
-    unpersists.
+    Entry runs one collect, once: the ids, the L2-normalised matrix and
+    the report writer's table (``CT_NAME`` and ``all_text`` row-aligned
+    with the matrix, and the exact-match table), all broadcast. Each call
+    then routes from the row count and dim and the blocked rung writes
+    its report from those broadcasts, so building a report runs no job
+    on the reference; a list of labels maps in one job of one stage. The
+    handle is for broadcast-sized references: one past the budget is
+    collected once, found too wide, and kept without broadcasts (calls
+    then route to IVF). Exit destroys the broadcasts and unpersists.
 
     Results must be MATERIALIZED inside the block (the lazy plans read the
     cache and the broadcasts)."""
     proj = reference.select(*_REF_PROJ_COLS).persist()
     try:
-        with pin_reference(proj, "CT_ID"):
+        with pin_reference(proj, _collect_report_reference(proj)):
             yield proj
     finally:
         proj.unpersist()
+
+
+def _collect_report_reference(reference: DataFrame) -> ResidentReference:
+    """The resident state of a reference projection from one collect, with
+    the report writer's table as its payload: the ids, ``CT_NAME``,
+    ``all_text`` and ``definition`` row-aligned with the unit matrix, each
+    with a trailing None that index -1 reads, and the exact-match table
+    {``ct_name_cleaned``: row of its min ``CT_ID``}, as
+    ``overwrite_exact_matches`` resolves collisions."""
+    state, cols = collect_reference(reference, "CT_ID", extra_cols=_PAYLOAD_COLS)
+    if state.ids is None:
+        return state
+    ids = cols["CT_ID"]
+    exact: dict = {}
+    for i, name in enumerate(cols["ct_name_cleaned"]):
+        if name is not None and (name not in exact or ids[i] < ids[exact[name]]):
+            exact[name] = i
+    table = tuple(
+        np.append(cols[c].astype(object), None)
+        for c in ("CT_ID", "CT_NAME", "all_text", "definition")
+    ) + (exact,)
+    sc = reference.sparkSession.sparkContext
+    return replace(state, payload=sc.broadcast(table))
+
+
+def _report_reference(reference: DataFrame) -> ResidentReference:
+    """A handle's pinned state, else one built for this call through the
+    same collect. Past the broadcast budget the state has no broadcasts
+    (the writer then fails with the remediation), and an unpinned
+    reference's stats job refuses it before it is collected."""
+    pinned = pinned_reference(reference, "CT_ID")
+    if pinned is not None:
+        return pinned
+    n_refs, dim = reference_stats(reference)
+    if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
+        return ResidentReference("CT_ID", "embedding", n_refs, dim)
+    return _collect_report_reference(reference)
+
+
+def _distinct_labels(labels: DataFrame) -> tuple[DataFrame, int | None]:
+    """The distinct (source, raw_input_label) rows, and their count when
+    it costs no job. A driver-local relation (``isLocal``, which is what
+    ``map_raw_labels`` builds from a list) is deduplicated on the driver
+    — collecting it runs no job — and comes back as a ``LocalTableScan``
+    of the distinct rows: no shuffle, so no width probe or routing count
+    downstream runs a job. Any other frame keeps ``dropDuplicates``."""
+    pairs = labels.select("source", "raw_input_label")
+    if not labels.isLocal():
+        return pairs.dropDuplicates(), None
+    rows = list(dict.fromkeys(pairs.collect()))
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=to_arrow_schema(pairs.schema)
+    )
+    return labels.sparkSession.createDataFrame(table), len(rows)
 
 
 def map_labels_to_reference(
@@ -110,25 +188,36 @@ def map_labels_to_reference(
     ``strategy`` picks the physical top-k. "auto" (default, r13 verdict
     #5) reads reference count+dim — off the pin of a
     ``reference_projection`` handle, else one aggregate job on the
-    persisted projection — and the query count (one count of the seed)
-    and routes via :func:`choose_similarity_impl` — at golden-reference
-    scale that lands on the fused cross-join + window rung; past
-    q*c*d = 1e7 (measured at dim 768 on 4 cores, see EXACT_FLOP_BUDGET)
-    it streams through the blocked matmul, which scores against the
-    handle's resident broadcasts; past the BROADCAST budget it routes to
-    IVF, where the old hard-coded broadcast would have OOMed. Explicit
-    "join" / "blocked" / "ivf" pin a rung. For
-    every non-fused rung the CT_NAME/all_text payload joins back by
-    CT_ID afterward — broadcast while the reference fits the budget, a
-    plain equi-join past it — and the exact-overwrite aggregate obeys
-    the same budget flag. Exact rungs are hash-identical (proven by
-    cos_topk_join / cos_topk_blocked sharing one oracle).
+    persisted projection — and the label count (counted on the driver for
+    a driver-local relation, else one count of the seed) and routes via
+    :func:`choose_similarity_impl` — at golden-reference scale that lands
+    on the fused cross-join + window rung; past q*c*d = 1e7 (measured at
+    dim 768 on 4 cores, see EXACT_FLOP_BUDGET) it takes the blocked rung;
+    past the BROADCAST budget it routes to IVF, where the old hard-coded
+    broadcast would have OOMed. Explicit "join" / "blocked" / "ivf" pin a
+    rung.
+
+    The blocked rung's plan is ``LocalTableScan → clean → encode →
+    MapInPandas`` for a driver-local relation (``dropDuplicates`` in
+    place of the scan otherwise): one ``mapInPandas`` scores each Arrow
+    batch against the resident unit matrix and writes each label's
+    finished row, k match columns with the exact overwrite applied, from
+    the resident table (:func:`reference_projection`; an unpinned
+    reference gets the same state per call). Each match carries the
+    ``CT_NAME``/``all_text`` of the row it scored, also when reference
+    rows share a ``CT_ID``. On the IVF rung the CT_NAME/all_text payload
+    joins back by CT_ID afterward — broadcast while the reference fits
+    the budget, a plain equi-join past it — and the exact-overwrite
+    aggregate obeys the same budget flag. Exact rungs are hash-identical
+    (proven by cos_topk_join / cos_topk_blocked sharing one oracle); a
+    zero-norm reference row scores NULL and ranks after every scored row
+    on both.
     """
-    seed = labels.select("source", "raw_input_label").dropDuplicates()
+    seed, n_labels = _distinct_labels(labels)
     cleaned = seed.withColumn("cleaned_input_label", clean(F.col("raw_input_label")))
     encoded = cleaned.withColumn("embedding", encoder(F.col("cleaned_input_label")))
 
-    # The reference feeds THREE consumers (top-k matrix/collect, payload
+    # The reference feeds several consumers (top-k matrix/collect, payload
     # join, exact-overwrite aggregate); it is broadcast-sized by
     # construction (10^2-10^4 rows, SURVEY §1.3), so persist the narrowed
     # projection once instead of re-running its encode/clean UDF chain per
@@ -145,21 +234,28 @@ def map_labels_to_reference(
 
     if strategy == "auto":
         # route on cheap statistics: ref count+dim off the handle's pin
-        # (one aggregate job on an unpinned projection), query count off
+        # (one aggregate job on an unpinned projection), label count off
         # the pre-encode seed (same row count as `encoded`, skips running
         # the encoder UDF chain)
         n_refs, dim = reference_stats(reference)
-        rung = choose_similarity_impl(seed.count(), n_refs, dim)
+        n_queries = seed.count() if n_labels is None else n_labels
+        rung = choose_similarity_impl(n_queries, n_refs, dim)
         ref_in_budget = n_refs * dim * 8 <= REF_BROADCAST_BUDGET_BYTES
     else:
         rung, ref_in_budget = strategy, True
 
+    if rung == "blocked":
+        # Matmul cost follows rows: widen a narrow seed. A local seed
+        # already has min(rows, parallelism) partitions, so widening it
+        # would only add a shuffle.
+        queries = encoded if n_labels is not None else ensure_min_partitions(encoded)
+        return _blocked_report(queries, reference, k)
     if rung == "join":
         topk = top_k_similarity_join(
             encoded,
             reference,
             k=k,
-            query_id_cols=["source", "raw_input_label", "cleaned_input_label"],
+            query_id_cols=list(_QUERY_COLS),
             ref_id_col="CT_ID",
             ref_payload_cols=["CT_NAME", "all_text"],
         )
@@ -168,7 +264,7 @@ def map_labels_to_reference(
             encoded,
             reference,
             k=k,
-            query_id_cols=["source", "raw_input_label", "cleaned_input_label"],
+            query_id_cols=list(_QUERY_COLS),
             ref_id_col="CT_ID",
             impl=rung,
         )
@@ -206,6 +302,76 @@ def map_labels_to_reference(
     )
 
 
+def _blocked_report(queries: DataFrame, reference: DataFrame, k: int) -> DataFrame:
+    """The blocked rung's finished report: one ``mapInPandas`` over the
+    encoded labels writes one row per label (:func:`_write_report`)."""
+    state = _report_reference(reference)
+    b_ids, b_unit = state.broadcasts("map_labels_to_reference")
+    b_table = state.payload
+    ref = reference.schema
+    schema = T.StructType(
+        [queries.schema[c] for c in _QUERY_COLS]
+        + [
+            field
+            for i in range(1, k + 1)
+            for field in (
+                T.StructField(f"match_score_{i}", T.DoubleType()),
+                T.StructField(f"matched_asctb_id_{i}", ref["CT_ID"].dataType),
+                T.StructField(f"matched_asctb_label_{i}", ref["CT_NAME"].dataType),
+                T.StructField(f"matched_asctb_text_{i}", ref["all_text"].dataType),
+            )
+        ]
+    )
+
+    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _write_report(batches, b_ids.value, b_unit.value, b_table.value, k)
+
+    return queries.select(*_QUERY_COLS, "embedding").mapInPandas(write, schema=schema)
+
+
+def _write_report(
+    batches: Iterator[pd.DataFrame],
+    ids: np.ndarray,
+    unit: np.ndarray,
+    table: tuple,
+    k: int,
+) -> Iterator[pd.DataFrame]:
+    """Report rows for batches of encoded labels: the top-k of
+    :func:`top_k_rows` as ``match_score_i``/``matched_asctb_*_i`` (NULL
+    past the reference's size, and all NULL for a label without a
+    direction), then the exact overwrite of ``overwrite_exact_matches``:
+    a label whose cleaned text is a ``ct_name_cleaned`` gets score 1.0 and
+    the min-``CT_ID`` row's id, ``CT_NAME`` and ``definition`` at rank 1,
+    and NULL at ranks >= 2. Module-level, so unpickling a report task
+    imports the package on the Python worker."""
+    out_ids, names, texts, definitions, exact = table
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        n = len(pdf)
+        has_dir, rows, scores = top_k_rows(pdf["embedding"], unit, ids, k)
+        top = rows.shape[1]
+        score = np.full((n, k), np.nan)
+        score[has_dir, :top] = scores
+        idx = np.full((n, k), -1)  # -1 reads the tables' trailing None
+        idx[has_dir, :top] = rows
+        hit = np.array([exact.get(c, -1) for c in pdf["cleaned_input_label"]], dtype=np.int64)
+        is_hit = hit >= 0
+        score[is_hit] = np.nan
+        score[is_hit, 0] = 1.0
+        idx[is_hit] = -1
+        idx[is_hit, 0] = hit[is_hit]
+        text = texts[idx]
+        text[is_hit, 0] = definitions[hit[is_hit]]
+        out = {c: pdf[c].to_numpy() for c in _QUERY_COLS}
+        for i in range(k):
+            out[f"match_score_{i + 1}"] = score[:, i]
+            out[f"matched_asctb_id_{i + 1}"] = out_ids[idx[:, i]]
+            out[f"matched_asctb_label_{i + 1}"] = names[idx[:, i]]
+            out[f"matched_asctb_text_{i + 1}"] = text[:, i]
+        yield pd.DataFrame(out)
+
+
 def overwrite_exact_matches(
     report: DataFrame,
     reference: DataFrame,
@@ -213,7 +379,8 @@ def overwrite_exact_matches(
     broadcast_exact: bool = True,
 ) -> DataFrame:
     """J1+J2 as one broadcast left join (replaces main.py:126-166's
-    4x isin-mask + per-row lookup).
+    4x isin-mask + per-row lookup) — the join and IVF rungs' overwrite;
+    the blocked rung applies the same rule in its report writer.
 
     Exact rows get rank-1 columns overwritten with the reference's values
     and score 1.0; ranks >= 2 are nulled. Collisions on ``ct_name_cleaned``

@@ -67,7 +67,10 @@ def top_k_similarity_join(
 
     A query whose vector is NULL or zero-norm has no direction, so no
     neighbours: it gets ONE rank-1 row with NULL ``ref_id``, payload and
-    ``score`` (the blocked rung emits the same row).
+    ``score`` (the blocked rung emits the same row). A zero-norm
+    reference row scores NULL and ranks after every scored row, ties by
+    ascending ref id (``score DESC NULLS LAST, ref_id ASC``; the blocked
+    rung ranks it the same way).
     """
     ref = reference.select(
         F.col(ref_id_col).alias("ref_id"),
@@ -106,9 +109,11 @@ class ResidentReference:
     """What the driver-resident rungs need of a reference, computed once:
     its row count and dim and, inside the broadcast budget, broadcasts of
     its ids and of its L2-normalised float64 matrix (None past it).
+    ``payload`` is a caller's broadcast built from the same collect, row-
+    aligned with the matrix (the flagship report writer's table).
     ``pin_reference`` keeps one alive for the life of a handle, so repeated
     top-k calls run no reference job; without a pin the blocked rung builds
-    one per call through the same helper."""
+    one per call through ``resident_reference``."""
 
     ref_id_col: str
     ref_vec_col: str
@@ -116,6 +121,7 @@ class ResidentReference:
     dim: int
     ids: Broadcast | None = None
     unit: Broadcast | None = None
+    payload: Broadcast | None = None
 
     def broadcasts(self, rung: str) -> tuple[Broadcast, Broadcast]:
         """(ids, unit matrix); past the budget there are none and ``rung``
@@ -125,13 +131,25 @@ class ResidentReference:
         return self.ids, self.unit
 
     def release(self) -> None:
-        for b in (self.ids, self.unit):
+        for b in (self.ids, self.unit, self.payload):
             if b is not None:
                 b.destroy()
 
 
 # reference DataFrame -> its ResidentReference while ``pin_reference`` holds it
 _PINNED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def pinned_reference(
+    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
+) -> ResidentReference | None:
+    """The state ``pin_reference`` holds for these columns, if any."""
+    pinned = _PINNED.get(reference)
+    if pinned is not None and (pinned.ref_id_col, pinned.ref_vec_col) == (
+        ref_id_col, ref_vec_col
+    ):
+        return pinned
+    return None
 
 
 def reference_stats(reference: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
@@ -166,17 +184,40 @@ def _guard_ref_collect(n_refs: int, dim: int, rung: str) -> None:
         )
 
 
-def _collect_unit_matrix(
-    reference: DataFrame, ref_id_col: str, ref_vec_col: str, dim: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, L2-normalised float64 (rows, dim) matrix) collected to the
-    driver in one job; zero-norm rows stay zero."""
-    rows = reference.select(ref_id_col, ref_vec_col).collect()
-    ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows], dtype=np.float64).reshape(len(rows), dim)
+def _unit_matrix(vecs: list, dim: int) -> np.ndarray:
+    """L2-normalised float64 (rows, dim) matrix; zero-norm rows stay zero."""
+    mat = np.array(vecs, dtype=np.float64).reshape(len(vecs), dim)
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
-    return ids, mat / norms[:, None]
+    return mat / norms[:, None]
+
+
+def collect_reference(
+    reference: DataFrame,
+    ref_id_col: str,
+    ref_vec_col: str = "embedding",
+    extra_cols: Sequence[str] = (),
+) -> tuple[ResidentReference, dict[str, np.ndarray]]:
+    """One collect of the ids, vectors and ``extra_cols``: the resident
+    state, and the id and extra columns as arrays row-aligned with the
+    unit matrix (zero-norm rows stay zero), from which a caller builds its
+    ``payload``. The budget is checked after the collect: past it the
+    state has no broadcasts and the arrays are empty. Callers that must
+    not collect such a reference check ``reference_stats`` first, as
+    ``resident_reference`` does."""
+    rows = reference.select(ref_id_col, ref_vec_col, *extra_cols).collect()
+    dim = next((len(r[1]) for r in rows if r[1] is not None), 0)
+    if len(rows) * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
+        return ResidentReference(ref_id_col, ref_vec_col, len(rows), dim), {}
+    ids = np.array([r[0] for r in rows])
+    sc = reference.sparkSession.sparkContext
+    state = ResidentReference(
+        ref_id_col, ref_vec_col, len(rows), dim,
+        sc.broadcast(ids), sc.broadcast(_unit_matrix([r[1] for r in rows], dim)),
+    )
+    cols = {c: np.array([r[i] for r in rows], dtype=object)
+            for i, c in enumerate(extra_cols, start=2)}
+    return state, {ref_id_col: ids, **cols}
 
 
 def resident_reference(
@@ -185,35 +226,87 @@ def resident_reference(
     """The reference's pinned state for these columns, or a fresh one: one
     stats job, then (inside the broadcast budget) one collect and two
     broadcasts."""
-    pinned = _PINNED.get(reference)
-    if pinned is not None and (pinned.ref_id_col, pinned.ref_vec_col) == (
-        ref_id_col, ref_vec_col
-    ):
+    pinned = pinned_reference(reference, ref_id_col, ref_vec_col)
+    if pinned is not None:
         return pinned
     n_refs, dim = reference_stats(reference, ref_vec_col)
     if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
         return ResidentReference(ref_id_col, ref_vec_col, n_refs, dim)
-    ids, unit = _collect_unit_matrix(reference, ref_id_col, ref_vec_col, dim)
-    sc = reference.sparkSession.sparkContext
-    return ResidentReference(
-        ref_id_col, ref_vec_col, n_refs, dim, sc.broadcast(ids), sc.broadcast(unit)
-    )
+    return collect_reference(reference, ref_id_col, ref_vec_col)[0]
 
 
 @contextmanager
 def pin_reference(
-    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
+    reference: DataFrame, state: ResidentReference
 ) -> Iterator[ResidentReference]:
-    """Keep ``reference``'s resident state for the block: routing stats
-    and the blocked rung read it instead of running reference jobs. Exit
-    destroys the broadcasts; results must be materialised inside."""
-    state = resident_reference(reference, ref_id_col, ref_vec_col)
+    """Keep ``state`` as ``reference``'s resident state for the block:
+    routing stats and the blocked rungs read it instead of running
+    reference jobs. Exit destroys its broadcasts; results must be
+    materialised inside."""
     _PINNED[reference] = state
     try:
         yield state
     finally:
         _PINNED.pop(reference, None)
         state.release()
+
+
+def top_k_rows(
+    vecs: pd.Series, unit: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact cosine top-k of one batch of query vectors against a resident
+    unit matrix: the numpy core of the blocked rung and of the flagship's
+    report writer. Returns ``(has_dir, rows, scores)``:
+
+    - ``has_dir`` marks the queries with a direction; a NULL or zero-norm
+      vector has none, so no neighbours;
+    - for those queries, ``rows`` holds the reference row indices of the
+      top ``min(k, c)`` in (score DESC, ref id ASC) order and ``scores``
+      their cosines.
+
+    A zero-norm reference row has no direction either: it scores NaN
+    (NULL) and ranks after every scored row, ties by ascending ref id —
+    the join rung's ``score DESC NULLS LAST, ref_id ASC``."""
+    has_vec = vecs.notna().to_numpy()
+    q = np.zeros((len(vecs), unit.shape[1]))
+    if has_vec.any():
+        q[has_vec] = np.array(vecs[has_vec].to_list(), dtype=np.float64)
+    qn = np.linalg.norm(q, axis=1)
+    has_dir = qn > 0.0
+    sims = (q[has_dir] / qn[has_dir, None]) @ unit.T  # (queries, c)
+    n_rows, n_ref = sims.shape
+    top = min(k, n_ref)
+    if top == 0:
+        return has_dir, np.zeros((n_rows, 0), dtype=np.int64), np.zeros((n_rows, 0))
+    dead_ref = ~unit.any(axis=1)
+    sims[:, dead_ref] = -np.inf
+    # argpartition gets the top set in O(c); exact order + id tiebreak
+    # resolved on the k-sized slice only — all rows at once (no per-row
+    # Python in the common case).
+    part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
+    row_idx = np.arange(n_rows)[:, None]
+    sel_scores = sims[row_idx, part]
+    kth = sel_scores.min(axis=1)
+    # Order each row's slice by (score DESC, id ASC), matching the window
+    # strategy's row_number ordering: stable-argsort by id, then
+    # stable-argsort by -score — equal scores keep the id order.
+    ord_id = np.argsort(ids[part], axis=1, kind="stable")
+    ord_score = np.argsort(
+        -np.take_along_axis(sel_scores, ord_id, axis=1), axis=1, kind="stable"
+    )
+    chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_score, axis=1), axis=1)
+    # argpartition cuts ties at the k-th score ARBITRARILY — when a row has
+    # MORE than `top` scores >= its k-th score, ids outside the slice may
+    # deserve inclusion. Only those rows (exact float ties, or a top-k
+    # that reaches the zero-norm rows) take the widened per-row path.
+    tied = np.flatnonzero((sims >= kth[:, None]).sum(axis=1) > top)
+    for row_i in tied:
+        cand = np.flatnonzero(sims[row_i] >= kth[row_i])
+        order = np.lexsort((ids[cand], -sims[row_i, cand]))
+        chosen[row_i] = cand[order][:top]
+    scores = sims[row_idx, chosen]
+    scores[dead_ref[chosen]] = np.nan
+    return has_dir, chosen, scores
 
 
 def top_k_similarity_blocked(
@@ -229,14 +322,15 @@ def top_k_similarity_blocked(
 
     The reference matrix is collected once on the driver, L2-normalized, and
     shipped to executors via a broadcast variable; each Arrow batch of
-    queries does one dense matmul + ``argpartition``. Per-query cost is
-    O(c*d) flops with zero shuffle — the Window shuffle of strategy 1 is
-    gone, so the plan is scan -> mapInPandas -> done, and it scales linearly
-    in the query count with the reference resident in executor memory.
-    A reference held by ``pin_reference`` is scored against its resident
-    broadcasts; any other reference is collected and broadcast per call.
-    A NULL or zero-norm query vector gets one rank-1 row with NULL
-    ``ref_id`` and ``score``, as on the join rung.
+    queries does one dense matmul + ``argpartition`` (:func:`top_k_rows`).
+    Per-query cost is O(c*d) flops with zero shuffle — the Window shuffle
+    of strategy 1 is gone, so the plan is scan -> mapInPandas -> done, and
+    it scales linearly in the query count with the reference resident in
+    executor memory. A reference held by ``pin_reference`` is scored
+    against its resident broadcasts; any other reference is collected and
+    broadcast per call. A NULL or zero-norm query vector gets one rank-1
+    row with NULL ``ref_id`` and ``score``, as on the join rung; a
+    zero-norm reference row scores NULL and ranks last, as there too.
     """
     b_ids, b_mat = resident_reference(reference, ref_id_col, ref_vec_col).broadcasts(
         "top_k_similarity_blocked"
@@ -262,13 +356,7 @@ def top_k_similarity_blocked(
         for pdf in batches:
             if pdf.empty:
                 continue
-            vecs = pdf[query_vec_col]
-            has_vec = vecs.notna().to_numpy()
-            q = np.zeros((len(pdf), mat.shape[1]))
-            if has_vec.any():
-                q[has_vec] = np.array(vecs[has_vec].to_list(), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            has_dir = qn > 0.0
+            has_dir, rows, scores = top_k_rows(pdf[query_vec_col], mat, ids, kk)
             if not has_dir.all():
                 # NULL or zero-norm query: one rank-1 row, NULL ref and score
                 n_dead = int((~has_dir).sum())
@@ -280,41 +368,14 @@ def top_k_similarity_blocked(
                         "rank": np.ones(n_dead, dtype=np.int32),
                     }
                 )
-                pdf, q, qn = pdf[has_dir], q[has_dir], qn[has_dir]
-                if pdf.empty:
-                    continue
-            sims = (q / qn[:, None]) @ mat.T  # (batch, c)
-            n_rows, n_ref = sims.shape
-            top = min(kk, n_ref)
-            # argpartition gets the top set in O(c); exact order + id
-            # tiebreak resolved on the k-sized slice only — all rows at
-            # once (no per-row Python in the common case).
-            part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-            row_idx = np.arange(n_rows)[:, None]
-            sel_scores = sims[row_idx, part]
-            kth = sel_scores.min(axis=1)
-            # Order each row's slice by (score DESC, id ASC), matching the
-            # window strategy's row_number ordering: stable-argsort by id,
-            # then stable-argsort by -score — equal scores keep the id order.
-            ord_id = np.argsort(ids[part], axis=1, kind="stable")
-            ord_score = np.argsort(
-                -np.take_along_axis(sel_scores, ord_id, axis=1), axis=1, kind="stable"
-            )
-            chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_score, axis=1), axis=1)
-            # argpartition cuts ties at the k-th score ARBITRARILY — when a
-            # row has MORE than `top` scores >= its k-th score, ids outside
-            # the slice may deserve inclusion. Only those rows (exact float
-            # ties, rare) take the widened per-row path.
-            tied = np.flatnonzero((sims >= kth[:, None]).sum(axis=1) > top)
-            for row_i in tied:
-                cand = np.flatnonzero(sims[row_i] >= kth[row_i])
-                order = np.lexsort((ids[cand], -sims[row_i, cand]))
-                chosen[row_i] = cand[order][:top]
+            if rows.size == 0:
+                continue
+            n_rows, top = rows.shape
             out = {
-                c: np.repeat(pdf[c].to_numpy(), top) for c in query_id_cols
+                c: np.repeat(pdf[c].to_numpy()[has_dir], top) for c in query_id_cols
             }
-            out["ref_id"] = ids[chosen].ravel()
-            out["score"] = sims[row_idx, chosen].ravel()
+            out["ref_id"] = ids[rows].ravel()
+            out["score"] = scores.ravel()
             out["rank"] = np.tile(np.arange(1, top + 1, dtype=np.int32), n_rows)
             yield pd.DataFrame(out)
 
@@ -1721,7 +1782,9 @@ def hnsw_topk(
     as a boolean — the `distinct_users_sketch` precedent."""
     n_refs, dim = reference_stats(reference, ref_vec_col)
     _guard_ref_collect(n_refs, dim, "hnsw_topk")
-    ref_ids, ref_unit = _collect_unit_matrix(reference, ref_id_col, ref_vec_col, dim)
+    rows = reference.select(ref_id_col, ref_vec_col).collect()
+    ref_ids = np.array([r[0] for r in rows])
+    ref_unit = _unit_matrix([r[1] for r in rows], dim)
     order = np.argsort(ref_ids)  # deterministic insertion order
     ref_ids, ref_unit = ref_ids[order], ref_unit[order]
     index = hnsw_build_index(

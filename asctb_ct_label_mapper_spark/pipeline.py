@@ -89,7 +89,10 @@ def map_raw_labels(
     An iterable is taken as ``str(x)`` per element (so ``None`` maps as
     the label 'None') and handed to Spark as an Arrow table: it plans as a
     ``LocalTableScan`` that the JVM reads, where a list of tuples would be
-    a pickled Python RDD re-read by Python tasks in every job of the call."""
+    a pickled Python RDD re-read by Python tasks in every job of the call.
+    Being driver-local, it is deduplicated and counted on the driver, so
+    on a ``reference_projection`` handle a call that takes the blocked
+    rung is one Spark job of one stage (``map_labels_to_reference``)."""
     if isinstance(raw_labels, DataFrame):
         labels = raw_labels
     else:

@@ -267,3 +267,125 @@ def test_direction_less_label_gets_null_matches(spark, reference, strategy):
     assert club["match_score_2"] is None and club["matched_asctb_id_2"] is None
     for label in ("cell 1", ""):
         assert None not in [rows[label][c] for c in match_cols], label
+
+
+def _report_key(row, k):
+    """A report row with its scores rounded to 9 places."""
+    d = row.asDict()
+    for i in range(1, k + 1):
+        s = d[f"match_score_{i}"]
+        d[f"match_score_{i}"] = None if s is None else round(s, 9)
+    return tuple(sorted(d.items(), key=lambda kv: kv[0]))
+
+
+def test_blocked_report_equals_join_on_shared_ct_ids(spark):
+    """Reference rows that share a CT_ID — the unpivot's UNK sentinel
+    (different names) and level-10 twins (same id and name, different
+    all_text) — keep their own CT_NAME/all_text on the blocked rung:
+    its report equals the join rung's on every column. A zero-norm
+    reference row scores NULL and ranks last on both; k = C shows every
+    rank."""
+    import pyarrow as pa
+
+    from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
+
+    unk = "ASCTB CT_ID UNK"
+    rows = [
+        (unk, "mesh cell", "mesh def", "mesh cell mesh def"),
+        (unk, "glow cell", "glow def", "glow cell glow def"),
+        (unk, "fern cell", "fern def", "fern cell fern def"),
+        ("CL:7", "twin cell", "twin def", "twin cell twin def"),
+        ("CL:7", "twin cell", "twin def", "twin cell twin def level ten"),
+        ("CL:8", "other cell", "other def", "other cell other def"),
+        ("CL:9", "zero cell", "zero def", "zero cell zero def"),
+    ]
+    zero = F.array_repeat(F.lit(0.0).cast("float"), 16)
+    reference = (
+        spark.createDataFrame(
+            rows, "CT_ID string, CT_NAME string, definition string, all_text string"
+        )
+        .withColumn("ct_name_cleaned", clean_text_full_udf(F.col("CT_NAME")))
+        .withColumn(
+            "embedding",
+            F.when(F.col("CT_ID") == "CL:9", zero).otherwise(
+                stub_encode_udf(F.col("all_text"))
+            ),
+        )
+    )
+    # every row's all_text (a cosine match to that row), exact names of
+    # a sentinel and of the twins, and a near miss
+    texts = [r[3] for r in rows] + ["mesh cell", "twin cell", "glow twin"]
+    labels = spark.createDataFrame(
+        pa.table({"source": ["t"] * len(texts), "raw_input_label": texts})
+    )
+    k = len(rows)
+    got = {
+        strategy: sorted(
+            _report_key(r, k)
+            for r in map_labels_to_reference(
+                labels, reference, k=k, strategy=strategy
+            ).collect()
+        )
+        for strategy in ("join", "blocked")
+    }
+    assert got["join"] == got["blocked"]
+    report = {dict(r)["raw_input_label"]: dict(r) for r in got["blocked"]}
+    assert len(report) == len(texts)
+    for ct_id, name, _, text in rows[:6]:
+        row = report[text]
+        assert (row["matched_asctb_id_1"], row["matched_asctb_label_1"],
+                row["matched_asctb_text_1"]) == (ct_id, name, text)
+        assert (row["matched_asctb_id_7"], row["match_score_7"]) == ("CL:9", None)
+
+
+def test_map_raw_labels_on_handle_is_one_job(spark):
+    """A list of labels mapped on a ``reference_projection`` handle on the
+    blocked rung runs one Spark job of one stage: no routing count, no
+    width probe, and the report written in the scoring stage. The same
+    labels as a non-local DataFrame give the same report."""
+    from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
+    from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+    from asctb_ct_label_mapper_spark.operators.similarity import (
+        choose_similarity_impl,
+    )
+    from asctb_ct_label_mapper_spark.pipeline import map_raw_labels
+
+    def encoder(col):
+        return stub_encode_udf(col, dim=768)
+
+    n_refs, n_labels = 256, 64
+    reference = (
+        spark.createDataFrame(
+            [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(n_refs)],
+            "CT_ID string, CT_NAME string, definition string",
+        )
+        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_full_udf(F.col("CT_NAME")))
+        .withColumn("embedding", encoder(F.col("all_text")))
+    )
+    distinct = [f"cell kind {i}" for i in range(0, n_refs, 8)] + [
+        f"unknown thing {i}" for i in range(n_labels - n_refs // 8)
+    ]
+    texts = distinct + distinct[:8]  # duplicates map once
+    assert choose_similarity_impl(len(distinct), n_refs, 768) == "blocked"
+    sc = spark.sparkContext
+    group = "map-raw-labels-one-job"
+    with reference_projection(reference) as ref:
+        sc.setJobGroup(group, "map one list")
+        try:
+            got = map_raw_labels(spark, texts, ref, source_name="t", k=2, encoder=encoder).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1, jobs
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+        labels = spark.createDataFrame(
+            [("t", x) for x in texts], "source string, raw_input_label string"
+        )
+        assert not labels.isLocal()
+        again = map_labels_to_reference(labels, ref, k=2, encoder=encoder).collect()
+    assert len(got) == len(distinct)
+    assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
+    assert sum(r["match_score_1"] == 1.0 for r in got) == n_refs // 8

@@ -477,3 +477,30 @@ class TestIvfPq:
         # call, not a hint baked into the operator)
         analyzed = out._jdf.queryExecution().analyzed().toString()
         assert analyzed.count("ResolvedHint") == 1, analyzed.count("ResolvedHint")
+
+
+def test_zero_norm_reference_row_scores_null_last(spark):
+    """A zero-norm reference row has no direction: on both exact rungs it
+    scores NULL and ranks after every scored row, ties by ascending ref
+    id (the join rung's score DESC NULLS LAST, ref_id ASC); k = C shows
+    every rank."""
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.5]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    r = spark.createDataFrame(
+        [(30, [0.0, 0.0]), (20, [1.0, 0.0]), (10, [0.0, 0.0]), (40, [0.5, 0.5])],
+        "vec_id long, embedding array<float>",
+    )
+
+    def ranked(df):
+        return sorted(
+            (x["vec_id"], x["rank"], x["ref_id"], None if x["score"] is None else round(x["score"], 9))
+            for x in df.collect()
+        )
+
+    joined = ranked(top_k_similarity_join(q, r, 4, ["vec_id"], "vec_id"))
+    blocked = ranked(top_k_similarity_blocked(q, r, 4, ["vec_id"], "vec_id"))
+    assert joined == blocked
+    for qid in (1, 2):
+        tail = [(x[2], x[3]) for x in blocked if x[0] == qid][2:]
+        assert tail == [(10, None), (30, None)]
