@@ -38,7 +38,6 @@ corpus has no contractions/numerics/plural variance.
 from __future__ import annotations
 
 from contextlib import contextmanager
-from dataclasses import replace
 from typing import Callable, Iterator
 
 import numpy as np
@@ -52,13 +51,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.similarity import (
-    REF_BROADCAST_BUDGET_BYTES,
-    ResidentReference,
     choose_similarity_impl,
-    collect_reference,
     pin_reference,
-    pinned_reference,
     reference_stats,
+    resident_reference,
     similarity_topk,
     top_k_rows,
     top_k_similarity_join,
@@ -92,61 +88,43 @@ def reference_projection(reference: DataFrame):
             for organ_labels in organs:
                 map_labels_to_reference(organ_labels, ref, ...).write...
 
-    Entry runs one collect, once: the ids, the L2-normalised matrix and
-    the report writer's table (``CT_NAME`` and ``all_text`` row-aligned
-    with the matrix, and the exact-match table), all broadcast. Each call
-    then routes from the row count and dim and the blocked rung writes
-    its report from those broadcasts, so building a report runs no job
-    on the reference; a list of labels maps in one job of one stage. The
-    handle is for broadcast-sized references: one past the budget is
-    collected once, found too wide, and kept without broadcasts (calls
-    then route to IVF). Exit destroys the broadcasts and unpersists.
+    Entry runs one stats job and, for a broadcast-sized reference, one
+    collect, once: the ids, the L2-normalised matrix and the report
+    writer's table (:func:`_report_table`), all broadcast. Each call then
+    routes from the row count and dim and the blocked rung writes its
+    report from those broadcasts, so building a report runs no job on the
+    reference; a list of labels maps in one job of one stage. A reference
+    past the budget is never collected: the handle keeps its count and
+    dim only, and calls route to IVF. Exit destroys the broadcasts and
+    unpersists.
 
     Results must be MATERIALIZED inside the block (the lazy plans read the
     cache and the broadcasts)."""
     proj = reference.select(*_REF_PROJ_COLS).persist()
     try:
-        with pin_reference(proj, _collect_report_reference(proj)):
+        with pin_reference(
+            proj, "CT_ID", payload_cols=_PAYLOAD_COLS, payload=_report_table
+        ):
             yield proj
     finally:
         proj.unpersist()
 
 
-def _collect_report_reference(reference: DataFrame) -> ResidentReference:
-    """The resident state of a reference projection from one collect, with
-    the report writer's table as its payload: the ids, ``CT_NAME``,
-    ``all_text`` and ``definition`` row-aligned with the unit matrix, each
-    with a trailing None that index -1 reads, and the exact-match table
-    {``ct_name_cleaned``: row of its min ``CT_ID``}, as
-    ``overwrite_exact_matches`` resolves collisions."""
-    state, cols = collect_reference(reference, "CT_ID", extra_cols=_PAYLOAD_COLS)
-    if state.ids is None:
-        return state
+def _report_table(cols: dict[str, np.ndarray]) -> tuple:
+    """The blocked report writer's table from a reference's resident
+    collect: ``CT_ID``, ``CT_NAME``, ``all_text`` and ``definition``
+    row-aligned with the unit matrix, each with a trailing None that index
+    -1 reads, and the exact-match table {``ct_name_cleaned``: row of its
+    min ``CT_ID``}, as ``overwrite_exact_matches`` resolves collisions."""
     ids = cols["CT_ID"]
     exact: dict = {}
     for i, name in enumerate(cols["ct_name_cleaned"]):
         if name is not None and (name not in exact or ids[i] < ids[exact[name]]):
             exact[name] = i
-    table = tuple(
+    return tuple(
         np.append(cols[c].astype(object), None)
         for c in ("CT_ID", "CT_NAME", "all_text", "definition")
     ) + (exact,)
-    sc = reference.sparkSession.sparkContext
-    return replace(state, payload=sc.broadcast(table))
-
-
-def _report_reference(reference: DataFrame) -> ResidentReference:
-    """A handle's pinned state, else one built for this call through the
-    same collect. Past the broadcast budget the state has no broadcasts
-    (the writer then fails with the remediation), and an unpinned
-    reference's stats job refuses it before it is collected."""
-    pinned = pinned_reference(reference, "CT_ID")
-    if pinned is not None:
-        return pinned
-    n_refs, dim = reference_stats(reference)
-    if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
-        return ResidentReference("CT_ID", "embedding", n_refs, dim)
-    return _collect_report_reference(reference)
 
 
 def _distinct_labels(labels: DataFrame) -> tuple[DataFrame, int | None]:
@@ -240,9 +218,10 @@ def map_labels_to_reference(
         n_refs, dim = reference_stats(reference)
         n_queries = seed.count() if n_labels is None else n_labels
         rung = choose_similarity_impl(n_queries, n_refs, dim)
-        ref_in_budget = n_refs * dim * 8 <= REF_BROADCAST_BUDGET_BYTES
     else:
-        rung, ref_in_budget = strategy, True
+        rung = strategy
+    # auto routes to IVF exactly when the reference is past the budget
+    ref_in_budget = strategy != "auto" or rung != "ivf"
 
     if rung == "blocked":
         # Matmul cost follows rows: widen a narrow seed. A local seed
@@ -305,7 +284,9 @@ def map_labels_to_reference(
 def _blocked_report(queries: DataFrame, reference: DataFrame, k: int) -> DataFrame:
     """The blocked rung's finished report: one ``mapInPandas`` over the
     encoded labels writes one row per label (:func:`_write_report`)."""
-    state = _report_reference(reference)
+    state = resident_reference(
+        reference, "CT_ID", payload_cols=_PAYLOAD_COLS, payload=_report_table
+    )
     b_ids, b_unit = state.broadcasts("map_labels_to_reference")
     b_table = state.payload
     ref = reference.schema

@@ -34,7 +34,7 @@ from __future__ import annotations
 import weakref
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -109,11 +109,11 @@ class ResidentReference:
     """What the driver-resident rungs need of a reference, computed once:
     its row count and dim and, inside the broadcast budget, broadcasts of
     its ids and of its L2-normalised float64 matrix (None past it).
-    ``payload`` is a caller's broadcast built from the same collect, row-
-    aligned with the matrix (the flagship report writer's table).
-    ``pin_reference`` keeps one alive for the life of a handle, so repeated
-    top-k calls run no reference job; without a pin the blocked rung builds
-    one per call through ``resident_reference``."""
+    ``payload`` is a caller's broadcast built from the same collect (the
+    flagship report writer's table). ``pin_reference`` keeps one alive for
+    the life of a handle, so repeated top-k calls run no reference job;
+    without a pin the blocked rung builds one per call through the same
+    helper, ``resident_reference``."""
 
     ref_id_col: str
     ref_vec_col: str
@@ -138,18 +138,6 @@ class ResidentReference:
 
 # reference DataFrame -> its ResidentReference while ``pin_reference`` holds it
 _PINNED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def pinned_reference(
-    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
-) -> ResidentReference | None:
-    """The state ``pin_reference`` holds for these columns, if any."""
-    pinned = _PINNED.get(reference)
-    if pinned is not None and (pinned.ref_id_col, pinned.ref_vec_col) == (
-        ref_id_col, ref_vec_col
-    ):
-        return pinned
-    return None
 
 
 def reference_stats(reference: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
@@ -192,57 +180,60 @@ def _unit_matrix(vecs: list, dim: int) -> np.ndarray:
     return mat / norms[:, None]
 
 
-def collect_reference(
+def resident_reference(
     reference: DataFrame,
     ref_id_col: str,
     ref_vec_col: str = "embedding",
-    extra_cols: Sequence[str] = (),
-) -> tuple[ResidentReference, dict[str, np.ndarray]]:
-    """One collect of the ids, vectors and ``extra_cols``: the resident
-    state, and the id and extra columns as arrays row-aligned with the
-    unit matrix (zero-norm rows stay zero), from which a caller builds its
-    ``payload``. The budget is checked after the collect: past it the
-    state has no broadcasts and the arrays are empty. Callers that must
-    not collect such a reference check ``reference_stats`` first, as
-    ``resident_reference`` does."""
-    rows = reference.select(ref_id_col, ref_vec_col, *extra_cols).collect()
-    dim = next((len(r[1]) for r in rows if r[1] is not None), 0)
-    if len(rows) * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
-        return ResidentReference(ref_id_col, ref_vec_col, len(rows), dim), {}
-    ids = np.array([r[0] for r in rows])
-    sc = reference.sparkSession.sparkContext
-    state = ResidentReference(
-        ref_id_col, ref_vec_col, len(rows), dim,
-        sc.broadcast(ids), sc.broadcast(_unit_matrix([r[1] for r in rows], dim)),
-    )
-    cols = {c: np.array([r[i] for r in rows], dtype=object)
-            for i, c in enumerate(extra_cols, start=2)}
-    return state, {ref_id_col: ids, **cols}
-
-
-def resident_reference(
-    reference: DataFrame, ref_id_col: str, ref_vec_col: str = "embedding"
+    payload_cols: Sequence[str] = (),
+    payload: Callable[[dict[str, np.ndarray]], object] | None = None,
 ) -> ResidentReference:
     """The reference's pinned state for these columns, or a fresh one: one
-    stats job, then (inside the broadcast budget) one collect and two
-    broadcasts."""
-    pinned = pinned_reference(reference, ref_id_col, ref_vec_col)
-    if pinned is not None:
+    stats job, then, inside the broadcast budget only, one collect of the
+    ids, vectors and ``payload_cols`` and broadcasts of the ids and the
+    unit matrix. A reference past the budget is never collected; its
+    state has no broadcasts.
+
+    ``payload`` builds a caller's table from the same collect: it gets
+    the id and ``payload_cols`` columns as arrays row-aligned with the
+    unit matrix, and its result is broadcast as ``payload``. A pin
+    without a payload is not reused for a caller that asks for one."""
+    pinned = _PINNED.get(reference)
+    if (
+        pinned is not None
+        and (pinned.ref_id_col, pinned.ref_vec_col) == (ref_id_col, ref_vec_col)
+        and (payload is None or pinned.payload is not None or pinned.ids is None)
+    ):
         return pinned
     n_refs, dim = reference_stats(reference, ref_vec_col)
     if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
         return ResidentReference(ref_id_col, ref_vec_col, n_refs, dim)
-    return collect_reference(reference, ref_id_col, ref_vec_col)[0]
+    rows = reference.select(ref_id_col, ref_vec_col, *payload_cols).collect()
+    ids = np.array([r[0] for r in rows])
+    sc = reference.sparkSession.sparkContext
+    table = None
+    if payload is not None:
+        cols = {c: np.array([r[i] for r in rows], dtype=object)
+                for i, c in enumerate(payload_cols, start=2)}
+        table = sc.broadcast(payload({ref_id_col: ids, **cols}))
+    return ResidentReference(
+        ref_id_col, ref_vec_col, n_refs, dim,
+        sc.broadcast(ids), sc.broadcast(_unit_matrix([r[1] for r in rows], dim)), table,
+    )
 
 
 @contextmanager
 def pin_reference(
-    reference: DataFrame, state: ResidentReference
+    reference: DataFrame,
+    ref_id_col: str,
+    ref_vec_col: str = "embedding",
+    payload_cols: Sequence[str] = (),
+    payload: Callable[[dict[str, np.ndarray]], object] | None = None,
 ) -> Iterator[ResidentReference]:
-    """Keep ``state`` as ``reference``'s resident state for the block:
-    routing stats and the blocked rungs read it instead of running
-    reference jobs. Exit destroys its broadcasts; results must be
-    materialised inside."""
+    """Keep ``reference``'s resident state (:func:`resident_reference`,
+    with its optional ``payload``) for the block: routing stats and the
+    blocked rungs read it instead of running reference jobs. Exit
+    destroys the broadcasts; results must be materialised inside."""
+    state = resident_reference(reference, ref_id_col, ref_vec_col, payload_cols, payload)
     _PINNED[reference] = state
     try:
         yield state

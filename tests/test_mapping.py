@@ -389,3 +389,43 @@ def test_map_raw_labels_on_handle_is_one_job(spark):
     assert len(got) == len(distinct)
     assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
     assert sum(r["match_score_1"] == 1.0 for r in got) == n_refs // 8
+
+
+def test_reference_projection_past_budget_is_never_collected(spark, monkeypatch):
+    """A handle on a reference past the broadcast budget checks the budget
+    from one stats job BEFORE any collect: no reference row reaches the
+    driver, the handle keeps only the count and dim, and an explicit
+    blocked call fails with the IVF remediation."""
+    from asctb_ct_label_mapper_spark.operators import similarity as sim
+    from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+
+    reference = (
+        spark.createDataFrame(
+            [("CL:9101", "alpha cell", "def a"), ("CL:9102", "beta cell", "def b")],
+            "CT_ID string, CT_NAME string, definition string",
+        )
+        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+    labels = spark.createDataFrame(
+        [("t", "beta cell")], "source string, raw_input_label string"
+    )
+    monkeypatch.setattr(sim, "REF_BROADCAST_BUDGET_BYTES", 100)  # 2 x 16 x 8 B past it
+    collected = []
+    frame = type(reference)
+    collect = frame.collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.append((tuple(self.columns), len(rows)))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    with reference_projection(reference) as ref:
+        state = sim.resident_reference(ref, "CT_ID")
+        assert (state.n_refs, state.dim) == (2, 16)
+        assert (state.ids, state.unit, state.payload) == (None, None, None)
+        with pytest.raises(ValueError, match="ivf"):
+            map_labels_to_reference(labels, ref, strategy="blocked")
+    assert collected == [(("c", "d"), 1)]  # the stats row only

@@ -81,3 +81,67 @@ def test_lazy_zip_invalidation_still_sees_a_rewritten_zip(tmp_path):
     )
     assert done.returncode == 0, done.stderr
     assert done.stdout.strip() == "ok"
+
+
+def test_flagship_report_task_imports_package(spark, monkeypatch):
+    """Unpickling the flagship report writer's ``mapInPandas`` function —
+    what each of its Python tasks does first — imports the package, so
+    the backport is installed in every worker that writes a report. A
+    closure that pickled by value with only numpy in its globals would
+    not import it."""
+    import io
+    import pickle
+
+    from pyspark import cloudpickle
+    from pyspark.broadcast import _from_id
+    from pyspark.sql import functions as F
+
+    from asctb_ct_label_mapper_spark.functions.nlp import clean_text_expr
+    from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
+    from asctb_ct_label_mapper_spark.operators.mapping import (
+        map_labels_to_reference,
+        reference_projection,
+    )
+
+    reference = (
+        spark.createDataFrame(
+            [("CL:9201", "alpha cell", "def a"), ("CL:9202", "beta cell", "def b")],
+            "CT_ID string, CT_NAME string, definition string",
+        )
+        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+    labels = spark.createDataFrame(
+        [("t", "beta cell")], "source string, raw_input_label string"
+    )
+    funcs = []
+    frame = type(reference)
+    map_in_pandas = frame.mapInPandas
+
+    def spy(self, func, *args, **kwargs):
+        funcs.append(func)
+        return map_in_pandas(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "mapInPandas", spy)
+    sc = spark.sparkContext
+    with reference_projection(reference) as ref:
+        map_labels_to_reference(labels, ref, strategy="blocked")
+        (write,) = funcs
+        try:
+            blob = cloudpickle.dumps(write)
+        finally:
+            # pickling registered the handle's broadcasts for the next job
+            sc._pickled_broadcast_vars.clear()
+
+    modules = set()
+
+    class Recorder(pickle.Unpickler):
+        def find_class(self, module, name):
+            modules.add(module)
+            if (module, name) == (_from_id.__module__, "_from_id"):
+                return lambda bid: None  # no broadcast registry on the driver
+            return super().find_class(module, name)
+
+    Recorder(io.BytesIO(blob)).load()
+    assert any(m.split(".")[0] == "asctb_ct_label_mapper_spark" for m in modules), modules
