@@ -860,16 +860,17 @@ def leakage_safe_split(
     hashed independently land in different splits ~30% of the time, and a
     test set contaminated by near-copies of training docs inflates every
     eval. Here the split is a function of the duplicate GROUP id (min
-    reachable id via ``duplicate_groups``' label propagation), so an
-    entire near-dup cluster moves as one unit — by construction no pair
-    in ``pairs`` ever crosses a split boundary.
+    reachable id via ``duplicate_groups``), so an entire near-dup cluster
+    moves as one unit — by construction no pair in ``pairs`` ever
+    crosses a split boundary.
 
     ``pairs`` is any near-dup pair frame (exact Jaccard, MinHash,
     SimHash, embedding LSH — the operator is family-agnostic). Scale
-    shape: the group formation's iterative equi-joins (already bounded by
-    the dedup family's candidate generation) plus ONE id join and the
-    same md5 bucket arithmetic as ``hash_split`` — deterministic across
-    engines, partitionings, and re-runs.
+    shape: the group formation (one bounded collect of the pairs and
+    driver-side rounds up to ``dedup.LOCAL_PAIR_ROWS`` pairs, iterative
+    equi-joins past it) plus ONE id join and the same md5 bucket
+    arithmetic as ``hash_split`` — deterministic across engines,
+    partitionings, and re-runs.
 
     Returns df's rows plus (group_id, bucket, split).
     """

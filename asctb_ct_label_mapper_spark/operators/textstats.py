@@ -998,8 +998,9 @@ def bpe_learn_merges(
     Deterministic: ties in pair frequency break lexicographically.
     Returns the ordered merge list [(left, right), ...]. Not
     SQL-expressible (iterative greedy state) — unit-tested rather than
-    oracle-checked, like the other driver-loop algorithm here
-    (duplicate_groups' label propagation is its distributed cousin).
+    oracle-checked. ``dedup.duplicate_groups`` follows the same rule: its
+    min-label rounds run on the driver over the collected pairs, and
+    only a pair set past driver memory iterates Spark jobs.
     """
     rows = (
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))

@@ -5,6 +5,10 @@ from pyspark.sql import SparkSession
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# The reference's own golden artifact; tests/test_golden_reference.py skips
+# with this file name in the reason when it is absent.
+GOLDEN_CSV = "ASCTB_Lungv1_2.csv"
+
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
@@ -27,3 +31,19 @@ def spark() -> SparkSession:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the missing golden artifact and count the parity tests that
+    skipped for it, so a green run is never read as parity with the
+    reference."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    n = sum(GOLDEN_CSV in str(report.longrepr) for report in skipped)
+    if n:
+        terminalreporter.write_sep(
+            "!",
+            f"golden-artifact parity NOT checked: {GOLDEN_CSV} is missing, "
+            f"{n} parity tests skipped",
+            yellow=True,
+            bold=True,
+        )

@@ -162,7 +162,33 @@ def test_simhash_md5_flavor_pairs_exact_dup(docs):
     assert pairs[(1, 2)] == 0
 
 
-def test_duplicate_groups_transitive_chain(spark):
+def _group_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture
+def both_paths(monkeypatch):
+    """Run a ``duplicate_groups`` build-and-collect on the driver path, then
+    again with the driver bound at 0 so the relational label propagation
+    runs; the two must give equal rows. Returns those rows."""
+    from asctb_ct_label_mapper_spark.operators import dedup
+
+    def run(fn):
+        local = fn()
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "LOCAL_PAIR_ROWS", 0)
+            loop = fn()
+        assert local == loop
+        return local
+
+    return run
+
+
+def _path_pairs(spark, n: int):
+    return spark.createDataFrame([(i, i + 1) for i in range(1, n)], "id_a int, id_b int")
+
+
+def test_duplicate_groups_transitive_chain(spark, both_paths):
     """A~B and B~C (but A not directly ~C) must collapse into ONE group
     with the min id canonical; D~E forms its own; F stays a singleton."""
     from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
@@ -171,30 +197,151 @@ def test_duplicate_groups_transitive_chain(spark):
         [(10, 20), (20, 30), (40, 50)], "id_a int, id_b int"
     )
     all_ids = spark.createDataFrame([(i,) for i in (10, 20, 30, 40, 50, 60)], "doc_id int")
-    rows = {
-        r["doc_id"]: (r["group_id"], r["group_size"], r["is_canonical"])
-        for r in duplicate_groups(pairs, all_ids=all_ids, id_col="doc_id").collect()
-    }
-    assert rows[10] == (10, 3, True)
-    assert rows[20] == (10, 3, False)
-    assert rows[30] == (10, 3, False)
-    assert rows[40] == (40, 2, True)
-    assert rows[50] == (40, 2, False)
-    assert rows[60] == (60, 1, True)
+    rows = both_paths(
+        lambda: _group_rows(duplicate_groups(pairs, all_ids=all_ids, id_col="doc_id"))
+    )
+    assert rows == [
+        (10, 10, 3, True), (20, 10, 3, False), (30, 10, 3, False),
+        (40, 40, 2, True), (50, 40, 2, False), (60, 60, 1, True),
+    ]
 
 
-def test_duplicate_groups_long_path_converges(spark):
+def test_duplicate_groups_long_path_converges(spark, both_paths):
     """A path graph 1-2-3-...-8 (diameter 7) exercises multiple propagation
-    iterations; everything must land in group 1."""
+    rounds; everything must land in group 1."""
+    from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
+
+    rows = both_paths(lambda: _group_rows(duplicate_groups(_path_pairs(spark, 8))))
+    assert {r[1] for r in rows} == {1}
+    assert all(r[2] == 8 for r in rows)
+    assert [r[0] for r in rows if r[3]] == [1]
+
+
+def test_duplicate_groups_capped_below_diameter(spark, both_paths):
+    """``max_iter`` below the diameter caps both paths at the same partial
+    labels: after two synchronous rounds node i carries min(i-2, ...)."""
+    from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
+
+    rows = both_paths(
+        lambda: _group_rows(duplicate_groups(_path_pairs(spark, 8), max_iter=2))
+    )
+    assert [(r[0], r[1]) for r in rows] == [(i, max(1, i - 2)) for i in range(1, 9)]
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("with_all_ids", [False, True])
+def test_duplicate_groups_random_graphs_match(spark, both_paths, id_type, with_all_ids):
+    """Seeded random sparse graphs (several components, repeated and
+    reversed pairs, self-loops) give the same rows on both paths, and the
+    group is the min id of the connected component. String ids are not
+    zero-padded, so their order differs from the numeric one."""
+    import random
+
+    from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
+
+    rng = random.Random(f"{id_type}/{with_all_ids}")
+    conv = (lambda i: f"d{i}") if id_type == "string" else (lambda i: i)
+    nodes = [conv(i) for i in range(40)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(30)]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    all_ids = spark.createDataFrame([(n,) for n in nodes], f"doc_id {id_type}")
+    rows = both_paths(
+        lambda: _group_rows(
+            duplicate_groups(pairs, all_ids=all_ids if with_all_ids else None, max_iter=40)
+        )
+    )
+    comp = {n: n for n in nodes}
+
+    def find(n):
+        while comp[n] != n:
+            n = comp[n]
+        return n
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        comp[max(ra, rb)] = min(ra, rb)
+    seen = nodes if with_all_ids else sorted({n for e in edges for n in e})
+    assert [(r[0], r[1]) for r in rows] == sorted((n, find(n)) for n in seen)
+
+
+def test_duplicate_groups_null_endpoint_adds_nothing(spark, both_paths):
+    """A pair with a NULL endpoint adds no edge and no node: without
+    ``all_ids`` there is no NULL row, and {3, 4} stays a group of 2."""
     from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
 
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "id_a int, id_b int"
+        [(1, 2), (None, 3), (3, 4), (5, None)], "id_a long, id_b long"
     )
-    rows = duplicate_groups(pairs).collect()
-    assert {r["group_id"] for r in rows} == {1}
-    assert all(r["group_size"] == 8 for r in rows)
-    assert [r["doc_id"] for r in rows if r["is_canonical"]] == [1]
+    rows = both_paths(lambda: _group_rows(duplicate_groups(pairs)))
+    assert rows == [(1, 1, 2, True), (2, 1, 2, False), (3, 3, 2, True), (4, 3, 2, False)]
+
+
+def test_duplicate_groups_empty_pairs(spark, both_paths):
+    from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    all_ids = spark.createDataFrame([(1,), (2,)], "doc_id long")
+    assert both_paths(lambda: _group_rows(duplicate_groups(pairs))) == []
+    assert both_paths(
+        lambda: _group_rows(duplicate_groups(pairs, all_ids=all_ids))
+    ) == [(1, 1, 1, True), (2, 2, 1, True)]
+
+
+@pytest.mark.parametrize("bound", [0, None], ids=["loop", "driver"])
+def test_duplicate_groups_reads_pairs_once(spark, monkeypatch, bound):
+    """The pairs' upstream plan executes once on either path: a counting
+    UDF in their lineage fires once per pair row through the build and the
+    collect (the driver probe, and at bound 0 the relational loop, both
+    read one persisted projection)."""
+    from asctb_ct_label_mapper_spark.operators import dedup
+
+    if bound is not None:
+        monkeypatch.setattr(dedup, "LOCAL_PAIR_ROWS", bound)
+    acc = spark.sparkContext.accumulator(0)
+
+    def count(x):
+        acc.add(1)
+        return x
+
+    counted = F.udf(count, "long").asNondeterministic()
+    base = spark.range(0, 50, numPartitions=4).select(
+        F.col("id").alias("a"), (F.col("id") - F.col("id") % 10).alias("id_b")
+    )
+    pairs = base.select(counted("a").alias("id_a"), "id_b")
+    rows = dedup.duplicate_groups(pairs).collect()
+    assert len(rows) == 50 and {r["group_id"] for r in rows} == {0, 10, 20, 30, 40}
+    assert acc.value == 50
+
+
+def test_duplicate_groups_job_count_independent_of_rounds(spark):
+    """A 1-pair graph (one round) and an 8-node path (seven rounds) build
+    and collect in the same number of Spark jobs, fewer than one
+    relational round costs: the rounds run on the driver."""
+    from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
+
+    sc = spark.sparkContext
+
+    def jobs(group: str, pairs) -> int:
+        sc.setJobGroup(group, "duplicate_groups")
+        try:
+            duplicate_groups(pairs).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = jobs("dup-groups-one-pair", _path_pairs(spark, 2))
+    path = jobs("dup-groups-path-8", _path_pairs(spark, 8))
+    assert one == path
+    assert one < 6
+
+
+@pytest.mark.parametrize("qname", ["dedup_groups", "dedup_embedding_groups"])
+def test_group_queries_match_on_both_paths(spark, sf_dir, both_paths, qname):
+    import __spark_entry__ as entry
+
+    rows = both_paths(lambda: _group_rows(entry.queries()[qname](spark, sf_dir)))
+    assert rows and any(r[2] > 1 for r in rows)
 
 
 class TestGroupRepresentatives:

@@ -17,7 +17,8 @@ from asctb_ct_label_mapper_spark.sources.golden import load_golden_reference
 GOLDEN = "/root/reference/asctb_reference_embeddings/ASCTB_Lungv1_2.csv"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(GOLDEN), reason="golden artifact not present"
+    not os.path.exists(GOLDEN),
+    reason=f"golden artifact {os.path.basename(GOLDEN)} not present",
 )
 
 
