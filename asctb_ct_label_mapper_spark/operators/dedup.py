@@ -28,9 +28,14 @@ oracles replay.
 At 100 TB: the only shuffles are hash-partitioned group-bys / equi-joins on
 uniformly-distributed hash keys (no skew by construction); signatures are
 fixed-width (n_hashes ints) regardless of document size; banded LSH bounds
-candidate pairs to colliding buckets. Frames consumed by several plan
-branches (shingle projections feeding a self-join) are persisted
-MEMORY_AND_DISK so the shingle computation runs once, not once per branch.
+candidate pairs to colliding buckets. A Python kernel feeding several
+plan branches runs once, not once per branch. The MinHash pairs get that
+from exchange reuse: the band self-join's two sides, and both verify
+joins, read one exchange each, so that plan persists nothing and runs no
+job until it is executed. Where the branches do not share one exchange
+(``ngram_jaccard_pairs``' sizes and token join; ``simhash_near_dup_pairs``,
+measured slower without its persist), the shared frame is persisted
+MEMORY_AND_DISK and materialized eagerly.
 """
 
 from __future__ import annotations
@@ -313,6 +318,10 @@ def minhash_signatures_frame(
                 [tb.column("_mid").combine_chunks(), sig], ["_mid", "_msig"]
             )
 
+    # Shingle+signature cost scales with rows, not file bytes: widen narrow
+    # scans so the dense stage uses the whole box (no-op on real-scale
+    # scans). The one width probe of the MinHash path: callers pass the
+    # scan-rooted frame ensure_min_partitions requires.
     wide = ensure_min_partitions(df)
     out = wide.select(
         F.col(id_col).alias("_mid"), F.col(text_col).alias("_mtext")
@@ -349,9 +358,6 @@ def minhash_lsh_candidates(
     assert n_hashes % bands == 0, "bands must divide n_hashes"
     assert family in ("siphash", "md5affine")
     r = n_hashes // bands
-    # Shingle+signature cost scales with rows, not file bytes: widen narrow
-    # scans so the dense stage uses the whole box (no-op on real-scale scans).
-    df = ensure_min_partitions(df)
     sig = minhash_signatures_frame(
         df, text_col, id_col, n_hashes, shingle_n, family, sig_out="sig"
     )
@@ -370,15 +376,9 @@ def minhash_lsh_candidates(
                 )
             ).alias("bb"),
         ).select("_id", "bb.band", "bb.bhash")
-    # The self-join consumes this frame twice; persist so signatures are
-    # computed once (narrow rows: id + band + bhash). Materialize EAGERLY:
-    # a lazy persist does not help a self-join, because the two join sides
-    # are independent shuffle-map stages that the scheduler runs
-    # concurrently — each computes the signature pipeline before either
-    # populates the cache (measured 14.5 s -> ~6 s at 50k docs).
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()
-
+    # Not persisted: both join sides are this one subtree hash-partitioned
+    # on (band, bhash), so exchange reuse computes the signatures once
+    # (the build side reads a ReusedExchange) and no job runs at build.
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -416,39 +416,45 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard >= threshold.
 
-    Verification joins the shingle sets back by id (two broadcast-able
-    joins against the candidate set, which is small relative to the corpus
-    whenever the threshold is meaningful).
+    One lazy plan: building it runs no Spark job and persists nothing.
+    The candidates feed the id restriction and the verify joins as one
+    subtree whose exchanges AQE reuses, and both verify joins read one
+    shingle exchange, so each kernel runs once per document it needs.
     """
     cands = minhash_lsh_candidates(
         df, text_col, id_col, n_hashes, bands, shingle_n, family
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_cand = cands.count()  # eager: feeds the id-restriction AND both verify joins
+    )
 
     # Verification cost must be ∝ candidates, not corpus: restrict the
     # shingle recomputation to ids that appear in some candidate pair
     # before running the shingle UDF (the id filter sits below the
-    # deterministic UDF projection). Candidate ids are broadcast when the
-    # materialized count says they fit; else Catalyst picks the join.
+    # deterministic UDF projection). AQE picks the join from the runtime
+    # size of the id set.
     ids = (
         cands.select(F.col("id_a").alias("_sid"))
         .unionByName(cands.select(F.col("id_b").alias("_sid")))
         .distinct()
     )
-    if n_cand <= 2_000_000:
-        ids = F.broadcast(ids)
     needed = df.join(ids, df[id_col] == ids["_sid"], "inner")
     sh = grams_frame(
         needed.select(F.col("_sid"), F.col(text_col)),
         text_col,
         shingle_n,
         "_shingles",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()  # eager: consumed by both verify joins
+    )
+    # Both verify joins shuffle the SAME un-renamed `sh` subtree on _sid,
+    # so the second reads the first's exchange. Without the hints AQE
+    # broadcast the candidates into one join (the shingle kernel inline)
+    # and the shingles into the other, and the kernel ran twice.
+    sa = sh.alias("sa")
+    sb = sh.alias("sb")
     return (
-        cands.join(sh.withColumnRenamed("_sid", "id_a").withColumnRenamed("_shingles", "_sh_a"), "id_a")
-        .join(sh.withColumnRenamed("_sid", "id_b").withColumnRenamed("_shingles", "_sh_b"), "id_b")
-        .withColumn("jaccard", F.round(jaccard_expr(F.col("_sh_a"), F.col("_sh_b")), 6))
+        cands.join(sa.hint("shuffle_hash"), F.col("id_a") == F.col("sa._sid"))
+        .join(sb.hint("shuffle_hash"), F.col("id_b") == F.col("sb._sid"))
+        .withColumn(
+            "jaccard",
+            F.round(jaccard_expr(F.col("sa._shingles"), F.col("sb._shingles")), 6),
+        )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -31,6 +33,27 @@ def spark() -> SparkSession:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``run(fn)`` calls ``fn()`` under a fresh job group and returns its
+    result and the ids of the Spark jobs it fired. The status tracker is
+    filled by an asynchronous listener; the bus is drained before the ids
+    are read, or a job can be missing."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def pytest_terminal_summary(terminalreporter):

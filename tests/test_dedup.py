@@ -148,6 +148,68 @@ def test_minhash_fused_and_native_find_same_planted_dups(docs):
         assert not any(4 in p or 5 in p for p in pairs), family
 
 
+# (id_a, id_b, jaccard) that both signature families verify on the sf0.001
+# documents at the defaults.
+SF0001_PAIRS = [
+    (0, 50, 0.952381), (0, 82, 0.954545), (5, 450, 0.97561),
+    (8, 12, 0.973684), (8, 120, 0.986486), (8, 360, 0.986667),
+    (12, 120, 0.960526), (12, 360, 0.986842), (16, 369, 0.988235),
+    (26, 176, 0.988506), (33, 436, 0.888889), (45, 487, 0.964286),
+    (50, 82, 0.909091), (56, 157, 0.981481), (77, 459, 0.987179),
+    (89, 114, 0.928571), (99, 174, 0.988095), (110, 467, 0.98913),
+    (119, 425, 0.971429), (120, 360, 0.973333), (144, 161, 0.988636),
+    (211, 404, 0.984615), (229, 263, 0.956522), (260, 391, 0.988764),
+    (270, 329, 0.988095), (328, 428, 0.974359), (349, 411, 0.980769),
+    (474, 498, 0.989362),
+]
+
+
+def _map_in_arrow_rows(df) -> list[int]:
+    """Rows each ``MapInArrow`` node of ``df``'s executed plan received
+    from Python. An exchange that AQE reuses is read through a leaf
+    ``ReusedExchange``, so a kernel whose output two consumers share is
+    listed once."""
+    rows = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        if name == "MapInArrow":
+            rows.append(node.metrics().apply("pythonNumRowsReceived").value())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return rows
+
+
+@pytest.mark.parametrize("family", ["siphash", "md5affine"])
+def test_minhash_pairs_one_lazy_plan(spark, sf_dir, spark_jobs, family):
+    """Building the pairs fires no Spark job and a collect leaves no
+    persisted RDD. The collect runs the signature kernel once over every
+    document and the shingle kernel once over every candidate document:
+    both verify joins read one shingle exchange."""
+    from asctb_ct_label_mapper_spark.schemas import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keys())
+    pairs, built = spark_jobs(
+        lambda: minhash_dedup_pairs(docs, "text", "doc_id", family=family)
+    )
+    assert built == []
+    rows = pairs.collect()
+    assert set(sc._jsc.getPersistentRDDs().keys()) == cached
+    cands = minhash_lsh_candidates(docs, "text", "doc_id", family=family).collect()
+    cand_docs = {r["id_a"] for r in cands} | {r["id_b"] for r in cands}
+    assert sorted(_map_in_arrow_rows(pairs)) == sorted([docs.count(), len(cand_docs)])
+    assert sorted(tuple(r) for r in rows) == SF0001_PAIRS
+
+
 def test_simhash_md5_hash_is_32bit_and_deterministic(spark):
     df = spark.createDataFrame([("tok",), ("tok",), ("other",)], "t string")
     vals = [r["h"] for r in df.select(md5_token_hash(F.col("t")).alias("h")).collect()]
@@ -313,25 +375,17 @@ def test_duplicate_groups_reads_pairs_once(spark, monkeypatch, bound):
     assert acc.value == 50
 
 
-def test_duplicate_groups_job_count_independent_of_rounds(spark):
+def test_duplicate_groups_job_count_independent_of_rounds(spark, spark_jobs):
     """A 1-pair graph (one round) and an 8-node path (seven rounds) build
     and collect in the same number of Spark jobs, fewer than one
     relational round costs: the rounds run on the driver."""
     from asctb_ct_label_mapper_spark.operators.dedup import duplicate_groups
 
-    sc = spark.sparkContext
+    def jobs(pairs) -> int:
+        return len(spark_jobs(lambda: duplicate_groups(pairs).collect())[1])
 
-    def jobs(group: str, pairs) -> int:
-        sc.setJobGroup(group, "duplicate_groups")
-        try:
-            duplicate_groups(pairs).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    one = jobs("dup-groups-one-pair", _path_pairs(spark, 2))
-    path = jobs("dup-groups-path-8", _path_pairs(spark, 8))
+    one = jobs(_path_pairs(spark, 2))
+    path = jobs(_path_pairs(spark, 8))
     assert one == path
     assert one < 6
 

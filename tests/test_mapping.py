@@ -132,17 +132,16 @@ def test_plural_label_exact_matches_singular_reference(spark):
     assert other["match_score_1"] != 1.0
 
 
-def _stage_rdd_ids(sc, group):
-    """RDD ids in the lineage of every stage of the jobs run under
-    ``group`` (a stage that reads a cached RDD lists its id). The status
-    store is filled by an asynchronous listener; drain it first, or a job
-    can be missing, or listed while its stages are not yet written."""
+def _stage_rdd_ids(sc, jobs):
+    """RDD ids in the lineage of every stage of ``jobs`` (a stage that
+    reads a cached RDD lists its id). Take the ids from ``spark_jobs``,
+    which drains the listener bus: a job whose events are still queued
+    can be listed while its stages are not yet written."""
     from py4j.protocol import Py4JJavaError
 
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     ids = set()
-    for job in tracker.getJobIdsForGroup(group):
+    for job in jobs:
         missing = 0
         for stage in tracker.getJobInfo(job).stageIds:
             try:
@@ -158,7 +157,7 @@ def _stage_rdd_ids(sc, group):
     return ids
 
 
-def test_reference_projection_releases_persist(spark):
+def test_reference_projection_releases_persist(spark, spark_jobs):
     """Multi-organ loop contract: the context-managed projection is the
     ONLY cache entry (map_labels_to_reference must not double-persist an
     already-persisted exact projection), routing and the blocked rung read
@@ -195,19 +194,16 @@ def test_reference_projection_releases_persist(spark):
         assert (state.n_refs, state.dim) == (2, 16)
         assert resident_reference(ref, "CT_ID") is state  # pinned, no rebuild
         reports = []
-        for i, strategy in enumerate(("auto", "blocked")):  # two "organs"
-            group = f"reference-projection-{i}"
-            sc.setJobGroup(group, "map one organ")
-            try:
-                report = map_labels_to_reference(labels, ref, k=2, strategy=strategy)
-                built = _stage_rdd_ids(sc, group)
-                reports.append(sorted(
-                    (r["raw_input_label"], r["matched_asctb_id_1"],
-                     r["matched_asctb_id_2"], round(r["match_score_1"], 6))
-                    for r in report.collect()
-                ))
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
+        for strategy in ("auto", "blocked"):  # two "organs"
+            report, jobs = spark_jobs(
+                lambda: map_labels_to_reference(labels, ref, k=2, strategy=strategy)
+            )
+            built = _stage_rdd_ids(sc, jobs)
+            reports.append(sorted(
+                (r["raw_input_label"], r["matched_asctb_id_1"],
+                 r["matched_asctb_id_2"], round(r["match_score_1"], 6))
+                for r in report.collect()
+            ))
             # building the report ran no job on the projection
             assert proj_rdd not in built, strategy
         assert reports[0] == reports[1]  # join (auto) and blocked agree
@@ -338,7 +334,7 @@ def test_blocked_report_equals_join_on_shared_ct_ids(spark):
         assert (row["matched_asctb_id_7"], row["match_score_7"]) == ("CL:9", None)
 
 
-def test_map_raw_labels_on_handle_is_one_job(spark):
+def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
     """A list of labels mapped on a ``reference_projection`` handle on the
     blocked rung runs one Spark job of one stage: no routing count, no
     width probe, and the report written in the scoring stage. The same
@@ -368,19 +364,12 @@ def test_map_raw_labels_on_handle_is_one_job(spark):
     ]
     texts = distinct + distinct[:8]  # duplicates map once
     assert choose_similarity_impl(len(distinct), n_refs, 768) == "blocked"
-    sc = spark.sparkContext
-    group = "map-raw-labels-one-job"
     with reference_projection(reference) as ref:
-        sc.setJobGroup(group, "map one list")
-        try:
-            got = map_raw_labels(spark, texts, ref, source_name="t", k=2, encoder=encoder).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        jobs = tracker.getJobIdsForGroup(group)
+        got, jobs = spark_jobs(
+            lambda: map_raw_labels(spark, texts, ref, source_name="t", k=2, encoder=encoder).collect()
+        )
         assert len(jobs) == 1, jobs
-        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+        assert len(spark.sparkContext.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
         labels = spark.createDataFrame(
             [("t", x) for x in texts], "source string, raw_input_label string"
         )
