@@ -5,20 +5,20 @@ loop calling ``get_top_k_asctb_label_matches`` (main.py:67-100), scattering
 results with masked writes (main.py:206-211), then
 ``overwrite_exact_asctb_matches`` (main.py:126-166).
 
-Engine: ONE lazy DataFrame plan (SURVEY §3.2). On the join rung:
-
-    seed -> clean (F8) -> encode (F12) -> broadcast cross join + cosine (J3/F13)
-         -> window top-k (A1) -> pivot rank->columns (A2)
-         -> exact-overwrite left join (J1) + rank>1 null-out (J2)
-
-On the blocked rung, A1, A2, J1 and J2 are one ``mapInPandas`` that scores
-each Arrow batch against the reference's resident unit matrix and writes
-the finished report rows from its resident table:
+Engine: ONE lazy DataFrame plan (SURVEY §3.2), routed on the reference
+alone. Inside the broadcast budget the cosine top-k (J3/F13), top-k (A1),
+rank pivot (A2) and exact overwrite (J1, J2) are one ``mapInPandas``
+that scores each Arrow batch against the reference's resident unit
+matrix and writes the finished report rows from its resident table:
 
     LocalTableScan -> clean (F8) -> encode (F12) -> MapInPandas
 
 so a call on a ``reference_projection`` handle with a list of labels is
-one Spark job of one stage.
+one Spark job of one stage. Past the budget the approximate IVF rung
+runs relationally:
+
+    seed -> clean -> encode -> IVF top-k -> payload join -> pivot (A2)
+         -> exact-overwrite left join (J1) + rank>1 null-out (J2)
 
 Divergences from the reference, both deliberate (SURVEY §4 item 3):
 - tie-breaking is deterministic (ORDER BY score DESC, CT_ID ASC) where the
@@ -51,12 +51,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.similarity import (
-    choose_similarity_impl,
+    ResidentReference,
     pin_reference,
-    reference_stats,
     resident_reference,
     similarity_topk,
     top_k_rows,
+)
+# not called here: perfbench/run.py traces these names on this module
+from asctb_ct_label_mapper_spark.operators.similarity import (  # noqa: F401
+    choose_similarity_impl,
     top_k_similarity_join,
 )
 from asctb_ct_label_mapper_spark.plans.partitioning import ensure_min_partitions
@@ -68,7 +71,7 @@ _REF_PROJ_COLS = (
     "CT_ID", "CT_NAME", "definition", "all_text", "ct_name_cleaned", "embedding"
 )
 _QUERY_COLS = ("source", "raw_input_label", "cleaned_input_label")
-# reference columns the blocked report writer keeps resident
+# reference columns the report writer keeps resident
 _PAYLOAD_COLS = ("CT_NAME", "all_text", "definition", "ct_name_cleaned")
 
 
@@ -91,12 +94,11 @@ def reference_projection(reference: DataFrame):
     Entry runs one stats job and, for a broadcast-sized reference, one
     collect, once: the ids, the L2-normalised matrix and the report
     writer's table (:func:`_report_table`), all broadcast. Each call then
-    routes from the row count and dim and the blocked rung writes its
-    report from those broadcasts, so building a report runs no job on the
-    reference; a list of labels maps in one job of one stage. A reference
-    past the budget is never collected: the handle keeps its count and
-    dim only, and calls route to IVF. Exit destroys the broadcasts and
-    unpersists.
+    writes its report from those broadcasts, so building a report runs no
+    job on the reference; a list of labels maps in one job of one stage.
+    A reference past the budget is never collected: the handle keeps its
+    count and dim only, and calls route to IVF. Exit destroys the
+    broadcasts and unpersists.
 
     Results must be MATERIALIZED inside the block (the lazy plans read the
     cache and the broadcasts)."""
@@ -111,7 +113,7 @@ def reference_projection(reference: DataFrame):
 
 
 def _report_table(cols: dict[str, np.ndarray]) -> tuple:
-    """The blocked report writer's table from a reference's resident
+    """The report writer's table from a reference's resident
     collect: ``CT_ID``, ``CT_NAME``, ``all_text`` and ``definition``
     row-aligned with the unit matrix, each with a trailing None that index
     -1 reads, and the exact-match table {``ct_name_cleaned``: row of its
@@ -127,21 +129,21 @@ def _report_table(cols: dict[str, np.ndarray]) -> tuple:
     ) + (exact,)
 
 
-def _distinct_labels(labels: DataFrame) -> tuple[DataFrame, int | None]:
-    """The distinct (source, raw_input_label) rows, and their count when
-    it costs no job. A driver-local relation (``isLocal``, which is what
-    ``map_raw_labels`` builds from a list) is deduplicated on the driver
-    — collecting it runs no job — and comes back as a ``LocalTableScan``
-    of the distinct rows: no shuffle, so no width probe or routing count
-    downstream runs a job. Any other frame keeps ``dropDuplicates``."""
+def _distinct_labels(labels: DataFrame) -> DataFrame:
+    """The distinct (source, raw_input_label) rows. A driver-local
+    relation (``isLocal``, which is what ``map_raw_labels`` builds from a
+    list) is deduplicated on the driver — collecting it runs no job — and
+    comes back as a ``LocalTableScan`` of the distinct rows: no shuffle,
+    so no width probe downstream runs a job. Any other frame keeps
+    ``dropDuplicates``."""
     pairs = labels.select("source", "raw_input_label")
     if not labels.isLocal():
-        return pairs.dropDuplicates(), None
+        return pairs.dropDuplicates()
     rows = list(dict.fromkeys(pairs.collect()))
     table = pa.Table.from_pylist(
         [r.asDict() for r in rows], schema=to_arrow_schema(pairs.schema)
     )
-    return labels.sparkSession.createDataFrame(table), len(rows)
+    return labels.sparkSession.createDataFrame(table)
 
 
 def map_labels_to_reference(
@@ -163,96 +165,74 @@ def map_labels_to_reference(
     SentenceTransformer slots in as an iterator pandas UDF loading the model
     once per worker — same plan, different F12 expression.
 
-    ``strategy`` picks the physical top-k. "auto" (default, r13 verdict
-    #5) reads reference count+dim — off the pin of a
-    ``reference_projection`` handle, else one aggregate job on the
-    persisted projection — and the label count (counted on the driver for
-    a driver-local relation, else one count of the seed) and routes via
-    :func:`choose_similarity_impl` — at golden-reference scale that lands
-    on the fused cross-join + window rung; past q*c*d = 1e7 (measured at
-    dim 768 on 4 cores, see EXACT_FLOP_BUDGET) it takes the blocked rung;
-    past the BROADCAST budget it routes to IVF, where the old hard-coded
-    broadcast would have OOMed. Explicit "join" / "blocked" / "ivf" pin a
-    rung.
+    ``strategy`` routes on the reference alone, from its resident state
+    (:func:`reference_projection`'s pin, else one stats job and, inside
+    the broadcast budget, one collect). "auto" (default) writes the report
+    exactly while the reference fits the broadcast budget and takes the
+    approximate IVF rung past it, where a resident matrix would OOM.
+    "blocked" pins the exact report (raising past the budget) and "ivf"
+    pins IVF; any other value raises ``ValueError``.
 
-    The blocked rung's plan is ``LocalTableScan → clean → encode →
+    The exact report's plan is ``LocalTableScan → clean → encode →
     MapInPandas`` for a driver-local relation (``dropDuplicates`` in
     place of the scan otherwise): one ``mapInPandas`` scores each Arrow
     batch against the resident unit matrix and writes each label's
     finished row, k match columns with the exact overwrite applied, from
-    the resident table (:func:`reference_projection`; an unpinned
-    reference gets the same state per call). Each match carries the
-    ``CT_NAME``/``all_text`` of the row it scored, also when reference
-    rows share a ``CT_ID``. On the IVF rung the CT_NAME/all_text payload
-    joins back by CT_ID afterward — broadcast while the reference fits
-    the budget, a plain equi-join past it — and the exact-overwrite
-    aggregate obeys the same budget flag. Exact rungs are hash-identical
-    (proven by cos_topk_join / cos_topk_blocked sharing one oracle); a
-    zero-norm reference row scores NULL and ranks after every scored row
-    on both.
+    the resident table. Each match carries the ``CT_NAME``/``all_text`` of
+    the row it scored, also when reference rows share a ``CT_ID``; a
+    zero-norm reference row scores NULL and ranks after every scored row,
+    and an empty reference leaves every match column NULL. On the IVF
+    rung the CT_NAME/all_text payload joins back by CT_ID afterward —
+    broadcast while the reference fits the budget, a plain equi-join past
+    it — then the ranks pivot into columns and
+    :func:`overwrite_exact_matches` applies the overwrite under the same
+    budget flag.
     """
-    seed, n_labels = _distinct_labels(labels)
+    if strategy not in ("auto", "blocked", "ivf"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    seed = _distinct_labels(labels)
     cleaned = seed.withColumn("cleaned_input_label", clean(F.col("raw_input_label")))
     encoded = cleaned.withColumn("embedding", encoder(F.col("cleaned_input_label")))
 
-    # The reference feeds several consumers (top-k matrix/collect, payload
-    # join, exact-overwrite aggregate); it is broadcast-sized by
-    # construction (10^2-10^4 rows, SURVEY §1.3), so persist the narrowed
-    # projection once instead of re-running its encode/clean UDF chain per
-    # consumer (measured 1.55s -> 0.88s at sf0.1). A caller-persisted exact
-    # projection (the ``reference_projection`` context manager) is used
-    # as-is — the caller owns its lifetime, so multi-organ loops release
-    # executor memory deterministically instead of accumulating one
-    # LRU-evictable cache entry per call.
+    # The reference feeds several consumers (resident collect, and on IVF
+    # the top-k, payload join and exact-overwrite aggregate); it is
+    # broadcast-sized by construction (10^2-10^4 rows, SURVEY §1.3), so
+    # persist the narrowed projection once instead of re-running its
+    # encode/clean UDF chain per consumer (measured 1.55s -> 0.88s at
+    # sf0.1). A caller-persisted exact projection (the
+    # ``reference_projection`` context manager) is used as-is — the caller
+    # owns its lifetime, so multi-organ loops release executor memory
+    # deterministically instead of accumulating one LRU-evictable cache
+    # entry per call.
     if not (
         list(reference.columns) == list(_REF_PROJ_COLS)
         and _is_persisted(reference)
     ):
         reference = reference.select(*_REF_PROJ_COLS).persist()
 
-    if strategy == "auto":
-        # route on cheap statistics: ref count+dim off the handle's pin
-        # (one aggregate job on an unpinned projection), label count off
-        # the pre-encode seed (same row count as `encoded`, skips running
-        # the encoder UDF chain)
-        n_refs, dim = reference_stats(reference)
-        n_queries = seed.count() if n_labels is None else n_labels
-        rung = choose_similarity_impl(n_queries, n_refs, dim)
-    else:
-        rung = strategy
-    # auto routes to IVF exactly when the reference is past the budget
-    ref_in_budget = strategy != "auto" or rung != "ivf"
-
-    if rung == "blocked":
+    state = resident_reference(
+        reference, "CT_ID", payload_cols=_PAYLOAD_COLS, payload=_report_table
+    )
+    in_budget = state.ids is not None
+    if strategy == "blocked" or (strategy == "auto" and in_budget):
         # Matmul cost follows rows: widen a narrow seed. A local seed
         # already has min(rows, parallelism) partitions, so widening it
         # would only add a shuffle.
-        queries = encoded if n_labels is not None else ensure_min_partitions(encoded)
-        return _blocked_report(queries, reference, k)
-    if rung == "join":
-        topk = top_k_similarity_join(
-            encoded,
-            reference,
-            k=k,
-            query_id_cols=list(_QUERY_COLS),
-            ref_id_col="CT_ID",
-            ref_payload_cols=["CT_NAME", "all_text"],
-        )
-    else:
-        topk = similarity_topk(
-            encoded,
-            reference,
-            k=k,
-            query_id_cols=list(_QUERY_COLS),
-            ref_id_col="CT_ID",
-            impl=rung,
-        )
-        payload = reference.select("CT_ID", "CT_NAME", "all_text")
-        if ref_in_budget:
-            payload = F.broadcast(payload)
-        topk = topk.join(
-            payload, topk["ref_id"] == payload["CT_ID"], "left"
-        ).drop("CT_ID")
+        queries = encoded if labels.isLocal() else ensure_min_partitions(encoded)
+        return _blocked_report(queries, reference, state, k)
+
+    topk = similarity_topk(
+        encoded,
+        reference,
+        k=k,
+        query_id_cols=list(_QUERY_COLS),
+        ref_id_col="CT_ID",
+        impl="ivf",
+    )
+    payload = reference.select("CT_ID", "CT_NAME", "all_text")
+    if in_budget:
+        payload = F.broadcast(payload)
+    topk = topk.join(payload, topk["ref_id"] == payload["CT_ID"], "left").drop("CT_ID")
 
     # A2: rank -> columns. first() per (group, rank) is deterministic because
     # row_number makes (group, rank) unique.
@@ -276,17 +256,15 @@ def map_labels_to_reference(
         ):
             wide = wide.withColumnRenamed(f"{i}_{src}", tgt)
 
-    return overwrite_exact_matches(
-        wide, reference, k=k, broadcast_exact=ref_in_budget
-    )
+    return overwrite_exact_matches(wide, reference, k=k, broadcast_exact=in_budget)
 
 
-def _blocked_report(queries: DataFrame, reference: DataFrame, k: int) -> DataFrame:
-    """The blocked rung's finished report: one ``mapInPandas`` over the
-    encoded labels writes one row per label (:func:`_write_report`)."""
-    state = resident_reference(
-        reference, "CT_ID", payload_cols=_PAYLOAD_COLS, payload=_report_table
-    )
+def _blocked_report(
+    queries: DataFrame, reference: DataFrame, state: ResidentReference, k: int
+) -> DataFrame:
+    """The exact report: one ``mapInPandas`` over the encoded labels
+    writes one row per label (:func:`_write_report`) from the reference's
+    resident ``state``."""
     b_ids, b_unit = state.broadcasts("map_labels_to_reference")
     b_table = state.payload
     ref = reference.schema
@@ -360,8 +338,8 @@ def overwrite_exact_matches(
     broadcast_exact: bool = True,
 ) -> DataFrame:
     """J1+J2 as one broadcast left join (replaces main.py:126-166's
-    4x isin-mask + per-row lookup) — the join and IVF rungs' overwrite;
-    the blocked rung applies the same rule in its report writer.
+    4x isin-mask + per-row lookup) — the IVF rung's overwrite; the exact
+    report applies the same rule in its writer (:func:`_write_report`).
 
     Exact rows get rank-1 columns overwritten with the reference's values
     and score 1.0; ranks >= 2 are nulled. Collisions on ``ct_name_cleaned``

@@ -257,7 +257,13 @@ def top_k_rows(
 
     A zero-norm reference row has no direction either: it scores NaN
     (NULL) and ranks after every scored row, ties by ascending ref id —
-    the join rung's ``score DESC NULLS LAST, ref_id ASC``."""
+    the join rung's ``score DESC NULLS LAST, ref_id ASC``. An empty
+    reference gives every query zero neighbours and, as the join rung's
+    cross join with no rows, no direction-less placeholder: ``has_dir``
+    is all True and ``rows``/``scores`` have no columns."""
+    if len(ids) == 0:
+        n = len(vecs)
+        return np.ones(n, dtype=bool), np.zeros((n, 0), dtype=np.int64), np.zeros((n, 0))
     has_vec = vecs.notna().to_numpy()
     q = np.zeros((len(vecs), unit.shape[1]))
     if has_vec.any():
@@ -1439,12 +1445,14 @@ def sql_silhouette_seeded(
 # notes above).  REF_BROADCAST_BUDGET: past ~256 MiB of raw float64 the
 # reference no longer ships as a per-executor resident matrix — the
 # exact rungs are off the table and candidate generation must be a
-# bucketed equi-join (IVF).  EXACT_FLOP_BUDGET: q*c*d multiply-adds past
-# which one BLAS matmul per Arrow batch beats the window rung's per-pair
-# cosine, whose zip_with/aggregate runs as interpreted higher-order
-# functions.  Measured at dim 768 on 4 cores with the reference held by
-# reference_projection (tools/sweep_topk_crossover.py; median of 3 calls,
-# join s / blocked s):
+# bucketed equi-join (IVF); the flagship routes on this budget alone.
+# EXACT_FLOP_BUDGET routes only similarity_topk(impl='auto') between its
+# two exact rungs: q*c*d multiply-adds past which one BLAS matmul per
+# Arrow batch beats the window rung's per-pair cosine, whose
+# zip_with/aggregate runs as interpreted higher-order functions.  Measured
+# at dim 768 on 4 cores as whole flagship calls on each rung, the
+# reference held by reference_projection (median of 3 calls, join s /
+# blocked s; tools/sweep_topk_crossover.py re-measures it):
 #
 #     C \ q      4          16         32         64         128
 #     100    1.15/0.98  0.76/0.82  0.72/0.72  0.73/0.69  0.96/0.75
@@ -1453,10 +1461,10 @@ def sql_silhouette_seeded(
 #
 # Under ~1e7 the rungs are within the ~0.1 s call-to-call noise; from
 # 1.2e7 blocked wins every point, by 2.0-3.6x from 2.5e7.  The window rung
-# keeps the small regime: it needs no driver collect when the reference
-# is not pinned.  The old 1e8 came from a dim-64 ladder; at dim 64 the
-# sf0.1 cos_topk pair (2.3e7) already timed blocked 0.56 s < join 0.68 s
-# in the committed bench_out.json (8 cores).
+# keeps the small regime: it needs no driver collect of the reference.
+# The old 1e8 came from a dim-64 ladder; at dim 64 the sf0.1 cos_topk pair
+# (2.3e7) already timed blocked 0.56 s < join 0.68 s in the committed
+# bench_out.json (8 cores).
 REF_BROADCAST_BUDGET_BYTES: int = 256 << 20
 EXACT_FLOP_BUDGET: float = 1e7
 
@@ -1465,7 +1473,6 @@ def choose_similarity_impl(
     n_queries: int,
     n_refs: int,
     dim: int,
-    has_payload: bool = False,
     broadcast_budget_bytes: int = REF_BROADCAST_BUDGET_BYTES,
     exact_flop_budget: float = EXACT_FLOP_BUDGET,
 ) -> str:
@@ -1485,23 +1492,8 @@ def choose_similarity_impl(
     - otherwise → ``'join'``: the single-stage broadcast cross join —
       at tiny sizes the window plan's scheduling floor beats shipping
       numpy batches.
-
-    ``has_payload``: only the join rung gathers reference payload
-    columns in the same plan (J4 fused gather); a payload request
-    pins 'join' and raises if the reference is past broadcast scale
-    (callers at that scale join payloads back by ref_id instead).
     """
-    ref_bytes = n_refs * dim * 8
-    if has_payload:
-        if ref_bytes > broadcast_budget_bytes:
-            raise ValueError(
-                "ref_payload_cols with a beyond-broadcast reference: "
-                "gather payloads by joining on ref_id after the ANN "
-                f"stage (reference ~{ref_bytes >> 20} MiB > "
-                f"{broadcast_budget_bytes >> 20} MiB budget)"
-            )
-        return "join"
-    if ref_bytes > broadcast_budget_bytes:
+    if n_refs * dim * 8 > broadcast_budget_bytes:
         return "ivf"
     if float(n_queries) * n_refs * dim > exact_flop_budget:
         return "blocked"
@@ -1516,7 +1508,6 @@ def similarity_topk(
     ref_id_col: str,
     query_vec_col: str = "embedding",
     ref_vec_col: str = "embedding",
-    ref_payload_cols: Sequence[str] = (),
     impl: str = "auto",
     n_lists: int = 16,
     n_probe: int = 2,
@@ -1539,25 +1530,18 @@ def similarity_topk(
     """
     if impl == "auto":
         n_refs, dim = reference_stats(reference, ref_vec_col)
-        impl = choose_similarity_impl(
-            queries.count(), n_refs, dim, bool(ref_payload_cols)
-        )
+        impl = choose_similarity_impl(queries.count(), n_refs, dim)
     if impl == "join":
         return top_k_similarity_join(
             queries, reference, k, query_id_cols, ref_id_col,
             query_vec_col=query_vec_col, ref_vec_col=ref_vec_col,
-            ref_payload_cols=ref_payload_cols,
         )
     if impl == "blocked":
-        if ref_payload_cols:
-            raise ValueError("payload gather is join-rung only")
         return top_k_similarity_blocked(
             queries, reference, k, query_id_cols, ref_id_col,
             query_vec_col=query_vec_col, ref_vec_col=ref_vec_col,
         )
     if impl == "ivf":
-        if ref_payload_cols:
-            raise ValueError("payload gather is join-rung only")
         return ivf_topk(
             queries, reference, k, query_id_cols, ref_id_col,
             query_vec_col=query_vec_col, ref_vec_col=ref_vec_col,

@@ -84,15 +84,15 @@ def map_raw_labels(
     """Entry point 3.2 (reference main.py:171-221): translate raw labels to
     the controlled vocabulary. Accepts a plain iterable (reference parity)
     or a prebuilt (source, raw_input_label) DataFrame; the per-label Python
-    loop of the reference is one cross-join plan (SURVEY §3.2).
+    loop of the reference is one plan (SURVEY §3.2).
 
     An iterable is taken as ``str(x)`` per element (so ``None`` maps as
     the label 'None') and handed to Spark as an Arrow table: it plans as a
     ``LocalTableScan`` that the JVM reads, where a list of tuples would be
     a pickled Python RDD re-read by Python tasks in every job of the call.
-    Being driver-local, it is deduplicated and counted on the driver, so
-    on a ``reference_projection`` handle a call that takes the blocked
-    rung is one Spark job of one stage (``map_labels_to_reference``)."""
+    Being driver-local, it is deduplicated on the driver, so on a
+    ``reference_projection`` handle of a broadcast-sized reference a call
+    is one Spark job of one stage (``map_labels_to_reference``)."""
     if isinstance(raw_labels, DataFrame):
         labels = raw_labels
     else:

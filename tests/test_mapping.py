@@ -160,9 +160,10 @@ def _stage_rdd_ids(sc, jobs):
 def test_reference_projection_releases_persist(spark, spark_jobs):
     """Multi-organ loop contract: the context-managed projection is the
     ONLY cache entry (map_labels_to_reference must not double-persist an
-    already-persisted exact projection), routing and the blocked rung read
-    the handle's resident state instead of running jobs on the projection,
-    and exit destroys the broadcasts and releases the persist."""
+    already-persisted exact projection), routing and the report writer
+    read the handle's resident state instead of running jobs on the
+    projection, and exit destroys the broadcasts and releases the
+    persist."""
     from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
     from asctb_ct_label_mapper_spark.operators.similarity import resident_reference
 
@@ -206,7 +207,7 @@ def test_reference_projection_releases_persist(spark, spark_jobs):
             ))
             # building the report ran no job on the projection
             assert proj_rdd not in built, strategy
-        assert reports[0] == reports[1]  # join (auto) and blocked agree
+        assert reports[0] == reports[1]  # auto and blocked agree
         assert reports[0][0][:3] == ("beta cell", "CL:9002", None)
         assert cached() == base | {proj_rdd}
     assert not ref.storageLevel.useMemory
@@ -217,7 +218,8 @@ def test_reference_projection_releases_persist(spark, spark_jobs):
 
 def test_reference_projection_of_empty_reference(spark):
     """An empty reference pins (count 0, no rows to collect) and maps as
-    it does without the handle."""
+    it does without the handle: one report row per distinct label with
+    every match column NULL, on every exact strategy."""
     from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
 
     reference = spark.createDataFrame(
@@ -229,16 +231,23 @@ def test_reference_projection_of_empty_reference(spark):
         [("t", "beta cell")], "source string, raw_input_label string"
     )
     bare = map_labels_to_reference(labels, reference, k=2).collect()
+    assert len(bare) == 1
+    row = bare[0].asDict()
+    assert (row["raw_input_label"], row["cleaned_input_label"]) == ("beta cell", "beta cell")
+    match_cols = [c for c in REPORT_COLS if c.startswith(("match_", "matched_"))]
+    assert [row[c] for c in match_cols] == [None] * len(match_cols)
     with reference_projection(reference) as ref:
-        assert map_labels_to_reference(labels, ref, k=2).collect() == bare
+        for strategy in ("auto", "blocked"):
+            got = map_labels_to_reference(labels, ref, k=2, strategy=strategy).collect()
+            assert got == bare, strategy
 
 
-@pytest.mark.parametrize("strategy", ["join", "blocked"])
+@pytest.mark.parametrize("strategy", ["auto", "blocked"])
 def test_direction_less_label_gets_null_matches(spark, reference, strategy):
     """A label whose embedding is NULL or zero-norm keeps its one report
-    row with every match column NULL, on both exact rungs; the exact
-    overwrite still applies to it. Labels with a direction, '' among
-    them, keep their cosine ranks."""
+    row with every match column NULL; the exact overwrite still applies
+    to it. Labels with a direction, '' among them, keep their cosine
+    ranks."""
 
     def encoder(col):
         zero = F.array_repeat(F.lit(0.0).cast("float"), 16)
@@ -277,13 +286,16 @@ def _report_key(row, k):
 def test_blocked_report_equals_join_on_shared_ct_ids(spark):
     """Reference rows that share a CT_ID — the unpivot's UNK sentinel
     (different names) and level-10 twins (same id and name, different
-    all_text) — keep their own CT_NAME/all_text on the blocked rung:
-    its report equals the join rung's on every column. A zero-norm
-    reference row scores NULL and ranks last on both; k = C shows every
-    rank."""
+    all_text) — keep their own CT_NAME/all_text in the report: every
+    label without an exact hit reports, rank for rank, the ids, scores
+    and per-row payload of the join rung's top-k. A zero-norm reference
+    row scores NULL and ranks last; k = C shows every rank."""
     import pyarrow as pa
 
     from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
+    from asctb_ct_label_mapper_spark.operators.similarity import (
+        top_k_similarity_join,
+    )
 
     unk = "ASCTB CT_ID UNK"
     rows = [
@@ -315,23 +327,45 @@ def test_blocked_report_equals_join_on_shared_ct_ids(spark):
         pa.table({"source": ["t"] * len(texts), "raw_input_label": texts})
     )
     k = len(rows)
-    got = {
-        strategy: sorted(
-            _report_key(r, k)
-            for r in map_labels_to_reference(
-                labels, reference, k=k, strategy=strategy
-            ).collect()
-        )
-        for strategy in ("join", "blocked")
+    report = {
+        r["raw_input_label"]: r.asDict()
+        for r in map_labels_to_reference(labels, reference, k=k, strategy="blocked").collect()
     }
-    assert got["join"] == got["blocked"]
-    report = {dict(r)["raw_input_label"]: dict(r) for r in got["blocked"]}
     assert len(report) == len(texts)
     for ct_id, name, _, text in rows[:6]:
         row = report[text]
         assert (row["matched_asctb_id_1"], row["matched_asctb_label_1"],
                 row["matched_asctb_text_1"]) == (ct_id, name, text)
         assert (row["matched_asctb_id_7"], row["match_score_7"]) == ("CL:9", None)
+
+    queries = labels.withColumn(
+        "cleaned_input_label", clean_text_full_udf(F.col("raw_input_label"))
+    ).withColumn("embedding", stub_encode_udf(F.col("cleaned_input_label")))
+    topk = top_k_similarity_join(
+        queries, reference, k, ["raw_input_label"], "CT_ID",
+        ref_payload_cols=["CT_NAME", "all_text"],
+    ).collect()
+    exact = {"mesh cell", "twin cell"}
+    joined = {}
+    for r in topk:
+        if r["raw_input_label"] not in exact:
+            joined.setdefault(r["raw_input_label"], {})[r["rank"]] = r
+    assert set(joined) == set(texts) - exact
+    for text, ranks in joined.items():
+        row = report[text]
+        assert [
+            (row[f"matched_asctb_id_{i}"], row[f"matched_asctb_label_{i}"],
+             row[f"matched_asctb_text_{i}"],
+             None if row[f"match_score_{i}"] is None else round(row[f"match_score_{i}"], 9))
+            for i in range(1, k + 1)
+        ] == [
+            (ranks[i]["ref_id"], ranks[i]["CT_NAME"], ranks[i]["all_text"],
+             None if ranks[i]["score"] is None else round(ranks[i]["score"], 9))
+            for i in range(1, k + 1)
+        ], text
+    for text in exact:  # the overwrite's rank 1: the row's definition
+        assert report[text]["matched_asctb_text_1"].endswith(" def"), text
+        assert report[text]["match_score_2"] is None, text
 
 
 def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
@@ -378,6 +412,113 @@ def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
     assert len(got) == len(distinct)
     assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
     assert sum(r["match_score_1"] == 1.0 for r in got) == n_refs // 8
+
+
+def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch):
+    """Without a handle, an in-budget reference is read once per call (one
+    stats aggregate and one collect, no second aggregate for routing), no
+    count of the labels runs, and a local list of labels whose q*C*d is
+    under EXACT_FLOP_BUDGET — the regime the join rung used to take —
+    collects its report in one job."""
+    import pyarrow as pa
+
+    from asctb_ct_label_mapper_spark.operators import similarity as sim
+
+    reference = (
+        spark.createDataFrame(
+            [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
+            "CT_ID string, CT_NAME string, definition string",
+        )
+        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+    labels = spark.createDataFrame(
+        pa.table({
+            "source": ["t"] * 3,
+            "raw_input_label": ["cell kind 3", "unknown thing", "cell kind 3"],
+        })
+    )
+    assert labels.isLocal()
+    assert sim.choose_similarity_impl(2, 40, 16) == "join"
+    calls = []
+
+    def spy(fn):
+        def wrapped(*args, **kwargs):
+            calls.append(fn.__name__)
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(type(labels), "count", spy(type(labels).count))
+    monkeypatch.setattr(sim, "reference_stats", spy(sim.reference_stats))
+    report, build_jobs = spark_jobs(
+        lambda: map_labels_to_reference(labels, reference, k=2, clean=clean_text_expr)
+    )
+    assert calls == ["reference_stats"]
+    # the stats aggregate (three jobs: AQE submits each query stage as
+    # its own) and the reference collect
+    assert len(build_jobs) == 4, build_jobs
+    rows, jobs = spark_jobs(report.collect)
+    assert len(jobs) == 1, jobs
+    got = {r["raw_input_label"]: r for r in rows}
+    assert len(rows) == len(got) == 2
+    assert (got["cell kind 3"]["match_score_1"], got["cell kind 3"]["matched_asctb_id_1"]) == (
+        1.0, "CL:0003"
+    )
+    assert got["unknown thing"]["match_score_2"] is not None
+
+
+def test_only_ivf_takes_the_relational_report(spark, reference, monkeypatch):
+    """The relational top-k, pivot and exact overwrite serve IVF only: no
+    exact call reaches top_k_similarity_join or overwrite_exact_matches.
+    Past the broadcast budget auto takes IVF, whose report keeps the
+    exact overwrite the writer applies."""
+    from asctb_ct_label_mapper_spark.operators import mapping
+    from asctb_ct_label_mapper_spark.operators import similarity as sim
+
+    more = spark.createDataFrame(
+        [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
+        "CT_ID string, CT_NAME string, definition string",
+    )
+    ref = reference.unionByName(
+        more.withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+    labels = spark.createDataFrame(
+        [("t", "Basal cell"), ("t", "club cell"), ("t", "mystery blob")],
+        "source string, raw_input_label string",
+    )
+    calls = []
+    for module, name in (
+        (sim, "top_k_similarity_join"), (sim, "ivf_topk"), (mapping, "overwrite_exact_matches")
+    ):
+        def spy(*args, _fn=getattr(module, name), **kwargs):
+            calls.append(_fn.__name__)
+            return _fn(*args, **kwargs)
+        monkeypatch.setattr(module, name, spy)
+
+    exact = {
+        strategy: sorted(map_labels_to_reference(labels, ref, k=2, strategy=strategy).collect())
+        for strategy in ("auto", "blocked")
+    }
+    assert calls == []
+    assert exact["auto"] == exact["blocked"]
+    monkeypatch.setattr(sim, "REF_BROADCAST_BUDGET_BYTES", 100)
+    ivf = sorted(map_labels_to_reference(labels, ref, k=2).collect())
+    assert calls == ["ivf_topk", "overwrite_exact_matches"]
+    assert ivf[:2] == exact["blocked"][:2]  # the two exact hits
+    assert ivf[2]["raw_input_label"] == "mystery blob"
+    assert 0 < ivf[2]["match_score_1"] < 1
+
+
+@pytest.mark.parametrize("strategy", ["join", "nope"])
+def test_unknown_strategy_raises(spark, reference, strategy):
+    """"auto", "blocked" and "ivf" are the strategies; "join" is no
+    report path and raises like any unknown value."""
+    labels = spark.createDataFrame([("t", "club cell")], "source string, raw_input_label string")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        map_labels_to_reference(labels, reference, strategy=strategy)
 
 
 def test_reference_projection_past_budget_is_never_collected(spark, monkeypatch):

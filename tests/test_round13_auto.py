@@ -36,15 +36,6 @@ def test_broadcast_boundary_crosses_to_ivf():
     assert choose_similarity_impl(10, c_at + 1, d) == "ivf"
 
 
-def test_payload_pins_join_and_raises_past_broadcast():
-    assert (
-        choose_similarity_impl(10**7, 10_000, 64, has_payload=True)
-        == "join"  # payload wins over the flop crossover
-    )
-    with pytest.raises(ValueError, match="ref_payload_cols"):
-        choose_similarity_impl(10, 10**9, 64, has_payload=True)
-
-
 def test_unknown_impl_raises(spark):
     df = spark.range(1).select(
         F.col("id").alias("vec_id"),
@@ -73,15 +64,3 @@ def test_auto_dispatch_matches_explicit_join(spark):
         tuple(x) for x in join.collect()
     ]
 
-
-def test_blocked_rejects_payload(spark):
-    df = spark.range(2).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0)).alias("embedding"),
-        F.lit("x").alias("label"),
-    )
-    with pytest.raises(ValueError, match="join-rung only"):
-        similarity_topk(
-            df, df, 1, ["vec_id"], "vec_id",
-            ref_payload_cols=["label"], impl="blocked",
-        )

@@ -1,33 +1,34 @@
-"""Round-14 verdict #5: the flagship mapping path routes through the
-cost-based rung selector, inheriting the broadcast-budget escape hatch.
+"""Round-14 verdict #5: the flagship mapping path routes on the
+reference's size, inheriting the broadcast-budget escape hatch.
 
-At golden-reference scale auto must land on the fused cross-join rung
-(plan-pinned); past the broadcast budget the selector routes to IVF
-where the old hard-coded broadcast would have OOMed (decision-pinned —
+At golden-reference scale auto writes the exact report in one
+``mapInPandas`` (plan-pinned); past the broadcast budget the selector
+routes to IVF where a resident matrix would have OOMed (decision-pinned —
 running a 10^6-row reference in a unit test is not the point)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 
-def test_flagship_auto_selects_join_rung_at_reference_scale(spark, sf_dir):
+def test_flagship_auto_writes_report_at_reference_scale(spark, sf_dir):
     """mapping_report (default strategy='auto') at the golden scale:
-    the plan carries the cross-join rung's BroadcastNestedLoopJoin and
-    NO MapInPandas ANN stage (the blocked rung's physical signature)."""
+    the plan carries the report writer's MapInPandas and none of the
+    removed join rung's BroadcastNestedLoopJoin or top-k Window."""
     import __spark_entry__ as entry
 
     from asctb_ct_label_mapper_spark.plans.audit import formatted_plan
 
     df = entry.queries()["mapping_report"](spark, sf_dir)
     plan = formatted_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "MapInPandas" not in plan
+    assert "MapInPandas" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Window" not in plan
 
 
 def test_choose_impl_routes_flagship_scales():
-    """The decision function at the flagship's regimes: golden scale ->
-    join; beyond-broadcast reference -> ivf (the escape hatch the
-    flagship now inherits)."""
+    """similarity_topk's decision function at the flagship's scales:
+    golden scale -> join; beyond-broadcast reference -> ivf (the budget
+    the flagship routes on too)."""
     from asctb_ct_label_mapper_spark.operators.similarity import (
         choose_similarity_impl,
     )
@@ -40,10 +41,11 @@ def test_choose_impl_routes_flagship_scales():
 
 @pytest.mark.parametrize("dim", [16, 768])
 def test_flagship_strategies_hash_identical(spark, sf_dir, dim):
-    """join and blocked produce identical reports — the exact-rung
-    equivalence the similarity oracle already proves, re-pinned through
-    the full flagship plan at the stub width and at the paper's 768-d,
-    the width EXACT_FLOP_BUDGET was measured at. auto agrees with both."""
+    """auto and blocked produce identical reports, and on every label
+    without an exact hit they carry the top-k ids and 6 dp scores of the
+    join rung of ``similarity_topk`` — the exact-rung equivalence the
+    similarity oracle already proves, re-pinned through the full flagship
+    plan at the stub width and at the paper's 768-d."""
     import __spark_entry__ as entry
 
     from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
@@ -51,6 +53,7 @@ def test_flagship_strategies_hash_identical(spark, sf_dir, dim):
     from asctb_ct_label_mapper_spark.operators.mapping import (
         map_labels_to_reference,
     )
+    from asctb_ct_label_mapper_spark.operators.similarity import similarity_topk
 
     def encoder(col):
         return stub_encode_udf(col, dim=dim)
@@ -89,10 +92,28 @@ def test_flagship_strategies_hash_identical(spark, sf_dir, dim):
                 labels, reference, k=2, encoder=encoder, strategy=strategy
             ).select(*cols).collect()
         )
-        for strategy in ("join", "blocked", "auto")
+        for strategy in ("blocked", "auto")
     }
-    assert got["join"] == got["blocked"] == got["auto"]
-    assert len(got["join"]) == labels.count()
+    assert got["blocked"] == got["auto"]
+    assert len(got["blocked"]) == labels.count()
+
+    queries = labels.withColumn(
+        "embedding", encoder(clean_text_full_udf(F.col("raw_input_label")))
+    )
+    ranks = {}
+    for r in similarity_topk(
+        queries, reference, 2, ["source", "raw_input_label"], "CT_ID", impl="join"
+    ).collect():
+        ranks.setdefault((r["source"], r["raw_input_label"]), {})[r["rank"]] = (
+            r["ref_id"], round(r["score"], 6)
+        )
+    inexact = [r for r in got["blocked"] if r["s1"] != 1.0]
+    assert inexact
+    for r in inexact:
+        assert ranks[(r["source"], r["raw_input_label"])] == {
+            1: (r["matched_asctb_id_1"], r["s1"]),
+            2: (r["matched_asctb_id_2"], r["s2"]),
+        }, r
 
 
 def test_overwrite_exact_plain_join_matches_broadcast(spark):

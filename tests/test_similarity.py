@@ -81,6 +81,22 @@ def test_k_larger_than_reference(spark):
     assert _collect_ranked(a) == _collect_ranked(b)
 
 
+def test_empty_reference_blocked_equals_join(spark):
+    """An empty reference gives no rows on either exact rung, also for a
+    query without a direction (the cross join has nothing to pair it
+    with); the blocked rung used to size its query matrix from the empty
+    reference and fail on the shape."""
+    from asctb_ct_label_mapper_spark.operators.similarity import similarity_topk
+
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.5]), (2, None)], "vec_id long, embedding array<float>"
+    )
+    r = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    joined = top_k_similarity_join(q, r, 2, ["vec_id"], "vec_id").collect()
+    blocked = similarity_topk(q, r, 2, ["vec_id"], "vec_id", impl="blocked").collect()
+    assert joined == blocked == []
+
+
 def test_join_strategy_broadcasts_reference(spark):
     qdf, rdf = _vec_tables(spark)
     out = top_k_similarity_join(qdf, rdf, 3, ["vec_id"], "vec_id")

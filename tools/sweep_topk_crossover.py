@@ -1,14 +1,16 @@
-"""Time the flagship's two exact top-k rungs against each other at one
-embedding width, to place ``similarity.EXACT_FLOP_BUDGET``.
+"""Time the two exact top-k rungs of ``similarity_topk`` against each
+other at one embedding width, to place ``similarity.EXACT_FLOP_BUDGET``
+(the budget ``impl="auto"`` routes on).
 
     python tools/sweep_topk_crossover.py --dim 768 --refs 100,300,1000 \
         --queries 4,8,16,32,64,128 --reps 3
 
 For every reference size C a seeded random reference is held in
 ``mapping.reference_projection`` (as repeated ``map_raw_labels`` calls
-hold it), and for every query count q the same q labels are mapped with
-``strategy="join"`` and ``strategy="blocked"``: one warm-up call each,
-then the median wall time of ``--reps`` collected reports. One line per
+hold it), and for every query count q the same q stub-encoded labels are
+ranked with ``similarity_topk(impl="join")`` and
+``similarity_topk(impl="blocked")``, k=2: one warm-up call each, then
+the median wall time of ``--reps`` collected results. One line per
 (C, q) goes to stdout with q*C*dim and the faster rung.
 """
 
@@ -25,11 +27,11 @@ import pyarrow as pa
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf  # noqa: E402
-from asctb_ct_label_mapper_spark.operators.mapping import (  # noqa: E402
-    map_labels_to_reference,
-    reference_projection,
-)
+from asctb_ct_label_mapper_spark.operators.mapping import reference_projection  # noqa: E402
+from asctb_ct_label_mapper_spark.operators.similarity import similarity_topk  # noqa: E402
 from asctb_ct_label_mapper_spark.session import get_spark  # noqa: E402
 
 
@@ -52,12 +54,12 @@ def make_reference(spark, n_refs: int, dim: int, seed: int):
     )
 
 
-def time_call(labels, proj, dim: int, strategy: str, reps: int) -> float:
+def time_call(queries, proj, impl: str, reps: int) -> float:
     def call() -> float:
         t0 = time.perf_counter()
-        map_labels_to_reference(
-            labels, proj, k=2, strategy=strategy,
-            encoder=lambda c: stub_encode_udf(c, dim=dim),
+        similarity_topk(
+            queries, proj, k=2, query_id_cols=["source", "raw_input_label"],
+            ref_id_col="CT_ID", impl=impl,
         ).collect()
         return time.perf_counter() - t0
 
@@ -82,16 +84,18 @@ def main() -> None:
         ref = make_reference(spark, n_refs, args.dim, args.seed)
         with reference_projection(ref) as proj:
             for q in (int(x) for x in args.queries.split(",")):
-                labels = spark.createDataFrame(
+                queries = spark.createDataFrame(
                     pa.table(
                         {
                             "source": ["sweep"] * q,
                             "raw_input_label": [f"query label {i}" for i in range(q)],
                         }
                     )
+                ).withColumn(
+                    "embedding", stub_encode_udf(F.col("raw_input_label"), dim=args.dim)
                 )
-                t_join = time_call(labels, proj, args.dim, "join", args.reps)
-                t_blk = time_call(labels, proj, args.dim, "blocked", args.reps)
+                t_join = time_call(queries, proj, "join", args.reps)
+                t_blk = time_call(queries, proj, "blocked", args.reps)
                 faster = "join" if t_join < t_blk else "blocked"
                 print(
                     f"{n_refs}\t{q}\t{q * n_refs * args.dim:.2e}\t"
