@@ -1523,9 +1523,8 @@ def markov_steady_state(
     Plan: the transition matrix is |types|² rows (dimension grain); the
     iteration folds on the DRIVER over the collected matrix under the
     bounded-collect contract (``dq.GroupBoundExceeded`` past
-    ``max_collect_rows`` — the graph-module hits/k_core seam; a million-
-    state chain would use pagerank's impl='frames' broadcast loop
-    instead). Returns (state, pi), 6dp."""
+    ``max_collect_rows`` — the graph-module hits/k_core seam). Returns
+    (state, pi), 6dp."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     cells, states, pi = _markov_chain_fold(

@@ -23,20 +23,21 @@ on the aggregated edges, never the raw facts.
   output.
 - ``pagerank``: damped PageRank on a weighted digraph. The registry
   runs it on the nation-level trade graph (25 nodes — aggregated from
-  lineitem x orders x customer x supplier), where the iteration frames
-  are dimension-sized: ``iters`` tiny hash joins after the one fact
-  shuffle. Dangling mass is NOT redistributed (simplified PageRank,
-  the common SQL formulation) — stated, and identical on both engines;
-  ranks therefore sum to < 1 when sinks exist.
+  lineitem x orders x customer x supplier), where the edge list is
+  dimension-sized: one bounded collect after the one fact shuffle,
+  then the iterations fold on the driver (``LOCAL_EDGE_ROWS``).
+  Dangling mass is NOT redistributed (simplified PageRank, the common
+  SQL formulation) — stated, and identical on both engines; ranks
+  therefore sum to < 1 when sinks exist.
 
 Oracle SQL mirrors: the PageRank iteration is UNROLLED into K chained
 CTEs (standard SQL forbids aggregates in a recursive CTE's recursive
-term), generated by the same Python loop that drives the Spark plan.
+term), with the same recurrence the driver fold runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -248,93 +249,32 @@ def sql_triangle_count() -> str:
 # PageRank
 # ---------------------------------------------------------------------------
 
+# edge lists past this many rows raise GroupBoundExceeded instead of
+# folding on the driver: pre-aggregate to dimension grain first
+LOCAL_EDGE_ROWS = 2_000_000
+
+
 def pagerank(
     edges: DataFrame,
     n_nodes: int,
     damping: float = 0.85,
     iters: int = 10,
-    impl: str = "auto",
 ) -> DataFrame:
     """Damped PageRank on a weighted digraph given as (src, dst, w).
     ``n_nodes`` is passed in (the caller knows the node-universe size —
     for the registry's nation graph it is a dimension count) rather
-    than counted from the edges; with impl='frames' the whole plan
-    additionally stays lazy (impl='local' collects the bounded edge
-    list eagerly). Returns (node, pr) rounded 6dp.
+    than counted from the edges. Returns (node, pr) rounded 6dp.
 
     Simplified formulation (no dangling-mass redistribution):
         r₀ = 1/N;  r_{t+1}(j) = (1−d)/N + d·Σ_i r_t(i)·w_ij/outw_i
 
-    Two implementations, same recurrence:
-
-    - ``impl='local'``: collect the AGGREGATED edge list (bounded by
-      the rolled-up graph's size — ≤ dimension² rows; the registry's
-      trade graph is ≤625) and fold the iterations in numpy on the
-      driver, like the centroid-training precedent. One fact-table
-      pass, zero per-iteration scheduling.
-    - ``impl='frames'``: keep the loop distributed — per iteration one
-      broadcast join + one aggregate on the persisted norm frame. The
-      path for graphs too big to collect (web/citation scale); costs
-      ~2 tiny stages per iteration.
-    - ``impl='auto'`` (default): 'local' — callers with huge graphs
-      opt into 'frames' explicitly, mirroring holt_winters' impl seam.
-    """
-    if impl not in ("auto", "local", "frames"):
-        raise ValueError(f"unknown impl {impl!r}")
-    if impl in ("auto", "local"):
-        return _pagerank_local(edges, n_nodes, damping, iters)
-    from asctb_ct_label_mapper_spark.plans.cache import pooled_persist
-
-    edges = pooled_persist(edges)
-    nodes = pooled_persist(
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    norm = pooled_persist(
-        edges.join(outw, ["src"]).select(
-            "src", "dst", (F.col("w") / F.col("ow")).alias("wn")
-        )
-    )
-    base = float(1.0 - damping) / n_nodes
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
-    for _ in range(iters):
-        contrib = (
-            norm.join(F.broadcast(ranks), norm["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("wn") * F.col("r")).alias("s"))
-        )
-        ranks = nodes.join(
-            contrib, nodes["node"] == contrib["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-            ).alias("r"),
-        )
-    # deliberately NOT persisted per iteration: the loop builds ONE
-    # physical plan whose broadcast exchanges each execute once within
-    # the final action — per-iteration persist() forces an extra
-    # materialization job per iteration instead (measured 10.1 -> 18.2 s
-    # on the textrank graph). The loop's real cost is the fixed ~1 s of
-    # scheduling per iteration, which is why dimension-grain graphs
-    # should use impl='local'.
-    return ranks.select("node", F.round("r", 6).alias("pr"))
-
-
-def _pagerank_local(
-    edges: DataFrame,
-    n_nodes: int,
-    damping: float,
-    iters: int,
-) -> DataFrame:
-    """Driver-side fold of the PageRank recurrence over the collected
-    (bounded, aggregated) edge list — the one Spark job is the edge
-    aggregation itself. Matches the frames/oracle arithmetic: double
-    precision, same recurrence; the 6dp rounding is delegated to
-    F.round on the result frame (Python round() is banker's
+    The AGGREGATED edge list is collected in one job under
+    :func:`_guard_local_collect` (``LOCAL_EDGE_ROWS``; the registry's
+    trade graph is ≤625 rows) and the iterations fold on the driver,
+    like the centroid-training precedent: one fact-table pass, zero
+    per-iteration scheduling. The arithmetic matches the oracle:
+    double precision, same recurrence; the 6dp rounding is delegated
+    to F.round on the result frame (Python round() is banker's
     half-even, F.round/DuckDB are half away from zero — the repo's
     standing rounding trap)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -343,7 +283,9 @@ def _pagerank_local(
     # arbitrary and float accumulation order matters at the last ulp
     rows = sorted(
         ((r["src"], r["dst"], float(r["w"]))
-         for r in edges.select("src", "dst", "w").collect()),
+         for r in _guard_local_collect(
+             edges, LOCAL_EDGE_ROWS, "pagerank", ["src", "dst", "w"]
+         )),
         key=lambda t: (t[0], t[1]),
     )
     nodes = sorted({t[0] for t in rows} | {t[1] for t in rows})
@@ -380,7 +322,7 @@ def sql_pagerank(
 ) -> str:
     """DuckDB mirror of ``pagerank`` — the iteration UNROLLED into
     ``iters`` chained CTEs (expects an ``edges(src, dst, w)`` CTE in
-    scope), generated by the same loop shape as the Spark plan."""
+    scope), the same recurrence :func:`pagerank` folds on the driver."""
     base = (1.0 - damping) / n_nodes
     parts = [
         """
@@ -944,7 +886,6 @@ def sql_nation_trade_edges_count() -> str:
 def label_propagation(
     edges: DataFrame,
     iters: int = 4,
-    impl: str = "auto",
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, made deterministic) on a weighted graph given as
@@ -971,74 +912,23 @@ def label_propagation(
     near-tie. :func:`nation_trade_edges_count` exists for exactly
     this.
 
-    Two implementations, same recurrence (the PageRank impl seam):
-
-    - ``impl='local'``: collect the AGGREGATED edge list (bounded —
-      dimension-grain graphs only) and fold iterations in Python,
-      accumulating in sorted edge order; one Spark job total.
-    - ``impl='frames'``: distributed loop — per iteration one
-      broadcast join of the current labels against the persisted
-      symmetrized edges, a combinable (node, label) weight fold, and
-      a per-node argmax window (partitions = per-node candidate
-      labels, bounded by degree). The web-graph path.
-    - ``impl='auto'``: 'local', as with PageRank — huge graphs opt
-      into 'frames' explicitly.
+    The one-way edge list is collected in one job under
+    :func:`_guard_local_collect` (``LOCAL_EDGE_ROWS``; dimension-grain
+    graphs only), the reverse edges are added on the driver, and the
+    iterations fold in Python, accumulating in sorted edge order (the
+    :func:`pagerank` precedent); with the exact-in-double weight
+    contract the sums are order-free anyway.
     """
-    if impl not in ("auto", "local", "frames"):
-        raise ValueError(f"unknown impl {impl!r}")
-    sym = edges.select("src", "dst", "w").unionAll(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w")
-        )
-    )
-    if impl in ("auto", "local"):
-        return _label_propagation_local(edges, sym, iters)
-    from asctb_ct_label_mapper_spark.plans.cache import pooled_persist
+    from pyspark.sql.types import StructField, StructType
 
-    sym = pooled_persist(sym)
-    labels = (
-        sym.select(F.col("src").alias("node")).distinct()
-        .select("node", F.col("node").alias("lab"))
-    )
-    for _ in range(iters):
-        scores = (
-            sym.join(
-                F.broadcast(labels.withColumnRenamed("node", "_nb")),
-                sym["dst"] == F.col("_nb"),
-            )
-            .groupBy(F.col("src").alias("node"), F.col("lab"))
-            .agg(F.sum("w").alias("_s"))
+    one_way = [
+        (r["src"], r["dst"], float(r["w"]))
+        for r in _guard_local_collect(
+            edges, LOCAL_EDGE_ROWS, "label_propagation", ["src", "dst", "w"]
         )
-        win = Window.partitionBy("node").orderBy(
-            F.desc("_s"), F.asc("lab")
-        )
-        new = (
-            scores.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .select("node", F.col("lab").alias("_nl"))
-        )
-        labels = (
-            labels.join(new, ["node"], "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_nl"), F.col("lab")).alias("lab"),
-            )
-        )
-    # not persisted per iteration — same single-action broadcast-reuse
-    # argument as the PageRank frames loop above
-    return labels.select("node", F.col("lab").alias("community"))
-
-
-def _label_propagation_local(
-    edges: DataFrame, sym: DataFrame, iters: int
-) -> DataFrame:
-    """Driver-side fold of the LPA recurrence over the collected
-    (bounded, aggregated) edge list — the PageRank ``_pagerank_local``
-    precedent. Accumulates scores in sorted edge order; with the
-    exact-in-double weight contract the sums are order-free anyway."""
+    ]
     rows = sorted(
-        ((r["src"], r["dst"], float(r["w"]))
-         for r in sym.select("src", "dst", "w").collect()),
+        one_way + [(d, s, w) for s, d, w in one_way],
         key=lambda t: (t[0], t[1]),
     )
     nodes = sorted({t[0] for t in rows})
@@ -1057,14 +947,11 @@ def _label_propagation_local(
         for n, (_, cand) in best.items():
             nxt[n] = cand
         lab = nxt
-    spark = edges.sparkSession
-    from pyspark.sql.types import StructField, StructType
-
     ntype = edges.schema["src"].dataType
     schema = StructType(
         [StructField("node", ntype, True), StructField("community", ntype, True)]
     )
-    return spark.createDataFrame(
+    return edges.sparkSession.createDataFrame(
         [(n, lab[n]) for n in nodes], schema=schema
     )
 
@@ -1112,9 +999,10 @@ def sql_label_propagation(iters: int = 4) -> str:
 def _guard_local_collect(
     edges: DataFrame, max_rows: int, label: str, cols: list[str]
 ) -> list:
-    """Bounded collect for driver-local graph folds (HITS, k-core,
-    harmonic closeness, eigenvector): collect ``limit(max_rows + 1)``
-    of ``cols`` in ONE job and raise the ``dq.assert_group_bound``
+    """Bounded collect for the driver-local graph folds (PageRank, label
+    propagation, HITS, k-core, harmonic closeness, eigenvector,
+    eccentricity): collect ``limit(max_rows + 1)`` of ``cols`` in ONE
+    job and raise the ``dq.assert_group_bound``
     error class if the probe overflows — the limit IS the guard, so
     the (possibly fact-scale) upstream plan runs once, not twice
     (r12 second review pass: the old count()-then-collect() shape
@@ -1126,16 +1014,16 @@ def _guard_local_collect(
     rows = edges.select(*cols).limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         raise GroupBoundExceeded(
-            f"{label}: edge frame has > max_collect_rows={max_rows} "
-            "rows; the local impl folds on the driver — pre-aggregate "
+            f"{label}: edge frame has > {max_rows} rows; the fold "
+            "runs on the driver — pre-aggregate "
             "the edges to dimension grain or raise the bound explicitly"
         )
     return rows
 
+
 def hits_scores(
     edges: DataFrame,
     iters: int = 8,
-    impl: str = "auto",
     max_collect_rows: int = 2_000_000,
 ) -> DataFrame:
     """HITS hubs-and-authorities on a weighted digraph (src, dst, w):
@@ -1148,23 +1036,18 @@ def hits_scores(
 
         h_t(i) = Σ_j w_ij·a_{t-1}(j) / Σ·,  a_t(j) = Σ_i w_ij·h_t(i) / Σ·
 
-    ``impl='local'`` (default via 'auto') folds the iterations on the
-    driver over the collected AGGREGATED edge list — bounded by the
-    rolled-up graph (≤ dimension² rows for the registry's trade graph),
-    the pagerank-local precedent (`graph.py` pagerank impl seam).
-    Graphs too big to collect use the broadcast-loop shape pagerank
-    impl='frames' documents; not duplicated here.
+    The iterations fold on the driver over the collected AGGREGATED
+    edge list — bounded by the rolled-up graph (≤ dimension² rows for
+    the registry's trade graph), the :func:`pagerank` precedent.
 
     ``max_collect_rows`` is the bounded-collect contract
-    (``dq.assert_group_bound`` style, r11 review finding): 'auto'/
-    'local' fold on the driver, so an edge frame past the bound raises
+    (``dq.assert_group_bound`` style, r11 review finding): the fold
+    runs on the driver, so an edge frame past the bound raises
     a named error instead of silently OOMing the driver — the caller
     either pre-aggregates to dimension grain or raises the bound
     knowingly.
 
     Returns (node, hub, auth), 6dp."""
-    if impl not in ("auto", "local"):
-        raise ValueError(f"unknown impl {impl!r}")
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     rows = sorted(
@@ -1285,7 +1168,6 @@ def k_core(
     edges: DataFrame,
     k: int = 3,
     iters: int = 15,
-    impl: str = "auto",
     max_collect_rows: int = 2_000_000,
 ) -> DataFrame:
     """k-core decomposition (fixed k): iteratively peel nodes whose
@@ -1300,10 +1182,8 @@ def k_core(
     ``iters`` bounds the unrolled peeling; each pass removes ≥1 node or
     is a no-op, so iters ≥ |V| guarantees the fixed point on a bounded
     graph (further passes are no-ops — the oracle unrolls exactly the
-    same count). ``impl='local'`` (the 'auto' default) folds the
-    peeling on the driver over the collected aggregated edge list —
-    the pagerank-local precedent; billion-node graphs use the
-    per-iteration join shape instead (not duplicated here).
+    same count). The peeling folds on the driver over the collected
+    aggregated edge list — the :func:`pagerank` precedent.
 
     ``max_collect_rows`` is the bounded-collect contract (the
     hits_scores guard, r12 ADVICE item).  Non-convergence is DETECTED:
@@ -1315,8 +1195,6 @@ def k_core(
     a non-fixed-point subgraph.
 
     Returns the surviving (node, core_deg) rows, 6dp-free (integers)."""
-    if impl not in ("auto", "local"):
-        raise ValueError(f"unknown impl {impl!r}")
     from pyspark.sql.types import LongType, StructField, StructType
 
     pairs = {
@@ -1568,7 +1446,6 @@ def sql_neighbor_jaccard_topk(topk: int = 15) -> str:
 def harmonic_closeness(
     edges: DataFrame,
     iters: int = 8,
-    impl: str = "auto",
     max_collect_rows: int = 2_000_000,
 ) -> DataFrame:
     """Harmonic closeness centrality on the SYMMETRIZED digraph:
@@ -1578,18 +1455,16 @@ def harmonic_closeness(
     harmonic form is the disconnection-robust variant (Boldi-Vigna):
     unreachable pairs contribute 0 instead of poisoning the mean.
 
-    ``impl='local'`` (the 'auto' default) runs one BFS per node on the
-    driver over the collected aggregated edge list — bounded by
-    ``max_collect_rows`` (the hits_scores guard); dimension-grain
-    graphs only, the pagerank-local precedent.  ``iters`` bounds the
+    One BFS per node runs on the driver over the collected aggregated
+    edge list — bounded by ``max_collect_rows`` (the hits_scores
+    guard); dimension-grain graphs only, the :func:`pagerank`
+    precedent.  ``iters`` bounds the
     BFS depth; if any BFS frontier is still expanding when the bound
     exhausts, a named error demands a larger ``iters`` (the k_core
     convergence contract) — the SQL mirror unrolls exactly the same
     level count, so parity is structural.
 
     Returns (node, n_reached, harmonic), 6dp, observed nodes only."""
-    if impl not in ("auto", "local"):
-        raise ValueError(f"unknown impl {impl!r}")
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1694,7 +1569,6 @@ def sql_harmonic_closeness(iters: int = 8) -> str:
 def eigenvector_centrality(
     edges: DataFrame,
     iters: int = 12,
-    impl: str = "auto",
     max_collect_rows: int = 2_000_000,
 ) -> DataFrame:
     """Eigenvector centrality on a weighted digraph (src, dst, w):
@@ -1709,17 +1583,13 @@ def eigenvector_centrality(
     Nodes with no in-edges decay to 0, the defining difference from
     pagerank's teleport floor.
 
-    ``impl='local'`` (the 'auto' default) folds the iterations on the
-    driver over the collected AGGREGATED edge list under the
-    ``max_collect_rows`` bounded-collect contract (`_guard_local_collect`,
-    the hits_scores seam) — intended inputs are dimension-grain rollups
-    (≤ |dim|² rows). Billion-edge graphs use the pagerank
-    ``impl='frames'`` broadcast-loop shape instead; not duplicated here.
+    The iterations fold on the driver over the collected AGGREGATED
+    edge list under the ``max_collect_rows`` bounded-collect contract
+    (:func:`_guard_local_collect`, the hits_scores seam) — intended
+    inputs are dimension-grain rollups (≤ |dim|² rows).
 
     Returns (node, score), 6dp. Empty edge frame → empty frame (the
     hits_scores empty contract)."""
-    if impl not in ("auto", "local"):
-        raise ValueError(f"unknown impl {impl!r}")
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     rows = sorted(
@@ -2077,7 +1947,6 @@ def sql_local_clustering_topk(topk: int = 25) -> str:
 
 def graph_eccentricity(
     edges: DataFrame,
-    impl: str = "auto",
     max_collect_rows: int = 200_000,
     max_hops: int = 64,
 ) -> DataFrame:
@@ -2087,14 +1956,10 @@ def graph_eccentricity(
     'how far apart can two markets be' readout over the nation trade
     graph.
 
-    ``impl='auto'``/'local': the DIMENSION-grain edge list (nations²
-    at most) folds on the driver under :func:`_guard_local_collect`
-    (the HITS/k-core precedent — a plain-Python BFS per node, |V|·|E|
-    bounded, with the documented distributed alternative being the
-    iterative frontier-join frames loop).  Returns (node, n_reachable,
-    eccentricity) ordered by node."""
-    if impl not in ("auto", "local"):
-        raise ValueError(f"unknown impl {impl!r}")
+    The DIMENSION-grain edge list (nations² at most) folds on the
+    driver under :func:`_guard_local_collect` (the HITS/k-core
+    precedent — a plain-Python BFS per node, |V|·|E| bounded).
+    Returns (node, n_reachable, eccentricity) ordered by node."""
     rows = _guard_local_collect(
         edges.filter(F.col("src") != F.col("dst")),
         max_collect_rows,

@@ -490,12 +490,19 @@ def ivf_build_index(
         F.col(ref_id_col).alias("ref_id"), F.col(ref_vec_col).alias("_ref_vec")
     )
     if centroids is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+        # k-means fails on fewer rows than lists, and MLlib rejects k < 2:
+        # cap the lists at the row count; 0 or 1 rows make one list
+        n_refs, dim = reference_stats(reference, ref_vec_col)
+        n_lists = min(n_lists, n_refs)
+        if n_lists < 2:
+            cents = [[0.0] * max(dim, 1)]
+        else:
+            from pyspark.ml.clustering import KMeans
+            from pyspark.ml.functions import array_to_vector
 
-        train = ref.select(array_to_vector(F.col("_ref_vec")).alias("features"))
-        model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(train)
-        cents = [np.asarray(c).tolist() for c in model.clusterCenters()]
+            train = ref.select(array_to_vector(F.col("_ref_vec")).alias("features"))
+            model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(train)
+            cents = [np.asarray(c).tolist() for c in model.clusterCenters()]
         spherical = False
     else:
         cents = [np.asarray(c, dtype=float).tolist() for c in centroids]

@@ -1610,16 +1610,15 @@ def textrank_keywords(
     min_count: int = 2,
     damping: float = 0.85,
     iters: int = 10,
-    impl: str = "local",
 ) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
     over the word-adjacency graph — nodes are whitespace tokens, an
     undirected edge joins words that appear consecutively, weighted by
     corpus-wide adjacency count (thresholded at ``min_count`` — the
     standard sparsifier), ranks from the shared :func:`graph.pagerank`
-    recurrence (impl='frames': the distributed loop, since a real
-    corpus's vocabulary is no dimension table), top ``top_n`` words by
-    (rounded) rank with lexical tie-break.
+    driver fold (its bounded collect raises ``GroupBoundExceeded`` past
+    ``graph.LOCAL_EDGE_ROWS`` symmetrized edges), top ``top_n`` words
+    by (rounded) rank with lexical tie-break.
 
     Plan: one token-adjacency explode + combinable pair count (the
     only corpus-sized stage), then everything runs on the
@@ -1673,7 +1672,7 @@ def textrank_keywords(
         return spark.createDataFrame(
             [], "word string, pr double"
         )
-    pr = pagerank(edges, n_nodes, damping, iters, impl=impl)
+    pr = pagerank(edges, n_nodes, damping, iters)
     return (
         pr.orderBy(F.desc("pr"), F.asc("node"))
         .limit(top_n)

@@ -1025,186 +1025,6 @@ def _chain_key_codes(series):
     return codes
 
 
-def _arrow_bucket_fold_fn(m, cx, first_a, d: int, fields):
-    """Build the applyInPandas function for the fused-Arrow per-bucket
-    matrix fold. One shard holds MANY (key, bucket) chains; the fold is
-    vectorized ACROSS chains (numpy arrays over the active-chain lanes),
-    stepping sequentially over chain POSITION — so the number of Python
-    steps is max-chain-length, not total rows.
-
-    Bit-exactness contract with ``_matrix_affine_fold``: every scalar op
-    runs in the HOF's order — per entry, terms x.m[i][k] * acc[k][j]
-    accumulated ascending-k left-associated, addend added last; ALL
-    terms are kept (including multiplies by literal 0.0 — dropping them
-    can flip a -0.0 partial sum to +0.0). numpy element-wise * and + are
-    single IEEE ops per lane with no fusion or reassociation, so each
-    chain's doubles equal the HOF fold's exactly (hash-proven by
-    ``test_holt_winters_arrow_equals_hof``)."""
-    m_rows = [[float(m[i][j]) for j in range(d)] for i in range(d)]
-    cxs = [float(c) for c in cx]
-    fas = [float(c) for c in first_a]
-
-    def fold(pdf):
-        import numpy as np
-        import pandas as pd
-
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["key", "bk", "n"] + list(fields))
-        pdf = pdf.sort_values(["key", "bk", "ts", "id"], kind="mergesort")
-        key = pdf["key"].to_numpy()
-        kc = _chain_key_codes(pdf["key"])
-        bk = pdf["bk"].to_numpy()
-        v = pdf["v"].to_numpy(dtype=np.float64)
-        fr = pdf["fr"].to_numpy(dtype=bool)
-        boundary = np.ones(len(pdf), dtype=bool)
-        boundary[1:] = (kc[1:] != kc[:-1]) | (bk[1:] != bk[:-1])
-        starts = np.flatnonzero(boundary)
-        n_chains = len(starts)
-        lengths = np.diff(np.append(starts, len(pdf)))
-        # chains sorted by length DESC -> at step t the active lanes are
-        # a contiguous prefix (no fancy-indexed writebacks in the loop)
-        order = np.argsort(-lengths, kind="stable")
-        rank = np.empty(n_chains, dtype=np.int64)
-        rank[order] = np.arange(n_chains)
-        cid = np.cumsum(boundary) - 1
-        newcid = rank[cid]
-        pos = np.arange(len(pdf)) - np.repeat(starts, lengths)
-        lens_sorted = lengths[order]
-        lmax = int(lens_sorted[0])
-        vmat = np.zeros((n_chains, lmax))
-        vmat[newcid, pos] = v
-        fmat = np.zeros((n_chains, lmax), dtype=bool)
-        fmat[newcid, pos] = fr
-        v0, f0 = vmat[:, 0], fmat[:, 0]
-        acc_m = [
-            [np.where(f0, 0.0, m_rows[i][j]) for j in range(d)]
-            for i in range(d)
-        ]
-        acc_a = [np.where(f0, fas[i] * v0, cxs[i] * v0) for i in range(d)]
-        neg = -lens_sorted
-        for t in range(1, lmax):
-            nt = int(np.searchsorted(neg, -t, side="left"))
-            xv = vmat[:nt, t]
-            ft = fmat[:nt, t]
-            # rows past position 0 are only "first" under duplicated
-            # (ts, id) order keys (out of contract); honor them anyway
-            anyf = bool(ft.any())
-            new_m = [[None] * d for _ in range(d)]
-            new_a = [None] * d
-            for i in range(d):
-                xm = [
-                    np.where(ft, 0.0, m_rows[i][k]) if anyf else m_rows[i][k]
-                    for k in range(d)
-                ]
-                for j in range(d):
-                    e = xm[0] * acc_m[0][j][:nt]
-                    for k in range(1, d):
-                        e = e + xm[k] * acc_m[k][j][:nt]
-                    new_m[i][j] = e
-                e = xm[0] * acc_a[0][:nt]
-                for k in range(1, d):
-                    e = e + xm[k] * acc_a[k][:nt]
-                xa = (
-                    np.where(ft, fas[i] * xv, cxs[i] * xv)
-                    if anyf
-                    else cxs[i] * xv
-                )
-                new_a[i] = e + xa
-            for i in range(d):
-                for j in range(d):
-                    acc_m[i][j][:nt] = new_m[i][j]
-                acc_a[i][:nt] = new_a[i]
-        out = {
-            "key": key[starts][order],
-            "bk": bk[starts][order],
-            "n": lens_sorted.astype(np.int64),
-        }
-        for i in range(d):
-            for j in range(d):
-                out[f"m_{i}_{j}"] = acc_m[i][j]
-        for i in range(d):
-            out[f"a_{i}"] = acc_a[i]
-        return pd.DataFrame(out)
-
-    return fold
-
-
-def _arrow_carry_fold_fn(d: int, fields):
-    """Build the applyInPandas function for the fused-Arrow phase-2
-    carry: chains are KEYS, elements are the (dimension-sized) bucket
-    maps in bk order, x is now a per-lane full matrix (not the constant
-    transition). Same step-fold shape and the same scalar op order as
-    ``_matrix_affine_fold``'s compose (ascending-k left-associated
-    sums, addend last, all terms kept) — bit-equal by construction."""
-    def fold(pdf):
-        import numpy as np
-        import pandas as pd
-
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["key", "n_obs"] + list(fields))
-        pdf = pdf.sort_values(["key", "bk"], kind="mergesort")
-        key = pdf["key"].to_numpy()
-        kc = _chain_key_codes(pdf["key"])
-        boundary = np.ones(len(pdf), dtype=bool)
-        boundary[1:] = kc[1:] != kc[:-1]
-        starts = np.flatnonzero(boundary)
-        n_chains = len(starts)
-        lengths = np.diff(np.append(starts, len(pdf)))
-        order = np.argsort(-lengths, kind="stable")
-        rank = np.empty(n_chains, dtype=np.int64)
-        rank[order] = np.arange(n_chains)
-        cid = np.cumsum(boundary) - 1
-        newcid = rank[cid]
-        pos = np.arange(len(pdf)) - np.repeat(starts, lengths)
-        lens_sorted = lengths[order]
-        lmax = int(lens_sorted[0])
-        pad = {}
-        for f in fields:
-            a = np.zeros((n_chains, lmax))
-            a[newcid, pos] = pdf[f].to_numpy(dtype=np.float64)
-            pad[f] = a
-        n_obs = np.zeros(n_chains, dtype=np.int64)
-        np.add.at(n_obs, newcid, pdf["n"].to_numpy(dtype=np.int64))
-        acc_m = [
-            [pad[f"m_{i}_{j}"][:, 0].copy() for j in range(d)]
-            for i in range(d)
-        ]
-        acc_a = [pad[f"a_{i}"][:, 0].copy() for i in range(d)]
-        neg = -lens_sorted
-        for t in range(1, lmax):
-            nt = int(np.searchsorted(neg, -t, side="left"))
-            xm = [
-                [pad[f"m_{i}_{k}"][:nt, t] for k in range(d)]
-                for i in range(d)
-            ]
-            xa = [pad[f"a_{i}"][:nt, t] for i in range(d)]
-            new_m = [[None] * d for _ in range(d)]
-            new_a = [None] * d
-            for i in range(d):
-                for j in range(d):
-                    e = xm[i][0] * acc_m[0][j][:nt]
-                    for k in range(1, d):
-                        e = e + xm[i][k] * acc_m[k][j][:nt]
-                    new_m[i][j] = e
-                e = xm[i][0] * acc_a[0][:nt]
-                for k in range(1, d):
-                    e = e + xm[i][k] * acc_a[k][:nt]
-                new_a[i] = e + xa[i]
-            for i in range(d):
-                for j in range(d):
-                    acc_m[i][j][:nt] = new_m[i][j]
-                acc_a[i][:nt] = new_a[i]
-        out = {"key": key[starts][order], "n_obs": n_obs}
-        for i in range(d):
-            for j in range(d):
-                out[f"m_{i}_{j}"] = acc_m[i][j]
-        for i in range(d):
-            out[f"a_{i}"] = acc_a[i]
-        return pd.DataFrame(out)
-
-    return fold
-
-
 def _arrow_fused_fold_fn(m, cx, first_a, d: int, seed: str = "zero"):
     """Build the applyInPandas function for the FUSED fused-Arrow path:
     one shard holds whole KEYS, and the function runs all three steps —
@@ -1471,9 +1291,9 @@ def _arrow_fused_fold_fn(m, cx, first_a, d: int, seed: str = "zero"):
 
 
 def _matrix_carry_per_key(per_bucket: DataFrame, d: int, fields) -> DataFrame:
-    """Phase-2 carry shared by the HOF and Arrow per-bucket folds: fold
-    each key's dimension-sized bucket list (#buckets rows) in bk order
-    with the generated matrix compose. Input: (key, bk, n, p struct)."""
+    """Phase-2 carry of the HOF path: fold each key's dimension-sized
+    bucket list (#buckets rows) in bk order with the generated matrix
+    compose. Input: (key, bk, n, p struct)."""
     return per_bucket.groupBy("key").agg(
         F.sum("n").alias("n_obs"),
         _matrix_affine_fold(
@@ -1527,7 +1347,7 @@ def holt_winters_by_key(
     from x_{p+1}; keys with fewer than p observations return NULL
     smoothed fields (n_obs still real).
 
-    ``impl`` picks the execution strategy; all three are bit-identical
+    ``impl`` picks the execution strategy; both are bit-identical
     (same scalar op order per chain — hash-proven by test):
 
     - ``'arrow'`` (default): FUSED fused-Arrow path — ONE exchange
@@ -1540,14 +1360,11 @@ def holt_winters_by_key(
       expressions per element (lambda HOFs don't codegen), measured 12x
       the per-row cost. Shard memory is bounded by rows/shard — a whole
       key lands in one shard, so for pathologically hot keys use
-      ``'arrow_staged'``.
-    - ``'arrow_staged'``: two Arrow stages — the chain fold shards by
-      ``xxhash64(key, bk)`` (per-(key, bucket) memory bound, hot keys
-      spread across their buckets), the carry by ``xxhash64(key)`` over
-      the dimension-sized per-bucket map rows. One extra exchange +
-      apply stage; the skew-safe flavor.
+      ``'hof'``.
     - ``'hof'``: the all-JVM expression fold — the parity anchor whose
-      arithmetic the oracle SQL mirrors by construction.
+      arithmetic the oracle SQL mirrors by construction. It groups by
+      (key, bucket), so memory is bounded per (key, bucket) and a hot
+      key spreads across its buckets.
 
     Returns (key, n_obs, level, trend, season_next, forecast_1) where
     season_next = s_{t+1-p} (the slot the next step consumes) and
@@ -1575,13 +1392,8 @@ def holt_winters_by_key(
         raise ValueError(f"unknown seed {seed!r} (expected 'zero'|'classical')")
     if seed == "classical" and impl != "arrow":
         raise ValueError("seed='classical' is implemented on impl='arrow'")
-    if impl in ("arrow_staged", "hof"):
-        # only these paths need the min-struct firsts aggregate — the
-        # fused path detects first elements in numpy (whole keys/shard)
-        firsts = base.groupBy("key").agg(
-            F.min(F.struct(F.col("ts"), F.col("id"))).alias("_first")
-        )
-        is_first = F.struct(F.col("ts"), F.col("id")) == F.col("_first")
+    if impl not in ("arrow", "hof"):
+        raise ValueError(f"unknown impl {impl!r} (expected 'arrow' or 'hof')")
     if impl == "arrow":
         # fused single-stage path: ONE exchange (the shard groupBy), no
         # firsts aggregate/join — whole keys per shard, so the first
@@ -1611,82 +1423,43 @@ def holt_winters_by_key(
                 ],
             )
         return res.drop("primed")
-    if impl == "arrow_staged":
-        mapped = _join_firsts(base, firsts).select(
-            "key",
-            "bk",
-            "ts",
-            "id",
-            "v",
-            is_first.alias("fr"),
-            F.pmod(F.xxhash64("key", "bk"), F.lit(n_shards)).alias("_shard"),
-        )
-        bt = mapped.schema["bk"].dataType.simpleString()
-        out_schema = f"key {kt}, bk {bt}, n bigint, " + ", ".join(
-            f"{f} double" for f in fields
-        )
-        folded = mapped.groupBy("_shard").applyInPandas(
-            _arrow_bucket_fold_fn(m, cx, first_a, d, fields), out_schema
-        )
-        # phase-2 carry, also fused-Arrow: input is the per-(key, bucket)
-        # map rows (dimension-sized per key), sharded so keys never split
-        carry_in = folded.withColumn(
-            "_shard", F.pmod(F.xxhash64("key"), F.lit(n_shards))
-        )
-        carry_schema = f"key {kt}, n_obs bigint, " + ", ".join(
-            f"{f} double" for f in fields
-        )
-        per_key = carry_in.groupBy("_shard").applyInPandas(
-            _arrow_carry_fold_fn(d, fields), carry_schema
-        )
-        level = F.col("a_0")
-        trend = F.col("a_1")
-        season_next = F.col(f"a_{d - 1}")
-        return per_key.select(
-            "key",
-            "n_obs",
-            level.alias("level"),
-            trend.alias("trend"),
-            season_next.alias("season_next"),
-            (level + trend + season_next).alias("forecast_1"),
-        )
-    elif impl == "hof":
-        cols = []
-        for i in range(d):
-            for j in range(d):
-                cols.append(
-                    F.when(is_first, F.lit(0.0))
-                    .otherwise(F.lit(m[i][j]))
-                    .alias(f"m_{i}_{j}")
-                )
-        for i in range(d):
+    # the HOF path: the min-struct firsts aggregate marks each key's
+    # absorbing element (the fused path detects it in numpy)
+    firsts = base.groupBy("key").agg(
+        F.min(F.struct(F.col("ts"), F.col("id"))).alias("_first")
+    )
+    is_first = F.struct(F.col("ts"), F.col("id")) == F.col("_first")
+    cols = []
+    for i in range(d):
+        for j in range(d):
             cols.append(
-                F.when(is_first, F.lit(first_a[i]) * F.col("v"))
-                .otherwise(F.lit(cx[i]) * F.col("v"))
-                .alias(f"a_{i}")
+                F.when(is_first, F.lit(0.0))
+                .otherwise(F.lit(m[i][j]))
+                .alias(f"m_{i}_{j}")
             )
-        mapped = _join_firsts(base, firsts).select(
-            "key", "bk", "ts", "id", *cols
+    for i in range(d):
+        cols.append(
+            F.when(is_first, F.lit(first_a[i]) * F.col("v"))
+            .otherwise(F.lit(cx[i]) * F.col("v"))
+            .alias(f"a_{i}")
         )
-        per_bucket = mapped.groupBy("key", "bk").agg(
-            F.count(F.lit(1)).alias("n"),
-            _matrix_affine_fold(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("ts", "id", *fields))
-                    ),
-                    lambda s: F.struct(
-                        *[s.getField(f).alias(f) for f in fields]
-                    ),
+    mapped = _join_firsts(base, firsts).select(
+        "key", "bk", "ts", "id", *cols
+    )
+    per_bucket = mapped.groupBy("key", "bk").agg(
+        F.count(F.lit(1)).alias("n"),
+        _matrix_affine_fold(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("ts", "id", *fields))
                 ),
-                d,
-            ).alias("p"),
-        )
-    else:
-        raise ValueError(
-            f"unknown impl {impl!r} "
-            "(expected 'arrow', 'arrow_staged', or 'hof')"
-        )
+                lambda s: F.struct(
+                    *[s.getField(f).alias(f) for f in fields]
+                ),
+            ),
+            d,
+        ).alias("p"),
+    )
     per_key = _matrix_carry_per_key(per_bucket, d, fields)
     level = F.col("p").getField("a_0")
     trend = F.col("p").getField("a_1")

@@ -7260,9 +7260,9 @@ def _pagerank_oracle() -> str:
 def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the nation-level trade digraph (graph.pagerank):
     the q7 join tree rolls 100 TB of lineitem up to a <=25-node /
-    <=625-edge graph in one pass; 10 damped iterations then run as
-    dimension-sized joins (oracle: the same recurrence unrolled into
-    chained CTEs)."""
+    <=625-edge graph in one pass; 10 damped iterations then fold on
+    the driver over the collected edge list (oracle: the same
+    recurrence unrolled into chained CTEs)."""
     from asctb_ct_label_mapper_spark.operators.graph import (
         nation_trade_edges,
         pagerank,
@@ -7473,10 +7473,9 @@ def _textrank_oracle() -> str:
 @query("textrank_keywords_docs", _textrank_oracle())
 def textrank_keywords_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keywords over the corpus (textstats.textrank_keywords):
-    PageRank (the shared graph.pagerank recurrence, impl='frames' —
-    the distributed loop) on the word-adjacency graph; the oracle
-    replays the unrolled recurrence with the node count derived
-    in-query (sql_pagerank_dynamic)."""
+    PageRank (the shared graph.pagerank driver fold) on the
+    word-adjacency graph; the oracle replays the unrolled recurrence
+    with the node count derived in-query (sql_pagerank_dynamic)."""
     from asctb_ct_label_mapper_spark.operators.textstats import (
         textrank_keywords,
     )

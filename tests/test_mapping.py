@@ -512,6 +512,19 @@ def test_only_ivf_takes_the_relational_report(spark, reference, monkeypatch):
     assert 0 < ivf[2]["match_score_1"] < 1
 
 
+def test_ivf_on_reference_smaller_than_its_lists(spark, reference):
+    """IVF caps its k-means lists at the reference's row count, so 5
+    rows against the default 16 lists still map every label."""
+    labels = spark.createDataFrame(
+        [("t", "Basal cell"), ("t", "club cell"), ("t", "mystery blob"), ("t", "club cell")],
+        "source string, raw_input_label string",
+    )
+    out = map_labels_to_reference(labels, reference, k=2, strategy="ivf").collect()
+    assert sorted(r["raw_input_label"] for r in out) == ["Basal cell", "club cell", "mystery blob"]
+    got = {r["raw_input_label"]: r for r in out}
+    assert got["club cell"]["matched_asctb_id_1"] == "CL:0000158"
+
+
 @pytest.mark.parametrize("strategy", ["join", "nope"])
 def test_unknown_strategy_raises(spark, reference, strategy):
     """"auto", "blocked" and "ivf" are the strategies; "join" is no

@@ -255,20 +255,28 @@ def test_label_propagation_two_cliques(spark):
 
 
 def test_label_propagation_frames_matches_local(spark):
+    """The driver fold equals the DuckDB mirror over the same edges."""
+    import duckdb
+
     from asctb_ct_label_mapper_spark.operators.graph import (
         label_propagation,
+        sql_label_propagation,
     )
 
     edges = _lpa_edges(spark)
     local = sorted(
         (r["node"], r["community"])
-        for r in label_propagation(edges, iters=3, impl="local").collect()
+        for r in label_propagation(edges, iters=3).collect()
     )
-    frames = sorted(
-        (r["node"], r["community"])
-        for r in label_propagation(edges, iters=3, impl="frames").collect()
+    con = duckdb.connect()
+    con.register("edges_in", edges.toPandas())
+    oracle = sorted(
+        con.sql(
+            "WITH edges AS (SELECT * FROM edges_in), "
+            f"{sql_label_propagation(3)}"
+        ).fetchall()
     )
-    assert local == frames
+    assert local == oracle
 
 
 def test_label_propagation_pair_oscillates(spark):
@@ -294,13 +302,17 @@ def test_label_propagation_pair_oscillates(spark):
     assert after2 == {"m": "m", "n": "n"}
 
 
-def test_label_propagation_rejects_bad_impl(spark):
-    from asctb_ct_label_mapper_spark.operators.graph import (
-        label_propagation,
-    )
+def test_label_propagation_rejects_bad_impl(spark, monkeypatch):
+    """Both driver folds collect through the bounded guard: an edge list
+    past ``graph.LOCAL_EDGE_ROWS`` raises instead of being collected."""
+    from asctb_ct_label_mapper_spark.operators import graph
+    from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
 
-    with pytest.raises(ValueError):
-        label_propagation(_lpa_edges(spark), impl="nope")
+    monkeypatch.setattr(graph, "LOCAL_EDGE_ROWS", 2)
+    with pytest.raises(GroupBoundExceeded, match="label_propagation"):
+        graph.label_propagation(_lpa_edges(spark))
+    with pytest.raises(GroupBoundExceeded, match="pagerank"):
+        graph.pagerank(_lpa_edges(spark), 6)
 
 
 # ---------------------------------------------------------------------------

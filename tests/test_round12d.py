@@ -85,8 +85,6 @@ def test_eigenvector_empty_and_guard(spark):
     )
     with pytest.raises(GroupBoundExceeded):
         eigenvector_centrality(edges, max_collect_rows=1)
-    with pytest.raises(ValueError):
-        eigenvector_centrality(edges, impl="frames")
 
 
 # ---------------------------------------------------------------------------

@@ -97,6 +97,21 @@ def test_empty_reference_blocked_equals_join(spark):
     assert joined == blocked == []
 
 
+def test_ivf_on_one_row_reference(spark):
+    """A 1-row reference skips k-means (MLlib rejects k < 2) and uses
+    one list: every query gets the one reference row."""
+    from asctb_ct_label_mapper_spark.operators.similarity import similarity_topk
+
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.5]), (2, [0.0, 2.0])], "vec_id long, embedding array<float>"
+    )
+    r = spark.createDataFrame([(7, [2.0, 1.0])], "vec_id long, embedding array<float>")
+    got = similarity_topk(q, r, 2, ["vec_id"], "vec_id", impl="ivf").collect()
+    assert sorted((x["vec_id"], x["ref_id"], x["rank"]) for x in got) == [
+        (1, 7, 1), (2, 7, 1)
+    ]
+
+
 def test_join_strategy_broadcasts_reference(spark):
     qdf, rdf = _vec_tables(spark)
     out = top_k_similarity_join(qdf, rdf, 3, ["vec_id"], "vec_id")

@@ -303,11 +303,11 @@ def test_holt_winters_matches_sequential_multi_bucket(spark):
 
 
 def test_holt_winters_arrow_equals_hof(spark):
-    """The fused-Arrow path (and the staged one) are BIT-IDENTICAL to
-    the HOF parity anchor — raw IEEE doubles, no tolerance — on a
-    multi-key, multi-bucket fixture with negative values (signed-zero
-    products exist: the absorbing map multiplies by literal 0.0) and
-    per-chain lengths from 1 to 9."""
+    """The fused-Arrow path is BIT-IDENTICAL to the HOF parity anchor —
+    raw IEEE doubles, no tolerance — on a multi-key, multi-bucket
+    fixture with negative values (signed-zero products exist: the
+    absorbing map multiplies by literal 0.0) and per-chain lengths from
+    1 to 9."""
     from asctb_ct_label_mapper_spark.operators.timeseries import (
         holt_winters_by_key,
     )
@@ -323,20 +323,19 @@ def test_holt_winters_arrow_equals_hof(spark):
             )
     df = spark.createDataFrame(rows, EV_SCHEMA)
     ref = {r["key"]: r for r in holt_winters_by_key(df, impl="hof").collect()}
-    for impl in ("arrow", "arrow_staged"):
-        got = {r["key"]: r for r in holt_winters_by_key(df, impl=impl).collect()}
-        assert set(got) == set(ref)
-        for k in ref:
-            for f in ("n_obs", "level", "trend", "season_next", "forecast_1"):
-                assert got[k][f] == ref[k][f], (impl, k, f)
+    got = {r["key"]: r for r in holt_winters_by_key(df, impl="arrow").collect()}
+    assert set(got) == set(ref)
+    for k in ref:
+        for f in ("n_obs", "level", "trend", "season_next", "forecast_1"):
+            assert got[k][f] == ref[k][f], (k, f)
 
 
 def test_holt_winters_arrow_null_key_parity(spark):
     """A NULL key is ONE group (ADVICE r9): numpy NaN != NaN would make
-    every NULL-key row its own singleton chain in the arrow folds,
+    every NULL-key row its own singleton chain in the arrow fold,
     emitting multiple NULL-key rows — impl='hof' and the oracle treat
     NULL as a single group. The factorize-based boundary must keep the
-    arrow paths bit-identical to hof on a fixture with 6 NULL-key rows
+    arrow path bit-identical to hof on a fixture with 6 NULL-key rows
     spanning 3 buckets plus two ordinary keys."""
     from asctb_ct_label_mapper_spark.operators.timeseries import (
         holt_winters_by_key,
@@ -354,14 +353,13 @@ def test_holt_winters_arrow_null_key_parity(spark):
     df = spark.createDataFrame(rows, EV_SCHEMA)
     ref = {r["key"]: r for r in holt_winters_by_key(df, impl="hof").collect()}
     assert None in ref and len(ref) == 3
-    for impl in ("arrow", "arrow_staged"):
-        rows_got = holt_winters_by_key(df, impl=impl).collect()
-        assert len(rows_got) == 3, (impl, rows_got)  # ONE null-key row
-        got = {r["key"]: r for r in rows_got}
-        assert set(got) == set(ref)
-        for k in ref:
-            for f in ("n_obs", "level", "trend", "season_next", "forecast_1"):
-                assert got[k][f] == ref[k][f], (impl, k, f)
+    rows_got = holt_winters_by_key(df, impl="arrow").collect()
+    assert len(rows_got) == 3, rows_got  # ONE null-key row
+    got = {r["key"]: r for r in rows_got}
+    assert set(got) == set(ref)
+    for k in ref:
+        for f in ("n_obs", "level", "trend", "season_next", "forecast_1"):
+            assert got[k][f] == ref[k][f], (k, f)
 
 
 def _hw_classical_seq(xs, a=0.5, b=0.25, g=0.25, p=4):

@@ -5,13 +5,15 @@ other at one embedding width, to place ``similarity.EXACT_FLOP_BUDGET``
     python tools/sweep_topk_crossover.py --dim 768 --refs 100,300,1000 \
         --queries 4,8,16,32,64,128 --reps 3
 
-For every reference size C a seeded random reference is held in
-``mapping.reference_projection`` (as repeated ``map_raw_labels`` calls
-hold it), and for every query count q the same q stub-encoded labels are
-ranked with ``similarity_topk(impl="join")`` and
-``similarity_topk(impl="blocked")``, k=2: one warm-up call each, then
-the median wall time of ``--reps`` collected results. One line per
-(C, q) goes to stdout with q*C*dim and the faster rung.
+For every reference size C a seeded random reference is timed twice:
+held in ``mapping.reference_projection`` (pinned, as repeated
+``map_raw_labels`` calls hold it) and as the plain frame (unpinned, so
+each blocked call pays its stats job and reference collect). For every
+query count q the same q stub-encoded labels are ranked with
+``similarity_topk(impl="join")`` and ``similarity_topk(impl="blocked")``,
+k=2: one warm-up call each, then the median wall time of ``--reps``
+collected results. One line per (C, q) goes to stdout with q*C*dim, the
+four times and the faster rung on each reference.
 """
 
 from __future__ import annotations
@@ -79,7 +81,10 @@ def main() -> None:
     spark = get_spark("topk-crossover")
     cores = spark.sparkContext.defaultParallelism
     print(f"cores={cores} dim={args.dim} reps={args.reps}")
-    print("C\tq\tq*C*d\tjoin_s\tblocked_s\tfaster")
+    print(
+        "C\tq\tq*C*d\tpinned_join_s\tpinned_blocked_s\tunpinned_join_s\t"
+        "unpinned_blocked_s\tfaster_pinned\tfaster_unpinned"
+    )
     for n_refs in (int(x) for x in args.refs.split(",")):
         ref = make_reference(spark, n_refs, args.dim, args.seed)
         with reference_projection(ref) as proj:
@@ -94,12 +99,19 @@ def main() -> None:
                 ).withColumn(
                     "embedding", stub_encode_udf(F.col("raw_input_label"), dim=args.dim)
                 )
-                t_join = time_call(queries, proj, "join", args.reps)
-                t_blk = time_call(queries, proj, "blocked", args.reps)
-                faster = "join" if t_join < t_blk else "blocked"
+                times = [
+                    time_call(queries, held, impl, args.reps)
+                    for held in (proj, ref)
+                    for impl in ("join", "blocked")
+                ]
+                faster = [
+                    "join" if t_join < t_blk else "blocked"
+                    for t_join, t_blk in (times[:2], times[2:])
+                ]
                 print(
                     f"{n_refs}\t{q}\t{q * n_refs * args.dim:.2e}\t"
-                    f"{t_join:.3f}\t{t_blk:.3f}\t{faster}",
+                    + "\t".join(f"{t:.3f}" for t in times)
+                    + "\t" + "\t".join(faster),
                     flush=True,
                 )
     spark.stop()
