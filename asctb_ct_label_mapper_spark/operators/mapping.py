@@ -181,7 +181,10 @@ def map_labels_to_reference(
     the resident table. Each match carries the ``CT_NAME``/``all_text`` of
     the row it scored, also when reference rows share a ``CT_ID``; a
     zero-norm reference row scores NULL and ranks after every scored row,
-    and an empty reference leaves every match column NULL. On the IVF
+    and an empty reference leaves every match column NULL. With k larger
+    than the reference's C rows, ranks 1..C are the exact top-k and the
+    match columns of ranks C+1..k are NULL; an exact hit still reports
+    rank 1 alone. On the IVF
     rung the CT_NAME/all_text payload joins back by CT_ID afterward —
     broadcast while the reference fits the budget, a plain equi-join past
     it — then the ranks pivot into columns and
@@ -204,10 +207,11 @@ def map_labels_to_reference(
     # owns its lifetime, so multi-organ loops release executor memory
     # deterministically instead of accumulating one LRU-evictable cache
     # entry per call.
-    if not (
+    owned = not (
         list(reference.columns) == list(_REF_PROJ_COLS)
         and _is_persisted(reference)
-    ):
+    )
+    if owned:
         reference = reference.select(*_REF_PROJ_COLS).persist()
 
     state = resident_reference(
@@ -215,6 +219,9 @@ def map_labels_to_reference(
     )
     in_budget = state.ids is not None
     if strategy == "blocked" or (strategy == "auto" and in_budget):
+        if owned:
+            # the report reads only the state's broadcasts
+            reference.unpersist()
         # Matmul cost follows rows: widen a narrow seed. A local seed
         # already has min(rows, parallelism) partitions, so widening it
         # would only add a shuffle.

@@ -5,28 +5,33 @@ the full reference matrix and calling sklearn ``cosine_similarity`` then
 ``np.argsort(-sims)[:k]`` (main.py:84-92, loop at :198-205). That is
 O(L) jobs with O(L^2) masked writes.
 
-Engine design (SURVEY §4 item 1) — one job, two physical strategies behind
-one logical API:
+Engine design (SURVEY §4 item 1) — one job, two exact physical strategies
+behind one logical API:
 
 1. ``top_k_similarity_join`` — broadcast cross join + native cosine
    expression + window top-k. Catalyst picks BroadcastNestedLoopJoin; the
-   window shuffles on the query key. Correct and simple; right whenever the
-   reference side fits in a broadcast (the reference table is 83 rows; even
-   1e6 x 64 floats is ~256 MB — beyond that use strategy 2).
+   window shuffles on the query key. It needs no collect of the
+   reference and is the rung the others are compared against;
+   ``similarity_topk`` never picks it on its own (it lost every cell of
+   the dim-768 sweep in SCALING.md).
 2. ``top_k_similarity_blocked`` — ``mapInPandas`` over the (large) query
    side with the reference matrix broadcast once per executor as a numpy
    array: per Arrow batch, one blocked matmul + ``argpartition`` top-k, no
-   window, no shuffle at all. This is the 100 TB path: queries stream
-   through executors, reference stays resident, output is k rows per query.
+   window, no shuffle at all. Queries stream through executors, the
+   reference stays resident, output is k rows per query.
 
 Both produce identical rows: query id columns + ``ref_id`` + ``score`` +
 ``rank`` (rank 1..k, ties broken by ascending ref id — the engine's
 deterministic replacement for the reference's argsort tie order, SURVEY §4
-item 3).
+item 3). Every relational rung ranks through one tail (``_rank_tail``)
+and the numpy kernels through one tie kernel (``_top_cols``).
 
-``lsh_bucketed_candidates`` adds the approximate scale path: random
-hyperplane signatures bucket vectors so candidate generation is an equi-join
-(shuffle on bucket id) instead of a cross join.
+``similarity_topk(impl='auto')`` routes on the reference alone, as the
+flagship does: the blocked rung inside the broadcast budget, IVF past it;
+the queries are never counted. ``lsh_bucketed_candidates`` adds the
+approximate scale path: random hyperplane signatures bucket vectors so
+candidate generation is an equi-join (shuffle on bucket id) instead of a
+cross join.
 """
 
 from __future__ import annotations
@@ -43,8 +48,78 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from asctb_ct_label_mapper_spark.functions.vector import dot_expr, norm_expr
+from asctb_ct_label_mapper_spark.functions.vector import cosine_expr, dot_expr, norm_expr
 from asctb_ct_label_mapper_spark.plans.partitioning import ensure_min_partitions
+
+
+# The broadcast budget: past ~256 MiB of raw float64 the reference no longer
+# ships as a per-executor resident matrix, the exact rungs are off the
+# table and candidate generation must be a bucketed equi-join (IVF). Read at
+# call time by ``_over_budget``, its one comparison.
+REF_BROADCAST_BUDGET_BYTES: int = 256 << 20
+# No package code routes on this: perfbench run records derive their
+# ``crossover_q`` from it.
+EXACT_FLOP_BUDGET: float = 1e7
+
+
+def _over_budget(n_refs: int, dim: int) -> bool:
+    """Whether a reference's float64 matrix is past the broadcast budget:
+    the one test behind routing, resident state and the collect guard."""
+    return n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES
+
+
+def _rank_tail(
+    scored: DataFrame,
+    query_id_cols: Sequence[str],
+    k: int,
+    score: str = "score",
+    rank: str = "rank",
+) -> DataFrame:
+    """The ladder's one rank tail: ``rank`` is the row number per query in
+    (``score`` DESC NULLS LAST, ``ref_id`` ASC) order, kept up to ``k``."""
+    w = Window.partitionBy(*query_id_cols).orderBy(F.desc(score), F.asc("ref_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _broadcast_pairs(
+    queries: DataFrame,
+    reference: DataFrame,
+    ref_id_col: str,
+    query_vec_col: str,
+    ref_vec_col: str,
+    ref_payload_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Every (query, reference) pair of a broadcast cross join with its
+    cosine ``score``: the exact relational scorer.
+
+    Norms are precomputed ONCE PER SIDE before the join (projections, no
+    shuffle): with q queries and c references, cosine inside the join would
+    otherwise recompute norm(query) c times and norm(ref) q times — at
+    q=1e4, c=1e3 that is 1e7 redundant O(d) reductions. After the hoist the
+    per-pair work is one dot product and one division.
+
+    Rows carry the query columns, ``ref_id``, the payload, ``score`` (NULL
+    when either side has zero norm) and ``_has_dir`` (the query vector is
+    non-NULL with a non-zero norm)."""
+    ref = reference.select(
+        F.col(ref_id_col).alias("ref_id"),
+        F.col(ref_vec_col).alias("_ref_vec"),
+        *[F.col(c) for c in ref_payload_cols],
+    ).withColumn("_rnorm", norm_expr(F.col("_ref_vec")))
+    # The broadcast cross join parallelizes over QUERY partitions: a narrow
+    # dense scan (1-3 partitions) would evaluate the whole q x c product on
+    # as many cores.
+    q = ensure_min_partitions(queries).withColumn("_qnorm", norm_expr(F.col(query_vec_col)))
+    denom = F.col("_qnorm") * F.col("_rnorm")
+    return (
+        q.crossJoin(F.broadcast(ref))
+        .withColumn(
+            "score",
+            F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
+        )
+        .withColumn("_has_dir", F.coalesce(F.col("_qnorm") > 0, F.lit(False)))
+        .drop("_ref_vec", "_qnorm", "_rnorm")
+    )
 
 
 def top_k_similarity_join(
@@ -57,13 +132,8 @@ def top_k_similarity_join(
     ref_vec_col: str = "embedding",
     ref_payload_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Broadcast cross join + window top-k (exact, strategy 1).
-
-    Norms are precomputed ONCE PER SIDE before the join (projections, no
-    shuffle): with q queries and c references, cosine inside the join would
-    otherwise recompute norm(query) c times and norm(ref) q times — at
-    q=1e4, c=1e3 that is 1e7 redundant O(d) reductions. After the hoist the
-    per-pair work is one dot product and one division.
+    """Broadcast cross join (:func:`_broadcast_pairs`) + window top-k
+    (exact, strategy 1).
 
     A query whose vector is NULL or zero-norm has no direction, so no
     neighbours: it gets ONE rank-1 row with NULL ``ref_id``, payload and
@@ -72,34 +142,16 @@ def top_k_similarity_join(
     ascending ref id (``score DESC NULLS LAST, ref_id ASC``; the blocked
     rung ranks it the same way).
     """
-    ref = reference.select(
-        F.col(ref_id_col).alias("ref_id"),
-        F.col(ref_vec_col).alias("_ref_vec"),
-        *[F.col(c) for c in ref_payload_cols],
-    ).withColumn("_rnorm", norm_expr(F.col("_ref_vec")))
-    # The broadcast cross join parallelizes over QUERY partitions: a narrow
-    # dense scan (1-3 partitions) would evaluate the whole q x c product on
-    # as many cores.
-    q = ensure_min_partitions(queries).withColumn("_qnorm", norm_expr(F.col(query_vec_col)))
-    denom = F.col("_qnorm") * F.col("_rnorm")
+    scored = _broadcast_pairs(
+        queries, reference, ref_id_col, query_vec_col, ref_vec_col, ref_payload_cols
+    )
     # a query without a direction keeps every ref pairing with ref, payload
     # and score nulled; the rank filter below keeps one of them
-    has_dir = F.coalesce(F.col("_qnorm") > 0, F.lit(False))
-    scored = (
-        q.crossJoin(F.broadcast(ref))
-        .withColumn(
-            "score",
-            F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
-        )
-        .withColumn("_has_dir", has_dir)
-        .drop("_ref_vec", "_qnorm", "_rnorm")
-    )
     for c in ("ref_id", *ref_payload_cols):
         scored = scored.withColumn(c, F.when(F.col("_has_dir"), F.col(c)))
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & (F.col("_has_dir") | (F.col("rank") == 1)))
+        _rank_tail(scored, query_id_cols, k)
+        .filter(F.col("_has_dir") | (F.col("rank") == 1))
         .drop(query_vec_col, "_has_dir")
     )
 
@@ -158,13 +210,12 @@ def _guard_ref_collect(n_refs: int, dim: int, rung: str) -> None:
     the reference: rungs whose shape is driver-resident (blocked, HNSW)
     must fail with the documented remediation instead of OOMing the
     driver when handed a beyond-broadcast reference (r13 ADVICE —
-    ``choose_similarity_impl`` never routes such a reference here, but
-    explicit callers hit the collect directly)."""
-    ref_bytes = n_refs * dim * 8
-    if ref_bytes > REF_BROADCAST_BUDGET_BYTES:
+    ``impl='auto'`` never routes such a reference here, but explicit
+    callers hit the collect directly)."""
+    if _over_budget(n_refs, dim):
         raise ValueError(
             f"{rung}: reference exceeds the broadcast budget "
-            f"(~{ref_bytes >> 20} MiB > "
+            f"(~{n_refs * dim * 8 >> 20} MiB > "
             f"{REF_BROADCAST_BUDGET_BYTES >> 20} MiB). Use "
             "similarity_topk(impl='ivf') — its bucketed candidate "
             "equi-join is the rung whose contract survives a "
@@ -205,7 +256,7 @@ def resident_reference(
     ):
         return pinned
     n_refs, dim = reference_stats(reference, ref_vec_col)
-    if n_refs * dim * 8 > REF_BROADCAST_BUDGET_BYTES:
+    if _over_budget(n_refs, dim):
         return ResidentReference(ref_id_col, ref_vec_col, n_refs, dim)
     rows = reference.select(ref_id_col, ref_vec_col, *payload_cols).collect()
     ids = np.array([r[0] for r in rows])
@@ -222,6 +273,21 @@ def resident_reference(
 
 
 @contextmanager
+def _held(reference: DataFrame, state: ResidentReference) -> Iterator[ResidentReference]:
+    """Serve ``state`` as ``reference``'s pin for the block, then restore
+    whatever pin it had; the broadcasts outlive the block."""
+    prior = _PINNED.get(reference)
+    _PINNED[reference] = state
+    try:
+        yield state
+    finally:
+        if prior is None:
+            _PINNED.pop(reference, None)
+        else:
+            _PINNED[reference] = prior
+
+
+@contextmanager
 def pin_reference(
     reference: DataFrame,
     ref_id_col: str,
@@ -234,12 +300,37 @@ def pin_reference(
     blocked rungs read it instead of running reference jobs. Exit
     destroys the broadcasts; results must be materialised inside."""
     state = resident_reference(reference, ref_id_col, ref_vec_col, payload_cols, payload)
-    _PINNED[reference] = state
     try:
-        yield state
+        with _held(reference, state):
+            yield state
     finally:
-        _PINNED.pop(reference, None)
         state.release()
+
+
+def _top_cols(vals: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
+    """Column indices of each row's ``top`` largest ``vals`` in (value DESC,
+    id ASC) order, ``ids`` naming the columns: the tie kernel of the
+    numpy rungs, the window's ``row_number`` order."""
+    # argpartition gets the top set in O(c); exact order + id tiebreak
+    # resolved on the k-sized slice only — all rows at once (no per-row
+    # Python in the common case).
+    part = np.argpartition(-vals, top - 1, axis=1)[:, :top]
+    sel = np.take_along_axis(vals, part, axis=1)
+    kth = sel.min(axis=1)
+    # Order each row's slice by (value DESC, id ASC): stable-argsort by id,
+    # then stable-argsort by -value — equal values keep the id order.
+    ord_id = np.argsort(ids[part], axis=1, kind="stable")
+    ord_val = np.argsort(-np.take_along_axis(sel, ord_id, axis=1), axis=1, kind="stable")
+    chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_val, axis=1), axis=1)
+    # argpartition cuts ties at the k-th value ARBITRARILY — when a row has
+    # MORE than `top` values >= its k-th value, ids outside the slice may
+    # deserve inclusion. Only those rows take the widened per-row path.
+    tied = np.flatnonzero((vals >= kth[:, None]).sum(axis=1) > top)
+    for row_i in tied:
+        cand = np.flatnonzero(vals[row_i] >= kth[row_i])
+        order = np.lexsort((ids[cand], -vals[row_i, cand]))
+        chosen[row_i] = cand[order][:top]
+    return chosen
 
 
 def top_k_rows(
@@ -276,32 +367,9 @@ def top_k_rows(
     if top == 0:
         return has_dir, np.zeros((n_rows, 0), dtype=np.int64), np.zeros((n_rows, 0))
     dead_ref = ~unit.any(axis=1)
-    sims[:, dead_ref] = -np.inf
-    # argpartition gets the top set in O(c); exact order + id tiebreak
-    # resolved on the k-sized slice only — all rows at once (no per-row
-    # Python in the common case).
-    part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-    row_idx = np.arange(n_rows)[:, None]
-    sel_scores = sims[row_idx, part]
-    kth = sel_scores.min(axis=1)
-    # Order each row's slice by (score DESC, id ASC), matching the window
-    # strategy's row_number ordering: stable-argsort by id, then
-    # stable-argsort by -score — equal scores keep the id order.
-    ord_id = np.argsort(ids[part], axis=1, kind="stable")
-    ord_score = np.argsort(
-        -np.take_along_axis(sel_scores, ord_id, axis=1), axis=1, kind="stable"
-    )
-    chosen = np.take_along_axis(part, np.take_along_axis(ord_id, ord_score, axis=1), axis=1)
-    # argpartition cuts ties at the k-th score ARBITRARILY — when a row has
-    # MORE than `top` scores >= its k-th score, ids outside the slice may
-    # deserve inclusion. Only those rows (exact float ties, or a top-k
-    # that reaches the zero-norm rows) take the widened per-row path.
-    tied = np.flatnonzero((sims >= kth[:, None]).sum(axis=1) > top)
-    for row_i in tied:
-        cand = np.flatnonzero(sims[row_i] >= kth[row_i])
-        order = np.lexsort((ids[cand], -sims[row_i, cand]))
-        chosen[row_i] = cand[order][:top]
-    scores = sims[row_idx, chosen]
+    sims[:, dead_ref] = -np.inf  # zero-norm rows rank after every scored row
+    chosen = _top_cols(sims, ids, top)
+    scores = np.take_along_axis(sims, chosen, axis=1)
     scores[dead_ref[chosen]] = np.nan
     return has_dir, chosen, scores
 
@@ -544,21 +612,12 @@ def ivf_query_index(
         ),
     )
     idx = F.broadcast(index) if broadcast_index else index
-    candidates = q_assigned.join(idx, "_list").drop("_list")
-    candidates = candidates.withColumn(
-        "_qnorm", norm_expr(F.col(query_vec_col))
-    ).withColumn("_rnorm", norm_expr(F.col("_ref_vec")))
-    denom = F.col("_qnorm") * F.col("_rnorm")
-    scored = candidates.withColumn(
-        "score",
-        F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
-    ).drop("_ref_vec", "_qnorm", "_rnorm")
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop(query_vec_col)
+    scored = (
+        q_assigned.join(idx, "_list")
+        .withColumn("score", cosine_expr(F.col(query_vec_col), F.col("_ref_vec")))
+        .drop("_list", "_ref_vec")
     )
+    return _rank_tail(scored, query_id_cols, k).drop(query_vec_col)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
@@ -732,8 +791,7 @@ def lsh_bucketed_topk(
         .drop("_raw", "table", "bucket", query_vec_col, "_ref_vec")
         .dropDuplicates([*query_id_cols, "ref_id"])
     )
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_tail(scored, query_id_cols, k)
 
 
 # --- product quantization (PQ) ANN -------------------------------------------
@@ -937,47 +995,46 @@ def pq_topk(
                     lut = q[:, s * sd : (s + 1) * sd] @ cbk[s].T  # (nq, n_codes)
                     adc += lut[:, cds[:, s]]
                 top = min(cut, len(ids))
-                part = np.argpartition(-adc, top - 1, axis=1)[:, :top]
-                # ADC cut ties broken by ascending ref id (match the window's
-                # (adc DESC, ref_id) order): resolve only rows with boundary
-                # ties, same pattern as the blocked strategy
-                row_idx = np.arange(nq)[:, None]
-                kth = adc[row_idx, part].min(axis=1)
-                chosen = part
-                tied = np.flatnonzero((adc >= kth[:, None]).sum(axis=1) > top)
-                if len(tied):
-                    chosen = part.copy()  # one copy, then in-place row fixes
-                for row_i in tied:
-                    cand = np.flatnonzero(adc[row_i] >= kth[row_i])
-                    order = np.lexsort((ids[cand], -adc[row_i, cand]))
-                    chosen[row_i] = cand[order][:top]
+                # ADC cut ties broken by ascending ref id, the window's order
+                chosen = _top_cols(adc, ids, top)
                 out = {c: np.repeat(pdf[c].to_numpy(), top) for c in query_id_cols}
                 out["ref_id"] = ids[chosen].ravel()
                 yield pd.DataFrame(out)
 
         surv = narrowed.mapInPandas(survivors, schema=out_schema)
+    return _rescore_survivors(
+        surv, queries, reference, k, query_id_cols, ref_id_col, query_vec_col, ref_vec_col
+    )
+
+
+def _rescore_survivors(
+    surv: DataFrame,
+    queries: DataFrame,
+    reference: DataFrame,
+    k: int,
+    query_id_cols: Sequence[str],
+    ref_id_col: str,
+    query_vec_col: str,
+    ref_vec_col: str,
+) -> DataFrame:
+    """Exact cosine top-k of the (query ids, ``ref_id``) survivors of a
+    compressed-code cut: the PQ rungs' shared tail.
+
+    Broadcast the SURVIVOR side (bounded at |Q| * k * refine id rows by
+    construction), never the raw reference vectors: the corpus is the
+    100-TB side and must stay a streamed scan. The join then touches raw
+    vectors only for the survivors, which is the whole premise of the
+    PQ-then-exact-rescore design."""
     ref = reference.select(
         F.col(ref_id_col).alias("ref_id"), F.col(ref_vec_col).alias("_ref_vec")
     )
-    # Broadcast the SURVIVOR side (bounded at |Q| * k * refine id rows by
-    # construction), never the raw reference vectors: the corpus is the
-    # 100-TB side and must stay a streamed scan. The join then touches raw
-    # vectors only for the survivors, which is the whole premise of the
-    # PQ-then-exact-rescore design.
     rescored = ref.join(F.broadcast(surv), "ref_id").join(
         queries.select(*query_id_cols, query_vec_col), list(query_id_cols)
     )
-    denom = norm_expr(F.col(query_vec_col)) * norm_expr(F.col("_ref_vec"))
     scored = rescored.withColumn(
-        "score",
-        F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
+        "score", cosine_expr(F.col(query_vec_col), F.col("_ref_vec"))
     )
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("_ref_vec", query_vec_col)
-    )
+    return _rank_tail(scored, query_id_cols, k).drop("_ref_vec", query_vec_col)
 
 
 def mmr_rerank(
@@ -1248,30 +1305,11 @@ def ivfpq_topk(
             yield pd.DataFrame(out)
 
     scored_cands = cand.mapInPandas(adc_batches, schema=adc_schema)
-    w_adc = Window.partitionBy(*query_id_cols).orderBy(F.desc("_adc"), F.asc("ref_id"))
-    surv = (
-        scored_cands.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * refine)
-        .select(*query_id_cols, "ref_id")
-    )
-
-    # exact rescore: survivors broadcast, corpus scanned (r7 PQ contract)
-    ref = reference.select(
-        F.col(ref_id_col).alias("ref_id"), F.col(ref_vec_col).alias("_ref_vec")
-    )
-    rescored = ref.join(F.broadcast(surv), "ref_id").join(
-        queries.select(*query_id_cols, query_vec_col), list(query_id_cols)
-    )
-    denom = norm_expr(F.col(query_vec_col)) * norm_expr(F.col("_ref_vec"))
-    scored = rescored.withColumn(
-        "score",
-        F.when(denom != 0, dot_expr(F.col(query_vec_col), F.col("_ref_vec")) / denom),
-    )
-    w = Window.partitionBy(*query_id_cols).orderBy(F.desc("score"), F.asc("ref_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("_ref_vec", query_vec_col)
+    surv = _rank_tail(
+        scored_cands, query_id_cols, k * refine, score="_adc", rank="_arank"
+    ).select(*query_id_cols, "ref_id")
+    return _rescore_survivors(
+        surv, queries, reference, k, query_id_cols, ref_id_col, query_vec_col, ref_vec_col
     )
 
 
@@ -1293,9 +1331,9 @@ def hard_negatives_topk(
     (the standard dense-retrieval / contrastive-pair recipe; hi is the
     same kind of threshold the dedup ladder uses as a DUP floor).
 
-    Physically this is the broadcast-reference exact scorer
-    (:func:`top_k_similarity_join`'s shape — norms hoisted per side,
-    per-pair work one dot product) with the band filter applied BEFORE
+    Physically this is the join rung's broadcast-reference exact scorer
+    (:func:`_broadcast_pairs` — norms hoisted per side, per-pair work
+    one dot product) with the band filter applied BEFORE
     the per-query window, so banded-out pairs never enter the rank
     shuffle. Banding and ranking use the 6dp-ROUNDED score: the band
     edge and tie decisions are then identical across engines (raw
@@ -1305,38 +1343,13 @@ def hard_negatives_topk(
     (LSH/IVF) upstream — the band filter and window are unchanged.
 
     Returns (query ids, ref_id, score, rank ≤ k)."""
-    ref = reference.select(
-        F.col(ref_id_col).alias("ref_id"),
-        F.col(ref_vec_col).alias("_ref_vec"),
-    ).withColumn("_rnorm", norm_expr(F.col("_ref_vec")))
-    q = ensure_min_partitions(queries).withColumn(
-        "_qnorm", norm_expr(F.col(query_vec_col))
-    )
-    denom = F.col("_qnorm") * F.col("_rnorm")
     scored = (
-        q.crossJoin(F.broadcast(ref))
-        .withColumn(
-            "score",
-            F.round(
-                F.when(
-                    denom != 0,
-                    dot_expr(F.col(query_vec_col), F.col("_ref_vec"))
-                    / denom,
-                ),
-                6,
-            ),
-        )
+        _broadcast_pairs(queries, reference, ref_id_col, query_vec_col, ref_vec_col)
+        .withColumn("score", F.round("score", 6))
         .filter((F.col("score") >= lo) & (F.col("score") < hi))
-        .drop("_ref_vec", "_qnorm", "_rnorm")
+        .drop("_has_dir")
     )
-    w = Window.partitionBy(*query_id_cols).orderBy(
-        F.desc("score"), F.asc("ref_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop(query_vec_col)
-    )
+    return _rank_tail(scored, query_id_cols, k).drop(query_vec_col)
 
 
 def silhouette_seeded(
@@ -1445,66 +1458,21 @@ def sql_silhouette_seeded(
 
 
 # ---------------------------------------------------------------------------
-# r13: impl='auto' — cost-based strategy selection for the top-k ladder
+# impl='auto': the top-k ladder routed on the reference alone
 # ---------------------------------------------------------------------------
 
-# Documented crossover constants (SCALING.md "ANN ladder" + strategy
-# notes above).  REF_BROADCAST_BUDGET: past ~256 MiB of raw float64 the
-# reference no longer ships as a per-executor resident matrix — the
-# exact rungs are off the table and candidate generation must be a
-# bucketed equi-join (IVF); the flagship routes on this budget alone.
-# EXACT_FLOP_BUDGET routes only similarity_topk(impl='auto') between its
-# two exact rungs: q*c*d multiply-adds past which one BLAS matmul per
-# Arrow batch beats the window rung's per-pair cosine, whose
-# zip_with/aggregate runs as interpreted higher-order functions.  Measured
-# at dim 768 on 4 cores as whole flagship calls on each rung, the
-# reference held by reference_projection (median of 3 calls, join s /
-# blocked s; tools/sweep_topk_crossover.py re-measures it):
-#
-#     C \ q      4          16         32         64         128
-#     100    1.15/0.98  0.76/0.82  0.72/0.72  0.73/0.69  0.96/0.75
-#     300    0.66/0.72  0.77/0.74  0.89/0.73  1.05/0.82  1.71/0.76
-#     1000   0.81/0.74  1.04/0.67  1.42/0.72  1.88/0.83  3.02/0.83
-#
-# Under ~1e7 the rungs are within the ~0.1 s call-to-call noise; from
-# 1.2e7 blocked wins every point, by 2.0-3.6x from 2.5e7.  The window rung
-# keeps the small regime: it needs no driver collect of the reference.
-# The old 1e8 came from a dim-64 ladder; at dim 64 the sf0.1 cos_topk pair
-# (2.3e7) already timed blocked 0.56 s < join 0.68 s in the committed
-# bench_out.json (8 cores).
-REF_BROADCAST_BUDGET_BYTES: int = 256 << 20
-EXACT_FLOP_BUDGET: float = 1e7
 
+def choose_similarity_impl(n_queries: int, n_refs: int, dim: int) -> str:
+    """The rung ``similarity_topk(impl='auto')`` takes for a reference of
+    ``n_refs`` x ``dim``, as a pure function: ``'blocked'`` inside the
+    broadcast budget (one resident matrix + BLAS matmul per Arrow batch,
+    zero shuffle), ``'ivf'`` past it (nothing full-width is broadcast;
+    candidates come from a list-id equi-join, the only rung whose contract
+    survives a reference that outgrows executor memory).
 
-def choose_similarity_impl(
-    n_queries: int,
-    n_refs: int,
-    dim: int,
-    broadcast_budget_bytes: int = REF_BROADCAST_BUDGET_BYTES,
-    exact_flop_budget: float = EXACT_FLOP_BUDGET,
-) -> str:
-    """Pure decision function behind ``similarity_topk(impl='auto')`` —
-    separated from the dispatch so the boundaries are unit-testable
-    without running jobs.
-
-    Regimes (SCALING.md crossovers):
-
-    - ``ref_bytes = n_refs * dim * 8`` over the broadcast budget →
-      ``'ivf'``: nothing full-width is broadcast; candidates come from
-      a list-id equi-join (the only rung whose contract survives a
-      reference that outgrows executor memory).
-    - under the budget with ``q*c*d`` beyond the flop budget →
-      ``'blocked'``: one resident matrix + BLAS matmul per Arrow batch,
-      zero shuffle, linear in the query count.
-    - otherwise → ``'join'``: the single-stage broadcast cross join —
-      at tiny sizes the window plan's scheduling floor beats shipping
-      numpy batches.
-    """
-    if n_refs * dim * 8 > broadcast_budget_bytes:
-        return "ivf"
-    if float(n_queries) * n_refs * dim > exact_flop_budget:
-        return "blocked"
-    return "join"
+    ``n_queries`` is not read: routing never counts the queries. It stays
+    because perfbench's workloads call this positionally."""
+    return "ivf" if _over_budget(n_refs, dim) else "blocked"
 
 
 def similarity_topk(
@@ -1521,23 +1489,31 @@ def similarity_topk(
     seed: int = 7,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """One logical top-k cosine operator, physical strategy selected by
-    cost (verdict r13 #3; the q21 / mann_whitney ``impl=`` precedent).
+    """One logical top-k cosine operator over the ladder's rungs
+    (``impl='join'|'blocked'|'ivf'``).
 
-    ``impl='auto'`` reads two cheap statistics — reference count + dim
-    from one aggregate (count-min fused; the dim probe is
-    ``size(first(vec))``), query count from one count job (parquet
-    count pushdown makes this metadata-cheap on file sources) — and
-    picks the rung via :func:`choose_similarity_impl`.  Every rung
-    stays reachable explicitly (``impl='join'|'blocked'|'ivf'``).
+    ``impl='auto'`` routes on the reference alone, as
+    ``map_labels_to_reference`` does: it reads the reference's resident
+    state once (:func:`resident_reference` — the pin, else one stats
+    aggregate and, inside the broadcast budget, one collect), scores on
+    the blocked rung from that state inside the budget and takes IVF past
+    it (the rule :func:`choose_similarity_impl` states). The queries are
+    never counted.
 
     The exact rungs return identical rows (hash-proven against one
     oracle); the IVF rung is approximate — auto only reaches it past
     broadcast scale, where exact is off the table anyway.
     """
     if impl == "auto":
-        n_refs, dim = reference_stats(reference, ref_vec_col)
-        impl = choose_similarity_impl(queries.count(), n_refs, dim)
+        state = resident_reference(reference, ref_id_col, ref_vec_col)
+        # the chosen rung reads the state just built instead of the reference
+        with _held(reference, state):
+            return similarity_topk(
+                queries, reference, k, query_id_cols, ref_id_col,
+                query_vec_col=query_vec_col, ref_vec_col=ref_vec_col,
+                impl="ivf" if state.ids is None else "blocked",
+                n_lists=n_lists, n_probe=n_probe, seed=seed, centroids=centroids,
+            )
     if impl == "join":
         return top_k_similarity_join(
             queries, reference, k, query_id_cols, ref_id_col,

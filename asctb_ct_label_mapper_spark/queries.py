@@ -1339,15 +1339,12 @@ def cos_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("cos_topk_auto", _COS_TOPK_ORACLE)
 def cos_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same logical operator behind the r13 cost-based selector
-    (`similarity_topk(impl='auto')`, verdict r13 #3): reads reference
-    count+dim and query count, then picks join/blocked/ivf by the
-    SCALING.md crossovers.  Every test SF stays exact (ref << broadcast
-    budget): sf0.001/sf0.01 (50 x 450 x 64 = 1.4e6 flops) route to the
-    window join, sf0.1 (200 x 1800 x 64 = 2.3e7 > 1e7) to the blocked
-    matmul, and either hash-matches the shared exact oracle — the
-    selection boundaries themselves are unit-tested in
-    tests/test_round13_auto.py without running jobs."""
+    """Same logical operator behind `similarity_topk(impl='auto')`, which
+    routes on the reference alone: the blocked matmul inside the
+    broadcast budget, IVF past it, and no count of the queries.  Every
+    test SF's reference is far inside the budget, so every SF runs the
+    blocked rung and hash-matches the shared exact oracle — the budget
+    boundary itself is unit-tested in tests/test_round13_auto.py."""
     from asctb_ct_label_mapper_spark.operators.similarity import (
         similarity_topk,
     )

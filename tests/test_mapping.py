@@ -417,9 +417,9 @@ def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
 def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch):
     """Without a handle, an in-budget reference is read once per call (one
     stats aggregate and one collect, no second aggregate for routing), no
-    count of the labels runs, and a local list of labels whose q*C*d is
-    under EXACT_FLOP_BUDGET — the regime the join rung used to take —
-    collects its report in one job."""
+    count of the labels runs, and a local list of a few labels against a
+    small reference — the regime the join rung used to take — collects
+    its report in one job."""
     import pyarrow as pa
 
     from asctb_ct_label_mapper_spark.operators import similarity as sim
@@ -440,7 +440,7 @@ def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch
         })
     )
     assert labels.isLocal()
-    assert sim.choose_similarity_impl(2, 40, 16) == "join"
+    assert sim.choose_similarity_impl(2, 40, 16) == "blocked"
     calls = []
 
     def spy(fn):
@@ -466,6 +466,83 @@ def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch
         1.0, "CL:0003"
     )
     assert got["unknown thing"]["match_score_2"] is not None
+
+
+def test_unpinned_exact_call_releases_its_projection(spark):
+    """An exact call without a handle persists the narrowed reference
+    projection only to build the resident state: the report reads the
+    broadcasts alone, so the call leaves no persisted RDD behind."""
+    reference = (
+        spark.createDataFrame(
+            [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
+            "CT_ID string, CT_NAME string, definition string",
+        )
+        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+    labels = spark.createDataFrame(
+        [("t", "cell kind 3"), ("t", "unknown thing")],
+        "source string, raw_input_label string",
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = persisted().size()
+    rows = map_labels_to_reference(labels, reference, k=2, clean=clean_text_expr).collect()
+    assert len(rows) == 2
+    assert persisted().size() == before
+
+
+def test_k_past_reference_size_nulls_the_missing_ranks(spark, reference):
+    """k = C + 2 on the 5-row reference: ranks 1..C are the join rung's
+    top-k, ranks C+1..k are NULL, and an exact hit still reports rank 1
+    alone."""
+    from asctb_ct_label_mapper_spark.operators.similarity import (
+        top_k_similarity_join,
+    )
+
+    n_refs = reference.count()
+    k = n_refs + 2
+    labels = spark.createDataFrame(
+        [("t", "club cell"), ("t", "mystery blob")],
+        "source string, raw_input_label string",
+    )
+    report = {
+        r["raw_input_label"]: r
+        for r in map_labels_to_reference(labels, reference, k=k).collect()
+    }
+    queries = labels.withColumn(
+        "cleaned_input_label", clean_text_expr(F.col("raw_input_label"))
+    ).withColumn("embedding", stub_encode_udf(F.col("cleaned_input_label")))
+    ranks = {
+        r["rank"]: r
+        for r in top_k_similarity_join(
+            queries.filter(F.col("raw_input_label") == "mystery blob"),
+            reference, k, ["raw_input_label"], "CT_ID",
+            ref_payload_cols=["CT_NAME", "all_text"],
+        ).collect()
+    }
+    assert sorted(ranks) == list(range(1, n_refs + 1))
+    miss = report["mystery blob"]
+    assert [
+        (miss[f"matched_asctb_id_{i}"], miss[f"matched_asctb_label_{i}"],
+         miss[f"matched_asctb_text_{i}"], round(miss[f"match_score_{i}"], 9))
+        for i in range(1, n_refs + 1)
+    ] == [
+        (ranks[i]["ref_id"], ranks[i]["CT_NAME"], ranks[i]["all_text"],
+         round(ranks[i]["score"], 9))
+        for i in range(1, n_refs + 1)
+    ]
+    hit = report["club cell"]
+    assert (hit["match_score_1"], hit["matched_asctb_id_1"]) == (1.0, "CL:0000158")
+    for row, first_null in ((miss, n_refs + 1), (hit, 2)):
+        for i in range(first_null, k + 1):
+            assert [
+                row[f"{c}_{i}"] for c in (
+                    "match_score", "matched_asctb_id", "matched_asctb_label",
+                    "matched_asctb_text",
+                )
+            ] == [None] * 4, (row["raw_input_label"], i)
 
 
 def test_only_ivf_takes_the_relational_report(spark, reference, monkeypatch):

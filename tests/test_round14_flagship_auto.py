@@ -27,14 +27,14 @@ def test_flagship_auto_writes_report_at_reference_scale(spark, sf_dir):
 
 def test_choose_impl_routes_flagship_scales():
     """similarity_topk's decision function at the flagship's scales:
-    golden scale -> join; beyond-broadcast reference -> ivf (the budget
-    the flagship routes on too)."""
+    golden scale -> blocked; beyond-broadcast reference -> ivf (the
+    budget the flagship routes on too)."""
     from asctb_ct_label_mapper_spark.operators.similarity import (
         choose_similarity_impl,
     )
 
     # golden CSV scale: ~600 labels x ~300 reference rows x dim 16
-    assert choose_similarity_impl(600, 300, 16) == "join"
+    assert choose_similarity_impl(600, 300, 16) == "blocked"
     # 10^6-row reference at dim 384: 3 GiB > 256 MiB budget -> ivf
     assert choose_similarity_impl(600, 1_000_000, 384) == "ivf"
 
