@@ -15,6 +15,7 @@ Design rules (see SURVEY.md §4):
 - Explicit schemas everywhere; Parquet as the native format.
 """
 
+import gc
 import sys
 
 from pyspark import SparkFiles
@@ -70,10 +71,25 @@ def _lazy_zip_invalidation() -> None:
     cls.invalidate_caches = invalidate_caches
 
 
-# Package code unpickled in a Python worker imports this module: install
-# the backport there, once per worker process.
-if sys.version_info < (3, 13) and SparkFiles._is_running_on_worker:
-    _lazy_zip_invalidation()
+def _worker_setup() -> None:
+    """Set up a Python worker process that has just imported the package:
+    install the zip-invalidation backport (Python < 3.13), then freeze the
+    heap built so far.
+
+    A reused PySpark worker runs a full ``gc.collect()`` after every task
+    (``pyspark/daemon.py``). By the time package code is unpickled the
+    heap holds about 73k tracked objects (pandas, pyarrow, numpy,
+    ``pyspark.sql.pandas``, this package) that live as long as the
+    process, and each collect rescanned them: about 40 ms of CPU per
+    task. ``gc.freeze()`` moves them to the permanent generation, so the
+    per-task collect scans only what was made since (SCALING.md). The
+    price is paid once per worker process: cyclic garbage that exists at
+    the freeze is never collected.
+    """
+    if sys.version_info < (3, 13):
+        _lazy_zip_invalidation()
+    gc.freeze()
+
 
 __all__ = [
     "build_reference_embeddings",
@@ -81,3 +97,10 @@ __all__ = [
     "map_raw_labels",
     "__version__",
 ]
+
+
+# Package code unpickled in a Python worker imports this module: set the
+# worker up there, once per worker process, after the imports above have
+# loaded pandas, pyarrow and numpy.
+if SparkFiles._is_running_on_worker:
+    _worker_setup()

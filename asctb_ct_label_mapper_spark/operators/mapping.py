@@ -52,6 +52,7 @@ from asctb_ct_label_mapper_spark.functions.nlp import clean_text_full_udf
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.similarity import (
     ResidentReference,
+    _held,
     pin_reference,
     resident_reference,
     similarity_topk,
@@ -228,14 +229,16 @@ def map_labels_to_reference(
         queries = encoded if labels.isLocal() else ensure_min_partitions(encoded)
         return _blocked_report(queries, reference, state, k)
 
-    topk = similarity_topk(
-        encoded,
-        reference,
-        k=k,
-        query_id_cols=list(_QUERY_COLS),
-        ref_id_col="CT_ID",
-        impl="ivf",
-    )
+    # IVF sizes its lists from the state just read, not a second stats job
+    with _held(reference, state):
+        topk = similarity_topk(
+            encoded,
+            reference,
+            k=k,
+            query_id_cols=list(_QUERY_COLS),
+            ref_id_col="CT_ID",
+            impl="ivf",
+        )
     payload = reference.select("CT_ID", "CT_NAME", "all_text")
     if in_budget:
         payload = F.broadcast(payload)

@@ -46,6 +46,19 @@ def reference(spark):
     )
 
 
+def _numbered_reference(spark, n=40):
+    """``n`` distinct reference rows, ``CL:0000`` ("cell kind 0") onward."""
+    df = spark.createDataFrame(
+        [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(n)],
+        "CT_ID string, CT_NAME string, definition string",
+    )
+    return (
+        df.withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
+        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
+        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
+    )
+
+
 @pytest.fixture(scope="module")
 def report(spark, reference):
     labels = spark.createDataFrame(
@@ -424,15 +437,7 @@ def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch
 
     from asctb_ct_label_mapper_spark.operators import similarity as sim
 
-    reference = (
-        spark.createDataFrame(
-            [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
-            "CT_ID string, CT_NAME string, definition string",
-        )
-        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
-        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
-        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
-    )
+    reference = _numbered_reference(spark)
     labels = spark.createDataFrame(
         pa.table({
             "source": ["t"] * 3,
@@ -472,15 +477,7 @@ def test_unpinned_exact_call_releases_its_projection(spark):
     """An exact call without a handle persists the narrowed reference
     projection only to build the resident state: the report reads the
     broadcasts alone, so the call leaves no persisted RDD behind."""
-    reference = (
-        spark.createDataFrame(
-            [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
-            "CT_ID string, CT_NAME string, definition string",
-        )
-        .withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
-        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
-        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
-    )
+    reference = _numbered_reference(spark)
     labels = spark.createDataFrame(
         [("t", "cell kind 3"), ("t", "unknown thing")],
         "source string, raw_input_label string",
@@ -553,15 +550,7 @@ def test_only_ivf_takes_the_relational_report(spark, reference, monkeypatch):
     from asctb_ct_label_mapper_spark.operators import mapping
     from asctb_ct_label_mapper_spark.operators import similarity as sim
 
-    more = spark.createDataFrame(
-        [(f"CL:{i:04d}", f"cell kind {i}", f"def {i}") for i in range(40)],
-        "CT_ID string, CT_NAME string, definition string",
-    )
-    ref = reference.unionByName(
-        more.withColumn("all_text", F.concat_ws(" ", "CT_NAME", "definition"))
-        .withColumn("ct_name_cleaned", clean_text_expr(F.col("CT_NAME")))
-        .withColumn("embedding", stub_encode_udf(F.col("all_text")))
-    )
+    ref = reference.unionByName(_numbered_reference(spark))
     labels = spark.createDataFrame(
         [("t", "Basal cell"), ("t", "club cell"), ("t", "mystery blob")],
         "source string, raw_input_label string",
@@ -600,6 +589,34 @@ def test_ivf_on_reference_smaller_than_its_lists(spark, reference):
     assert sorted(r["raw_input_label"] for r in out) == ["Basal cell", "club cell", "mystery blob"]
     got = {r["raw_input_label"]: r for r in out}
     assert got["club cell"]["matched_asctb_id_1"] == "CL:0000158"
+
+
+def test_unpinned_ivf_reads_reference_stats_once(spark, monkeypatch):
+    """An unpinned IVF call runs the reference's stats aggregate once:
+    IVF sizes its k-means lists from the resident state the call has
+    already read, served as a pin, not from a second stats job."""
+    from asctb_ct_label_mapper_spark.operators import similarity as sim
+
+    reference = _numbered_reference(spark)
+    labels = spark.createDataFrame(
+        [("t", "cell kind 3"), ("t", "unknown thing")], "source string, raw_input_label string"
+    )
+    pinned = []
+    stats = sim.reference_stats
+
+    def spy(frame, *args, **kwargs):
+        pinned.append(frame in sim._PINNED)
+        return stats(frame, *args, **kwargs)
+
+    monkeypatch.setattr(sim, "reference_stats", spy)
+    out = map_labels_to_reference(
+        labels, reference, k=2, clean=clean_text_expr, strategy="ivf"
+    ).collect()
+    # resident_reference's aggregate, then ivf_build_index served by the pin
+    assert pinned == [False, True]
+    got = {r["raw_input_label"]: r for r in out}
+    assert sorted(got) == ["cell kind 3", "unknown thing"]
+    assert got["cell kind 3"]["matched_asctb_id_1"] == "CL:0003"
 
 
 @pytest.mark.parametrize("strategy", ["join", "nope"])

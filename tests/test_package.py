@@ -1,5 +1,8 @@
 """The package's import-time set-up on Spark's Python workers: the lazy
-zip-cache invalidation backport (CPython gh-103200)."""
+zip-cache invalidation backport (CPython gh-103200), then a ``gc.freeze()``
+of the import-time heap so the worker's per-task ``gc.collect()`` does not
+rescan pandas, pyarrow and numpy. A driver process that imports the
+package gets neither."""
 
 from __future__ import annotations
 
@@ -47,6 +50,48 @@ def test_worker_invalidate_caches_reads_no_zip_directory(spark):
         pytest.skip("the Python workers import nothing from a zip archive")
     assert [r["reads"] for r in out] == [0] * 8
     assert {r["v"] for r in out} == {asctb_ct_label_mapper_spark.__version__}
+
+
+def test_worker_heap_is_frozen_after_package_import(spark):
+    """A Python worker that has unpickled package code has frozen its
+    import-time heap: the freeze count is non-zero, and after a collect
+    the objects left in the oldest generation (what PySpark's per-task
+    ``gc.collect()`` scans) are fewer than the frozen ones."""
+    def probe(batches):
+        import gc
+        import os
+
+        version = asctb_ct_label_mapper_spark.__version__
+        gc.collect()
+        left = len(gc.get_objects(generation=2))
+        for pdf in batches:
+            yield pd.DataFrame({
+                "pid": [os.getpid()] * len(pdf),
+                "frozen": gc.get_freeze_count(),
+                "left": left,
+                "v": version,
+            })
+
+    out = spark.range(8).repartition(4).mapInPandas(
+        probe, "pid long, frozen long, left long, v string"
+    ).collect()
+    assert len(out) == 8
+    assert {r["v"] for r in out} == {asctb_ct_label_mapper_spark.__version__}
+    for r in out:
+        assert r["frozen"] > 0, r
+        assert r["left"] < r["frozen"], r
+
+
+def test_driver_import_freezes_nothing():
+    """Importing the package in a plain driver process leaves its heap
+    unfrozen: the freeze is worker-only."""
+    done = subprocess.run(
+        [sys.executable, "-c",
+         "import gc, asctb_ct_label_mapper_spark; print(gc.get_freeze_count())"],
+        cwd=ROOT, capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    assert done.stdout.strip() == "0"
 
 
 def test_lazy_zip_invalidation_still_sees_a_rewritten_zip(tmp_path):
