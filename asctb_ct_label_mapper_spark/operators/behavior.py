@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from asctb_ct_label_mapper_spark.operators.dq import fetch_bounded
+
 
 def _q_lit(lit: str) -> str:
     """Escape a string literal for generated Spark-SQL expressions —
@@ -1452,6 +1454,11 @@ def sql_churn_rate_periodic(
 # ---------------------------------------------------------------------------
 
 
+# transition matrices past this many cells raise GroupBoundExceeded
+# instead of folding on the driver: the Markov operators are dimension grain
+LOCAL_TRANSITION_ROWS = 100_000
+
+
 def _markov_chain_fold(
     df: DataFrame,
     ts_col: str,
@@ -1459,31 +1466,18 @@ def _markov_chain_fold(
     type_col: str,
     id_col: str,
     iters: int,
-    max_collect_rows: int,
     label: str,
 ):
     """THE shared driver fold behind :func:`markov_steady_state` and
-    :func:`markov_entropy_rate` (r12 second review pass: two hand-kept
-    copies of the probe/guard/power-iteration block is the _daily_pair
-    drift class): limit-probe bounded collect of the transition matrix
-    (ONE job — the fact-grain lead window runs once, the graph module's
-    _guard_local_collect shape), then the L1-renormalized power
+    :func:`markov_entropy_rate`: the transition matrix fetched through
+    :func:`dq.fetch_bounded` (``LOCAL_TRANSITION_ROWS``; ONE job — the
+    fact-grain lead window runs once), then the L1-renormalized power
     iteration.  Returns (cells, states, pi) — cells sorted
     (from, to, 6dp-p), states sorted, pi aligned to states."""
-    from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
-
     tm = markov_transitions(df, ts_col, key_col, type_col, id_col)
-    probe = (
-        tm.select("from_type", "to_type", "p")
-        .limit(max_collect_rows + 1)
-        .collect()
-    )
-    if len(probe) > max_collect_rows:
-        raise GroupBoundExceeded(
-            f"{label}: > {max_collect_rows} transition cells "
-            "(max_collect_rows); the local impl folds on the driver — "
-            "this is a dimension-grain operator"
-        )
+    probe = fetch_bounded(
+        tm, ["from_type", "to_type", "p"], LOCAL_TRANSITION_ROWS, label
+    ).to_pylist()
     cells = sorted(
         ((r["from_type"], r["to_type"], float(r["p"])) for r in probe),
         key=lambda t: (t[0], t[1]),
@@ -1510,7 +1504,6 @@ def markov_steady_state(
     type_col: str = "event_type",
     id_col: str = "event_id",
     iters: int = 30,
-    max_collect_rows: int = 100_000,
 ) -> DataFrame:
     """Long-run state distribution of the :func:`markov_transitions`
     chain: iterate π ← πP from uniform over the observed states,
@@ -1522,14 +1515,13 @@ def markov_steady_state(
 
     Plan: the transition matrix is |types|² rows (dimension grain); the
     iteration folds on the DRIVER over the collected matrix under the
-    bounded-collect contract (``dq.GroupBoundExceeded`` past
-    ``max_collect_rows`` — the graph-module hits/k_core seam). Returns
+    bounded-read contract (``dq.GroupBoundExceeded`` past
+    ``LOCAL_TRANSITION_ROWS`` — the graph-module hits/k_core seam). Returns
     (state, pi), 6dp."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     cells, states, pi = _markov_chain_fold(
-        df, ts_col, key_col, type_col, id_col, iters, max_collect_rows,
-        "markov_steady_state",
+        df, ts_col, key_col, type_col, id_col, iters, "markov_steady_state",
     )
     schema = StructType(
         [
@@ -1823,7 +1815,6 @@ def markov_entropy_rate(
     type_col: str = "event_type",
     id_col: str = "event_id",
     iters: int = 30,
-    max_collect_rows: int = 100_000,
 ) -> DataFrame:
     """Entropy rate of the user-behavior Markov chain:
 
@@ -1837,8 +1828,8 @@ def markov_entropy_rate(
     readout). The one-number summary on top of the transition matrix /
     steady-state pair.
 
-    Plan: the steady-state driver fold (limit-probe bounded collect,
-    one fact pass) plus a cell-grain entropy sum folded on the same
+    Plan: the steady-state driver fold (one bounded read, one fact
+    pass) plus a cell-grain entropy sum folded on the same
     collected cells. Returns one row (n_states, entropy_nats,
     perplexity), 6dp."""
     import math
@@ -1851,8 +1842,7 @@ def markov_entropy_rate(
     )
 
     cells, states, pi = _markov_chain_fold(
-        df, ts_col, key_col, type_col, id_col, iters, max_collect_rows,
-        "markov_entropy_rate",
+        df, ts_col, key_col, type_col, id_col, iters, "markov_entropy_rate",
     )
     schema = StructType(
         [

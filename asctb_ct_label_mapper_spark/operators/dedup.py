@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from asctb_ct_label_mapper_spark.operators.dq import fetch_bounded
 from asctb_ct_label_mapper_spark.plans.partitioning import ensure_min_partitions
 
 
@@ -686,7 +687,7 @@ def embedding_near_dup_pairs(
 # --- duplicate-group formation (connected components) -------------------------
 
 # Pair sets up to this many rows are resolved on the driver from one bounded
-# collect — the bound ``graph._guard_local_collect``'s local folds use.
+# read (``dq.fetch_bounded``) — the bound of the graph module's local folds.
 LOCAL_PAIR_ROWS = 2_000_000
 
 
@@ -738,7 +739,7 @@ def duplicate_groups(
     adds no edge and no node.
 
     Two paths, one output. The two id columns are checkpointed and
-    fetched once as Arrow with ``limit(LOCAL_PAIR_ROWS + 1)``:
+    fetched once through :func:`dq.fetch_bounded` (``LOCAL_PAIR_ROWS``):
 
     - up to ``LOCAL_PAIR_ROWS`` pairs (every verified pair set the
       registry and bench build), the rounds run in numpy on the driver and
@@ -768,8 +769,8 @@ def duplicate_groups(
     )
     # the probe computes every partition, so the checkpoint is complete
     # after it and the loop reads it instead of the upstream plan
-    probe = ends.limit(LOCAL_PAIR_ROWS + 1).toArrow()
-    if probe.num_rows <= LOCAL_PAIR_ROWS:
+    probe = fetch_bounded(ends, ["src", "dst"], LOCAL_PAIR_ROWS)
+    if probe is not None:
         import pyarrow as pa
 
         src, dst = (probe.column(c).combine_chunks() for c in ("src", "dst"))

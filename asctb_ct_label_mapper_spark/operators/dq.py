@@ -27,9 +27,13 @@ The result is a check-count-sized union: bytes, not data.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 @dataclass(frozen=True)
@@ -223,6 +227,28 @@ def sql_evaluate_checks(checks: list[Check] | None = None) -> str:
 class GroupBoundExceeded(ValueError):
     """A per-group row-count contract was violated (see
     ``assert_group_bound``)."""
+
+
+def fetch_bounded(
+    df: DataFrame, cols: list[str], max_rows: int, label: str | None = None
+) -> pa.Table | None:
+    """The bounded driver read behind every driver-side fold (the graph
+    and Markov folds, ``dedup.duplicate_groups``): ``cols`` of ``df``
+    fetched as Arrow with ``limit(max_rows + 1)`` in ONE job — the limit
+    is the guard, so the (possibly fact-scale) upstream plan runs once,
+    not once to count and again to collect. Returns the table while it
+    holds at most ``max_rows`` rows; past the bound it returns None, or
+    raises ``GroupBoundExceeded`` when ``label`` names a caller that has
+    no distributed path. Memory exposure is ``max_rows + 1`` rows."""
+    table = df.select(*cols).limit(max_rows + 1).toArrow()
+    if table.num_rows <= max_rows:
+        return table
+    if label is None:
+        return None
+    raise GroupBoundExceeded(
+        f"{label}: > {max_rows} rows; the fold runs on the driver — "
+        "pre-aggregate the input to dimension grain first"
+    )
 
 
 def assert_group_bound(

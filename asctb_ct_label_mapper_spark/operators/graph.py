@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from asctb_ct_label_mapper_spark.operators.dq import fetch_bounded
+
 
 # ---------------------------------------------------------------------------
 # edge construction
@@ -250,7 +252,8 @@ def sql_triangle_count() -> str:
 # ---------------------------------------------------------------------------
 
 # edge lists past this many rows raise GroupBoundExceeded instead of
-# folding on the driver: pre-aggregate to dimension grain first
+# folding on the driver (PageRank, label propagation, HITS, k-core,
+# harmonic closeness, eigenvector): pre-aggregate to dimension grain first
 LOCAL_EDGE_ROWS = 2_000_000
 
 
@@ -268,8 +271,8 @@ def pagerank(
     Simplified formulation (no dangling-mass redistribution):
         r₀ = 1/N;  r_{t+1}(j) = (1−d)/N + d·Σ_i r_t(i)·w_ij/outw_i
 
-    The AGGREGATED edge list is collected in one job under
-    :func:`_guard_local_collect` (``LOCAL_EDGE_ROWS``; the registry's
+    The AGGREGATED edge list is fetched in one job under
+    :func:`dq.fetch_bounded` (``LOCAL_EDGE_ROWS``; the registry's
     trade graph is ≤625 rows) and the iterations fold on the driver,
     like the centroid-training precedent: one fact-table pass, zero
     per-iteration scheduling. The arithmetic matches the oracle:
@@ -283,9 +286,9 @@ def pagerank(
     # arbitrary and float accumulation order matters at the last ulp
     rows = sorted(
         ((r["src"], r["dst"], float(r["w"]))
-         for r in _guard_local_collect(
-             edges, LOCAL_EDGE_ROWS, "pagerank", ["src", "dst", "w"]
-         )),
+         for r in fetch_bounded(
+             edges, ["src", "dst", "w"], LOCAL_EDGE_ROWS, "pagerank"
+         ).to_pylist()),
         key=lambda t: (t[0], t[1]),
     )
     nodes = sorted({t[0] for t in rows} | {t[1] for t in rows})
@@ -912,8 +915,8 @@ def label_propagation(
     near-tie. :func:`nation_trade_edges_count` exists for exactly
     this.
 
-    The one-way edge list is collected in one job under
-    :func:`_guard_local_collect` (``LOCAL_EDGE_ROWS``; dimension-grain
+    The one-way edge list is fetched in one job under
+    :func:`dq.fetch_bounded` (``LOCAL_EDGE_ROWS``; dimension-grain
     graphs only), the reverse edges are added on the driver, and the
     iterations fold in Python, accumulating in sorted edge order (the
     :func:`pagerank` precedent); with the exact-in-double weight
@@ -923,9 +926,9 @@ def label_propagation(
 
     one_way = [
         (r["src"], r["dst"], float(r["w"]))
-        for r in _guard_local_collect(
-            edges, LOCAL_EDGE_ROWS, "label_propagation", ["src", "dst", "w"]
-        )
+        for r in fetch_bounded(
+            edges, ["src", "dst", "w"], LOCAL_EDGE_ROWS, "label_propagation"
+        ).to_pylist()
     ]
     rows = sorted(
         one_way + [(d, s, w) for s, d, w in one_way],
@@ -996,36 +999,7 @@ def sql_label_propagation(iters: int = 4) -> str:
 # r11c: HITS, k-core, assortativity, neighbor-set similarity
 # ---------------------------------------------------------------------------
 
-def _guard_local_collect(
-    edges: DataFrame, max_rows: int, label: str, cols: list[str]
-) -> list:
-    """Bounded collect for the driver-local graph folds (PageRank, label
-    propagation, HITS, k-core, harmonic closeness, eigenvector,
-    eccentricity): collect ``limit(max_rows + 1)`` of ``cols`` in ONE
-    job and raise the ``dq.assert_group_bound``
-    error class if the probe overflows — the limit IS the guard, so
-    the (possibly fact-scale) upstream plan runs once, not twice
-    (r12 second review pass: the old count()-then-collect() shape
-    executed the full upstream twice — doubled the only expensive job
-    of eigenvector_nation_trade's lineitem-scale edge rollup).
-    Memory exposure is bounded by max_rows + 1 rows either way."""
-    from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
-
-    rows = edges.select(*cols).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise GroupBoundExceeded(
-            f"{label}: edge frame has > {max_rows} rows; the fold "
-            "runs on the driver — pre-aggregate "
-            "the edges to dimension grain or raise the bound explicitly"
-        )
-    return rows
-
-
-def hits_scores(
-    edges: DataFrame,
-    iters: int = 8,
-    max_collect_rows: int = 2_000_000,
-) -> DataFrame:
+def hits_scores(edges: DataFrame, iters: int = 8) -> DataFrame:
     """HITS hubs-and-authorities on a weighted digraph (src, dst, w):
     the dual-centrality readout next to :func:`pagerank` — which nations
     are strong EXPORTER hubs vs strong IMPORTER authorities.
@@ -1040,21 +1014,20 @@ def hits_scores(
     edge list — bounded by the rolled-up graph (≤ dimension² rows for
     the registry's trade graph), the :func:`pagerank` precedent.
 
-    ``max_collect_rows`` is the bounded-collect contract
-    (``dq.assert_group_bound`` style, r11 review finding): the fold
-    runs on the driver, so an edge frame past the bound raises
-    a named error instead of silently OOMing the driver — the caller
-    either pre-aggregates to dimension grain or raises the bound
-    knowingly.
+    ``LOCAL_EDGE_ROWS`` is the bounded-read contract
+    (:func:`dq.fetch_bounded`): the fold runs on the driver, so an edge
+    frame past the bound raises a named ``GroupBoundExceeded`` instead
+    of silently OOMing the driver — the caller pre-aggregates to
+    dimension grain.
 
     Returns (node, hub, auth), 6dp."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     rows = sorted(
         ((r["src"], r["dst"], float(r["w"]))
-         for r in _guard_local_collect(
-             edges, max_collect_rows, "hits_scores", ["src", "dst", "w"]
-         )),
+         for r in fetch_bounded(
+             edges, ["src", "dst", "w"], LOCAL_EDGE_ROWS, "hits_scores"
+         ).to_pylist()),
         key=lambda t: (t[0], t[1]),
     )
     nodes = sorted({t[0] for t in rows} | {t[1] for t in rows})
@@ -1164,12 +1137,7 @@ def sql_hits(iters: int = 8) -> str:
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int = 3,
-    iters: int = 15,
-    max_collect_rows: int = 2_000_000,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int = 3, iters: int = 15) -> DataFrame:
     """k-core decomposition (fixed k): iteratively peel nodes whose
     degree within the surviving subgraph is < k until a fixed point —
     the cohesion filter that separates the dense trading core from
@@ -1185,8 +1153,8 @@ def k_core(
     same count). The peeling folds on the driver over the collected
     aggregated edge list — the :func:`pagerank` precedent.
 
-    ``max_collect_rows`` is the bounded-collect contract (the
-    hits_scores guard, r12 ADVICE item).  Non-convergence is DETECTED:
+    ``LOCAL_EDGE_ROWS`` is the bounded-read contract (the
+    hits_scores guard).  Non-convergence is DETECTED:
     if the peeling exhausts ``iters`` with drops still pending, the
     result would not actually be the k-core (each pass may remove just
     one node, so iters < |V| can truncate) — a named error is raised
@@ -1199,9 +1167,9 @@ def k_core(
 
     pairs = {
         (r["src"], r["dst"])
-        for r in _guard_local_collect(
-            edges, max_collect_rows, "k_core", ["src", "dst"]
-        )
+        for r in fetch_bounded(
+            edges, ["src", "dst"], LOCAL_EDGE_ROWS, "k_core"
+        ).to_pylist()
         if r["src"] != r["dst"]
     }
     adj: dict = {}
@@ -1443,11 +1411,7 @@ def sql_neighbor_jaccard_topk(topk: int = 15) -> str:
 # r12: harmonic closeness centrality
 # ---------------------------------------------------------------------------
 
-def harmonic_closeness(
-    edges: DataFrame,
-    iters: int = 8,
-    max_collect_rows: int = 2_000_000,
-) -> DataFrame:
+def harmonic_closeness(edges: DataFrame, iters: int = 8) -> DataFrame:
     """Harmonic closeness centrality on the SYMMETRIZED digraph:
     C(u) = Σ_{v≠u, reachable} 1/d(u,v) — the distance-based third
     centrality next to degree (local) and PageRank/HITS (flow): which
@@ -1456,7 +1420,7 @@ def harmonic_closeness(
     unreachable pairs contribute 0 instead of poisoning the mean.
 
     One BFS per node runs on the driver over the collected aggregated
-    edge list — bounded by ``max_collect_rows`` (the hits_scores
+    edge list — bounded by ``LOCAL_EDGE_ROWS`` (the hits_scores
     guard); dimension-grain graphs only, the :func:`pagerank`
     precedent.  ``iters`` bounds the
     BFS depth; if any BFS frontier is still expanding when the bound
@@ -1474,9 +1438,9 @@ def harmonic_closeness(
 
     pairs = {
         (r["src"], r["dst"])
-        for r in _guard_local_collect(
-            edges, max_collect_rows, "harmonic_closeness", ["src", "dst"]
-        )
+        for r in fetch_bounded(
+            edges, ["src", "dst"], LOCAL_EDGE_ROWS, "harmonic_closeness"
+        ).to_pylist()
         if r["src"] != r["dst"]
     }
     adj: dict = {}
@@ -1566,11 +1530,7 @@ def sql_harmonic_closeness(iters: int = 8) -> str:
 # ---------------------------------------------------------------------------
 
 
-def eigenvector_centrality(
-    edges: DataFrame,
-    iters: int = 12,
-    max_collect_rows: int = 2_000_000,
-) -> DataFrame:
+def eigenvector_centrality(edges: DataFrame, iters: int = 12) -> DataFrame:
     """Eigenvector centrality on a weighted digraph (src, dst, w):
     score(j) ∝ Σ_i w_ij·score(i) — influence flows along edges with NO
     damping/teleport, so (unlike :func:`pagerank`) a node is central
@@ -1584,8 +1544,8 @@ def eigenvector_centrality(
     pagerank's teleport floor.
 
     The iterations fold on the driver over the collected AGGREGATED
-    edge list under the ``max_collect_rows`` bounded-collect contract
-    (:func:`_guard_local_collect`, the hits_scores seam) — intended
+    edge list under the ``LOCAL_EDGE_ROWS`` bounded-read contract
+    (:func:`dq.fetch_bounded`, the hits_scores seam) — intended
     inputs are dimension-grain rollups (≤ |dim|² rows).
 
     Returns (node, score), 6dp. Empty edge frame → empty frame (the
@@ -1594,10 +1554,10 @@ def eigenvector_centrality(
 
     rows = sorted(
         ((r["src"], r["dst"], float(r["w"]))
-         for r in _guard_local_collect(
-             edges, max_collect_rows, "eigenvector_centrality",
-             ["src", "dst", "w"]
-         )),
+         for r in fetch_bounded(
+             edges, ["src", "dst", "w"], LOCAL_EDGE_ROWS,
+             "eigenvector_centrality",
+         ).to_pylist()),
         key=lambda t: (t[0], t[1]),
     )
     nodes = sorted({t[0] for t in rows} | {t[1] for t in rows})
@@ -1945,11 +1905,12 @@ def sql_local_clustering_topk(topk: int = 25) -> str:
     """
 
 
-def graph_eccentricity(
-    edges: DataFrame,
-    max_collect_rows: int = 200_000,
-    max_hops: int = 64,
-) -> DataFrame:
+# eccentricity runs one BFS per node (|V|·|E| on the driver), so its
+# edge bound is a tenth of LOCAL_EDGE_ROWS
+LOCAL_ECCENTRICITY_ROWS = 200_000
+
+
+def graph_eccentricity(edges: DataFrame, max_hops: int = 64) -> DataFrame:
     """Per-node eccentricity (max BFS hop distance to any REACHABLE
     node) on the symmetrized graph, plus reach counts — diameter =
     max eccentricity, radius = min, read straight off the rows.  The
@@ -1957,22 +1918,23 @@ def graph_eccentricity(
     graph.
 
     The DIMENSION-grain edge list (nations² at most) folds on the
-    driver under :func:`_guard_local_collect` (the HITS/k-core
-    precedent — a plain-Python BFS per node, |V|·|E| bounded).
+    driver under :func:`dq.fetch_bounded` (``LOCAL_ECCENTRICITY_ROWS``,
+    the HITS/k-core precedent — a plain-Python BFS per node, |V|·|E|
+    bounded).
     Returns (node, n_reachable, eccentricity) ordered by node."""
-    rows = _guard_local_collect(
+    rows = fetch_bounded(
         edges.filter(F.col("src") != F.col("dst")),
-        max_collect_rows,
-        "graph_eccentricity",
         ["src", "dst"],
-    )
+        LOCAL_ECCENTRICITY_ROWS,
+        "graph_eccentricity",
+    ).to_pylist()
     # max_hops mirrors the oracle's recursive-CTE bound: if the graph
     # is DEEPER the two sides would silently disagree (the SQL walk
     # stops at the cap) — raise instead (r13 second review)
     adj: dict = {}
     for r in rows:
-        adj.setdefault(r[0], set()).add(r[1])
-        adj.setdefault(r[1], set()).add(r[0])
+        adj.setdefault(r["src"], set()).add(r["dst"])
+        adj.setdefault(r["dst"], set()).add(r["src"])
     out = []
     for node in sorted(adj):
         seen = {node}

@@ -63,7 +63,6 @@ from asctb_ct_label_mapper_spark.operators.similarity import (  # noqa: F401
     choose_similarity_impl,
     top_k_similarity_join,
 )
-from asctb_ct_label_mapper_spark.plans.partitioning import ensure_min_partitions
 
 Encoder = Callable[[Column], Column]
 
@@ -134,12 +133,18 @@ def _distinct_labels(labels: DataFrame) -> DataFrame:
     """The distinct (source, raw_input_label) rows. A driver-local
     relation (``isLocal``, which is what ``map_raw_labels`` builds from a
     list) is deduplicated on the driver — collecting it runs no job — and
-    comes back as a ``LocalTableScan`` of the distinct rows: no shuffle,
-    so no width probe downstream runs a job. Any other frame keeps
-    ``dropDuplicates``."""
+    comes back as a ``LocalTableScan`` of the distinct rows, already
+    ``min(rows, parallelism)`` partitions wide. Any other frame is
+    hash-repartitioned to the session's parallelism and deduplicated
+    above that one Exchange, so the matmul downstream runs that many
+    tasks wide and building the plan runs no job. The hash is on the
+    label alone: it still clusters every (source, label) pair, and a
+    literal ``source`` folded into the partitioning would not, so Spark
+    would plan a second Exchange for the aggregate."""
     pairs = labels.select("source", "raw_input_label")
     if not labels.isLocal():
-        return pairs.dropDuplicates()
+        width = labels.sparkSession.sparkContext.defaultParallelism
+        return pairs.repartition(width, "raw_input_label").dropDuplicates()
     rows = list(dict.fromkeys(pairs.collect()))
     table = pa.Table.from_pylist(
         [r.asDict() for r in rows], schema=to_arrow_schema(pairs.schema)
@@ -175,12 +180,13 @@ def map_labels_to_reference(
     pins IVF; any other value raises ``ValueError``.
 
     The exact report's plan is ``LocalTableScan → clean → encode →
-    MapInPandas`` for a driver-local relation (``dropDuplicates`` in
-    place of the scan otherwise): one ``mapInPandas`` scores each Arrow
-    batch against the resident unit matrix and writes each label's
-    finished row, k match columns with the exact overwrite applied, from
-    the resident table. Each match carries the ``CT_NAME``/``all_text`` of
-    the row it scored, also when reference rows share a ``CT_ID``; a
+    MapInPandas`` for a driver-local relation (one hash Exchange and
+    ``dropDuplicates`` in place of the scan otherwise): one
+    ``mapInPandas`` scores each Arrow batch against the resident unit
+    matrix and writes each label's finished row, k match columns with
+    the exact overwrite applied, from the resident table. Each match
+    carries the ``CT_NAME``/``all_text`` of the row it scored, also when
+    reference rows share a ``CT_ID``; a
     zero-norm reference row scores NULL and ranks after every scored row,
     and an empty reference leaves every match column NULL. With k larger
     than the reference's C rows, ranks 1..C are the exact top-k and the
@@ -223,11 +229,7 @@ def map_labels_to_reference(
         if owned:
             # the report reads only the state's broadcasts
             reference.unpersist()
-        # Matmul cost follows rows: widen a narrow seed. A local seed
-        # already has min(rows, parallelism) partitions, so widening it
-        # would only add a shuffle.
-        queries = encoded if labels.isLocal() else ensure_min_partitions(encoded)
-        return _blocked_report(queries, reference, state, k)
+        return _blocked_report(encoded, reference, state, k)
 
     # IVF sizes its lists from the state just read, not a second stats job
     with _held(reference, state):

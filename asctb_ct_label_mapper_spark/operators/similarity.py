@@ -665,7 +665,6 @@ def lsh_bucketed_topk(
     n_planes: int | None = 6,
     n_tables: int = 4,
     seed: int = 7,
-    dim: int | None = None,
     multiprobe: int = 0,
 ) -> DataFrame:
     """Approximate top-k via MULTI-TABLE sign-LSH (OR-amplification).
@@ -694,9 +693,10 @@ def lsh_bucketed_topk(
     grows linearly with the reference, and the "approximate" path
     degenerates toward the cross join it exists to avoid (measured 71 s vs
     the exact blocked path's 15 s at 180k vectors with the old fixed 64
-    buckets). Auto-sizing costs one ``count()`` job, the same adaptive
-    statistics AQE gathers; raise ``n_tables`` alongside if recall matters
-    more than cost.
+    buckets); raise ``n_tables`` alongside if recall matters more than
+    cost. The row count and dim come from :func:`reference_stats`: one
+    aggregate job, none on a reference held by :func:`pin_reference`. An
+    empty reference gives zero rows, as on the exact rungs.
 
     Candidate pairs are scored IMMEDIATELY on the equi-join output (Arrow-
     vectorized batch cosine) and only then deduped across tables: the
@@ -704,11 +704,16 @@ def lsh_bucketed_topk(
     several tables is scored more than once, which is cheaper than
     shuffling both d-dim vectors per candidate just to score once (at d=64
     and 2M candidates that is ~2 GB of shuffle saved)."""
-    if dim is None:
-        dim = len(reference.select(ref_vec_col).first()[0])
+    n_refs, dim = reference_stats(reference, ref_vec_col)
+    if n_refs == 0:
+        return queries.select(
+            *query_id_cols,
+            F.lit(None).cast(reference.schema[ref_id_col].dataType).alias("ref_id"),
+            F.lit(None).cast("double").alias("score"),
+            F.lit(1).alias("rank"),
+        ).filter(F.lit(False))
     if n_planes is None:
-        n_ref = reference.count()
-        n_planes = int(np.clip(np.ceil(np.log2(max(n_ref, 1) / 32.0)), 4, 16))
+        n_planes = int(np.clip(np.ceil(np.log2(n_refs / 32.0)), 4, 16))
 
     # All T*P hyperplanes as ONE numpy tensor inside ONE Arrow-vectorized
     # UDF per side. The equivalent native formulation (T*P aggregate
@@ -1726,32 +1731,28 @@ def hnsw_topk(
     ef_search: int = 48,
     seed: int = 7,
 ) -> DataFrame:
-    """Approximate top-k via the driver-built HNSW graph: collect the
-    reference ONCE (bounded by the broadcast budget — the same contract
-    as the exact blocked rung and IVF's capped centroid training),
-    build the graph on the driver, broadcast (graph + unit matrix), and
-    probe per Arrow batch inside ``mapInPandas`` — zero shuffle, linear
-    in query count, O(ef·log c)-ish distance evaluations per query
-    instead of the blocked rung's O(c) flops.
+    """Approximate top-k via the driver-built HNSW graph: read the
+    reference's ids and unit matrix from :func:`resident_reference`
+    (bounded by the broadcast budget — the same contract as the exact
+    blocked rung; no reference job on a :func:`pin_reference` pin),
+    build the graph on the driver in ascending-id insertion order,
+    broadcast it with that permutation, and probe per Arrow batch inside
+    ``mapInPandas`` — zero shuffle, linear in query count, O(ef·log
+    c)-ish distance evaluations per query instead of the blocked rung's
+    O(c) flops.
 
     Not SQL-replayable (graph construction has no relational replay),
     so the registry gates it with the recall-envelope pattern
     (`cos_topk_hnsw`): exact spine hash-matched, recall bound asserted
     as a boolean — the `distinct_users_sketch` precedent."""
-    n_refs, dim = reference_stats(reference, ref_vec_col)
-    _guard_ref_collect(n_refs, dim, "hnsw_topk")
-    rows = reference.select(ref_id_col, ref_vec_col).collect()
-    ref_ids = np.array([r[0] for r in rows])
-    ref_unit = _unit_matrix([r[1] for r in rows], dim)
-    order = np.argsort(ref_ids)  # deterministic insertion order
-    ref_ids, ref_unit = ref_ids[order], ref_unit[order]
-    index = hnsw_build_index(
-        ref_unit, m=m, ef_construction=ef_construction, seed=seed
+    b_ids, b_unit = resident_reference(reference, ref_id_col, ref_vec_col).broadcasts(
+        "hnsw_topk"
     )
-    sc = queries.sparkSession.sparkContext
-    b_index = sc.broadcast(index)
-    b_ids = sc.broadcast(ref_ids)
-    b_unit = sc.broadcast(ref_unit)
+    order = np.argsort(b_ids.value)  # deterministic insertion order
+    index = hnsw_build_index(
+        b_unit.value[order], m=m, ef_construction=ef_construction, seed=seed
+    )
+    b_index = queries.sparkSession.sparkContext.broadcast({**index, "order": order})
 
     id_fields = [queries.schema[c] for c in query_id_cols]
     out_schema = T.StructType(
@@ -1769,8 +1770,9 @@ def hnsw_topk(
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = b_index.value
-        ids = b_ids.value
-        unit = b_unit.value
+        # graph node i is the reference row order[i]
+        ids = b_ids.value[idx["order"]]
+        unit = b_unit.value[idx["order"]]
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -1566,7 +1566,7 @@ def cos_topk_lsh_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference = emb.filter(F.col("vec_id") % 10 != 0).select("vec_id", "embedding")
     out = lsh_bucketed_topk(
         queries, reference, k=3, query_id_cols=["vec_id"], ref_id_col="vec_id",
-        n_planes=None, dim=64, multiprobe=1,
+        n_planes=None, multiprobe=1,
     )
     return out.select("vec_id", "ref_id", F.round("score", 6).alias("score"), "rank")
 
@@ -1584,7 +1584,7 @@ def cos_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference = emb.filter(F.col("vec_id") % 10 != 0).select("vec_id", "embedding")
     out = lsh_bucketed_topk(
         queries, reference, k=3, query_id_cols=["vec_id"], ref_id_col="vec_id",
-        n_planes=None, dim=64,  # auto-size buckets to the reference count
+        n_planes=None,  # auto-size buckets to the reference count
     )
     return out.select("vec_id", "ref_id", F.round("score", 6).alias("score"), "rank")
 
@@ -4641,7 +4641,7 @@ def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference = emb.filter(F.col("vec_id") % 10 != 0).select("vec_id", "embedding")
     approx = lsh_bucketed_topk(
         queries_df, reference, k=3, query_id_cols=["vec_id"], ref_id_col="vec_id",
-        n_planes=None, dim=64,
+        n_planes=None,
     ).select("vec_id", "ref_id")
     exact = top_k_similarity_join(
         queries_df, reference, k=3, query_id_cols=["vec_id"], ref_id_col="vec_id"

@@ -4,6 +4,7 @@ violation and stays green on clean data; the report is one row per check."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from asctb_ct_label_mapper_spark.operators.dq import Check, evaluate_checks
 
@@ -165,3 +166,26 @@ def test_ewma_group_bound_flag(spark):
     assert r["n_obs"] == 4
     with pytest.raises(GroupBoundExceeded):
         ewma_by_key(df, max_bucket_rows=3).collect()
+
+
+def test_fetch_bounded_at_and_past_the_bound(spark, spark_jobs):
+    """At exactly ``max_rows`` rows the helper returns the table, one row
+    past it None, and a caller label turns None into the named error;
+    either way the read is one job, also over several partitions."""
+    from asctb_ct_label_mapper_spark.operators.dq import (
+        GroupBoundExceeded,
+        fetch_bounded,
+    )
+
+    at, past = (
+        spark.range(0, n, 1, 3).withColumn("v", F.col("id") * 2) for n in (6, 7)
+    )
+    table, jobs = spark_jobs(lambda: fetch_bounded(at, ["id"], 6))
+    assert len(jobs) == 1
+    assert table.column_names == ["id"]
+    assert sorted(table.column("id").to_pylist()) == list(range(6))
+    table, jobs = spark_jobs(lambda: fetch_bounded(past, ["id"], 6))
+    assert len(jobs) == 1
+    assert table is None
+    with pytest.raises(GroupBoundExceeded, match="probe"):
+        fetch_bounded(past, ["id"], 6, "probe")

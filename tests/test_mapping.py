@@ -427,6 +427,38 @@ def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
     assert sum(r["match_score_1"] == 1.0 for r in got) == n_refs // 8
 
 
+def test_non_local_labels_build_runs_no_job(spark, spark_jobs, tmp_path):
+    """Labels read from a file are deduplicated above one hash Exchange
+    that is already as wide as the session: building the report on a
+    handle runs no job (no width probe runs the dedup shuffle eagerly),
+    and the executed plan shuffles once, also when ``source`` is a
+    literal, as in the registry's ``mapping_report``."""
+    from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+
+    reference = _numbered_reference(spark, 32)
+    path = str(tmp_path / "labels.parquet")
+    spark.createDataFrame(
+        [("t", f"cell kind {i % 40}") for i in range(120)],
+        "source string, raw_input_label string",
+    ).write.parquet(path)
+    scanned = spark.read.parquet(path)
+    assert not scanned.isLocal()
+    with reference_projection(reference) as ref:
+        for labels in (scanned, scanned.withColumn("source", F.lit("t"))):
+            report, jobs = spark_jobs(
+                lambda: map_labels_to_reference(labels, ref, k=2, clean=clean_text_expr)
+            )
+            assert jobs == []
+            rows = report.collect()
+            # AQE prints the final plan above the initial one
+            plan = report._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==")[0]
+            assert len(rows) == 40
+            assert sum(r["match_score_1"] == 1.0 for r in rows) == 32
+            assert plan.count("Exchange ") == 1, plan
+            assert "REPARTITION_BY_NUM" in plan, plan
+
+
 def test_unpinned_local_labels_collect_in_one_job(spark, spark_jobs, monkeypatch):
     """Without a handle, an in-budget reference is read once per call (one
     stats aggregate and one collect, no second aggregate for routing), no

@@ -126,24 +126,6 @@ def test_quality_sweep_emits_unreachable_thresholds(spark):
     assert out[0]["n_docs"] == 5
 
 
-def test_guard_local_collect_single_job_and_bound(spark):
-    """The bounded collect returns the rows (one job) and raises past
-    the bound."""
-    from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
-    from asctb_ct_label_mapper_spark.operators.graph import (
-        _guard_local_collect,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b", 1.0), ("b", "c", 2.0)],
-        "src string, dst string, w double",
-    )
-    rows = _guard_local_collect(edges, 10, "t", ["src", "dst", "w"])
-    assert {(r["src"], r["dst"]) for r in rows} == {("a", "b"), ("b", "c")}
-    with pytest.raises(GroupBoundExceeded):
-        _guard_local_collect(edges, 1, "t", ["src", "dst"])
-
-
 def test_sweep_stale_pid_dirs(tmp_path):
     """Dead-pid dirs are removed; the live process's own dir and
     unsuffixed dirs survive."""

@@ -139,23 +139,26 @@ def _edges(spark, rows):
     return spark.createDataFrame(rows, "src string, dst string, w double")
 
 
-def test_hits_and_kcore_collect_guard(spark):
-    """The 'auto'/'local' impls fold on the driver; an edge frame past
-    max_collect_rows raises the named GroupBoundExceeded instead of
-    OOMing the driver (r12 ADVICE item)."""
+def test_hits_and_kcore_collect_guard(spark, monkeypatch):
+    """Both fold on the driver; an edge frame past
+    ``graph.LOCAL_EDGE_ROWS`` raises the named GroupBoundExceeded instead
+    of OOMing the driver."""
+    from asctb_ct_label_mapper_spark.operators import graph
     from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
     from asctb_ct_label_mapper_spark.operators.graph import hits_scores, k_core
 
     e = _edges(
         spark, [(f"n{i}", f"n{i + 1}", 1.0) for i in range(50)]
     )
+    monkeypatch.setattr(graph, "LOCAL_EDGE_ROWS", 10)
     with pytest.raises(GroupBoundExceeded, match="hits_scores"):
-        hits_scores(e, max_collect_rows=10)
+        hits_scores(e)
     with pytest.raises(GroupBoundExceeded, match="k_core"):
-        k_core(e, max_collect_rows=10)
+        k_core(e)
     # within the bound both still work
-    assert hits_scores(e, max_collect_rows=100).count() == 51
-    assert k_core(e, k=1, max_collect_rows=100).count() == 51
+    monkeypatch.setattr(graph, "LOCAL_EDGE_ROWS", 100)
+    assert hits_scores(e).count() == 51
+    assert k_core(e, k=1).count() == 51
 
 
 def test_k_core_nonconvergence_raises(spark):

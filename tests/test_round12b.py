@@ -142,7 +142,8 @@ def test_harmonic_closeness_path_graph(spark):
         harmonic_closeness(e, iters=1)
 
 
-def test_harmonic_closeness_collect_guard(spark):
+def test_harmonic_closeness_collect_guard(spark, monkeypatch):
+    from asctb_ct_label_mapper_spark.operators import graph
     from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
     from asctb_ct_label_mapper_spark.operators.graph import (
         harmonic_closeness,
@@ -152,8 +153,9 @@ def test_harmonic_closeness_collect_guard(spark):
         [(f"n{i}", f"n{i + 1}", 1.0) for i in range(30)],
         "src string, dst string, w double",
     )
+    monkeypatch.setattr(graph, "LOCAL_EDGE_ROWS", 5)
     with pytest.raises(GroupBoundExceeded, match="harmonic_closeness"):
-        harmonic_closeness(e, max_collect_rows=5)
+        harmonic_closeness(e)
 
 
 def test_vocab_overlap_sources_hand_case(spark):

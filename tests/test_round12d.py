@@ -70,9 +70,10 @@ def test_eigenvector_cycle_uniform(spark):
         assert r["score"] == pytest.approx(0.25)
 
 
-def test_eigenvector_empty_and_guard(spark):
-    """Empty edge frame -> empty result (hits contract); the bounded-
-    collect guard raises the dq error class past the bound."""
+def test_eigenvector_empty_and_guard(spark, monkeypatch):
+    """Empty edge frame -> empty result (hits contract); the bounded
+    read raises the dq error class past the bound."""
+    from asctb_ct_label_mapper_spark.operators import graph
     from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
     from asctb_ct_label_mapper_spark.operators.graph import (
         eigenvector_centrality,
@@ -83,8 +84,9 @@ def test_eigenvector_empty_and_guard(spark):
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "a", 1.0)], "src string, dst string, w double"
     )
+    monkeypatch.setattr(graph, "LOCAL_EDGE_ROWS", 1)
     with pytest.raises(GroupBoundExceeded):
-        eigenvector_centrality(edges, max_collect_rows=1)
+        eigenvector_centrality(edges)
 
 
 # ---------------------------------------------------------------------------

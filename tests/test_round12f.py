@@ -62,15 +62,17 @@ def test_markov_steady_state_biased_chain(spark):
     assert out["b"] == pytest.approx(23 / 34, abs=1e-4)
 
 
-def test_markov_steady_state_bound_guard(spark):
+def test_markov_steady_state_bound_guard(spark, monkeypatch):
+    from asctb_ct_label_mapper_spark.operators import behavior
     from asctb_ct_label_mapper_spark.operators.behavior import (
         markov_steady_state,
     )
     from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
 
     rows = [(i, 1, f"t{i % 4}", i) for i in range(16)]
+    monkeypatch.setattr(behavior, "LOCAL_TRANSITION_ROWS", 2)
     with pytest.raises(GroupBoundExceeded):
-        markov_steady_state(_ts_events(spark, rows), max_collect_rows=2)
+        markov_steady_state(_ts_events(spark, rows))
 
 
 def _daily_events(spark, counts, t0="2024-01-01"):

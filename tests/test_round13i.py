@@ -65,7 +65,8 @@ def test_eccentricity_disconnected_components(spark):
     assert out["x"]["n_reachable"] == 1
 
 
-def test_eccentricity_guard_raises_on_fact_scale(spark):
+def test_eccentricity_guard_raises_on_fact_scale(spark, monkeypatch):
+    from asctb_ct_label_mapper_spark.operators import graph
     from asctb_ct_label_mapper_spark.operators.dq import GroupBoundExceeded
     from asctb_ct_label_mapper_spark.operators.graph import (
         graph_eccentricity,
@@ -75,8 +76,9 @@ def test_eccentricity_guard_raises_on_fact_scale(spark):
         F.col("id").cast("string").alias("src"),
         (F.col("id") + 1).cast("string").alias("dst"),
     )
+    monkeypatch.setattr(graph, "LOCAL_ECCENTRICITY_ROWS", 10)
     with pytest.raises(GroupBoundExceeded):
-        graph_eccentricity(big, max_collect_rows=10)
+        graph_eccentricity(big)
 
 
 def test_resource_allocation_hand_computed(spark):

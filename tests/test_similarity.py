@@ -437,7 +437,7 @@ def test_multiprobe_lifts_recall_monotonically(spark, sf_dir):
     def recall(m):
         got = {(x["vec_id"], x["ref_id"]) for x in
                lsh_bucketed_topk(q, r, 3, ["vec_id"], "vec_id",
-                                 n_planes=None, dim=64, multiprobe=m).collect()}
+                                 n_planes=None, multiprobe=m).collect()}
         return len(exact & got) / len(exact)
 
     r0, r1, r2 = recall(0), recall(1), recall(2)
@@ -535,3 +535,46 @@ def test_zero_norm_reference_row_scores_null_last(spark):
     for qid in (1, 2):
         tail = [(x[2], x[3]) for x in blocked if x[0] == qid][2:]
         assert tail == [(10, None), (30, None)]
+
+
+def test_lsh_and_hnsw_read_a_pinned_reference(spark, spark_jobs):
+    """Inside ``pin_reference`` the LSH rung reads the reference's count
+    and dim, and the HNSW rung its ids and unit matrix, from the pin:
+    building either plan runs no job, and the results equal the unpinned
+    ones."""
+    from asctb_ct_label_mapper_spark.operators.similarity import (
+        hnsw_topk,
+        pin_reference,
+    )
+
+    qdf, rdf = _vec_tables(spark, n_q=12, n_r=40, dim=8, seed=3)
+    rungs = {
+        "lsh": lambda: lsh_bucketed_topk(
+            qdf, rdf, 3, ["vec_id"], "vec_id", n_planes=None
+        ),
+        "hnsw": lambda: hnsw_topk(qdf, rdf, 3, ["vec_id"], "vec_id", m=4),
+    }
+    unpinned = {name: _collect_ranked(build()) for name, build in rungs.items()}
+    with pin_reference(rdf, "vec_id"):
+        for name, build in rungs.items():
+            plan, jobs = spark_jobs(build)
+            assert jobs == [], name
+            assert _collect_ranked(plan) == unpinned[name], name
+    assert len(unpinned["hnsw"]) == 12 * 3
+
+
+def test_lsh_empty_reference_gives_no_rows(spark):
+    """An empty reference gives no LSH rows, as on the exact rungs, with
+    the columns of a non-empty result: its derived dim is 0, and no
+    hyperplane is drawn for it."""
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.5]), (2, None)], "vec_id long, embedding array<float>"
+    )
+    r = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    empty = lsh_bucketed_topk(q, r, 2, ["vec_id"], "vec_id", n_planes=None)
+    assert empty.collect() == []
+    one = spark.createDataFrame([(7, [2.0, 1.0])], "vec_id long, embedding array<float>")
+    full = lsh_bucketed_topk(q.filter("vec_id = 1"), one, 2, ["vec_id"], "vec_id")
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
