@@ -11,11 +11,11 @@ rank pivot (A2) and exact overwrite (J1, J2) are one ``mapInPandas``
 that scores each Arrow batch against the reference's resident unit
 matrix and writes the finished report rows from its resident table:
 
-    LocalTableScan -> clean (F8) -> encode (F12) -> MapInPandas
+    LocalTableScan -> [Coalesce] -> clean (F8) -> encode (F12) -> MapInPandas
 
 so a call on a ``reference_projection`` handle with a list of labels is
-one Spark job of one stage. Past the budget the approximate IVF rung
-runs relationally:
+one Spark job of one stage, one task per ``LABELS_PER_TASK`` labels.
+Past the budget the approximate IVF rung runs relationally:
 
     seed -> clean -> encode -> IVF top-k -> payload join -> pivot (A2)
          -> exact-overwrite left join (J1) + rank>1 null-out (J2)
@@ -37,13 +37,14 @@ corpus has no contractions/numerics/plural variance.
 
 from __future__ import annotations
 
+import weakref
 from contextlib import contextmanager
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -73,6 +74,17 @@ _REF_PROJ_COLS = (
 _QUERY_COLS = ("source", "raw_input_label", "cleaned_input_label")
 # reference columns the report writer keeps resident
 _PAYLOAD_COLS = ("CT_NAME", "all_text", "definition", "ct_name_cleaned")
+
+# Distinct labels per task of a driver-local seed. A task costs ~35-40 ms
+# of CPU whatever its size (a JVM launch and two Python runners, 4 cores),
+# more than 16 labels' clean, encode and score. 256 was chosen from a
+# noise band: 64 to 512 measured within noise of each other on
+# ``map_many_small`` (SCALING.md, "Flagship: label seed width follows
+# rows").
+LABELS_PER_TASK = 256
+
+# seeds ``label_seed`` built: already distinct, taken as they are
+_SEEDS: weakref.WeakSet = weakref.WeakSet()
 
 
 def _is_persisted(df: DataFrame) -> bool:
@@ -129,18 +141,57 @@ def _report_table(cols: dict[str, np.ndarray]) -> tuple:
     ) + (exact,)
 
 
+def _local_seed(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A ``LocalTableScan`` of the distinct (source, raw_input_label)
+    rows in ``table``, coalesced to ``ceil(rows / LABELS_PER_TASK)``
+    partitions where that is narrower than the scan's own ``min(rows,
+    defaultParallelism)``. The coalesce is narrow, so the call stays one
+    stage; an empty table keeps its empty scan."""
+    seed = spark.createDataFrame(table)
+    rows = table.num_rows
+    cores = spark.sparkContext.defaultParallelism
+    width = min(-(-rows // LABELS_PER_TASK), cores)
+    if width < min(rows, cores):
+        seed = seed.coalesce(width)
+    return seed
+
+
+def label_seed(spark: SparkSession, source: str, labels: Iterable) -> DataFrame:
+    """The (source, raw_input_label) seed of a driver-local list of
+    labels: ``str(x)`` per element (so ``None`` is the label 'None'),
+    deduplicated in first-occurrence order into one Arrow table, which
+    plans as a ``LocalTableScan`` the JVM reads, one task per
+    ``LABELS_PER_TASK`` labels (:func:`_local_seed`).
+    :func:`map_labels_to_reference` takes it as it is, with no second
+    dedup."""
+    texts = list(dict.fromkeys(str(x) for x in labels))
+    seed = _local_seed(
+        spark,
+        pa.table(
+            {
+                "source": pa.array([source] * len(texts), pa.string()),
+                "raw_input_label": pa.array(texts, pa.string()),
+            }
+        ),
+    )
+    _SEEDS.add(seed)
+    return seed
+
+
 def _distinct_labels(labels: DataFrame) -> DataFrame:
-    """The distinct (source, raw_input_label) rows. A driver-local
-    relation (``isLocal``, which is what ``map_raw_labels`` builds from a
-    list) is deduplicated on the driver — collecting it runs no job — and
-    comes back as a ``LocalTableScan`` of the distinct rows, already
-    ``min(rows, parallelism)`` partitions wide. Any other frame is
-    hash-repartitioned to the session's parallelism and deduplicated
-    above that one Exchange, so the matmul downstream runs that many
-    tasks wide and building the plan runs no job. The hash is on the
-    label alone: it still clusters every (source, label) pair, and a
-    literal ``source`` folded into the partitioning would not, so Spark
-    would plan a second Exchange for the aggregate."""
+    """The distinct (source, raw_input_label) rows. A seed of
+    :func:`label_seed` (what ``map_raw_labels`` builds from a list) is
+    already distinct and is taken as it is. Any other driver-local
+    relation (``isLocal``) is deduplicated on the driver — collecting it
+    runs no job — and comes back as a :func:`_local_seed` of the distinct
+    rows. Any other frame is hash-repartitioned to the session's
+    parallelism and deduplicated above that one Exchange, so the matmul
+    downstream runs that many tasks wide and building the plan runs no
+    job. The hash is on the label alone: it still clusters every (source,
+    label) pair, and a literal ``source`` folded into the partitioning
+    would not, so Spark would plan a second Exchange for the aggregate."""
+    if labels in _SEEDS:
+        return labels
     pairs = labels.select("source", "raw_input_label")
     if not labels.isLocal():
         width = labels.sparkSession.sparkContext.defaultParallelism
@@ -149,7 +200,7 @@ def _distinct_labels(labels: DataFrame) -> DataFrame:
     table = pa.Table.from_pylist(
         [r.asDict() for r in rows], schema=to_arrow_schema(pairs.schema)
     )
-    return labels.sparkSession.createDataFrame(table)
+    return _local_seed(labels.sparkSession, table)
 
 
 def map_labels_to_reference(
@@ -179,8 +230,9 @@ def map_labels_to_reference(
     "blocked" pins the exact report (raising past the budget) and "ivf"
     pins IVF; any other value raises ``ValueError``.
 
-    The exact report's plan is ``LocalTableScan → clean → encode →
-    MapInPandas`` for a driver-local relation (one hash Exchange and
+    The exact report's plan is ``LocalTableScan → [Coalesce] → clean →
+    encode → MapInPandas`` for a driver-local relation, one task per
+    ``LABELS_PER_TASK`` distinct labels (one hash Exchange and
     ``dropDuplicates`` in place of the scan otherwise): one
     ``mapInPandas`` scores each Arrow batch against the resident unit
     matrix and writes each label's finished row, k match columns with
@@ -197,6 +249,14 @@ def map_labels_to_reference(
     it — then the ranks pivot into columns and
     :func:`overwrite_exact_matches` applies the overwrite under the same
     budget flag.
+
+    Degenerate label inputs: the report has one row per distinct
+    (source, raw_input_label), so an all-duplicate input gives one row,
+    and an empty input gives zero rows with the 3 + 4k report columns.
+    A NULL label, or one whose embedding is NULL or zero-norm, keeps its
+    row with every match column NULL (the exact overwrite still applies);
+    ``map_raw_labels`` takes ``None`` in a list as the label 'None'. The
+    empty label '' is scored like any other label.
     """
     if strategy not in ("auto", "blocked", "ivf"):
         raise ValueError(f"unknown strategy {strategy!r}")

@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 from typing import Callable, Iterable
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,7 +23,10 @@ from asctb_ct_label_mapper_spark.functions.nlp import (
 )
 from asctb_ct_label_mapper_spark.functions.vector import stub_encode_udf
 from asctb_ct_label_mapper_spark.operators.enrich import enrich_with_definitions
-from asctb_ct_label_mapper_spark.operators.mapping import map_labels_to_reference
+from asctb_ct_label_mapper_spark.operators.mapping import (
+    label_seed,
+    map_labels_to_reference,
+)
 from asctb_ct_label_mapper_spark.operators.unpivot import ct_triplet_unpivot
 from asctb_ct_label_mapper_spark.sources.sinks import write_csv_utf8_sig, write_parquet
 
@@ -86,25 +88,18 @@ def map_raw_labels(
     or a prebuilt (source, raw_input_label) DataFrame; the per-label Python
     loop of the reference is one plan (SURVEY §3.2).
 
-    An iterable is taken as ``str(x)`` per element (so ``None`` maps as
-    the label 'None') and handed to Spark as an Arrow table: it plans as a
-    ``LocalTableScan`` that the JVM reads, where a list of tuples would be
-    a pickled Python RDD re-read by Python tasks in every job of the call.
-    Being driver-local, it is deduplicated on the driver, so on a
+    An iterable becomes ``mapping.label_seed``: ``str(x)`` per element
+    (so ``None`` maps as the label 'None'), deduplicated once on the
+    driver into an Arrow table that plans as a ``LocalTableScan`` the JVM
+    reads, where a list of tuples would be a pickled Python RDD re-read by
+    Python tasks in every job of the call. It runs one task per
+    ``mapping.LABELS_PER_TASK`` distinct labels, so on a
     ``reference_projection`` handle of a broadcast-sized reference a call
-    is one Spark job of one stage (``map_labels_to_reference``)."""
+    is one Spark job of one stage."""
     if isinstance(raw_labels, DataFrame):
         labels = raw_labels
     else:
-        texts = [str(x) for x in raw_labels]
-        labels = spark.createDataFrame(
-            pa.table(
-                {
-                    "source": pa.array([source_name] * len(texts), pa.string()),
-                    "raw_input_label": pa.array(texts, pa.string()),
-                }
-            )
-        )
+        labels = label_seed(spark, source_name, raw_labels)
     report = map_labels_to_reference(labels, reference, k=k, encoder=encoder)
     if csv_export_path:
         write_csv_utf8_sig(report, csv_export_path)  # S6

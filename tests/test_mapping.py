@@ -415,8 +415,7 @@ def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
         got, jobs = spark_jobs(
             lambda: map_raw_labels(spark, texts, ref, source_name="t", k=2, encoder=encoder).collect()
         )
-        assert len(jobs) == 1, jobs
-        assert len(spark.sparkContext.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+        assert _stage_tasks(spark, jobs) == [1]
         labels = spark.createDataFrame(
             [("t", x) for x in texts], "source string, raw_input_label string"
         )
@@ -425,6 +424,113 @@ def test_map_raw_labels_on_handle_is_one_job(spark, spark_jobs):
     assert len(got) == len(distinct)
     assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
     assert sum(r["match_score_1"] == 1.0 for r in got) == n_refs // 8
+
+
+def _stage_tasks(spark, jobs):
+    """The task count of each stage of ``jobs``; asserts they are one job."""
+    tracker = spark.sparkContext.statusTracker()
+    assert len(jobs) == 1, jobs
+    return [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds]
+
+
+@pytest.mark.parametrize("blocks", [1, "cores"])
+def test_map_raw_labels_seed_width_follows_rows(spark, spark_jobs, blocks):
+    """A list of labels runs one task per ``LABELS_PER_TASK`` distinct
+    labels, at most the session's parallelism, in one job of one stage:
+    ``LABELS_PER_TASK + 1`` labels run 2 tasks, ``LABELS_PER_TASK *
+    cores + 1`` run ``cores``. Each report equals the one from the same
+    labels as a non-local frame."""
+    from asctb_ct_label_mapper_spark.operators.mapping import (
+        LABELS_PER_TASK,
+        reference_projection,
+    )
+    from asctb_ct_label_mapper_spark.pipeline import map_raw_labels
+
+    cores = spark.sparkContext.defaultParallelism
+    blocks = cores if blocks == "cores" else blocks
+    texts = [f"cell kind {i}" for i in range(LABELS_PER_TASK * blocks + 1)]
+    with reference_projection(_numbered_reference(spark)) as ref:
+        got, jobs = spark_jobs(
+            lambda: map_raw_labels(spark, texts + texts[:5], ref, source_name="t", k=2).collect()
+        )
+        assert _stage_tasks(spark, jobs) == [min(blocks + 1, cores)]
+        labels = spark.createDataFrame(
+            [("t", x) for x in texts], "source string, raw_input_label string"
+        )
+        assert not labels.isLocal()
+        again = map_labels_to_reference(labels, ref, k=2).collect()
+    assert len(got) == len(texts)
+    assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
+
+
+def test_label_list_is_deduplicated_once(spark, spark_jobs, monkeypatch):
+    """On a handle, building the report of a list runs no driver collect:
+    the list is deduplicated once, before Spark sees it, and duplicates
+    map to one row each. A user-built local frame with duplicates is
+    still collected and deduplicated on the driver, to one row per
+    distinct (source, raw_input_label), at the same width."""
+    import pyarrow as pa
+
+    from asctb_ct_label_mapper_spark.operators.mapping import (
+        LABELS_PER_TASK,
+        reference_projection,
+    )
+    from asctb_ct_label_mapper_spark.pipeline import map_raw_labels
+
+    distinct = [f"cell kind {i}" for i in range(LABELS_PER_TASK + 1)]
+    texts = distinct + distinct[::-1]
+    local = spark.createDataFrame(
+        pa.table({"source": ["t"] * len(texts), "raw_input_label": texts})
+    )
+    assert local.isLocal()
+    calls = []
+    collect = type(local).collect
+
+    def spy(df):
+        calls.append(df)
+        return collect(df)
+
+    with reference_projection(_numbered_reference(spark)) as ref:
+        monkeypatch.setattr(type(local), "collect", spy)
+        report = map_raw_labels(spark, texts, ref, source_name="t", k=2)
+        assert calls == []
+        got, jobs = spark_jobs(report.collect)
+        assert _stage_tasks(spark, jobs) == [2]
+        from_frame = map_labels_to_reference(local, ref, k=2)
+        assert len(calls) == 2  # the report's collect, then the frame's dedup
+        again, jobs = spark_jobs(from_frame.collect)
+        assert _stage_tasks(spark, jobs) == [2]
+    assert sorted(r["raw_input_label"] for r in got) == sorted(distinct)
+    assert sorted(_report_key(r, 2) for r in got) == sorted(_report_key(r, 2) for r in again)
+
+
+def test_degenerate_label_lists(spark):
+    """The flagship's contract for degenerate lists: an empty list gives
+    zero rows with the 3 + 4k report columns (its seed keeps the empty
+    scan, never a 0-partition coalesce); an all-duplicate list gives one
+    row; ``None`` maps as the label 'None'; '' gives one row, scored like
+    any other label."""
+    from asctb_ct_label_mapper_spark.operators.mapping import reference_projection
+    from asctb_ct_label_mapper_spark.pipeline import map_raw_labels
+
+    k = 2
+    with reference_projection(_numbered_reference(spark)) as ref:
+        run = lambda texts: map_raw_labels(spark, texts, ref, source_name="t", k=k)
+        empty = run([])
+        assert empty.columns == REPORT_COLS
+        assert "Coalesce" not in empty._jdf.queryExecution().executedPlan().toString()
+        assert empty.collect() == []
+        (dup,) = run(["cell kind 3"] * 5).collect()
+        assert dup["raw_input_label"] == "cell kind 3"
+        rows = run([None, "None", None]).collect()
+        assert [r["raw_input_label"] for r in rows] == ["None"]
+        rows = {r["raw_input_label"]: r for r in run(["", "unknown thing"]).collect()}
+    assert len(rows) == 2
+    for label, row in rows.items():
+        scores = [row[f"match_score_{i}"] for i in range(1, k + 1)]
+        assert None not in scores and scores == sorted(scores, reverse=True), label
+        assert row["matched_asctb_id_1"] is not None, label
+    assert rows[""]["cleaned_input_label"] == ""
 
 
 def test_non_local_labels_build_runs_no_job(spark, spark_jobs, tmp_path):
